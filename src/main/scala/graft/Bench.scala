@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Fmt.jsonString
 
 /** Benchmark main (driver contract): times the headline query set from
   * BASELINE.md on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -248,25 +248,10 @@ object Bench {
       }
   }
 
-  /** Minimal JSON string escape for fixture table names. Today's fixture
-    * stems are alphanumeric, but [[fixtureStats]] picks up ANY `*.parquet`
-    * entry under the dir — a stray name with a quote/backslash/control
-    * char must not corrupt the one-line bench contract. */
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' =>
-        // no format-string interpolation anywhere near the JSON line (the
-        // round-16 locale rule below): hex digits built by hand
-        "\\u" + ("000" + Integer.toHexString(c.toInt)).takeRight(4)
-      case c            => c.toString
-    }
-
   /** JSON object for [[fixtureStats]] output. */
   private[graft] def fixturesJson(stats: Seq[(String, Long, Long, Long)]): String =
     stats.map { case (n, b, g, r) =>
-      "\"" + jsonEscape(n) + "\":{\"bytes\":" + b + ",\"row_groups\":" + g + ",\"rows\":" + r + "}"
+      jsonString(n) + ":{\"bytes\":" + b + ",\"row_groups\":" + g + ",\"rows\":" + r + "}"
     }.mkString("{", ",", "}")
 
   /** Compact machine-readable headline record (round 21 — VERDICT r20
@@ -286,7 +271,8 @@ object Bench {
     * `cpus`/`master` ride the record (round 22 — VERDICT r21 item 1): the
     * r21 driver flagged `suspect_cpus_ignored` because nothing in the
     * EMITTED record proved the run honored `SPARK_GRAFT_CPUS` — the code
-    * does (main() reads it into both the master and shuffle partitions),
+    * does (`Session.local` reads it into both the master and shuffle
+    * partitions),
     * but the record couldn't show it. Echoing the dial and the effective
     * master makes a low-core run self-describing. The flat 8-vs-32-core
     * ratios themselves are a property of the sf0.1 fixtures (every table is
@@ -302,8 +288,8 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"banded":$bq,""" +
       s""""calib_sec":${num4(calib)},"calib_mt_sec":${num4(calibMt)},"calib_mt_threads":$calibMtThreads,""" +
       s""""calib_membw_sec":${num4(membw)},"calib_membw_mt_sec":${num4(membwMt)},""" +
-      s""""cpus":"${jsonEscape(cpus)}","master":"${jsonEscape(master)}",""" +
-      s""""sf":"${jsonEscape(sfDir)}"}"""
+      s""""cpus":${jsonString(cpus)},"master":${jsonString(master)},""" +
+      s""""sf":${jsonString(sfDir)}}"""
 
   /** Locale-independent 4-decimal JSON number — Locale.ROOT, not the
     * f-interpolator (round-16 advice #4): f"" formats with the JVM
@@ -316,21 +302,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // deployment arithmetic: plain double sums (the decimal-exact path is
-      // a reproducibility feature the correctness gate uses — see QueryPack)
-      .config("graft.sums.exact", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = core.Session.defaultCores
+    val spark = core.Session.local(cores)
+    // deployment arithmetic: plain double sums (the decimal-exact path is
+    // a reproducibility feature the correctness gate uses — see QueryPack)
+    spark.conf.set("graft.sums.exact", "false")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -378,20 +354,8 @@ object Bench {
     // spike shows as one or two outlier samples over a tight floor; a
     // regression lifts every sample) — round 7's drift dispute took four
     // extra ritual runs to settle because only the min was recorded
-    // diagnostic order toggle (round 8): SPARK_GRAFT_BENCH_ORDER=consecutive
-    // restores the pre-r7 all-passes-per-query order, which gives each
-    // query hot-loop JIT/cache locality across its passes — the regime the
-    // r5/r6 historical mins were measured under. Round-robin (the default,
-    // and the official methodology) trades that locality for load-spike
-    // robustness; comparing the two in ONE window separates "methodology
-    // floor shift" from "machine load" when a historical min looks
-    // unreachable.
-    val consecutive = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("consecutive")
     def measure(names: Seq[String]): Seq[(String, Double, Seq[Double])] = {
-      val ordered =
-        if (consecutive) names.flatMap(n => Seq.fill(passes)(n))
-        else Seq.fill(passes)(names).flatten
-      val times = ordered.map(n => n -> run(n))
+      val times = Seq.fill(passes)(names).flatten.map(n => n -> run(n))
         .groupMap(_._1)(_._2)
       names.map { n =>
         val all = times(n)
@@ -483,7 +447,7 @@ object Bench {
     // corruption mode the escaping commit fixed)
     val headlineLine = headlineJson(total, qs, bq,
       calib, calibMt, calibMtThreads, membw, membwMt, sfDir,
-      cpus, spark.sparkContext.master)
+      cores.toString, spark.sparkContext.master)
     val line = headlineLine.stripSuffix("}") +
       s""","samples":${samplesJson(results)},"banded_samples":${samplesJson(bandedResults)},""" +
       s""""fixtures":$fixtures}"""

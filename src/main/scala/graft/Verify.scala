@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Fmt.jsonString
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,29 +18,25 @@ object Verify {
   private[graft] def exitNonzero(failedCount: Int, env: String => Option[String]): Boolean =
     failedCount > 0 && !env("SPARK_GRAFT_VERIFY_EXIT0").contains("1")
 
+  /** oracle_sql.json: every oracle entry under BOTH its bare `<name>` key
+    * and the `<name>.parquet` key. The driver keys its oracle lookup by
+    * the output *directory* name, while queries are keyed bare — round 1
+    * scored 0/99 on exactly this mismatch. */
+  private[graft] def oracleJson(oracle: Map[String, String]): String =
+    oracle
+      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these query names (dev loop; the
     // driver always passes exactly two args and gets the full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts physical type has drifted across testdata generations
-      // (NANOS through r7, MICROS from r8). nanosAsLong makes a NANOS-era
-      // file readable; graft.core.Tables.normalizeTs dispatches on the read
-      // dtype so either generation loads identically.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      // SPARK_GRAFT_SIM_EXACT=false re-runs the whole gate over the
-      // banded-LSH candidate paths — the oracles must STILL hash-match
-      // (exact ≡ banded on the test data; see ExactnessSpec)
-      .config("graft.sim.exact", sys.env.getOrElse("SPARK_GRAFT_SIM_EXACT", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
+    // SPARK_GRAFT_SIM_EXACT=false re-runs the whole gate over the
+    // banded-LSH candidate paths — the oracles must STILL hash-match
+    // (exact ≡ banded on the test data; see ExactnessSpec)
+    spark.conf.set("graft.sim.exact", sys.env.getOrElse("SPARK_GRAFT_SIM_EXACT", "true"))
     new java.io.File(outDir).mkdirs()
     // driver contract: result at outDir/<name>.parquet (a parquet directory
     // with that exact name, so both dir-globbing and direct reads find it)
@@ -56,26 +52,7 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // The driver keys its oracle lookup by the output *directory* name
-    // ("<name>.parquet"), while queries are keyed bare "<name>" — round 1
-    // scored 0/99 on exactly this mismatch. Emit every entry under BOTH
-    // keys, and write the file to the repo root as a second location the
-    // driver can find it at.
-    val json = SparkEntry.oracleSql
-      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracleJson(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // second location: cwd-relative only resolves to the repo root when the
     // JVM launched there — anchor on the known repo path too. These copies
@@ -125,14 +102,14 @@ object Verify {
             } finally s.close()
           } else Files.getLastModifiedTime(dir).toMillis
         val iso = java.time.Instant.ofEpochMilli(mtime).toString
-        s"""{"table":${q(n)},"rows":${df.count()},"ts_type":${q(tsType)},"mtime":${q(iso)}}"""
+        s"""{"table":${jsonString(n)},"rows":${df.count()},"ts_type":${jsonString(tsType)},"mtime":${jsonString(iso)}}"""
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] fingerprint for $n failed: ${e.getMessage}")
-        s"""{"table":${q(n)},"err":${q(String.valueOf(e.getMessage))}}"""
+        s"""{"table":${jsonString(n)},"err":${jsonString(String.valueOf(e.getMessage))}}"""
       }
     }.mkString("[", ",", "]")
     val summary = s"""{"attempted":${attempted.size},"failed":${failed.size},""" +
-      s""""failed_names":${failed.map(q).mkString("[", ",", "]")},""" +
+      s""""failed_names":${failed.map(jsonString).mkString("[", ",", "]")},""" +
       s""""testdata":$fingerprint}"""
     println(s"[verify-summary] $summary")
     try Files.writeString(Paths.get(s"$outDir/verify_summary.json"), summary)

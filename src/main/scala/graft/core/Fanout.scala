@@ -43,23 +43,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * through untouched — mis-skipping costs parallelism on exotic layouts,
   * mis-firing would insert a corpus-wide exchange at scale.
   *
-  * Dial: `graft.fanout` session conf (default true; env
-  * `SPARK_GRAFT_FANOUT` overrides the default for whole-process A/Bs) —
-  * off restores the pre-r21 plans.
+  * No on/off dial: the input-size trigger is the whole decision. The
+  * pre-r21 plans it replaced are measured against it in SCALE.md round 21.
   */
 object Fanout {
-  private[graft] def enabled(df: DataFrame): Boolean =
-    df.sparkSession.conf
-      .get("graft.fanout", sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true"))
-      .trim.toLowerCase match {
-      // accept the natural shell toggles; FAIL LOUD on anything else —
-      // a typo'd dial silently defaulting would invalidate an A/B
-      case "true" | "1" | "on" | "yes"  => true
-      case "false" | "0" | "off" | "no" => false
-      case other => sys.error(
-        s"graft.fanout / SPARK_GRAFT_FANOUT must be true/false (or 1/0, on/off), got '$other'")
-    }
-
   /** Total bytes of the local files backing `df` (clamped at `cap`), or
     * None when any part of the listing is not cheaply sizeable (non-file
     * scheme, missing, in-memory frame). `cap` stops the sweep once the
@@ -87,7 +74,6 @@ object Fanout {
     * unchanged otherwise. Row-level semantics are identity either way.
     */
   def maybeFanout(df: DataFrame, key: Column): DataFrame = {
-    if (!enabled(df)) return df
     val spark = df.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     val maxPartitionBytes = org.apache.spark.network.util.JavaUtils

@@ -97,10 +97,9 @@ case class TopKBuf[S](n: Int, items: List[S])
 abstract class BoundedTopK[S: universe.TypeTag](k: Int, ord: Ordering[S])
     extends Aggregator[S, TopKBuf[S], Seq[S]] {
   // product (struct) buffer encoder, NOT Encoders.kryo — single-sourced
-  // here so every concrete heap aggregator inherits it by default (a
-  // subclass can still override deliberately — the harness A/B twin does —
-  // but none picks kryo by omission): the buffer is a plain case class,
-  // so the Tungsten struct form ships typed partial rows at the shuffle,
+  // here so every concrete heap aggregator inherits it, and the concrete
+  // aggregators are final so none can swap in kryo: the buffer is a plain
+  // case class, so the Tungsten struct form ships typed partial rows at the shuffle,
   // and Kryo-encoding ANY Scala object fails with an opaque
   // EXPRESSION_ENCODING_FAILED on a JVM launched without Spark's
   // `--add-opens java.base/java.nio` (chill's registrar needs ByteBuffer
@@ -127,7 +126,7 @@ abstract class BoundedTopK[S: universe.TypeTag](k: Int, ord: Ordering[S])
   override def finish(l: TopKBuf[S]): Seq[S] = trim(l.items)
 }
 
-class TopKAgg(k: Int) extends BoundedTopK[Scored](k,
+final class TopKAgg(k: Int) extends BoundedTopK[Scored](k,
     Ordering.by((s: Scored) => (-s.score, s.key))) {
   override def outputEncoder: Encoder[Seq[Scored]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
@@ -158,7 +157,7 @@ object ScoredStr {
   * for vocabulary-shaped payloads where the per-group domain is unbounded
   * at scale.
   */
-class TopKStrAgg(k: Int) extends BoundedTopK[ScoredStr](k,
+final class TopKStrAgg(k: Int) extends BoundedTopK[ScoredStr](k,
     Ordering.by((s: ScoredStr) => (-s.score, s.key))(
       Ordering.Tuple2(Ordering.Double.TotalOrdering, ScoredStr.utf8Ordering))) {
   override def outputEncoder: Encoder[Seq[ScoredStr]] =
@@ -174,7 +173,7 @@ class TopKStrAgg(k: Int) extends BoundedTopK[ScoredStr](k,
   * stays single-sourced (boxed elements — the cap-sized buffer makes the
   * boxing irrelevant next to keeping the four heap aggregators in step).
   */
-class LowKLong(k: Int) extends BoundedTopK[java.lang.Long](k,
+final class LowKLong(k: Int) extends BoundedTopK[java.lang.Long](k,
     Ordering.by((x: java.lang.Long) => x.longValue)) {
   override def reduce(b: TopKBuf[java.lang.Long], v: java.lang.Long): TopKBuf[java.lang.Long] =
     if (v == null) b else super.reduce(b, v)

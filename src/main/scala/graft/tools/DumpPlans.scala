@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = Session.local(32, "dump-plans")
+    val spark = Session.local(appName = "dump-plans")
     spark.conf.set("graft.sums.exact", "false")
     val dir = "/root/testdata/sf0.1"
     val sb = new StringBuilder

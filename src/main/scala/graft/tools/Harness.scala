@@ -3,8 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.core.{Session, Tables}
-import graft.functions.{BandTuner, DedupOps, SimilarityOps, TextOps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.functions.{BandTuner, DedupOps, SimilarityOps}
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -281,51 +281,6 @@ object Corpora {
     r * c2(q + 1) + (nClusters - r) * c2(q)
   }
 
-  /** Decontamination stress corpus: 5 LARGE eval documents (`evalTokens`
-    * tokens each — the regime where the eval-gram set strains the
-    * broadcast budget) plus n 200-token corpus docs from a DISJOINT
-    * vocabulary, every 20th corpus doc contaminated with a 30-token eval
-    * window. Eval token j of doc d is a deterministic integer mix of
-    * (d, j) — O(1) random access, so splicing a window into a corpus doc
-    * never regenerates an eval prefix (and no per-id RNG first-draw
-    * pathology, the boilerplate generator's lesson). Disjoint vocabularies
-    * make the miss rate ~100% off the planted windows — the honest shape
-    * for measuring a miss-killing prefilter.
-    */
-  def generateDecontamDocs(spark: SparkSession, n: Int, evalTokens: Int,
-      seed: Int = 29): String = {
-    import spark.implicits._
-    // the splice below needs a valid 30-token window start in
-    // [0, evalTokens - 30); at exactly 30 the modulus is 0 (divide error)
-    // and below it the window would index past the eval doc — fail loudly
-    // rather than generate a corpus with no real contamination
-    require(evalTokens > 30,
-      s"evalTokens must exceed the 30-token splice window, got $evalTokens")
-    val vocabE = math.max(2, evalTokens / 2)
-    def evTok(d: Long, j: Int): String =
-      "e" + math.floorMod((d * 1000003L + j) * 2654435761L >>> 13, vocabE.toLong)
-    val docs = spark.range(n + 5L).map { i =>
-      val text =
-        if (i < 5) (0 until evalTokens).map(j => evTok(i, j)).mkString(" ")
-        else {
-          val r = new scala.util.Random(seed * 7919L + i)
-          val toks = Array.fill(200)("w" + r.nextInt(50000))
-          if (i % 20 == 5) {
-            // i ≡ 5 (mod 20) makes i % 5 the constant 0 — derive the eval
-            // doc from the contamination ordinal so windows cycle across
-            // all 5 eval docs as intended
-            val ev = (i / 20) % 5
-            val off = math.floorMod(i * 37L, (evalTokens - 30).toLong).toInt
-            (toks.take(170) ++ (off until off + 30).map(j => evTok(ev, j))).mkString(" ")
-          } else toks.mkString(" ")
-        }
-      (i, text)
-    }.toDF("doc_id", "text")
-    val dir = s"/tmp/graft_decontam/n${n}_e$evalTokens"
-    docs.repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
   /** The measurement ritual: warm once (codegen + shuffle-file setup out
     * of the measurement), then min of `passes` timed noop-writes. */
   def timed(passes: Int)(f: => Unit): Double = {
@@ -336,53 +291,9 @@ object Corpora {
   }
 }
 
-/** Shuffle-bytes measurement rig shared by the A/B subcommands
-  * (`verify-shuffle`, `decontam-bloom`): one task-metrics listener plus
-  * the settle/zero/min-of-3 ritual, factored so a protocol change (the
-  * settle duration, which pass feeds the byte figures) lands in every
-  * A/B at once instead of silently diverging per copy. Listener events
-  * drain async and the bus has no public waitUntilEmpty, so reads quiesce
-  * through the deterministic [[BusDrain]] sentinel before zeroing/reading
-  * counters; the warm pass takes codegen + shuffle-file setup out of the
-  * measurement, and only the LAST timed pass (counters zeroed right
-  * before it) feeds the byte figures.
-  */
-final class ShuffleMeter(spark: SparkSession) {
-  private val shufRead = new AtomicLong
-  private val shufWrite = new AtomicLong
-  spark.sparkContext.addSparkListener(new SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  })
-  /** (min wall of 3, shuffle bytes read, written) — bytes from the last
-    * timed pass only. `warm = false` skips the warm pass for callers that
-    * just executed the same pipeline anyway (e.g. a diagnostic `count()`
-    * — codegen and shuffle files are already in place; re-warming would
-    * be a fifth full execution for nothing). */
-  def measured(f: => Unit, warm: Boolean = true): (Double, Long, Long) = {
-    if (warm) f
-    val times = (1 to 3).map { i =>
-      if (i == 3) { BusDrain.drain(spark); shufRead.set(0); shufWrite.set(0) }
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    BusDrain.drain(spark)
-    (times.min, shufRead.get, shufWrite.get)
-  }
-}
-
-object ShuffleMeter {
-  def mb(x: Long): String = f"${x / 1048576.0}%.0fMB"
-}
-
-/** Deterministic listener-bus quiesce shared by the task-metrics rigs
-  * (round 16 — r15 verdict #3: replaces the TWO fixed
-  * `Thread.sleep(2000)` "settle" copies in [[ShuffleMeter]] and the
-  * skew-minhash A/B, which were both slow and, on a loaded box, not
+/** Deterministic listener-bus quiesce shared by the listener-based tools
+  * (round 16 — r15 verdict #3: replaced fixed `Thread.sleep(2000)`
+  * "settle" waits, which were both slow and, on a loaded box, not
   * actually sufficient). Determinism rides the same bus contract the
   * ccchain sentinel drain (round 15) established: every listener added
   * via `addSparkListener` shares ONE async queue whose dispatch thread
@@ -394,9 +305,9 @@ object ShuffleMeter {
   * job with one shuffle-free task, so the JobEnd latch is exact (no AQE
   * sub-jobs to race) and the sentinel contributes zero shuffle bytes.
   * Latching on JobEnd (not JobStart) also orders that one TaskEnd before
-  * the latch release: a drain-then-CLEAR caller never sees it, and the
-  * one drain-then-read counter it would skew (task durations in the skew
-  * rig) excludes it by [[SentinelPrefix]]-keyed stage id. ccchain's
+  * the latch release: a drain-then-CLEAR caller never sees it, and a
+  * drain-then-read counter it would skew (per-stage lines in
+  * `profile-stages`) excludes it by [[SentinelPrefix]]-keyed stage id. ccchain's
   * job-counting window latches through this drain too, excluding
   * sentinel JobStarts from its count by the same prefix.
   */
@@ -459,21 +370,15 @@ object BusDrain {
   * Subcommands (run with no args for this list):
   *  - `time-queries <name>...` — time registered queries across SF dirs
   *  - `scale [n...]` — replicate lineitem N× and time headline shapes
-  *  - `q1` / `join3` / `minhash` — segment/shape A/Bs for those pipelines
-  *  - `object-agg [groups...]` — ObjectHashAggregate fallback boundary
-  *  - `exactness [dir]` — exact vs banded A/B for the knobbed queries
-  *  - `ab-prefilter [dir]` — int8 candidate-prefilter on/off A/B
-  *  - `verify-shuffle [n|dir:<path>] [shape] [bucketcap]` — string vs hash shingle keys in the jaccard verify
-  *  - `topk-encoder [nKeys] [rowsPerKey] [k]` — struct vs kryo bounded-top-k buffer A/B
-  *  - `decontam-bloom [n] [evalTokens]` — decontaminate bloom-prefilter A/B
   *  - `sim-bucketcap [n,...] [hotFrac] [cap] [full|caponly] [shape]` — embedding-side bucket cap A/B
   *  - `cc-chain [n...]` — star-contraction rounds/wall on path graphs
-  *  - `skew-minhash [n] [hotFrac]` — AQE skew-split evidence, hot-bucket corpus
   *  - `banded [dir] [shape]` — banded pipeline stage decomposition
   *  - `crossover [n...]` — exact↔banded crossover on clustered corpus
   *  - `probe [n] [shape,...] [bits...]` — multi-probe recall/cost frontier
   *  - `dedup-probe [n] [shape,...] [bits...]` — same for embedding dedup
   *  - `docs-crossover [n...]` — MinHash-route crossover on Zipfian docs
+  *  - `profile-stages <query>...` — per-stage wall/tasks/shuffle bytes of one warmed run
+
   *
   * None of these are part of the driver contract; each subcommand's
   * scaladoc records WHAT question it answers and the SCALE.md round whose
@@ -488,18 +393,8 @@ object Harness {
   private val subs: Seq[(String, String, Array[String] => Unit)] = Seq(
     ("time-queries", "<name>... — min-of-3 per query per SPARK_GRAFT_SF_DIRS dir", timeQueries),
     ("scale", "[n...] — lineitem ×1/2/4/8 scaling of headline shapes", scale),
-    ("q1", "decimal-exact vs double-sum Q1 cost", q1),
-    ("join3", "3-way join: direct vs eager pre-agg", join3),
-    ("minhash", "minhash pipeline segment timing", minhash),
-    ("object-agg", "[groups...] — object-buffer agg fallback boundary + spill", objectAgg),
-    ("exactness", "[dir] — exact vs banded A/B at sf0.1", exactness),
-    ("ab-prefilter", "[dir] [pairsShape] [cosdedupShape] — int8 candidate-prefilter on/off A/B", abPrefilter),
-    ("verify-shuffle", "[n|dir:<path>] [shape] [bucketcap] — string vs hash shingle keys in the jaccard verify", verifyShuffle),
-    ("topk-encoder", "[nKeys] [rowsPerKey] [k] — struct vs kryo bounded-top-k buffer encoding A/B", topkEncoder),
-    ("decontam-bloom", "[n] [evalTokens] — bloom prefilter vs broadcast/shuffle join in decontaminate", decontamBloom),
     ("sim-bucketcap", "[n,...] [hotFrac] [cap] [full|caponly] [shape] — embedding-side bucket cap on the dense-dup corpus (shape default 8x10; MUST be corpus-matched or the cap empties the index)", simBucketcap),
     ("cc-chain", "[n...] — star-contraction rounds/wall on path graphs", ccChain),
-    ("skew-minhash", "[n] [hotFrac] — AQE skew-split evidence on a hot-bucket corpus", skewMinhash),
     ("banded", "[dir] [shape] — banded pipeline stage decomposition", banded),
     ("crossover", "[n...] — exact↔banded crossover, clustered corpus", crossover),
     ("probe", "[n] [shape,...] [bits...] — multi-probe frontier (same-label)", probe),
@@ -528,8 +423,7 @@ object Harness {
     */
   private def profileStages(args: Array[String]): Unit = {
     import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted}
-    val spark = Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "profile-stages")
+    val spark = Session.local(appName = "profile-stages")
     spark.conf.set("graft.sums.exact", "false")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).count() // session warm
@@ -599,7 +493,7 @@ object Harness {
     * plain-double sums.
     */
   private def timeQueries(args: Array[String]): Unit = {
-    val spark = Session.local(32, "time-queries")
+    val spark = Session.local(appName = "time-queries")
     spark.conf.set("graft.sums.exact", "false")
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIRS",
       "/root/testdata/sf0.01,/root/testdata/sf0.1").split(",").toSeq
@@ -624,7 +518,7 @@ object Harness {
     * proxy for the 100 TB claim (SCALE.md round 2).
     */
   private def scale(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-scale")
+    val spark = Session.local(appName = "profile-scale")
     spark.conf.set("graft.sums.exact", "false")
     import spark.implicits._
     val dir = "/root/testdata/sf0.1"
@@ -657,377 +551,6 @@ object Harness {
     spark.stop()
   }
 
-  /** Decimal-exact vs double-sum Q1 cost (the `graft.sums.exact` price). */
-  private def q1(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-q1")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def time[A](label: String)(f: => Unit): Unit = {
-      val t = Corpora.timed(1)(f)
-      println(f"SEGMENT $label%-20s $t%.2fs")
-    }
-    time("decimal q1") {
-      noop(graft.operators.Aggregates.q1PricingSummary(spark, dir))
-    }
-    time("double q1") {
-      noop(Tables.lineitem(spark, dir)
-        .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(sum($"l_quantity"), sum($"l_extendedprice"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")),
-          avg($"l_quantity"), count(lit(1)))
-        .orderBy($"l_returnflag", $"l_linestatus"))
-    }
-    time("scan only") {
-      noop(Tables.lineitem(spark, dir))
-    }
-    spark.stop()
-  }
-
-  /** A/B the 3-way join shapes (direct vs eager pre-agg). */
-  private def join3(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-join3")
-    spark.conf.set("graft.sums.exact", "false")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def run(label: String)(f: => DataFrame): Unit = {
-      noop(f) // warm
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); noop(f); (System.nanoTime() - t0) / 1e9
-      }
-      println(f"SEGMENT $label%-12s min=${times.min}%.2fs med=${times.sorted.apply(1)}%.2fs")
-    }
-    run("direct") {
-      Tables.customer(spark, dir)
-        .join(Tables.orders(spark, dir), $"c_custkey" === $"o_custkey")
-        .join(Tables.lineitem(spark, dir), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n_lines"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-        .orderBy($"c_mktsegment")
-    }
-    run("eager") {
-      val perOrder = Tables.lineitem(spark, dir)
-        .groupBy($"l_orderkey")
-        .agg(count(lit(1)).as("nl"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
-      Tables.customer(spark, dir)
-        .join(Tables.orders(spark, dir), $"c_custkey" === $"o_custkey")
-        .join(perOrder, $"o_orderkey" === $"l_orderkey")
-        .groupBy($"c_mktsegment")
-        .agg(sum($"nl").as("n_lines"), sum($"rev").as("revenue"))
-        .orderBy($"c_mktsegment")
-    }
-    spark.stop()
-  }
-
-  /** Segment timing for the COMPOSED minhash pipeline stages (historical:
-    * the production route now computes signatures in-scan via the
-    * `minhash_sig` kernel — this prices what that kernel deleted). */
-  private def minhash(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-minhash")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def time[A](label: String)(f: => A): A = {
-      f // warm
-      val t0 = System.nanoTime(); val r = f
-      println(f"SEGMENT $label%-30s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-    spark.range(1000).count()
-    time("full run") {
-      noop(DedupOps.minhashLsh(spark, dir))
-    }
-    val docs = Tables.documents(spark, dir)
-    time("scan documents")(noop(docs))
-    val sh = docs
-      .select($"doc_id", split(regexp_replace(trim(lower(col("text"))), "\\s+", " "), " ").as("toks"))
-      .select($"doc_id", explode(transform(
-        sequence(lit(1), greatest(size($"toks") - lit(2), lit(1))),
-        i => concat_ws(" ", slice($"toks", i, lit(3))))).as("shingle"))
-    time("explode shingles")(noop(sh))
-    val aggs = (0 until 16).map { i =>
-      min(xxhash64(concat(lit(s"$i|"), col("shingle")))).as(s"mh_$i")
-    }
-    val sigs = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    time("signatures groupBy")(noop(sigs))
-    val bandCols = (0 until 8).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until 2).map(r => col(s"mh_${b * 2 + r}")): _*).as("bh"))
-    }
-    val candidates = sigs
-      .select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-      .groupBy($"bb").agg(collect_set($"doc_id").as("docs"))
-      .filter(size($"docs") > 1)
-      .select(explode($"docs").as("d1"), $"docs")
-      .select($"d1", explode($"docs").as("d2"))
-      .filter($"d1" < $"d2")
-      .distinct()
-    time("candidates")(noop(candidates))
-    spark.stop()
-  }
-
-  /** ObjectHashAggregate fallback-boundary measurement (round 8): the
-    * round-7 SortAggregate sweep ADJUDICATED the engine's remaining
-    * object-buffer aggregations (bounded-heap top-k, percentile sketches)
-    * as scale-safe — "their sort-based fallback beyond the in-memory key
-    * threshold is the memory-safety contract" — but with an argument, not
-    * a number. This prices the argument: the same aggregation shapes as
-    * `agg_topk_per_key` / `agg_percentiles_sketch`, run at 250k–1M GROUPS
-    * (the gate queries group by 3-key enums; the fallback only engages
-    * past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` =
-    * 128 distinct keys per partition), reporting wall time, throughput,
-    * and actual spill bytes from task metrics. A flat rows/s across group
-    * counts + zero-or-bounded spill = no cliff. A primitive-buffer
-    * HashAggregate control prices the shuffle + scan both paths share.
-    */
-  private def objectAgg(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
-      else Seq(250000, 500000, 1000000)
-    val rowsPerGroup = 8
-    val spark = Session.local(32, "profile-object-agg")
-    spark.conf.set("graft.sums.exact", "false")
-    import spark.implicits._
-    // spill accounting straight from task metrics — the only honest
-    // source: timing alone can't distinguish "slower because sorting"
-    // from "slower because spilling to /tmp"
-    val memSpill = new AtomicLong; val diskSpill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    def timedWithSpill(f: => Unit): (Double, Long, Long) = {
-      f // warm: codegen + shuffle-file setup out of the measurement
-      memSpill.set(0); diskSpill.set(0)
-      val t0 = System.nanoTime(); f
-      ((System.nanoTime() - t0) / 1e9, memSpill.get, diskSpill.get)
-    }
-    for (g <- sizes) {
-      val rows = g.toLong * rowsPerGroup
-      // deterministic synthetic: group key cycles so every group gets
-      // exactly rowsPerGroup members; the value is a cheap integer mix —
-      // id*2654435761 mod 1e6 — spread enough to exercise heap/sketch
-      // ordering without a row-level RNG
-      val df: DataFrame = spark.range(rows)
-        .select(($"id" % g).as("k"), $"id".as("rid"),
-          (($"id" * 2654435761L) % 1000000L).cast("double").as("v"))
-      val topk = org.apache.spark.sql.functions.udaf(new graft.functions.TopKAgg(3))
-      val (tTop, msTop, dsTop) = timedWithSpill {
-        noop(df.groupBy($"k").agg(topk($"v", $"rid").as("top")))
-      }
-      val (tPct, msPct, dsPct) = timedWithSpill {
-        // deployment accuracy (10000), not the gate's exactness-forcing 1e6
-        noop(df.groupBy($"k").agg(
-          expr("percentile_approx(v, 0.5, 10000)").as("p50"),
-          expr("percentile_approx(v, 0.95, 10000)").as("p95")))
-      }
-      val (tCtl, msCtl, dsCtl) = timedWithSpill {
-        noop(df.groupBy($"k").agg(sum($"v").as("s"), count(lit(1)).as("n")))
-      }
-      def mb(x: Long): String = f"${x / 1048576.0}%.0fMB"
-      println(f"OBJAGG groups=$g%8d rows=$rows%9d " +
-        f"topk=$tTop%6.2fs(${rows / tTop / 1e6}%5.1fM rows/s, spill mem=${mb(msTop)} disk=${mb(dsTop)}) " +
-        f"pctl=$tPct%6.2fs(spill mem=${mb(msPct)} disk=${mb(dsPct)}) " +
-        f"control=$tCtl%6.2fs(spill mem=${mb(msCtl)} disk=${mb(dsCtl)})")
-    }
-    spark.stop()
-  }
-
-  /** A/B the `graft.sim.exact` knob — exact all-pairs baselines vs the
-    * banded-LSH candidate paths — on the sf0.1 tables (2000 vectors, 5000
-    * documents). */
-  private def exactness(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-exactness")
-    val dir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val queries = Seq[(String, () => DataFrame)](
-      "pairs_threshold" -> (() => SimilarityOps.pairsAboveThreshold(spark, dir)),
-      "nearest_same_label" -> (() => SimilarityOps.nearestSameLabel(spark, dir)),
-      "embedding_cosine" -> (() => DedupOps.embeddingCosineDedup(spark, dir)),
-      "ngram_jaccard" -> (() => DedupOps.ngramJaccard(spark, dir)))
-    for ((label, f) <- queries; exact <- Seq(true, false)) {
-      spark.conf.set("graft.sim.exact", exact.toString)
-      noop(f()) // warm
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); noop(f()); (System.nanoTime() - t0) / 1e9
-      }
-      val mode = if (exact) "exact" else "banded"
-      println(f"SEGMENT $label%-20s $mode%-7s min=${times.min}%.2fs med=${times.sorted.apply(1)}%.2fs")
-    }
-    spark.stop()
-  }
-
-  /** A/B the int8 candidate prefilter (round 10): the two banded threshold
-    * routes with `graft.sim.prefilter` off vs on, plus the candidate-count
-    * evidence — how many of the Θ(Σ|bucket|²) pairs the provable
-    * [[graft.expr.Int8Keep]] bound kills before the pair distinct and the
-    * float verify joins ever see them. Same methodology as the bench's
-    * banded block (noop sink, warmup, min-of-5).
-    */
-  private def abPrefilter(args: Array[String]): Unit = {
-    val spark = Session.local(32, "ab-prefilter")
-    // `boiler:<n>` generates the size-heterogeneous boilerplate corpus
-    // (docs only) instead of pointing at an SF dir — the minhash
-    // prefilter's realistic stress shape
-    val dir = args.headOption match {
-      case Some(s) if s.startsWith("boiler:") =>
-        Corpora.generateBoilerplateDocs(spark, s.stripPrefix("boiler:").toInt)
-      case Some(s) => s
-      case None => sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    }
-    val hasEmbeddings =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
-    spark.conf.set("graft.sim.exact", "false")
-    // optional shape override (args 2/3: pairs shape, cosdedup shape) — the
-    // gate defaults are right for the gate tables; a crossover corpus wants
-    // its corpus-matched shape (the prefilter's worst case is a dup-heavy
-    // corpus where most candidates SURVIVE, and that case only exists at a
-    // clustered corpus + matched shape)
-    def shapeOf(i: Int, defT: Int, defP: Int): (Int, Int) =
-      args.lift(i).map(_.toLowerCase.split("x").map(_.trim.toInt) match {
-        case Array(t, p) => (t, p)
-        case _ => sys.error(s"shape arg must be <tables>x<planes>, got '${args(i)}'")
-      }).getOrElse((defT, defP))
-    val (pT, pP) = shapeOf(1, 16, 2)
-    val (cT, cP) = shapeOf(2, 8, 4)
-    spark.conf.set("graft.sim.bands.pairs", s"${pT}x$pP")
-    spark.conf.set("graft.sim.bands.cosdedup", s"${cT}x$cP")
-    // optional arg 4: minhash band shape (e.g. 16x1 — the recall-total
-    // 1-row shape where banding admits low-jaccard size-mismatched pairs
-    // and the size-ratio bound has real mass to kill; at the gate's 8x2,
-    // collision probability ~ j^2 already suppresses them)
-    args.lift(3).foreach(s => spark.conf.set("graft.sim.bands.minhash", s))
-    // candidate-mass evidence first (cheap counts, not timed)
-    for ((label, t, p, theta) <- Seq(
-        (s"pairs@0.4 ${pT}x$pP", pT, pP, SimilarityOps.PairsThreshold),
-        (s"cosdedup@0.9 ${cT}x$cP", cT, cP, DedupOps.CosDedupThreshold))
-        if hasEmbeddings) {
-      val all = SimilarityOps.lshCandidateIds(spark, dir, t, p).count()
-      val kept = SimilarityOps.lshCandidateIds(spark, dir, t, p,
-        prefilterTheta = Some(theta)).count()
-      println(f"ABPREFILTER $label%-18s candidates=$all kept=$kept " +
-        f"killed=${1.0 - kept.toDouble / math.max(all, 1)}%.4f")
-    }
-    // minhash-family candidate mass (round 11: the size-ratio bound rides
-    // the same knob) — prefilter off vs on through minhashCandidatesPlan
-    locally {
-      spark.conf.set("graft.sim.prefilter", "false")
-      val all = DedupOps.minhashCandidatesPlan(spark, dir).count()
-      spark.conf.set("graft.sim.prefilter", "true")
-      val kept = DedupOps.minhashCandidatesPlan(spark, dir).count()
-      println(f"ABPREFILTER minhash@0.5 size-ratio candidates=$all kept=$kept " +
-        f"killed=${1.0 - kept.toDouble / math.max(all, 1)}%.4f")
-    }
-    val queries = (if (hasEmbeddings) Seq[(String, () => DataFrame)](
-      "sim_pairs_threshold" -> (() => SimilarityOps.pairsAboveThreshold(spark, dir)),
-      "dedup_embedding_cosine" -> (() => DedupOps.embeddingCosineDedup(spark, dir)))
-    else Nil) ++ Seq[(String, () => DataFrame)](
-      "dedup_ngram_jaccard" -> (() => DedupOps.ngramJaccard(spark, dir)),
-      "dedup_minhash_lsh" -> (() => DedupOps.minhashLsh(spark, dir)))
-    for ((label, f) <- queries; pre <- Seq(false, true)) {
-      spark.conf.set("graft.sim.prefilter", pre.toString)
-      noop(f()) // warm
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); noop(f()); (System.nanoTime() - t0) / 1e9
-      }
-      println(f"ABPREFILTER $label%-22s prefilter=$pre%-5s " +
-        f"min=${times.min}%.2fs med=${times.sorted.apply(2)}%.2fs")
-    }
-    spark.stop()
-  }
-
-  /** Round 12 (r11 verdict #2): MEASURE the verify stage's shingle-string
-    * shuffle, then the hash-keyed cut. The survivor verify in
-    * `jaccardStats` re-derives candidate shingle sets and shuffles them
-    * three times (slice distinct, sizes groupBy, common join) — with
-    * string keys those rows carry ~15–30 B payloads; `graft.dedup
-    * .hashverify` swaps in the 8-byte xxhash64 the kernels already compute
-    * per shingle. A/Bs the knob on the size-heterogeneous boilerplate
-    * corpus over the banded path, reporting per-mode wall time and the
-    * timed pass's total shuffle read/write bytes from task metrics (the
-    * honest source — a wall-only A/B can't attribute the win to bytes).
-    * The shared candidate-generation stage is timed separately so the
-    * verify-only share is explicit.
-    */
-  private def verifyShuffle(args: Array[String]): Unit = {
-    val spark = Session.local(32, "verify-shuffle")
-    // arg 0: boilerplate doc count, or "dir:<path>" to point at existing
-    // tables (e.g. the sf0.1 gate corpus)
-    val dir = args.headOption match {
-      case Some(s) if s.startsWith("dir:") => s.stripPrefix("dir:")
-      case o => Corpora.generateBoilerplateDocs(spark, o.map(_.toInt).getOrElse(20000))
-    }
-    val n = dir
-    spark.conf.set("graft.sim.exact", "false")
-    spark.conf.set("graft.sim.prefilter", "true")
-    args.lift(1).foreach(s => spark.conf.set("graft.sim.bands.minhash", s))
-    // arg 2: bucket cap (graft.dedup.bucketcap) — the quadratic-mass dial
-    args.lift(2).foreach(c => spark.conf.set("graft.dedup.bucketcap", c))
-    val shape = spark.conf.get("graft.sim.bands.minhash", "8x2(default)")
-    val cap = spark.conf.get("graft.dedup.bucketcap", "off")
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    import meter.measured
-    // the count doubles as the warm pass (same stages + a cheap agg)
-    val nCand = DedupOps.minhashCandidatesPlan(spark, dir).count()
-    val (tCand, rCand, wCand) = measured(
-      noop(DedupOps.minhashCandidatesPlan(spark, dir)), warm = false)
-    println(f"VERIFYSHUF corpus=$n shape=$shape cap=$cap candidates=$nCand " +
-      f"candidates-only min=$tCand%.2fs shuffle read=${mb(rCand)} write=${mb(wCand)}")
-    for (hv <- Seq(false, true)) {
-      spark.conf.set("graft.dedup.hashverify", hv.toString)
-      val nPairs = DedupOps.ngramJaccard(spark, dir).count()
-      val (t, r, w) = measured(noop(DedupOps.ngramJaccard(spark, dir)), warm = false)
-      val mode = if (hv) "hash-keys" else "string-keys"
-      println(f"VERIFYSHUF corpus=$n shape=$shape cap=$cap full[$mode%-11s] " +
-        f"min=$t%.2fs verify-share=${t - tCand}%.2fs verifiedPairs=$nPairs " +
-        f"shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.stop()
-  }
-
-  /** Round 13 (bench Kryo sentinel, SCALE.md): A/B the bounded-top-k
-    * BUFFER encoding — product struct vs `Encoders.kryo` — on a synthetic
-    * many-group aggregation whose shuffle is almost entirely partial
-    * `TopKBuf` rows (nKeys·partitions tiny heaps). The swap to struct
-    * encoders was motivated by correctness-under-deployment (an
-    * opens-less JVM cannot kryo-serialize ANY Scala object); this
-    * measures the byte/wall side so the SCALE.md claim is a figure, not
-    * a guess. The kryo leg lives HERE as a harness-only subclass —
-    * production aggregators inherit the struct encoder from
-    * [[graft.functions.BoundedTopK]] and cannot silently pick kryo.
-    * args: [nKeys] [rowsPerKey] [k]
-    */
-  private def topkEncoder(args: Array[String]): Unit = {
-    val spark = Session.local(32, "topk-encoder")
-    import spark.implicits._
-    val nKeys = args.lift(0).map(_.toInt).getOrElse(100000)
-    val rowsPerKey = args.lift(1).map(_.toInt).getOrElse(20)
-    val k = args.lift(2).map(_.toInt).getOrElse(3)
-    // deterministic synthetic input, materialized once so both legs
-    // aggregate identical cached blocks instead of re-running range codegen
-    val df = spark.range(nKeys.toLong * rowsPerKey).select(
-      pmod($"id", lit(nKeys)).as("key"),
-      (pmod(hash($"id"), lit(1000000)).cast("double") / 1e6).as("score"),
-      $"id".as("c_id")).localCheckpoint(true)
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    val legs = Seq(
-      "struct" -> udaf(new graft.functions.TopKAgg(k)),
-      "kryo" -> udaf(new KryoTopKAgg(k)))
-    for ((label, agg) <- legs) {
-      val out = df.groupBy($"key").agg(agg($"score", $"c_id").as("top"))
-      val (t, r, w) = meter.measured(noop(out))
-      println(f"TOPKENC nKeys=$nKeys rowsPerKey=$rowsPerKey k=$k buf=$label%-6s " +
-        f"min=$t%.2fs shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.stop()
-  }
-
   /** Round 13 (r12 verdict #2): measure the embedding-side quadratic
     * bucket and the `graft.sim.bucketcap.cosdedup` dial on the dense-duplicate
     * corpus ([[Corpora.generateDenseDupVectors]]). For each size: the
@@ -1047,7 +570,7 @@ object Harness {
     * buckets far below any sane cap.
     */
   private def simBucketcap(args: Array[String]): Unit = {
-    val spark = Session.local(32, "sim-bucketcap")
+    val spark = Session.local(appName = "sim-bucketcap")
     import spark.implicits._
     val sizes = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(20000, 50000))
@@ -1133,101 +656,6 @@ object Harness {
     spark.stop()
   }
 
-  /** Round 12 (r11 verdict #3): A/B the decontamination bloom prefilter in
-    * the regime it exists for. Three configs on the decontam stress corpus
-    * (large eval docs, ~100% corpus-side miss rate off the planted
-    * windows):
-    *  1. broadcast join, no bloom — the gate default; misses die in the
-    *     in-stage broadcast probe, nothing to fix;
-    *  2. FORCED shuffle join (autoBroadcastJoinThreshold=-1, emulating an
-    *     eval-gram set past the broadcast budget), no bloom — the
-    *     pathology: the full corpus shingle stream crosses the exchange;
-    *  3. forced shuffle + bloom — the outgrow path: the scan-stage bloom
-    *     kills misses first, so only ~matches+fpp reach the exchange.
-    * Wall + the timed pass's shuffle bytes from task metrics, so the claim
-    * "the bloom cuts the shuffle, not just the clock" is measured.
-    */
-  private def decontamBloom(args: Array[String]): Unit = {
-    val spark = Session.local(32, "decontam-bloom")
-    val n = args.lift(0).map(_.toInt).getOrElse(50000)
-    val evalTokens = args.lift(1).map(_.toInt).getOrElse(200000)
-    val dir = Corpora.generateDecontamDocs(spark, n, evalTokens)
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    import meter.measured
-    val contaminated = TextOps.decontaminate(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("contaminated")).count()
-    println(s"DECONTAM n=$n evalTokens=$evalTokens plantedContaminated=$contaminated")
-    // the A/B is meaningless on a corpus with no (or partial) planted
-    // contamination — assert the full schedule was both planted and
-    // detected (disjoint vocabularies make false positives impossible)
-    val expected = (5L until (n + 5L)).count(_ % 20 == 5)
-    assert(contaminated == expected,
-      s"planted $expected contaminated docs, detected $contaminated — generator or detector broke")
-    // the naive outgrown design the bloom path replaces: decontaminate's
-    // exact shape MINUS the broadcast hint and minus the bloom — the raw
-    // corpus shingle stream crosses the exchange into a shuffle join.
-    // (Config 1's explicit broadcast() hint can't degrade to this shape:
-    // past the broadcast budget it kills the driver outright, the r11
-    // pair-set-broadcast pathology — which is WHY the outgrow path is a
-    // separate knob and not "let AQE decide".)
-    def naiveShuffleDecontam(): DataFrame = {
-      import spark.implicits._
-      val docs = Tables.documents(spark, dir)
-      val evalGrams = DedupOps.shingledOf(docs.filter($"doc_id" < 5))
-        .select($"shingle").distinct()
-      val overlaps = DedupOps.shingledOf(docs.filter($"doc_id" >= 5))
-        .join(evalGrams, Seq("shingle")).distinct()
-        .groupBy($"doc_id").agg(count(lit(1)).as("n_overlap"))
-      docs.filter($"doc_id" >= 5).select($"doc_id")
-        .join(overlaps, Seq("doc_id"), "left")
-        .select($"doc_id", coalesce($"n_overlap", lit(0L)).as("n_overlap"))
-        .withColumn("contaminated", $"n_overlap" >= 3)
-        .orderBy($"doc_id")
-    }
-    for ((label, noBroadcast, bloom) <- Seq(
-        ("broadcast hint, no bloom (gate default)  ", false, false),
-        ("hint-free shuffle join, no bloom (naive) ", true, false),
-        ("hint-free shuffle join + bloom (outgrown)", true, true))) {
-      val thr = if (noBroadcast) "-1" else "10485760"
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", thr)
-      spark.conf.set("graft.text.decontam.bloom", bloom.toString)
-      val q: () => DataFrame =
-        if (noBroadcast && !bloom) () => naiveShuffleDecontam()
-        else () => TextOps.decontaminate(spark, dir)
-      val (t, r, w) = measured(noop(q()))
-      println(f"DECONTAM $label min=$t%.2fs shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.unset("graft.text.decontam.bloom")
-    spark.stop()
-  }
-
-  /** Round 11 (r10 verdict #2): MEASURE the hot-bucket skew claim the
-    * round-10 minhash self-join rationale asserted ("AQE's skew handling
-    * can split a hot bucket"). Generates a corpus where `hotFrac` of the
-    * docs are IDENTICAL near-empty documents — one shared signature, so
-    * every band contributes one degenerate (band,bucket) key holding
-    * hotFrac·n rows — then runs the candidate plan with
-    * `spark.sql.adaptive.skewJoin.enabled` off vs on and reports wall
-    * time, the task-duration distribution of the run, the candidate count
-    * (must be identical — the split is physical, not semantic), and
-    * whether the final adaptive plan actually carries skew-split
-    * AQEShuffleRead nodes.
-    *
-    * Threshold honesty: AQE detects skew by MAP-OUTPUT PARTITION BYTES
-    * (factor × median AND an absolute floor), not by join-output rows —
-    * and the quadratic pair blowup is an OUTPUT property. The two meet
-    * because a bucket degenerate enough to matter holds many DOCS (input
-    * rows ∝ docs in the bucket, output pairs ∝ docs²): by the time the
-    * quadratic side is lethal, the input side is far past any sane
-    * threshold. The local corpus is ~10^4× smaller than production, so the
-    * demo scales the byte thresholds down proportionally (the 256 MB
-    * default exists for clusters); the MECHANISM — detection, split,
-    * replicate-other-side, identical result — is what's being measured.
-    */
   /** Round 12: measure the star-contraction round count and wall on PATH
     * graphs — the adversarial shape for label propagation (diameter = n−1,
     * which the old 25-round min-label loop silently fractured past n=26).
@@ -1237,7 +665,7 @@ object Harness {
     * two id-width shuffles) is a measured line, not a citation.
     */
   private def ccChain(args: Array[String]): Unit = {
-    val spark = Session.local(32, "cc-chain")
+    val spark = Session.local(appName = "cc-chain")
     import spark.implicits._
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(1000, 10000, 100000, 1000000)
@@ -1293,91 +721,12 @@ object Harness {
     spark.stop()
   }
 
-  private def skewMinhash(args: Array[String]): Unit = {
-    val spark = Session.local(32, "skew-minhash")
-    import spark.implicits._
-    val n = args.lift(0).map(_.toInt).getOrElse(20000)
-    val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.2)
-    val nHot = (n * hotFrac).toInt
-    // hot docs: identical 2-token text = one shared 1-shingle signature;
-    // background: 60 random tokens over a 50k vocab — essentially unique
-    // buckets. Locals only in the closure (serialization).
-    val docs = spark.range(n).map { i =>
-      if (i < nHot) (i, "w0 w1")
-      else {
-        val r = new scala.util.Random(31L * i + 7)
-        (i, Array.fill(60)("w" + r.nextInt(50000)).mkString(" "))
-      }
-    }.toDF("doc_id", "text")
-    val dir = s"/tmp/graft_skew/n${n}_hot${math.round(hotFrac * 100)}"
-    docs.repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // scaled-down skew thresholds (see scaladoc): the hot partition here
-    // is tens of KB, not hundreds of MB
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    // cluster-true partition count: detection compares the hot key against
-    // the MEDIAN partition, and a production job runs thousands of shuffle
-    // partitions — at local[32]'s default 32 the background mass is so
-    // thick per partition that a 20% hot bucket is only ~1.8× median
-    // (measured; detection needs factor×median). 200 thins the background
-    // ~6×, the local stand-in for the real ratio.
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    // exclude the BusDrain sentinels' own tasks from the med/max figures:
-    // the post-measure drain's sentinel TaskEnd lands before the latch
-    // releases (that ordering is the drain's guarantee), so without this
-    // it would ride inside the measured run's duration sample
-    val sentinelStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (d != null && d.startsWith(BusDrain.SentinelPrefix))
-          j.stageIds.foreach(id => sentinelStages.add(id))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null && !sentinelStages.contains(t.stageId))
-          durations.add(t.taskMetrics.executorRunTime)
-    })
-    // listener events are delivered on the async bus; drain it before
-    // clearing (warm-run stragglers) and before reading (the measured
-    // run's own straggler IS the evidence) — without the drain, the
-    // med/max figures can silently miss the hot-bucket task. Sentinel
-    // tasks are excluded above by stage id, so the post-measure drain
-    // cannot leak its own task into the sample it flushes.
-    for (skewOn <- Seq(false, true)) {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      val df = DedupOps.minhashCandidatesPlan(spark, dir)
-      df.queryExecution.toRdd.count() // warm (codegen, shuffle files)
-      BusDrain.drain(spark)
-      durations.clear()
-      val df2 = DedupOps.minhashCandidatesPlan(spark, dir)
-      val t0 = System.nanoTime()
-      val cnt = df2.queryExecution.toRdd.count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      BusDrain.drain(spark)
-      val plan = df2.queryExecution.executedPlan.toString
-      val skewReads = plan.linesIterator.count(l => l.contains("AQEShuffleRead") && l.contains("skew"))
-      val ds = durations.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
-      val med = if (ds.nonEmpty) ds(ds.length / 2) else 0L
-      val mx = if (ds.nonEmpty) ds.last else 0L
-      println(f"SKEWMINHASH n=$n hot=$nHot skewJoin=$skewOn%-5s wall=$secs%6.2fs " +
-        f"candidates=$cnt taskRunTime(med/max)=${med}ms/${mx}ms skewSplitReads=$skewReads")
-      plan.linesIterator
-        .filter(l => l.contains("ShuffledHashJoin") || (l.contains("AQEShuffleRead") && l.contains("skew")))
-        .foreach(l => println("SKEWMINHASH   plan: " + l.trim))
-    }
-    spark.stop()
-  }
-
   /** Decompose the banded pipeline's wall time at a crossover corpus size —
     * candidate generation vs distinct vs embedding re-join vs verify — to
     * find which stage carries the unexplained per-row constant
     * (Harness `crossover` r6: banded ~0.65 ms/vector regardless of shape). */
   private def banded(args: Array[String]): Unit = {
-    val spark = Session.local(32, "time-banded")
+    val spark = Session.local(appName = "time-banded")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     import spark.implicits._
     // default = the path Corpora.generate(spark, 20000) actually writes
@@ -1439,7 +788,7 @@ object Harness {
     */
   private def crossover(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(20000, 50000)
-    val spark = Session.local(32, "profile-crossover")
+    val spark = Session.local(appName = "profile-crossover")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
     import spark.implicits._
     val queries = Seq[(String, String => DataFrame)](
@@ -1509,7 +858,7 @@ object Harness {
       sys.env.getOrElse("SPARK_GRAFT_CROSSOVER_BANDS", "8x10"))
       .toLowerCase.split(",").map(_.trim).toSeq
     val bits = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(0, 1, 2, 4)
-    val spark = Session.local(32, "profile-probe")
+    val spark = Session.local(appName = "profile-probe")
     // 256 MB: keep the exact baseline on its best (broadcast-hash) plan at
     // 250k+ vectors — at 64 MB the ~70 MB embedding side flipped to a
     // sort-merge join whose per-key group buffering spilled >50 GB (r7)
@@ -1623,7 +972,7 @@ object Harness {
     val shapes = args.lift(1).getOrElse("8x4,auto")
       .toLowerCase.split(",").map(_.trim).toSeq
     val bits = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(0, 1, 2)
-    val spark = Session.local(32, "profile-dedup-probe")
+    val spark = Session.local(appName = "profile-dedup-probe")
     // same setting as probe: keep the exact baseline on its best plan (the
     // broadcast nested-loop theta-join over the ~26 MB corpus)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
@@ -1711,7 +1060,7 @@ object Harness {
     */
   private def docsCrossover(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(50000, 250000)
-    val spark = Session.local(32, "profile-docs-crossover")
+    val spark = Session.local(appName = "profile-docs-crossover")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     import spark.implicits._
     for (n <- sizes) {
@@ -1771,19 +1120,4 @@ object Harness {
     }
     spark.stop()
   }
-}
-
-/** Harness-only kryo-buffered twin of [[graft.functions.TopKAgg]] for the
-  * `topk-encoder` A/B (SCALE.md round 13, bench Kryo sentinel). NOT for
-  * production: a kryo buffer ships opaque blobs and needs the JVM module
-  * opens every supported Spark launcher adds — the production heap
-  * aggregators inherit the struct encoder from
-  * [[graft.functions.BoundedTopK]].
-  */
-private final class KryoTopKAgg(k: Int) extends graft.functions.TopKAgg(k) {
-  // extends TopKAgg (not BoundedTopK) so the ordering/tie-break stays
-  // single-sourced: the A/B must compare ENCODINGS of the same
-  // aggregation, and a copied Ordering could silently drift
-  override def bufferEncoder =
-    org.apache.spark.sql.Encoders.kryo[graft.functions.TopKBuf[graft.functions.Scored]]
 }

@@ -24,7 +24,7 @@ object PlanFiles {
     val outDir = Paths.get(args(0))
     val suffix = args(1)
     Files.createDirectories(outDir)
-    val spark = Session.local(32, "plan-files")
+    val spark = Session.local(appName = "plan-files")
     spark.conf.set("graft.sums.exact", "false")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

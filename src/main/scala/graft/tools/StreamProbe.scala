@@ -17,8 +17,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
-    val spark = Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "stream-probe")
+    val spark = Session.local(appName = "stream-probe")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).count() // session warm
     val names = if (args.nonEmpty) args.toSeq

@@ -20,6 +20,23 @@ import org.apache.spark.sql.functions._
 class OpsExtrasSpec extends SparkSpec {
   import spark.implicits._
 
+  test("the shared spec session runs the bench's and the gate's settings") {
+    // Session.local is the one builder: Spark's broadcast threshold and AQE
+    // defaults, shuffle partitions = cores — so plan-shape specs see the
+    // plans the bench and the correctness gate run
+    import org.apache.spark.sql.internal.SQLConf
+    val threshold = SQLConf.AUTO_BROADCASTJOIN_THRESHOLD
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get(threshold.key)) === threshold.defaultValue.get)
+    for (flag <- Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED,
+        SQLConf.COALESCE_PARTITIONS_ENABLED, SQLConf.SKEW_JOIN_ENABLED)) {
+      assert(flag.defaultValue.contains(true), flag.key)
+      assert(spark.conf.get(flag.key).toBoolean, flag.key)
+    }
+    assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt ===
+      spark.sparkContext.defaultParallelism)
+  }
+
   test("observe collects counter metrics in one pass (Counters parity)") {
     val obs = Observation("graft_counters")
     val df = Tables.orders(spark, sfDir)

@@ -45,6 +45,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("co-bucketed tables join without a shuffle (CompositeInputFormat parity)") {
+    // save/restore, not unset: unset falls back to Spark's default, not to
+    // whatever the session was built with, and later suites share the session
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // the in-memory catalog is fresh each session but the warehouse dir is
@@ -64,7 +67,7 @@ class PlanSpec extends SparkSpec {
       val plan = planOf(joined)
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
       assert(joined.count() == Tables.lineitem(spark, sfDir).count())
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("point lookup on a bucketed table prunes to one bucket (MapFile parity)") {

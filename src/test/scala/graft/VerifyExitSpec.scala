@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * it). The decision is a pure function of (failure count, env lookup),
   * so the spec needs no Spark session and no forked JVM — a refactor
   * that silently inverts the gate's failure signal fails here first.
+  * The oracle_sql.json builder is pinned here too, for the same reason:
+  * it is a pure function of the oracle map.
   */
 class VerifyExitSpec extends AnyFunSuite {
 
@@ -36,5 +38,18 @@ class VerifyExitSpec extends AnyFunSuite {
   test("a clean run exits zero regardless of the hatch") {
     assert(!Verify.exitNonzero(0, env()))
     assert(!Verify.exitNonzero(0, env("SPARK_GRAFT_VERIFY_EXIT0" -> "1")))
+  }
+
+  test("oracle_sql.json carries every oracle entry under both driver keys") {
+    // the driver looks oracles up by output directory name (<name>.parquet)
+    // while queries are keyed bare — round 1 scored 0/99 on that mismatch;
+    // one hostile entry checks the escaping round-trips through a parser
+    val oracle = SparkEntry.oracleSql +
+      ("q\"x" -> "SELECT \"a\\b\"\tFROM t\r\nWHERE x = '\u0001'")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Verify.oracleJson(oracle))
+    assert(node.size === 2 * oracle.size)
+    for ((k, sql) <- oracle; key <- Seq(k, s"$k.parquet"))
+      assert(node.get(key).asText === sql, key)
   }
 }
