@@ -6,8 +6,15 @@ import graft.core.Fmt.jsonString
   * BASELINE.md on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
   * Methodology:
-  *  - one warmup query absorbs session/JIT/codegen-compiler startup so the
-  *    numbers measure the queries, not the JVM;
+  *  - one untimed pass over the headline set runs first. It absorbs
+  *    session start, Spark's own class loading, the first table loads and
+  *    each plan's first janino compile. It does NOT bring the JVM to a
+  *    steady state: the headline set generates about 175 classes a pass
+  *    against Spark's 100-entry codegen cache, so every pass re-compiles
+  *    100–160 of them, and HotSpot is still JIT-compiling minutes later
+  *    (4–18 s of CPU per pass over 30 passes at sf0.1 on 4 cores,
+  *    perfbench/README.md "Steady state"). The timed min is a partly-warm
+  *    figure, comparable between runs of this same schedule;
   *  - results sink to the noop format — `count()` would let the optimizer
   *    prune the expensive expressions out of the measured plan.
   */
@@ -317,10 +324,9 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // Steady-state methodology: one untimed pass first. Whole-stage codegen
-    // compiles each query's generated classes on first execution (janino) —
-    // a fixed per-plan cost that would dwarf the tiny-SF data cost and is
-    // irrelevant at the target scale. Then `passes` timed passes, reporting
+    // One untimed pass first: it takes the first-execution costs out of the
+    // timed passes, not the re-compiles and JIT work that continue through
+    // them (methodology note above). Then `passes` timed passes, reporting
     // the min: single-pass numbers on a shared machine carry ~±15% noise
     // (observed round-over-round: the same build measured 7.0s and 9.6s
     // under different machine load), so more passes = tighter min.

@@ -281,51 +281,73 @@ object EventStreams {
     * return the materialized result — real incremental execution, memory
     * sink, AvailableNow trigger.
     *
-    * Checkpoint-file checksums are OFF here by default (round 22, dialable
-    * via `graft.stream.checkpoint.checksum`). Spark 4.1's
-    * ChecksumCheckpointFileManager writes a checksum sidecar per checkpoint
-    * file and every state-store commit BLOCKS on that async write — thread
-    * dumps during the stateful stage showed every task parked in
-    * `ChecksumCancellableFSDataOutputStream.close` → awaitResult, ~35% of
-    * the stage's summed executor time (stream_tumbling's stateful stage:
-    * 29.1 s summed / 0.98 s wall with checksums, 17.9 s / 0.63 s without;
-    * whole-query wall 2.9 → 2.0 s). The sidecars exist to detect file
-    * corruption across restarts of DURABLE checkpoints; these witnesses run
-    * on TEMPORARY checkpoint dirs that are deleted when the query ends, so
-    * the sidecars protect files that never survive the session. Production
-    * posture: on HDFS the filesystem already checksums every block natively
-    * (the sidecar is for object stores / raw local disks) — set the dial to
-    * true where the checkpoint is durable and the store doesn't checksum.
+    * Two settings are overridden, and only across `start()`: that is where
+    * `StreamExecution` clones the session, and the clone keeps the conf it
+    * was cloned with for the whole run. Both are restored on return, also
+    * when `start()` throws, and a lock serializes the window so that
+    * overlapping calls cannot save each other's temporary values.
+    *
+    *  - `spark.sql.artifact.isolation.enabled=false`. Each clone gets a
+    *    fresh session UUID; with isolation on, its jobs run under a fresh
+    *    `JobArtifactState` and so a fresh executor class loader, and Spark's
+    *    codegen cache (keyed by class loader and source) misses on every
+    *    run: `stream_tumbling` compiled, loaded and re-JITted 14 classes
+    *    whose source equalled the previous run's. With isolation off the
+    *    stream's jobs run under the default artifact state, like every
+    *    batch query of the session, and reuse the compiled classes. The
+    *    engine adds no session-scoped artifacts, so isolation has nothing to
+    *    isolate here. A session that carries session-scoped jars or files
+    *    (Spark Connect) must not use this helper: its stream would not see
+    *    them.
+    *  - `spark.sql.streaming.checkpoint.fileChecksum.enabled`, from
+    *    `graft.stream.checkpoint.checksum` (default false). Spark 4.1's
+    *    ChecksumCheckpointFileManager writes a sidecar per checkpoint file
+    *    and every state-store commit blocks on that async write (thread
+    *    dumps: tasks parked in `ChecksumCancellableFSDataOutputStream.close`
+    *    → awaitResult). Re-measured with `graft.tools.StreamProbe` once
+    *    the runs reused their classes (sf0.1, 4 cores, so 4 state-store
+    *    partitions; two warm runs a side): turning the sidecars off cuts
+    *    the stateful stage's summed executor time by 30–35% on all three
+    *    witnesses (tumbling 2.18 → 1.47 s over the two runs), while the
+    *    whole-query walls moved within run-to-run noise (tumbling
+    *    1.19–1.47 s on, 1.11–1.48 s off). The default stays off: the
+    *    sidecars cost executor time and protect nothing here. They detect
+    *    corruption of DURABLE checkpoints across restarts; these witnesses
+    *    run on TEMPORARY checkpoint dirs deleted when the query ends. On
+    *    HDFS the filesystem already checksums every block; set the dial to
+    *    true where the checkpoint is durable and the store doesn't
+    *    checksum.
     */
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val checksumConf = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prior = spark.conf.getOption(checksumConf)
-    spark.conf.set(checksumConf,
-      spark.conf.get("graft.stream.checkpoint.checksum", "false"))
+    val overrides = Seq(
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
+        spark.conf.get("graft.stream.checkpoint.checksum", "false"))
+    var started: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
-      var started: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        started = streamed.writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-      } catch { case e: Throwable =>
-        // a mid-run failure must not leak the uniquely-named sink view (or
-        // a still-registered query) per invocation — the unbounded catalog
-        // growth the dropTempView below exists to prevent (review r22 #3)
-        if (started != null)
-          try started.stop() catch { case scala.util.control.NonFatal(_) => () }
+      started = startLock.synchronized {
+        withConf(spark, overrides) {
+          streamed.writeStream
+            .format("memory").queryName(name).outputMode(mode)
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
+      }
+      started.awaitTermination()
+    } catch { case e: Throwable =>
+      // a mid-run failure must not leak the uniquely-named sink view (or
+      // a still-registered query) per invocation — the unbounded catalog
+      // growth the dropTempView below exists to prevent. The memory sink
+      // registers its view only once start() returns, so a start() that
+      // threw left no view of ours; a view by that name belongs to another
+      // query (e.g. an active one holding the same name) and stays.
+      if (started != null) {
+        try started.stop() catch { case scala.util.control.NonFatal(_) => () }
         try spark.catalog.dropTempView(name)
         catch { case scala.util.control.NonFatal(_) => () }
-        throw e
       }
-    } finally prior match {
-      // restore so a caller-set value survives this helper (the same
-      // save/restore discipline as profile-stages' graft.sim.exact)
-      case Some(v) => spark.conf.set(checksumConf, v)
-      case None    => spark.conf.unset(checksumConf)
+      throw e
     }
     // Dataset analysis is eager, so the resolved memory-sink plan survives
     // dropping the temp view; dropping bounds catalog/driver growth when a
@@ -334,5 +356,22 @@ object EventStreams {
     val out = spark.table(name)
     spark.catalog.dropTempView(name)
     out
+  }
+
+  /** Serializes [[runToMemory]]'s conf window across threads and sessions. */
+  private val startLock = new Object
+
+  /** Run `body` with `overrides` set on the session conf, then restore each
+    * key's prior value (unset where it had none), also when `body` throws.
+    */
+  private def withConf[T](spark: SparkSession, overrides: Seq[(String, String)])(
+      body: => T): T = {
+    val prior = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.streaming.EventStreams
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -21,6 +22,68 @@ class StreamingSpec extends SparkSpec {
     val want = EventStreams.tumblingCounts(Tables.events(spark, sfDir))
       .orderBy($"w_start", $"event_type").collect().map(_.toString)
     assert(got.sameElements(want))
+  }
+
+  private val streamConfs = Seq("spark.sql.artifact.isolation.enabled",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled")
+
+  private def tumblingToMemory(name: String) = EventStreams.runToMemory(spark,
+    EventStreams.tumblingCounts(EventStreams.fileSource(spark, sfDir)), name)
+
+  test("repeated runToMemory streams reuse compiled classes; the conf is restored") {
+    val before = streamConfs.map(spark.conf.getOption)
+    def compilesOf(run: Int): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      tumblingToMemory(s"t_spec_reuse_$run")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val compiles = (1 to 3).map(compilesOf)
+    // each stream runs on a fresh session clone; with artifact isolation on
+    // for it, every run got a fresh class loader and re-compiled its classes
+    assert(compiles(2) == 0L, s"codegen compiles per run: ${compiles.mkString(", ")}")
+    assert(streamConfs.map(spark.conf.getOption) == before)
+
+    // start() throws on a name held by an active query: the conf is still
+    // restored, and the other query's sink view is left alone
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Long]
+    val holder = mem.toDF().writeStream.format("memory").queryName("t_spec_dup")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      mem.addData(1L, 2L); holder.processAllAvailable()
+      intercept[IllegalArgumentException](tumblingToMemory("t_spec_dup"))
+      assert(streamConfs.map(spark.conf.getOption) == before)
+      assert(spark.table("t_spec_dup").count() == 2L)
+    } finally holder.stop()
+  }
+
+  test("runToMemory writes checkpoint checksum sidecars only when the dial asks") {
+    // with spark.sql.streaming.checkpointLocation set, a stream checkpoints
+    // to <location>/<query name> and the directory outlives the query
+    val cpConf = "spark.sql.streaming.checkpointLocation"
+    val dial = "graft.stream.checkpoint.checksum"
+    val root = java.nio.file.Files.createTempDirectory("graft_cp_sums")
+    val prior = spark.conf.getOption(cpConf)
+    // Spark's sidecar is <file>.crc; Hadoop's local file system writes its
+    // own .<file>.crc beside every file regardless of the setting
+    def sidecars(name: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(root.resolve(name))
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(f => f.endsWith(".crc") && !f.startsWith(".")).toList
+      finally walk.close()
+    }
+    spark.conf.set(cpConf, root.toString)
+    try {
+      tumblingToMemory("t_spec_sums_off")
+      assert(sidecars("t_spec_sums_off").isEmpty)
+      spark.conf.set(dial, "true")
+      try tumblingToMemory("t_spec_sums_on") finally spark.conf.unset(dial)
+      assert(sidecars("t_spec_sums_on").nonEmpty)
+    } finally {
+      prior.fold(spark.conf.unset(cpConf))(spark.conf.set(cpConf, _))
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
   }
 
   test("file-source streaming sliding counts == batch sliding counts") {
