@@ -21,8 +21,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the row-group-bounded parallelism a parquet scan actually achieves. At
   * production scale the estimate exceeds any realistic parallelism and
   * the frame passes through UNTOUCHED — the trigger derives from input
-  * size, never from a local[32] constant. The repartition hashes a
-  * caller-named key column (stable row identity → deterministic under
+  * size, never from a local[32] constant. The repartition hashes
+  * caller-named key columns (stable row identity → deterministic under
   * retries, no round-robin sort-before-repartition).
   *
   * WHERE IT APPLIES — measured, not assumed (SCALE.md round 21): only
@@ -37,6 +37,24 @@ import org.apache.spark.sql.{Column, DataFrame}
   * use it. Callers must also be partition-INSENSITIVE (per-row outputs or
   * order-insensitive aggregates; never sketches whose merge order shifts
   * results, e.g. approx_percentile).
+  *
+  * It also applies to an EXCHANGE whose work is not proportional to its
+  * bytes: the banded candidate self-join
+  * ([[graft.functions.SimilarityOps.lshCandidateIds]]), keyed on
+  * (tbl, bucket). Its exchange is small (under 1 MB for 2,000 vectors), so
+  * AQE merges it under its 1 MB minimum partition size into ONE task, yet
+  * that task joins Σ bucket² rows (about 9 M at the 16×2 shape on 1,500
+  * vectors). Each side repartitioned here on the join keys, the
+  * repartition IS the join's exchange (no stage added; the two sides'
+  * repartitions are one reused exchange) and AQE cannot merge a
+  * caller-sized partitioning, so the join runs one task per core
+  * (SCALE.md "The banded self-join runs on every core"). That join
+  * keeps each pair once (`lsh_first_shared`) instead of running a pair
+  * distinct per task: four partial-distinct hash maps, one 64 MB Tungsten
+  * page each, raised the benchmark's peak heap 225 → 609 MB. Measured
+  * before applying: `lshScoredNeighbors` already runs on every core (its
+  * exchange carries the embeddings), and the minhash band join is not a
+  * long stage.
   *
   * Conservative failure posture: inputs whose size cannot be read cheaply
   * from a local filesystem (object stores, in-memory test frames) pass
@@ -69,11 +87,11 @@ object Fanout {
       }
     }.toOption.flatten
 
-  /** `df` repartitioned by `key` to the session's default parallelism iff
+  /** `df` repartitioned by `keys` to the session's default parallelism iff
     * its backing files cannot fill that parallelism on their own; `df`
     * unchanged otherwise. Row-level semantics are identity either way.
     */
-  def maybeFanout(df: DataFrame, key: Column): DataFrame = {
+  def maybeFanout(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     val maxPartitionBytes = org.apache.spark.network.util.JavaUtils
@@ -81,7 +99,7 @@ object Fanout {
     inputBytes(df, cap = parallelism * maxPartitionBytes) match {
       case Some(bytes)
           if (bytes + maxPartitionBytes - 1) / maxPartitionBytes < parallelism =>
-        df.repartition(parallelism, key)
+        df.repartition(parallelism, keys: _*)
       case _ => df
     }
   }

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -108,4 +108,50 @@ case class LshBuckets(child: Expression, nTables: Int, planesPerTable: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** lsh_first_shared(b1, b2) → the first table at which two `lsh_buckets`
+  * arrays hold the same bucket, or -1 when they share none.
+  *
+  * The banded candidate self-join joins a pair once for EVERY table whose
+  * bucket the two vectors share. Keeping only the row whose table is the
+  * first shared one emits each pair exactly once, so no pair distinct
+  * (a hash map per task) is needed, and rejecting the repeats here, before
+  * `int8_keep`, costs at most that many int compares.
+  *
+  * Deliberately not null-intolerant: the optimizer would otherwise infer
+  * IsNotNull on the carried bucket arrays and re-run the bucketing kernel
+  * in a Filter below the Project that computes them (the best_cell lesson).
+  * A null input still yields null.
+  */
+case class LshFirstShared(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "lsh_first_shared"
+  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0
+    while (i < n && x.getInt(i) != y.getInt(i)) i += 1
+    if (i < n) i else -1
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      s"""
+         |int $n = Math.min($x.numElements(), $y.numElements());
+         |int $i = 0;
+         |while ($i < $n && $x.getInt($i) != $y.getInt($i)) $i++;
+         |${ev.value} = $i < $n ? $i : -1;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }

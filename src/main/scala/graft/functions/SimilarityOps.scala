@@ -94,7 +94,7 @@ object SimilarityOps extends QueryPack {
   /** Prefilter knob, `graft.sim.prefilter` (default true): threshold
     * routes that pass `prefilterTheta` to [[lshCandidateIds]] cut candidate
     * pairs with the provably-lossless [[graft.expr.Int8Keep]] int8 bound
-    * BEFORE the pair distinct and the float verify joins. Answers are
+    * BEFORE the pair exchange and the float verify joins. Answers are
     * identical either way (Int8PrefilterSpec / ExactnessSpec); the knob
     * exists for A/B measurement, not semantics.
     */
@@ -108,7 +108,7 @@ object SimilarityOps extends QueryPack {
     * it). The int8 prefilter cannot touch this mass: a hot bucket of
     * near-IDENTICAL vectors (a thousand-fold-duplicated embedding, a
     * zero-vector pile, a template artifact) passes any cosine bound BY
-    * VALUE, so its c(c−1)/2 pairs all reach the pair distinct and the
+    * VALUE, so its c(c−1)/2 pairs all reach the pair exchange and the
     * float verify — quadratic in the duplication factor. Capping bounds
     * candidate mass to O(corpus × cap).
     *
@@ -184,17 +184,19 @@ object SimilarityOps extends QueryPack {
     * threshold needs 2-bit ones).
     *
     * Scale shape: one narrow shuffle of (table,bucket,id) rows, a
-    * per-bucket self-join, and a distinct on the id PAIR only — vectors
-    * are NOT carried through the distinct (re-joined by id afterwards by
-    * callers that need them).
+    * per-bucket self-join that keeps each pair only at the first table
+    * its two vectors share (so each pair appears once, with no pair
+    * distinct; the capped and probed routes still run one), and one
+    * exchange of id PAIRS only — vectors are NOT carried past the join
+    * (re-joined by id afterwards by callers that need them).
     *
     * `prefilterTheta`: threshold consumers (pairs ≥ θ) pass their float
     * cosine threshold here; each vector's `int8_enc` blob (d code bytes +
     * 16 — vs 256+ for the float array) then rides through the bucket
     * shuffle, and `int8_keep(b1, b2, θ)` rejects provably-below-θ pairs
-    * INSIDE the self-join stage, before the pair distinct. A recall-heavy
+    * INSIDE the self-join stage, before the pair exchange. A recall-heavy
     * shape (16×2 at θ=0.4) admits nearly all n² pairs as candidates — the
-    * distinct exchange and the downstream float-array verify joins were
+    * pair exchange and the downstream float-array verify joins were
     * the query's dominant cost, and both now see only near-threshold
     * survivors. Lossless by the [[graft.expr.Int8Blob]] margin bound, so
     * every ExactnessSpec invariant is unchanged. Top-1/argmax consumers
@@ -216,7 +218,8 @@ object SimilarityOps extends QueryPack {
     // planesPerTable separate CASE WHEN dot_product(emb, <literal>) columns,
     // whose per-element boxed literal access cost 275 µs/row at 8×8 (the
     // bucketing, not the candidate join, was 95% of banded wall time;
-    // the Harness `banded` subcommand). posexplode yields (table, bucket) pairs.
+    // SCALE.md round 6, "Decomposing wall time"). posexplode yields
+    // (table, bucket) pairs.
     //
     // `within` columns partition the index (e.g. per-label): buckets only
     // pair inside the same partition value, shrinking candidate volume
@@ -242,10 +245,23 @@ object SimilarityOps extends QueryPack {
       case None => e0
     }
     val blobCols = if (theta.isDefined) Seq($"blob") else Nil
-    val bucketed = withBlob
-      .select(($"vec_id" +: within.map(col)) ++ blobCols :+
-        posexplode(expr(s"lsh_buckets(embedding, $nTables, $planesPerTable)"))
-          .as(Seq("tbl", "bucket")): _*)
+    val cap = simBucketCap(spark, capKey)
+    // Uncapped, every row also carries its vector's whole bucket array
+    // (`bk`, nTables ints) so the self-join can keep each pair only at the
+    // first table the two vectors share (`lsh_first_shared`): every pair
+    // leaves the join once and no pair distinct runs. A bucket cap drops
+    // rows, so a pair's first shared bucket may be gone while a later one
+    // survives; the capped route keeps the pair distinct instead.
+    // The generator runs its own lsh_buckets call: exploding the `bk`
+    // column instead makes the optimizer infer size/IsNotNull filters on
+    // it, pushed below the Project as two more kernel calls per vector.
+    val firstShared = cap == 0
+    val bucketsOf = expr(s"lsh_buckets(embedding, $nTables, $planesPerTable)")
+    val withBk = if (firstShared) withBlob.withColumn("bk", bucketsOf) else withBlob
+    val bkCols = if (firstShared) Seq($"bk") else Nil
+    val bucketed = withBk
+      .select(($"vec_id" +: within.map(col)) ++ blobCols ++ bkCols :+
+        posexplode(bucketsOf).as(Seq("tbl", "bucket")): _*)
     val keys = Seq("tbl", "bucket") ++ within
     // oversized-bucket drop ([[simBucketCap]], off for the gate): the
     // shared [[DedupOps.dropOversizedBuckets]] helper — the minhash
@@ -255,39 +271,58 @@ object SimilarityOps extends QueryPack {
     // uncapped: its join partner is the capped base stream, so probe
     // mass into a dropped bucket dies at the join and the output stays
     // bounded by |flipped| × cap.
-    val cap = simBucketCap(spark, capKey)
     val bucketedC =
       if (cap > 0) DedupOps.dropOversizedBuckets(bucketed, keys, cap,
         s"graft.sim.bucketcap.$capKey")
       else bucketed
-    // int8_keep rejection runs in the self-join output stage, BEFORE any
-    // pair reaches the distinct exchange — the filtered mass never shuffles
-    def keepOf(df: DataFrame): DataFrame = theta match {
-      case Some(t) => df.filter(call_function("int8_keep", $"b1", $"b2", lit(t)))
-      case None => df
-    }
+    // int8_keep rejection runs in the self-join stage, BEFORE any pair
+    // reaches the pair exchange — the filtered mass never shuffles. The
+    // join tests run as ONE filter, cheapest first, so they keep this
+    // order inside the join condition: split over several filters, the
+    // later ones are pushed in ahead of the earlier.
+    val keep = theta.map(t => call_function("int8_keep", $"b1", $"b2", lit(t)))
+    def where(df: DataFrame, tests: Option[Column]*): DataFrame =
+      df.filter(tests.flatten.reduce(_ && _))
     // shuffle_hash hint on the prefiltered self-join: both sides are the
     // SAME corpus-sized relation, so broadcast is never the scale-correct
     // strategy — yet a session with a generous broadcast threshold (the
     // crossover harness sets 256 MB for its exact baseline's benefit) will
     // happily broadcast the blob-carrying side, and at 20k vectors that
     // 135 MB broadcast measured 5× slower than the shuffle join (SCALE.md
-    // round 10). Shuffling also lets AQE reuse the one exchange for both
-    // sides. The unprefiltered path is left to the planner for
+    // round 10). The unprefiltered path is left to the planner for
     // round-over-round comparability of the historical crossover numbers.
-    def side(v: String, b: String): DataFrame = {
-      val s = bucketedC.select(
+    //
+    // The side's exchange is sized by the caller when the input cannot
+    // fill the cores ([[graft.core.Fanout]]): the join's work is
+    // Σ bucket², not bytes, but AQE sizes the exchange by bytes and merged
+    // it into ONE task on small corpora (SCALE.md "The banded self-join
+    // runs on every core"). At scale, and on the capped route's checkpoint
+    // (no input files), the side passes through and AQE's merging and skew
+    // split decide. Either way both sides read one exchange, planned once
+    // and reused. The renames stay below it, in the scan's generated
+    // stage: above it they add two generated stages to the self-join.
+    def side(v: String, b: String, k: String): DataFrame = {
+      val s = graft.core.Fanout.maybeFanout(bucketedC.select(
         (keys.map(col) :+ $"vec_id".as(v)) ++
-          (if (theta.isDefined) Seq($"blob".as(b)) else Nil): _*)
+          (if (theta.isDefined) Seq($"blob".as(b)) else Nil) ++
+          bkCols.map(_.as(k)): _*), keys.map(col): _*)
       if (theta.isDefined) s.hint("shuffle_hash") else s
     }
     // Base candidates: the symmetric bucket self-join — every pair appears
-    // in both orders, the `<` keeps one, so the dominant base-bucket mass
-    // is never duplicated into the distinct.
-    val basePairs = keepOf(
-      side("v1", "b1").join(side("v2", "b2"), keys).filter($"v1" < $"v2"))
+    // in both orders, the `<` keeps one; uncapped, the first-shared-table
+    // test then drops the pair's repeats from its other shared tables,
+    // before the int8 prefilter scores them.
+    val basePairs = where(side("v1", "b1", "k1").join(side("v2", "b2", "k2"), keys),
+      Some($"v1" < $"v2"),
+      Option.when(firstShared)(call_function("lsh_first_shared", $"k1", $"k2") === $"tbl"),
+      keep)
       .select($"v1", $"v2")
-    if (probeBits == 0) basePairs.distinct()
+    // The pairs leave through an exchange of their own: a consumer that
+    // reads them twice (the cosine dedup's two orientations) or samples
+    // them (a sort's range bounds) reuses it instead of running the
+    // self-join again.
+    if (probeBits == 0)
+      if (firstShared) basePairs.repartition($"v1", $"v2") else basePairs.distinct()
     else {
       // Multi-probe (probeBits > 0): each vector ALSO probes, per table,
       // the `probeBits` Hamming-1 neighbor buckets of its lowest-|dot|
@@ -319,10 +354,8 @@ object SimilarityOps extends QueryPack {
         // same corpus-sized-side reasoning as `side` above
         if (theta.isDefined) s.hint("shuffle_hash") else s
       }
-      val probePairs = keepOf(
-        flippedSide
-          .join(side("v2", "b2"), keys)
-          .filter($"v1" =!= $"v2"))
+      val probePairs = where(flippedSide.join(side("v2", "b2", "k2"), keys),
+        Some($"v1" =!= $"v2"), keep)
         .select(least($"v1", $"v2").as("v1"), greatest($"v1", $"v2").as("v2"))
       basePairs.union(probePairs).distinct()
     }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshBuckets, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, SimhashSig}
+import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshBuckets, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, SimhashSig}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -47,6 +47,12 @@ object GraftFunctions {
             s"lsh_buckets: $what must be an integer literal, got $other")
         }
         LshBuckets(args.head, intLit(args(1), "nTables"), intLit(args(2), "planesPerTable"))
+      }),
+    (FunctionIdentifier("lsh_first_shared"),
+      new ExpressionInfo(classOf[LshFirstShared].getName, "lsh_first_shared"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, "lsh_first_shared takes (buckets1, buckets2)")
+        LshFirstShared(args.head, args(1))
       }),
     (FunctionIdentifier("lsh_probes"),
       new ExpressionInfo(classOf[LshProbes].getName, "lsh_probes"),

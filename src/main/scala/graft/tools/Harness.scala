@@ -372,7 +372,6 @@ object BusDrain {
   *  - `scale [n...]` — replicate lineitem N× and time headline shapes
   *  - `sim-bucketcap [n,...] [hotFrac] [cap] [full|caponly] [shape]` — embedding-side bucket cap A/B
   *  - `cc-chain [n...]` — star-contraction rounds/wall on path graphs
-  *  - `banded [dir] [shape]` — banded pipeline stage decomposition
   *  - `crossover [n...]` — exact↔banded crossover on clustered corpus
   *  - `probe [n] [shape,...] [bits...]` — multi-probe recall/cost frontier
   *  - `dedup-probe [n] [shape,...] [bits...]` — same for embedding dedup
@@ -395,7 +394,6 @@ object Harness {
     ("scale", "[n...] — lineitem ×1/2/4/8 scaling of headline shapes", scale),
     ("sim-bucketcap", "[n,...] [hotFrac] [cap] [full|caponly] [shape] — embedding-side bucket cap on the dense-dup corpus (shape default 8x10; MUST be corpus-matched or the cap empties the index)", simBucketcap),
     ("cc-chain", "[n...] — star-contraction rounds/wall on path graphs", ccChain),
-    ("banded", "[dir] [shape] — banded pipeline stage decomposition", banded),
     ("crossover", "[n...] — exact↔banded crossover, clustered corpus", crossover),
     ("probe", "[n] [shape,...] [bits...] — multi-probe frontier (same-label)", probe),
     ("dedup-probe", "[n] [shape,...] [bits...] — multi-probe frontier (cos dedup)", dedupProbe),
@@ -717,62 +715,6 @@ object Harness {
         f"components=$distinctLabels jobs=$nJobs%3d (${nJobs.toDouble / math.max(rounds, 1)}%.1f/round) " +
         f"wall=$wall%.2fs")
       assert(distinctLabels == 1, s"path graph fractured: $distinctLabels components")
-    }
-    spark.stop()
-  }
-
-  /** Decompose the banded pipeline's wall time at a crossover corpus size —
-    * candidate generation vs distinct vs embedding re-join vs verify — to
-    * find which stage carries the unexplained per-row constant
-    * (Harness `crossover` r6: banded ~0.65 ms/vector regardless of shape). */
-  private def banded(args: Array[String]): Unit = {
-    val spark = Session.local(appName = "time-banded")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    import spark.implicits._
-    // default = the path Corpora.generate(spark, 20000) actually writes
-    // (the generator always appends the background-fraction suffix)
-    val dir = if (args.nonEmpty) args(0)
-      else s"/tmp/graft_crossover/n20000_bg${math.round(Corpora.BgFrac * 100)}"
-    val shape = if (args.length > 1) args(1) else "8x8"
-    val Array(t, p) = shape.split("x").map(_.toInt)
-    graft.plans.GraftFunctions.register(spark)
-    def time(label: String)(f: => Long): Unit = {
-      f // warm
-      val t0 = System.nanoTime(); val n = f
-      println(f"TIMEBANDED $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$n")
-    }
-    val e = Tables.embeddings(spark, dir)
-    time("corpus_scan")(e.count())
-    // stage 1: bucketing via the native lsh_buckets kernel (the composed
-    // CASE WHEN dot_product form this replaced measured 5.5 s FORCED at 20k
-    // — 275 µs/row of boxed literal access; count() alone was 0.25 s only
-    // because column pruning dropped the dots entirely)
-    val bucketed = e.select($"vec_id",
-      posexplode(expr(s"lsh_buckets(embedding, $t, $p)")).as(Seq("tbl", "bucket")))
-    time("bucketing_explode")(bucketed.count())
-    time("bucketing_forced")(
-      bucketed.agg(sum($"bucket")).head().getLong(0))
-    // stage 2: self-join candidate volume (pre-distinct)
-    val raw = bucketed.select($"tbl", $"bucket", $"vec_id".as("v1"))
-      .join(bucketed.select($"tbl", $"bucket", $"vec_id".as("v2")), Seq("tbl", "bucket"))
-      .filter($"v1" < $"v2")
-    time("selfjoin_raw_pairs")(raw.count())
-    // stage 3: distinct pairs
-    val cand = SimilarityOps.lshCandidateIds(spark, dir, t, p)
-    time("candidates_distinct")(cand.count())
-    // stage 4: re-join embeddings + verify
-    val verified = cand
-      .join(e.select($"vec_id".as("v1"), $"embedding".as("e1")), Seq("v1"))
-      .join(e.select($"vec_id".as("v2"), $"embedding".as("e2")), Seq("v2"))
-      .withColumn("cos", expr("cosine_sim(e1, e2)"))
-      .filter($"cos" >= 0.4)
-    time("rejoin_verify")(verified.count())
-    // full production query for reference
-    spark.conf.set("graft.sim.exact", "false")
-    Seq("pairs", "samelabel", "cosdedup")
-      .foreach(k => spark.conf.set(s"graft.sim.bands.$k", shape))
-    time("full_pairs_threshold") {
-      noop(SimilarityOps.pairsAboveThreshold(spark, dir)); 0L
     }
     spark.stop()
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** The `lsh_probes` multi-probe kernel: slot-0 replay of `lsh_buckets`,
   * Hamming-1 probe slots on the lowest-|dot| planes, interpreted/codegen
-  * parity, and the candidate-superset property the banded routes rely on.
+  * parity, and the candidate-superset property the banded routes rely on;
+  * and `lsh_first_shared`, the self-join's one-row-per-pair test.
   */
 class LshProbesSpec extends SparkSpec {
   import spark.implicits._
@@ -26,6 +27,26 @@ class LshProbesSpec extends SparkSpec {
       while (i < pl.length) { dot += v(i).toDouble * pl(i); i += 1 }
       dot
     }
+
+  test("lsh_first_shared: first equal position, -1 when none, null stays null") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    GraftFunctions.register(spark)
+    val cases = Seq(
+      (Seq(3, 1, 2, 2), Seq(0, 1, 2, 2), 1),
+      (Seq(3, 1, 2), Seq(3, 0, 0), 0),
+      (Seq(1, 2, 3), Seq(0, 0, 0), -1),
+      (Seq(1, 2), Seq(0, 2, 9), 1)) // ragged: compares the common prefix
+    // the repartition keeps the projection out of the optimizer's
+    // local-relation folding, so it runs as generated code
+    val got = cases.toDF("a", "b", "want").repartition(1)
+      .select(expr("lsh_first_shared(a, b)"), $"want").as[(Int, Int)].collect()
+    assert(got.length == cases.size && got.forall { case (g, w) => g == w }, got.toSeq)
+    cases.foreach { case (a, b, want) =>
+      assert(graft.expr.LshFirstShared(Literal.create(a), Literal.create(b)).eval() == want)
+    }
+    assert(Seq[(Seq[Int], Option[Seq[Int]])]((Seq(1), None)).toDF("a", "b")
+      .select(expr("lsh_first_shared(a, b)")).head().isNullAt(0))
+  }
 
   test("slot 0 of every table replays lsh_buckets bit-for-bit") {
     (1 to 5).foreach { _ =>

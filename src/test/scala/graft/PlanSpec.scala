@@ -125,14 +125,25 @@ class PlanSpec extends SparkSpec {
       s"expected broadcast semi-join for the probe set:\n$plan")
   }
 
-  test("LSH candidate distinct runs on id pairs, not embedding arrays") {
-    val plan = graft.functions.SimilarityOps
-      .lshCandidateIds(spark, sfDir, nTables = 8, planesPerTable = 4)
-      .queryExecution.executedPlan.toString
-    // the distinct's aggregation keys must be exactly the two id columns
-    val keyPattern = """keys=\[v1#\d+L?, v2#\d+L?\]""".r
-    assert(keyPattern.findFirstIn(plan).isDefined,
-      s"expected distinct keyed on (v1, v2) only:\n$plan")
+  test("LSH candidate pairs cross their exchange as id pairs, not embedding arrays") {
+    // the pair-proportional exchange (after the self-join; a repartition on
+    // the default route, the pair distinct's on the capped one) must carry
+    // exactly the two id columns — never the bucket arrays or blobs
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    def pairExchangeInputs(): Seq[Seq[String]] = Plans.collect(
+      graft.functions.SimilarityOps
+        .lshCandidateIds(spark, sfDir, nTables = 8, planesPerTable = 4)
+        .queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec
+          if Set("v1", "v2").subsetOf(e.output.map(_.name).toSet) =>
+        e.child.output.map(_.name)
+    }
+    assert(pairExchangeInputs() == Seq(Seq("v1", "v2")))
+    spark.conf.set("graft.sim.bucketcap.adhoc", "64")
+    try assert(pairExchangeInputs() == Seq(Seq("v1", "v2")))
+    finally spark.conf.unset("graft.sim.bucketcap.adhoc")
   }
 
   test("cosine top-k merges bounded heaps map-side, no window rank shuffle") {
