@@ -836,11 +836,19 @@ object DedupOps extends QueryPack {
     *  - small-star: ONE `repartition(hi)` serves the large-star output's
     *    distinct (hash(hi) co-locates equal (lo,hi) pairs, so the aggregate
     *    needs no exchange of its own) AND the per-hi min window. Grouping
-    *    here is by the LARGER endpoint, whose neighborhoods stay small
-    *    (star arms group singly), so the window's one-task-per-key shape is
-    *    safe where it wasn't for large-star. The window also replaces the
-    *    join outright: each row emits (m, lo) when lo ≠ m, and the unique
-    *    lo = m row emits (m, hi) — exactly the old join-branch ∪ sMin rows.
+    *    here is by the LARGER endpoint, whose neighborhoods are usually
+    *    small (star arms group singly), so the window's one-task-per-key
+    *    shape is usually safe where it wasn't for large-star. That is not
+    *    an invariant. A hub whose id is its component's MAX collects its
+    *    whole neighborhood under one hi, and the window then funnels that
+    *    group through one task: no map-side partial aggregation, and no
+    *    AQE skew split (a window is not a join). Rows are still right
+    *    (StarComponentsSpec); only the task is hot. If a stage profile ever
+    *    shows it, compute the per-hi min with a partial-aggregating
+    *    `groupBy(hi)` and broadcast that table back. The window also
+    *    replaces the join outright: each row emits (m, lo) when lo ≠ m,
+    *    and the unique lo = m row emits (m, hi) — exactly the old
+    *    join-branch ∪ sMin rows.
     *  - the closing distinct keys on the NEW (lo, hi), so its exchange is
     *    semantically required (convergence is an exact set test).
     * Output is row-identical to the round-21 form (StarComponentsSpec pins

@@ -7,18 +7,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.IntegerType
 
-/** Registers graft's native Catalyst functions.
+/** Registers graft's native Catalyst functions and its planner strategy.
   *
   * Two entry points:
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config),
-  *  - [[GraftFunctions.register]] on an existing session (what Verify/Bench
-  *    and the specs use).
-  * After either, `cosine_sim` / `dot_product` are available in SQL text and
-  * via `expr(...)`, fully inside whole-stage codegen.
+  *  - `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config)
+  *    injects both;
+  *  - on an existing session (what Verify/Bench, the benchmark and the specs
+  *    use), [[GraftFunctions.register]] adds the functions and
+  *    [[SmallSort.install]] the strategy; [[graft.core.Tables.load]] calls
+  *    the latter.
+  * Both paths add the same [[SmallSort]] object, and `install` skips a
+  * session that already has it. After either, `cosine_sim` / `dot_product`
+  * are available in SQL text and via `expr(...)`, fully inside whole-stage
+  * codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => SmallSort)
+  }
 }
 
 object GraftFunctions {

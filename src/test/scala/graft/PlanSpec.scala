@@ -165,11 +165,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("int8 quantization is map-only: no shuffle below the output sort") {
-    // the only Exchange allowed is the presentation orderBy's range
-    // partitioning (it exists for the oracle hash); the operator itself
-    // must be a single narrow scan — no hash-partitioned shuffle at all
+    // the only Exchange allowed is the presentation orderBy's (it exists
+    // for the oracle hash; a small one is a single-partition exchange, see
+    // graft.plans.SmallSort); the operator itself must be a single narrow
+    // scan — no hash-partitioned shuffle at all
     val plan = planOf(graft.functions.SimilarityOps.quantizeInt8(spark, sfDir))
-    assert(plan.contains("rangepartitioning"), s"missing presentation sort:\n$plan")
+      .split("== Initial Plan ==").head
+    assert(plan.linesIterator.exists(l => l.contains("Sort [") && l.endsWith("], true, 0")),
+      s"missing presentation sort:\n$plan")
     assert(!plan.contains("hashpartitioning"), s"quantization hash-shuffled:\n$plan")
     assert(!plan.contains("HashAggregate"), s"unexpected aggregation:\n$plan")
   }

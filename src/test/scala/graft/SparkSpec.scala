@@ -23,16 +23,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * The bus is drained through [[BusDrain]] before the listener attaches
     * (earlier actions' stages stay out) and after `action` returns (all of
     * its stages are in); the drain's own sentinel stage is excluded. */
-  def stagesOf(action: => Unit): Seq[StageInfo] = {
+  def stagesOf(action: => Unit): Seq[StageInfo] = jobsAndStagesOf(action)._2
+
+  /** [[stagesOf]], plus the number of jobs `action` started (sentinel
+    * jobs excluded). */
+  def jobsAndStagesOf(action: => Unit): (Int, Seq[StageInfo]) = {
     BusDrain.drain(spark)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val sentinel = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties)
           .map(_.getProperty("spark.job.description")).orNull
         if (desc != null && desc.startsWith(BusDrain.SentinelPrefix))
           e.stageInfos.foreach(si => sentinel.add(si.stageId))
+        else jobs.incrementAndGet()
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (!sentinel.contains(e.stageInfo.stageId)) stages.add(e.stageInfo)
@@ -41,6 +47,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try { action; BusDrain.drain(spark) }
     finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    stages.asScala.toSeq
+    (jobs.get, stages.asScala.toSeq)
   }
 }

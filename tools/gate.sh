@@ -10,9 +10,13 @@
 #                            sweep); live counts echoed from sbt output
 #   2. graft.Verify sf0.001 — every registered query executes and dumps
 #   3. tools/check.py      — DuckDB oracle compare (rows/schema/hash)
+#   4. steps 2-3 again with SPARK_GRAFT_SIM_EXACT=false: the banded
+#                            similarity route, whose plans (candidate
+#                            self-joins, final sorts) differ from the
+#                            exact route's
 #
 # Usage: tools/gate.sh [sf]     (default 0.001; pass 0.01 for the
-#                                driver-scale leg, ~3 min)
+#                                full-size leg, ~6 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-0.001}"
@@ -27,21 +31,25 @@ fi
 grep -E "Tests:|All tests passed" "$TESTLOG" | tail -2
 rm -f "$TESTLOG"
 
-echo "== gate: Verify sf$SF"
-# Clear any previous run's output FIRST: a crashed Verify (compile error,
-# OOM) must leave nothing behind for the summary check and oracle compare
-# to read, or a stale green run would pass the gate silently.
-rm -rf "$OUT"
-# Verify exits nonzero on any query failure (default since round 11;
-# the SPARK_GRAFT_VERIFY_EXIT0=1 escape hatch is driver-facing and
-# nothing here sets it — VerifyExitSpec pins both branches). The
-# summary-file re-check below is still the gate's real guard because
-# the grep pipeline swallows exit status.
-sbt -batch "runMain graft.Verify /root/testdata/sf$SF $OUT" 2>&1 \
-  | grep -E '\[verify' || true
-# The grep pipeline swallows sbt's exit status; re-check the summary file
-# so a swallowed exit can't sneak through (and a missing file fails here)
-python3 - "$OUT/verify_summary.json" <<'EOF'
+# Verify + DuckDB oracle compare on one similarity route.
+# Usage: verify_route <route name> <SPARK_GRAFT_SIM_EXACT value>
+verify_route() {
+  local route="$1" out="$OUT-$1"
+  echo "== gate: Verify sf$SF ($route route)"
+  # Clear any previous run's output FIRST: a crashed Verify (compile error,
+  # OOM) must leave nothing behind for the summary check and oracle compare
+  # to read, or a stale green run would pass the gate silently.
+  rm -rf "$out"
+  # Verify exits nonzero on any query failure (default since round 11;
+  # the SPARK_GRAFT_VERIFY_EXIT0=1 escape hatch is for external
+  # harnesses and nothing here sets it — VerifyExitSpec pins both branches). The
+  # summary-file re-check below is still the gate's real guard because
+  # the grep pipeline swallows exit status.
+  SPARK_GRAFT_SIM_EXACT="$2" sbt -batch "runMain graft.Verify /root/testdata/sf$SF $out" 2>&1 \
+    | grep -E '\[verify' || true
+  # The grep pipeline swallows sbt's exit status; re-check the summary file
+  # so a swallowed exit can't sneak through (and a missing file fails here)
+  python3 - "$out/verify_summary.json" <<'EOF'
 import json, sys
 s = json.load(open(sys.argv[1]))
 if s["failed"] > 0:
@@ -50,7 +58,11 @@ if s["failed"] > 0:
 print(f"verify ok: {s['attempted']} queries dumped")
 EOF
 
-echo "== gate: DuckDB oracle compare"
-python3 tools/check.py "/root/testdata/sf$SF" "$OUT" | tail -1
+  echo "== gate: DuckDB oracle compare ($route route)"
+  python3 tools/check.py "/root/testdata/sf$SF" "$out" | tail -1
+}
+
+verify_route exact true
+verify_route banded false
 
 echo "== GATE GREEN (sf$SF)"
