@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *    banded-LSH candidate routes. The gate's all-pairs forms are the
   *    oracle-checkable ground truth; at deployment scale they are Θ(n²)
   *    and the banded Θ(Σ|bucket|²) routes are the only viable shape
-  *    (measured crossover: the Harness `crossover` subcommand, SCALE.md).
+  *    (measured crossover: SCALE.md rounds 6–7).
   *
   * Resolution order, per knob: an EXPLICIT `graft.sums.exact` /
   * `graft.sim.exact` setting always wins; otherwise the profile supplies
@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Band shapes (`graft.sim.bands.*`) are deliberately NOT profile-driven:
   * they are a corpus property (see [[graft.functions.SimilarityOps.bandShape]]),
-  * tuned per deployment with the Harness `crossover` subcommand.
+  * tuned per deployment with [[graft.functions.BandTuner.suggest]].
   */
 object Profile {
   val Gate = "gate"
@@ -44,8 +44,20 @@ object Profile {
 
   /** Boolean knob honoring explicit-setting > profile-default precedence. */
   def exactKnob(spark: SparkSession, key: String): Boolean =
-    spark.conf.getOption(key) match {
-      case Some(v) => v.toBoolean
-      case None => current(spark) == Gate
-    }
+    boolKnob(spark, key, current(spark) == Gate)
+
+  /** Knob `key` parsed by `parse`, or `default` when unset. A value that
+    * does not parse fails naming the key and the `expected` form, not with
+    * a bare `For input string` that names neither. */
+  def knob[T](spark: SparkSession, key: String, default: => T, expected: String)(
+      parse: String => Option[T]): T =
+    spark.conf.getOption(key).fold(default)(v =>
+      parse(v).getOrElse(sys.error(s"$key must be $expected, got '$v'")))
+
+  def boolKnob(spark: SparkSession, key: String, default: => Boolean): Boolean =
+    knob(spark, key, default, "true or false")(_.toBooleanOption)
+
+  def intKnob(spark: SparkSession, key: String, default: Int,
+      expected: String = "an int"): Int =
+    knob(spark, key, default, expected)(_.toIntOption)
 }

@@ -35,9 +35,9 @@ object Tables {
       java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every query reads through here, so this is where a session gets the
-    // small-sort planner strategy (idempotent)
-    graft.plans.SmallSort.install(spark)
+    // every query reads through here, so this is where a session gets
+    // graft's functions and planner strategy (idempotent)
+    graft.plans.GraftFunctions.install(spark)
     val path = s"$dir/$name.parquet"
     val perSession = schemaCache.synchronized {
       var m = schemaCache.get(spark)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.plans.GraftFunctions
 
 /** What [[BandTuner.suggest]] returns: a band shape for
   * `graft.sim.bands.<key>` plus the numbers that justify it.
@@ -91,9 +90,9 @@ final case class BandShapeAdvice(
 
 /** In-engine band-shape advisor — SCALE.md round 6's closing rule ("band
   * shapes are not a constant but a function of corpus statistics") made
-  * executable. the Harness `crossover` subcommand is the offline measurement
-  * that validated the rule; this is the cheap online form a deployment
-  * runs against its own corpus before flipping `graft.sim.exact=false`.
+  * executable. SCALE.md rounds 6–8 hold the offline measurements that
+  * validated the rule; this is the cheap online form a deployment runs
+  * against its own corpus before flipping `graft.sim.exact=false`.
   *
   * Two ingredients, both principled rather than heuristic:
   *
@@ -190,7 +189,6 @@ object BandTuner {
     require(nTables > 0 && nTables <= graft.expr.Hyperplanes.Max,
       s"nTables must be in [1, ${graft.expr.Hyperplanes.Max}], got $nTables")
     require(probeBits >= 0, s"probeBits must be >= 0, got $probeBits")
-    GraftFunctions.register(spark)
     import spark.implicits._
 
     // recall is monotone decreasing in planes → largest qualifying value.

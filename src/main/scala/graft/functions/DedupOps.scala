@@ -63,7 +63,7 @@ object DedupOps extends QueryPack {
     * from it so the kernel contracts remain independent.
     */
   private[graft] def shingledKernelOf(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
+    GraftFunctions.install(docs.sparkSession)
     docs
       .select(col("doc_id"), split(normText, " ").as("toks"))
       .select(col("doc_id"),
@@ -184,7 +184,7 @@ object DedupOps extends QueryPack {
     */
   private[graft] def minhashSigsOf(docs: DataFrame, numHashes: Int,
       withCard: Boolean = false): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
+    GraftFunctions.install(docs.sparkSession)
     // composed-path parity: a null text still yields ONE empty shingle
     // there (greatest(null,1)=1 and concat_ws on a null array is ""), so
     // feed the kernels "" — identical signature (and card 1), doc retained
@@ -378,7 +378,7 @@ object DedupOps extends QueryPack {
     * pairs-sharing-a-small-bucket reference on a boilerplate corpus.
     */
   private[graft] def bucketCap(spark: SparkSession): Int =
-    spark.conf.get("graft.dedup.bucketcap", "0").toInt
+    graft.core.Profile.intKnob(spark, "graft.dedup.bucketcap", 0)
 
   /** The oversized-bucket drop behind BOTH cap dials
     * (`graft.dedup.bucketcap` here, `graft.sim.bucketcap.<key>` in
@@ -521,7 +521,7 @@ object DedupOps extends QueryPack {
     * reference (ExactnessSpec asserts the two paths emit identical rows).
     */
   private[graft] def hashVerify(spark: SparkSession): Boolean =
-    spark.conf.get("graft.dedup.hashverify", "true").toBoolean
+    graft.core.Profile.boolKnob(spark, "graft.dedup.hashverify", default = true)
 
   /** Exact Jaccard stats (common, n1, n2, jaccard) computed for the given
     * candidate (d1, d2) pairs only: shingle sets are re-derived for the
@@ -631,7 +631,7 @@ object DedupOps extends QueryPack {
     * text explodes to nothing and the doc never reaches the frame.
     */
   private[graft] def simhashSigsOf(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
+    GraftFunctions.install(docs.sparkSession)
     docs
       .where(col("text").isNotNull)
       .select(col("doc_id"), call_function("simhash_sig", normText).as("sig"))
@@ -705,7 +705,6 @@ object DedupOps extends QueryPack {
 
   def embeddingCosineDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val neighbors =
       if (SimilarityOps.exactSim(spark)) {
@@ -750,7 +749,6 @@ object DedupOps extends QueryPack {
     // and sorted every partition's document stream (SCALE.md round 7).
     // n_chars rides as the double score (int64 lengths are far below the
     // 2^53 lossless bound) and is cast back on the way out.
-    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars", sha2(normText, 256).as("content_sha"))
       .groupBy($"content_sha")
@@ -964,7 +962,6 @@ object DedupOps extends QueryPack {
     */
   def clusterKeepBest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     connectedComponents(spark, dir)
       .join(Tables.documents(spark, dir).select($"doc_id", $"n_chars"), Seq("doc_id"))
       .groupBy($"cluster_id")

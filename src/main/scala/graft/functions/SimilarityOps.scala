@@ -1,8 +1,7 @@
 package graft.functions
 
 import graft.QueryPack
-import graft.core.Tables
-import graft.plans.GraftFunctions
+import graft.core.{Profile, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,9 +35,9 @@ object SimilarityOps extends QueryPack {
     * are the same planes `annLsh` has always used (same seeded stream —
     * extending the family appends planes, it never changes existing ones,
     * so every gate-validated config is byte-identical). 128 planes admit
-    * the 8×8 deployment shapes a clustered corpus wants
-    * (the Harness `crossover` subcommand): more buckets per table than clusters,
-    * or Σ|bucket|² degenerates toward n².
+    * the 8×8 deployment shapes a clustered corpus wants (SCALE.md rounds
+    * 6–7): more buckets per table than clusters, or Σ|bucket|² degenerates
+    * toward n².
     */
   val NPlanesMax: Int = graft.expr.Hyperplanes.Max
 
@@ -59,7 +58,7 @@ object SimilarityOps extends QueryPack {
     * lsh_recall.py` is the measurement that picked them).
     */
   def exactSim(spark: SparkSession): Boolean =
-    graft.core.Profile.exactKnob(spark, "graft.sim.exact")
+    Profile.exactKnob(spark, "graft.sim.exact")
 
   /** Corpus-tunable band shape for a banded route: `graft.sim.bands.<key>`
     * = `"<tables>x<planes>"` (e.g. `"8x4"`). Defaults are the shapes the
@@ -68,10 +67,10 @@ object SimilarityOps extends QueryPack {
     * knob exists because band shapes are a corpus property, not a code
     * property: candidate volume is Θ(Σ|bucket|²), so a clustered deployment
     * corpus wants more planes per table (smaller buckets) than the
-    * worst-case-uniform gate corpus. the Harness `crossover` subcommand is the
-    * offline measurement that validates a shape for a given corpus;
-    * [[graft.functions.BandTuner.suggest]] is the cheap online advisor
-    * (analytic recall + sampled Σ|bucket|²) a deployment consults first.
+    * worst-case-uniform gate corpus. [[graft.functions.BandTuner.suggest]]
+    * picks a shape for a deployment's own corpus (analytic recall + sampled
+    * Σ|bucket|²); SCALE.md rounds 6–7 hold the measurements that validated
+    * its rule on a clustered corpus.
     */
   private[graft] def bandShape(spark: SparkSession, key: String,
       defTables: Int, defPlanes: Int): (Int, Int) = {
@@ -99,7 +98,7 @@ object SimilarityOps extends QueryPack {
     * exists for A/B measurement, not semantics.
     */
   private[graft] def prefilterOn(spark: SparkSession): Boolean =
-    spark.conf.get("graft.sim.prefilter", "true").toBoolean
+    Profile.boolKnob(spark, "graft.sim.prefilter", default = true)
 
   /** `graft.sim.bucketcap.<key>` (default 0 = off): before the candidate
     * self-join, DROP every (table, bucket) group holding more than this
@@ -167,12 +166,8 @@ object SimilarityOps extends QueryPack {
         "silently degraded top-1 routes. Set graft.sim.bucketcap.<key> for the " +
         "consumer you mean (cosdedup, pairs, or adhoc for direct " +
         "lshCandidateIds calls).")
-    // parse like [[probeBitsOf]]: a non-numeric value fails naming the
-    // KEY and the expected form, not with a bare NumberFormatException
-    // that names neither (round-16 advice #3)
-    val raw = spark.conf.get(s"graft.sim.bucketcap.$key", "0")
-    raw.toIntOption.getOrElse(sys.error(
-      s"graft.sim.bucketcap.$key must be an int bucket cap (<= 0 = off), got '$raw'"))
+    Profile.intKnob(spark, s"graft.sim.bucketcap.$key", 0,
+      "an int bucket cap (<= 0 = off)")
   }
 
   /** Banded candidate pairs: distinct (v1 < v2) id pairs that share at
@@ -203,7 +198,7 @@ object SimilarityOps extends QueryPack {
     * have no threshold to prefilter against and pass None.
     */
   def lshCandidateIds(spark: SparkSession, dir: String,
-      nTables: Int, planesPerTable: Int, within: Seq[String] = Nil,
+      nTables: Int, planesPerTable: Int,
       probeBits: Int = 0, prefilterTheta: Option[Double] = None,
       capKey: String = "adhoc"): DataFrame = {
     import spark.implicits._
@@ -211,7 +206,6 @@ object SimilarityOps extends QueryPack {
       s"need ${nTables * planesPerTable} planes, have $NPlanesMax")
     require(probeBits >= 0 && probeBits <= planesPerTable,
       s"probeBits $probeBits must be in [0, planesPerTable=$planesPerTable]")
-    GraftFunctions.register(spark)
     val theta = prefilterTheta.filter(_ => prefilterOn(spark))
     // ALL table buckets in one native kernel call per row (`lsh_buckets`,
     // graft.expr.LshBuckets) — the previous form composed nTables ×
@@ -221,9 +215,6 @@ object SimilarityOps extends QueryPack {
     // SCALE.md round 6, "Decomposing wall time"). posexplode yields
     // (table, bucket) pairs.
     //
-    // `within` columns partition the index (e.g. per-label): buckets only
-    // pair inside the same partition value, shrinking candidate volume
-    // for partition-filtered searches without touching the signatures.
     // the prefilter blob is computed ONCE per vector, in a projection BELOW
     // the bucket explode, then rides the (tbl,bucket) shuffle. Two plan
     // subtleties, both load-bearing: (a) the blob must be a materialized
@@ -260,9 +251,9 @@ object SimilarityOps extends QueryPack {
     val withBk = if (firstShared) withBlob.withColumn("bk", bucketsOf) else withBlob
     val bkCols = if (firstShared) Seq($"bk") else Nil
     val bucketed = withBk
-      .select(($"vec_id" +: within.map(col)) ++ blobCols ++ bkCols :+
+      .select(($"vec_id" +: blobCols) ++ bkCols :+
         posexplode(bucketsOf).as(Seq("tbl", "bucket")): _*)
-    val keys = Seq("tbl", "bucket") ++ within
+    val keys = Seq("tbl", "bucket")
     // oversized-bucket drop ([[simBucketCap]], off for the gate): the
     // shared [[DedupOps.dropOversizedBuckets]] helper — the minhash
     // dial's implementation, one place so the dials cannot diverge (see
@@ -285,9 +276,8 @@ object SimilarityOps extends QueryPack {
       df.filter(tests.flatten.reduce(_ && _))
     // shuffle_hash hint on the prefiltered self-join: both sides are the
     // SAME corpus-sized relation, so broadcast is never the scale-correct
-    // strategy — yet a session with a generous broadcast threshold (the
-    // crossover harness sets 256 MB for its exact baseline's benefit) will
-    // happily broadcast the blob-carrying side, and at 20k vectors that
+    // strategy — yet a session with a generous broadcast threshold (SCALE.md
+    // round 10's exact baselines ran at 256 MB) will happily broadcast the blob-carrying side, and at 20k vectors that
     // 135 MB broadcast measured 5× slower than the shuffle join (SCALE.md
     // round 10). The unprefiltered path is left to the planner for
     // round-over-round comparability of the historical crossover numbers.
@@ -340,7 +330,7 @@ object SimilarityOps extends QueryPack {
       // knob on).
       val stride = 1 + probeBits
       val flipped = withBlob
-        .select(($"vec_id" +: within.map(col)) ++ blobCols :+
+        .select(($"vec_id" +: blobCols) :+
           posexplode(expr(
             s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)"))
             .as(Seq("pos", "bucket")): _*)
@@ -372,9 +362,7 @@ object SimilarityOps extends QueryPack {
     */
   private[graft] def probeBitsOf(spark: SparkSession, key: String,
       planesPerTable: Int): Int = {
-    val raw = spark.conf.get(s"graft.sim.probe.$key", "0")
-    val v = raw.toIntOption.getOrElse(sys.error(
-      s"graft.sim.probe.$key must be a non-negative int, got '$raw'"))
+    val v = Profile.intKnob(spark, s"graft.sim.probe.$key", 0, "a non-negative int")
     require(v >= 0, s"graft.sim.probe.$key must be >= 0, got $v")
     math.min(v, planesPerTable)
   }
@@ -442,7 +430,6 @@ object SimilarityOps extends QueryPack {
       s"need ${nTables * planesPerTable} planes, have $NPlanesMax")
     require(probeBits >= 0 && probeBits <= planesPerTable,
       s"probeBits $probeBits must be in [0, planesPerTable=$planesPerTable]")
-    GraftFunctions.register(spark)
     // norms ride next to the embeddings (normCol, computed once per vector
     // below the explode — same pass-through-the-Generate shape as the
     // prefilter blob) so per-pair scoring is one dot, not dot + two Σx²
@@ -489,7 +476,6 @@ object SimilarityOps extends QueryPack {
     */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
@@ -519,7 +505,6 @@ object SimilarityOps extends QueryPack {
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // duplicate-insensitive consumer → the no-distinct scored form: cosine
     // runs inside the bucket self-join stage ([[lshScoredNeighbors]]); the
     // candidate distinct and both per-pair float joins are gone (round 10)
@@ -556,7 +541,6 @@ object SimilarityOps extends QueryPack {
     */
   def pairsAboveThreshold(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val pairs =
       if (exactSim(spark)) {
@@ -595,7 +579,6 @@ object SimilarityOps extends QueryPack {
     */
   def nearestSameLabel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     // per-v1 argmax via arg_max_long (cos desc, v2 asc — identical to the
     // max_by(struct, struct) it replaced): flat primitive buffers keep the
@@ -646,7 +629,7 @@ object SimilarityOps extends QueryPack {
           // keep and the anti-join sides. NOTE the eager checkpoint makes
           // BUILDING this DataFrame run the banded subtree as Spark jobs —
           // construction is an action, not a free plan; callers that build
-          // the query twice (the Harness `probe` subcommand per config) pay twice.
+          // the query twice pay twice.
           //
           // NaN guard: Spark orders NaN greater than everything, so a NaN
           // banded score (zero-norm embedding → cosine 0/0) would pass
@@ -723,19 +706,16 @@ object SimilarityOps extends QueryPack {
     * accepting a fat tail costs time, never memory.
     */
   private[graft] def rescueMaxFracOf(spark: SparkSession, key: String): Double = {
-    val raw = spark.conf.get(s"graft.sim.rescue.maxfrac.$key",
-      BroadcastSafeRescueFrac.toString)
-    val v = raw.toDoubleOption.getOrElse(sys.error(
-      s"graft.sim.rescue.maxfrac.$key must be a fraction in [0, 1], got '$raw'"))
+    val v = Profile.knob(spark, s"graft.sim.rescue.maxfrac.$key",
+      BroadcastSafeRescueFrac, "a fraction in [0, 1]")(_.toDoubleOption)
     require(v >= 0.0 && v <= 1.0,
       s"graft.sim.rescue.maxfrac.$key must be a fraction in [0, 1], got $v")
     v
   }
 
   private[graft] def rescueOf(spark: SparkSession, key: String): Double = {
-    val raw = spark.conf.get(s"graft.sim.rescue.$key", "0")
-    val v = raw.toDoubleOption.getOrElse(sys.error(
-      s"graft.sim.rescue.$key must be a cosine in [0, 1), got '$raw'"))
+    val v = Profile.knob(spark, s"graft.sim.rescue.$key", 0.0,
+      "a cosine in [0, 1)")(_.toDoubleOption)
     require(v >= 0.0 && v < 1.0,
       s"graft.sim.rescue.$key must be a cosine in [0, 1), got $v")
     v
@@ -855,7 +835,6 @@ object SimilarityOps extends QueryPack {
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     // first-K placeholder centroids: k rows of driver model state, same
     // collect-to-driver convention as the trained k-means centroids
@@ -905,7 +884,6 @@ object SimilarityOps extends QueryPack {
       tol: Double = KmTol): (Seq[(Int, Seq[Float])], Seq[Double]) = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    GraftFunctions.register(spark)
     // persist the training input: the seeding scan plus every Lloyd round
     // re-reads it (standard iterative-ML caching — MLlib's KMeans does the
     // same). At 100 TB this is the working-set cache a real deployment
@@ -1041,7 +1019,6 @@ object SimilarityOps extends QueryPack {
     * retrieval output; KMeansSpec pins its recall vs brute force. */
   def annIvfKmeansRaw(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val (km, _) = kmeansCentroids(spark, dir)
     ivfSearch(Tables.embeddings(spark, dir), km)
   }
@@ -1060,7 +1037,6 @@ object SimilarityOps extends QueryPack {
     */
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val ivf = annIvfKmeansRaw(spark, dir)
       .select($"q_id", $"nearest_ivf")
@@ -1152,7 +1128,6 @@ object SimilarityOps extends QueryPack {
     */
   def topkInt8Rescore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val f = int8Frame(spark, dir)
     val qs = f.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"q".as("q_q"), $"scale".as("q_scale"))

@@ -79,7 +79,8 @@ object TextOps extends QueryPack {
     acc => acc.getField("best"))
 
   /** The [[qualityScore]] keep verdict as a single boolean column.
-    * Callers must have registered [[graft.plans.GraftFunctions]]. */
+    * Use it on a frame read through [[graft.core.Tables]], whose load
+    * installs [[graft.plans.GraftFunctions]]. */
   private def qualityKeepC: Column = {
     val toks = array_remove(tokens(col("text")), "")
     val nTokens = size(toks)
@@ -95,7 +96,8 @@ object TextOps extends QueryPack {
     * the one-pass `rep_stats` kernel (round 22 — the composed
     * `topRunOf`/`bigramsOf` HOFs ran interpreted per row; the kernel is
     * bit-equal by TextKernelsSpec and runs inside whole-stage codegen).
-    * Callers must have registered [[graft.plans.GraftFunctions]]. */
+    * Use it on a frame read through [[graft.core.Tables]], whose load
+    * installs [[graft.plans.GraftFunctions]]. */
   private def repetitionKeepC(toks: Column): Column = {
     val rs = call_function("rep_stats", toks)
     val topFrac = round(rs.getField("top_word_n").cast("double") / size(toks), 6)
@@ -144,7 +146,6 @@ object TextOps extends QueryPack {
     */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val toks = array_remove(tokens($"text"), "")
     // count_in / count_longer kernels ≡ the composed size(filter(...))
     // forms (TextKernelsSpec) — the isin/length lambdas ran interpreted
@@ -178,7 +179,6 @@ object TextOps extends QueryPack {
     */
   def langId(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val toks = array_remove(tokens($"text"), "")
     // count_in kernel per profile ≡ size(filter(isin)) (TextKernelsSpec):
     // five interpreted stopword lambdas per doc become five hash probes
@@ -211,7 +211,6 @@ object TextOps extends QueryPack {
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val norm = regexp_replace(trim(lower($"text")), "\\s+", " ")
     // min_md5_shingle kernel ≡ array_min(transform(shingles, md5))
     // (TextKernelsSpec): the composed form built the shingle array through
@@ -240,7 +239,6 @@ object TextOps extends QueryPack {
     // bind the token array before the bigram lambda (quadratic-eval
     // hazard — see bigramsOf, whose width filter replaces the old
     // post-explode split-width check)
-    graft.plans.GraftFunctions.register(spark)
     val counts = Tables.documents(spark, dir)
       .select($"lang", array_remove(tokens(lower($"text")), "").as("toks"))
       // word_bigrams kernel ≡ the interpreted bigramsOf transform
@@ -324,7 +322,6 @@ object TextOps extends QueryPack {
     */
   def countMinFreq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     // cm_cells kernel ≡ cmBuckets (TextKernelsSpec): digest bytes read
     // directly instead of hex-string materialization + conv re-parse per
     // (token × row); the md5 cells themselves are the declared result.
@@ -376,7 +373,6 @@ object TextOps extends QueryPack {
   def bigramLmScore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val toksDf = docs.select($"doc_id", cleanToks.as("toks")).localCheckpoint()
     // word_bigrams kernel, not the interpreted bigramsOf transform (round
@@ -521,8 +517,8 @@ object TextOps extends QueryPack {
     * then meet the eval grams in a hint-free exact join (AQE picks the
     * strategy), so false positives cannot reach the output. Correctness is
     * knob-independent (ExactnessSpec), the bloom-below-join plan shape is
-    * PlanSpec-pinned, and the outgrown-broadcast A/B is Harness
-    * `decontam-bloom` (SCALE.md round 12).
+    * PlanSpec-pinned, and the outgrown-broadcast A/B is in SCALE.md
+    * round 12.
     */
   /** Per-corpus-doc count of distinct 3-gram overlaps with the eval set —
     * the shared core of [[decontaminate]] and [[corpusSelect]]. */
@@ -554,7 +550,6 @@ object TextOps extends QueryPack {
         // budget is unchanged and false positives still die in the exact
         // string join below, so correctness stays knob-independent
         // (ExactnessSpec).
-        graft.plans.GraftFunctions.register(spark)
         val bf = g.select(xxhash64($"shingle").as("h"))
           .stat.bloomFilter("h", math.max(g.count(), 1L), 0.01)
         val bytes = {
@@ -581,7 +576,7 @@ object TextOps extends QueryPack {
     * in-stage, and the bloom would only add a probe per shingle.
     */
   private[graft] def decontamBloom(spark: SparkSession): Boolean =
-    spark.conf.get("graft.text.decontam.bloom", "false").toBoolean
+    graft.core.Profile.boolKnob(spark, "graft.text.decontam.bloom", default = false)
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -603,7 +598,6 @@ object TextOps extends QueryPack {
   def corpusSelect(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(spark) // repetitionKeepC's rep_stats
     val w = Window.partitionBy($"content_sha")
     Tables.documents(spark, dir).filter($"doc_id" >= 5)
       // the bound token array feeds the quality AND repetition verdicts
@@ -637,7 +631,6 @@ object TextOps extends QueryPack {
     */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     // all five statistics from ONE pass over the token array via the
     // `rep_stats` kernel (round 22, guide §4): the composed form paid an
     // interpreted index-transform per bigram, two array_distincts, an

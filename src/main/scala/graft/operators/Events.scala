@@ -80,7 +80,6 @@ object Events extends QueryPack {
     */
   def firstEventPerUserType(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     // argmin by (ts, event_id) via arg_max_long on the NEGATED epoch-μs
     // timestamp: micros (~1.7e15) sit far below double's 2^53 integer-exact
     // bound, so the negation is lossless and "max of -ts, ties to lowest

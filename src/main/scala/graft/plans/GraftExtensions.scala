@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.IntegerType
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config)
   *    injects both;
   *  - on an existing session (what Verify/Bench, the benchmark and the specs
-  *    use), [[GraftFunctions.register]] adds the functions and
-  *    [[SmallSort.install]] the strategy; [[graft.core.Tables.load]] calls
-  *    the latter.
+  *    use), [[GraftFunctions.install]] adds both. [[graft.core.Tables.load]]
+  *    calls it, so every query that reads a table has them; only code that
+  *    resolves a function before its first load calls it directly.
   * Both paths add the same [[SmallSort]] object, and `install` skips a
   * session that already has it. After either, `cosine_sim` / `dot_product`
   * are available in SQL text and via `expr(...)`, fully inside whole-stage
@@ -256,9 +256,18 @@ object GraftFunctions {
         BestCell(args.head, ids, cents)
       }))
 
-  /** Idempotent registration on a live session. */
-  def register(spark: SparkSession): Unit = descriptors.foreach {
-    case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+  /** Adds the functions and the [[SmallSort]] strategy to a live session,
+    * skipping whatever it already has. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    descriptors.foreach { case (ident, info, builder) =>
+      if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
+    }
+    val exp = spark.experimental
+    def installed = exp.extraStrategies.contains(SmallSort) ||
+      spark.sessionState.planner.extraPlanningStrategies.contains(SmallSort)
+    if (!installed) exp.synchronized {
+      if (!installed) exp.extraStrategies = exp.extraStrategies :+ SmallSort
+    }
   }
 }

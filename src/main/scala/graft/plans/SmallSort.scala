@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
@@ -25,7 +24,7 @@ import org.apache.spark.sql.internal.SQLConf
   * report runtime sizes: a sort whose input estimate is large can still
   * switch to one partition once the stage below it has run.
   *
-  * Install it on a session with [[SmallSort.install]] (every
+  * Install it on a session with [[GraftFunctions.install]] (every
   * [[graft.core.Tables.load]] does), or with `spark.sql.extensions=`
   * [[GraftExtensions]].
   */
@@ -48,16 +47,6 @@ object SmallSort extends SparkStrategy {
     if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
       math.min(advisory, conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     else advisory
-  }
-
-  /** Adds the strategy to `spark`'s planner unless it is already there. */
-  def install(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    def installed = exp.extraStrategies.contains(SmallSort) ||
-      spark.sessionState.planner.extraPlanningStrategies.contains(SmallSort)
-    if (!installed) exp.synchronized {
-      if (!installed) exp.extraStrategies = exp.extraStrategies :+ SmallSort
-    }
   }
 }
 

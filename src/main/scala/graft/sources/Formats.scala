@@ -193,7 +193,9 @@ object Formats extends QueryPack {
     */
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val url = "jdbc:derby:/tmp/graft_derby/db;create=true"
+    // in-memory Derby: a database per JVM and no files, so two JVMs that
+    // run this query at once cannot collide on one database directory
+    val url = "jdbc:derby:memory:graft_db;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     val agged = Tables.orders(spark, dir)
@@ -368,7 +370,6 @@ object Formats extends QueryPack {
       .parquet(path)
     val orders = spark.read.parquet(path)
     val bf = orders.stat.bloomFilter("o_custkey", 100000L, 0.01)
-    graft.plans.GraftFunctions.register(spark)
     val bytes = {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)

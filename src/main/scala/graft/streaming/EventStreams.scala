@@ -304,8 +304,9 @@ object EventStreams {
     *    ChecksumCheckpointFileManager writes a sidecar per checkpoint file
     *    and every state-store commit blocks on that async write (thread
     *    dumps: tasks parked in `ChecksumCancellableFSDataOutputStream.close`
-    *    → awaitResult). Re-measured with `graft.tools.StreamProbe` once
-    *    the runs reused their classes (sf0.1, 4 cores, so 4 state-store
+    *    → awaitResult). Re-measured once the runs reused their classes
+    *    (SCALE.md "The checkpoint-checksum decision, re-measured"; sf0.1,
+    *    4 cores, so 4 state-store
     *    partitions; two warm runs a side): turning the sidecars off cuts
     *    the stateful stage's summed executor time by 30–35% on all three
     *    witnesses (tumbling 2.18 → 1.47 s over the two runs), while the

@@ -12,7 +12,7 @@ class ArgMaxLongSpec extends SparkSpec {
   import spark.implicits._
 
   private def agg(rows: Seq[(Long, java.lang.Double)]): Option[(Long, Double)] = {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val r = rows.toDF("id", "score")
       .agg(expr("arg_max_long(id, score)").as("b"))
       .select($"b.id", $"b.score").head()
@@ -38,7 +38,7 @@ class ArgMaxLongSpec extends SparkSpec {
   }
 
   test("null ids are ignored too — a winning null id must not corrupt the buffer") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val r = Seq((Some(2L), 0.4), (Option.empty[Long], 0.9))
       .toDF("id", "score")
       .agg(expr("arg_max_long(id, score)").as("b"))
@@ -60,7 +60,7 @@ class ArgMaxLongSpec extends SparkSpec {
   }
 
   test("matches max_by(struct, struct) row-for-row on random grouped data") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val rnd = new scala.util.Random(5)
     // duplicate scores on purpose: tie-break coverage
     val rows = Seq.tabulate(2000)(i =>

@@ -60,7 +60,7 @@ class DedupSimSpec extends SparkSpec {
   test("LSH ANN nearest agrees with brute-force nearest for most vectors") {
     val brute = SimilarityOps.nearestSameLabel(spark, sfDir) // not the target — compute true global nearest
     val e = graft.core.Tables.embeddings(spark, sfDir)
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val a = e.select($"vec_id".as("v1"), $"embedding".as("e1"))
     val b = e.select($"vec_id".as("v2"), $"embedding".as("e2"))
     val w = org.apache.spark.sql.expressions.Window

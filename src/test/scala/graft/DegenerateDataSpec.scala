@@ -143,7 +143,7 @@ class DegenerateDataSpec extends SparkSpec {
     // treats NaN as greatest, so the argmax must keep the LOWEST cent_id —
     // a strict > would return the -1 sentinel and silently drop the vector
     // from the IVF index (and create a phantom refit group in k-means)
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val cents = Seq(
       (3, Seq.fill(SimilarityOps.Dim)(0.1f)),
       (7, Seq.fill(SimilarityOps.Dim)(0.2f)))

@@ -305,7 +305,7 @@ class ExactnessSpec extends SparkSpec {
     // the cap must keep.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val dir = tools.Corpora.generateDenseDupVectors(spark, 1000)
     val (tables, planes) = (8, 4)
     val cap = 64

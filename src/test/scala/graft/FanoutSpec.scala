@@ -81,7 +81,7 @@ class FanoutSpec extends SparkSpec {
         s.taskMetrics.shuffleWriteMetrics.bytesWritten))}")
     // (3) the pairs are every pair sharing a bucket in some table that the
     // int8 prefilter keeps, computed on the driver
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val vecs = Tables.embeddings(spark, sfDir)
       .filter($"embedding".isNotNull)
       .select($"vec_id", expr("lsh_buckets(embedding, 16, 2)"),

@@ -16,7 +16,7 @@ class Int8PrefilterSpec extends SparkSpec {
 
   private def blobsAndCos(vecs: Seq[Seq[Float]]) = {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("id", "emb")
       .select($"id", $"emb", expr("int8_enc(emb)").as("blob"))
@@ -78,7 +78,7 @@ class Int8PrefilterSpec extends SparkSpec {
 
   test("degenerate encodings defer to the float verify (zero vector, NaN element)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val vecs: Seq[Seq[Float]] = Seq(
       Seq.fill(SimilarityOps.Dim)(0f),                       // zero: margin = +inf
       randVec(),
@@ -99,7 +99,7 @@ class Int8PrefilterSpec extends SparkSpec {
 
   test("blob layout: codes + qnorm round-trip through the packed tail") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val v = randVec()
     val blob = Seq((1L, v)).toDF("id", "emb")
       .select(expr("int8_enc(emb)")).collect().head.getAs[Array[Byte]](0)
@@ -113,7 +113,7 @@ class Int8PrefilterSpec extends SparkSpec {
 
   test("int8_keep accepts SQL-text thetas of every numeric literal shape") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val df = Seq((randVec(), randVec())).toDF("a", "b")
     // SQL text parses 1 as Int, 0.4 as Decimal; the Column API builds
     // Double — all three must resolve (boundary thetas 0/1 are the
@@ -128,7 +128,7 @@ class Int8PrefilterSpec extends SparkSpec {
 
   test("int8_keep rejects a mismatched blob length loudly") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val df = Seq((Seq(1f, 2f, 3f), Seq(1f, 2f, 3f, 4f))).toDF("a", "b")
       .select(call_function("int8_keep",
         expr("int8_enc(a)"), expr("int8_enc(b)"), lit(0.5)).as("k"))

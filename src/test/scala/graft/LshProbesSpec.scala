@@ -16,7 +16,7 @@ class LshProbesSpec extends SparkSpec {
   private def vec(): Seq[Float] = Seq.fill(Hyperplanes.Dim)(rnd.nextFloat() * 2 - 1)
 
   private def kernel(fn: String, v: Seq[Float]): Seq[Int] = {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Seq(Tuple1(v)).toDF("e").select(expr(fn)).collect().head.getSeq[Int](0)
   }
 
@@ -30,7 +30,7 @@ class LshProbesSpec extends SparkSpec {
 
   test("lsh_first_shared: first equal position, -1 when none, null stays null") {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val cases = Seq(
       (Seq(3, 1, 2, 2), Seq(0, 1, 2, 2), 1),
       (Seq(3, 1, 2), Seq(3, 0, 0), 0),

@@ -110,7 +110,7 @@ class MinhashSigSpec extends SparkSpec {
     // the deployed prefiltered scan uses the fused kernel; pin it against
     // the two standalone kernels it fuses, on raw (unnormalized) strings —
     // kernel-vs-kernel equality holds for ANY input, normalized or not
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val docs = Seq(
       (1L, ""), (2L, "one"), (3L, "one two three four"),
       (4L, "  odd   spacing  "), (5L, "ünïcödé tökens über"),

@@ -156,7 +156,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("cosine_sim participates in whole-stage codegen") {
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val e = Tables.embeddings(spark, sfDir)
     val df = e.select($"vec_id", expr("cosine_sim(embedding, embedding)").as("self"))
     val plan = planOf(df)
@@ -204,7 +204,7 @@ class PlanSpec extends SparkSpec {
     // cost. Built through the PRODUCTION bestCellCol (package-private for
     // exactly this) so the pinned plan shape can't drift from the code.
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val e = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding")
     val dim = e.select(size($"embedding")).head().getInt(0)
     val cents = Seq((0, Seq.fill(dim)(0.1f)), (1, Seq.fill(dim)(0.2f)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Profile
-import graft.functions.SimilarityOps
+import graft.functions.{DedupOps, SimilarityOps, TextOps}
 
 /** Wiring of the one-switch deployment posture (`graft.profile`): the
   * oracle gate (which sets nothing) must keep both exactness knobs true,
@@ -54,6 +54,25 @@ class ProfileSpec extends SparkSpec {
       val plan = planOf(SimilarityOps.pairsAboveThreshold(spark, sfDir))
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"deployment profile still ran the all-pairs exact join:\n$plan")
+    }
+  }
+
+  test("a malformed knob value fails naming the key and the bad value") {
+    val readers: Seq[(String, String, () => Any)] = Seq(
+      ("graft.dedup.bucketcap", "lots", () => DedupOps.bucketCap(spark)),
+      ("graft.sim.prefilter", "yes", () => SimilarityOps.prefilterOn(spark)),
+      ("graft.dedup.hashverify", "yes", () => DedupOps.hashVerify(spark)),
+      ("graft.text.decontam.bloom", "yes", () => TextOps.decontamBloom(spark)),
+      ("graft.sim.exact", "yes", () => SimilarityOps.exactSim(spark)),
+      ("graft.sums.exact", "yes", () => QueryPack.exactSums(spark)),
+      ("graft.sim.probe.pairs", "two", () => SimilarityOps.probeBitsOf(spark, "pairs", 4)),
+      ("graft.sim.bucketcap.pairs", "big", () => SimilarityOps.simBucketCap(spark, "pairs")),
+      ("graft.sim.rescue.samelabel", "high", () => SimilarityOps.rescueOf(spark, "samelabel")),
+      ("graft.sim.rescue.maxfrac.samelabel", "most",
+        () => SimilarityOps.rescueMaxFracOf(spark, "samelabel")))
+    for ((key, bad, read) <- readers) withConf(key -> bad) {
+      val msg = intercept[RuntimeException](read()).getMessage
+      assert(msg.contains(key) && msg.contains(s"'$bad'"), s"$key=$bad: $msg")
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.plans.SmallSort
+import graft.plans.{GraftFunctions, SmallSort}
+import graft.tools.BusDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ class SmallSortSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    SmallSort.install(spark)
+    GraftFunctions.install(spark)
   }
 
   /** Runs `body` on this session's planner without the strategy: the
@@ -48,9 +49,9 @@ class SmallSortSpec extends SparkSpec {
 
   test("q1_pricing_summary sorts on one partition and runs one job fewer") {
     query("q1_pricing_summary").collect() // the first load infers the schema in a job
-    val (jobs, _) = jobsAndStagesOf(query("q1_pricing_summary").collect())
+    val (jobs, _) = BusDrain.jobsAndStagesOf(spark)(query("q1_pricing_summary").collect())
     val rangeQ1 = query("q1_pricing_summary")
-    val (rangeJobs, _) = withoutSmallSort(jobsAndStagesOf(rangeQ1.collect()))
+    val (rangeJobs, _) = withoutSmallSort(BusDrain.jobsAndStagesOf(spark)(rangeQ1.collect()))
     assert(jobs == rangeJobs - 1, s"jobs: small sort $jobs, range-partitioned $rangeJobs")
     val plan = finalPlan(query("q1_pricing_summary"))
     assert(!plan.contains("rangepartitioning"), s"range sort left in:\n$plan")

@@ -31,7 +31,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("native cosine_sim and dot_product are callable from pure SQL text") {
     Tables.registerAll(spark, sfDir)
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val rows = spark.sql(
       """SELECT vec_id,
         |  cosine_sim(embedding, embedding) AS self_cos,

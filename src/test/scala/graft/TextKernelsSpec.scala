@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 class TextKernelsSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
+  GraftFunctions.install(spark)
 
   /** Composed five-stat frame vs kernel five-stat frame over (id, toks). */
   private def assertEqualStats(toksDf: DataFrame): Unit = {

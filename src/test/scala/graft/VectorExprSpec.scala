@@ -7,7 +7,7 @@ class VectorExprSpec extends SparkSpec {
   import spark.implicits._
 
   private def df2(a: Seq[Float], b: Seq[Float]) = {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Seq((a, b)).toDF("a", "b")
   }
 
@@ -42,7 +42,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null input → null (null-intolerant)") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val df = Seq((Some(Seq(1f, 2f)), Option.empty[Seq[Float]])).toDF("a", "b")
     assert(df.select(expr("cosine_sim(a, b)")).collect().head.isNullAt(0))
   }
@@ -55,7 +55,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val rnd = new scala.util.Random(2)
     val a = Seq.fill(64)(rnd.nextFloat()); val b = Seq.fill(64)(rnd.nextFloat())
     val codegen = df2(a, b).select(expr("cosine_sim(a,b)")).collect().head.getDouble(0)
