@@ -19,8 +19,10 @@ import org.apache.spark.sql.types._
   * Here the centroid matrix rides along as primitive `float[][]` (model
   * state, serialized once per task binary), centroid norms are precomputed
   * at construction (the composed form re-derived ‖c‖ per row per cell),
-  * and the k·dim loop is one codegen kernel inside the same stage as the
-  * scan.
+  * and the k·dim loop lives once, in [[BestCell.compute]]: `nullSafeEval`
+  * calls it, and the generated code calls it once per row inside the same
+  * whole-stage-codegen stage as the scan, with the model arrays passed as
+  * reference objects.
   *
   * Semantics pinned to the composed form it replaces: csim is
   * `cosine_sim` exactly (0.0 when either norm is 0 — a zero-norm embedding
@@ -48,7 +50,6 @@ case class BestCell(child: Expression, ids: Seq[Int], cents: Seq[Seq[Float]])
 
   @transient private lazy val idsArr: Array[Int] = ids.toArray
   @transient private lazy val centsArr: Array[Array[Float]] = cents.map(_.toArray).toArray
-  private val dim: Int = cents.head.length
 
   override def prettyName: String = "best_cell"
   override def inputTypes = Seq(ArrayType(FloatType))
@@ -64,84 +65,49 @@ case class BestCell(child: Expression, ids: Seq[Int], cents: Seq[Seq[Float]])
     math.sqrt(ny)
   }
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    BestCell.compute(a.asInstanceOf[ArrayData], centsArr, idsArr, norms)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("bestCellCents", centsArr, "float[][]")
+    val idsRef = ctx.addReferenceObj("bestCellIds", idsArr, "int[]")
+    val normsRef = ctx.addReferenceObj("bestCellNorms", norms, "double[]")
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.expr.BestCell.compute($x, $centsRef, $idsRef, $normsRef);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object BestCell {
+  /** The nearest of `cents` (with precomputed `norms`) to `x` by cosine:
+    * struct(csim, cent_id) with the tie and NaN rules above. */
+  def compute(x: ArrayData, cents: Array[Array[Float]], ids: Array[Int],
+      norms: Array[Double]): InternalRow = {
     val n = x.numElements()
-    if (n != dim)
+    if (n != cents(0).length)
       throw new IllegalArgumentException(
-        s"best_cell: embedding dim $n != centroid dim $dim")
+        s"best_cell: embedding dim $n != centroid dim ${cents(0).length}")
     var nx = 0.0
     var i = 0
     while (i < n) { val xi = x.getFloat(i).toDouble; nx += xi * xi; i += 1 }
     val xnorm = math.sqrt(nx)
     var bestSim = Double.NegativeInfinity
-    var bestId = idsArr(0)
+    var bestId = ids(0)
     var c = 0
-    while (c < centsArr.length) {
-      val ct = centsArr(c)
+    while (c < cents.length) {
+      val ct = cents(c)
       var dot = 0.0; var j = 0
       while (j < n) { dot += x.getFloat(j).toDouble * ct(j); j += 1 }
       val sim = if (xnorm == 0.0 || norms(c) == 0.0) 0.0 else dot / (xnorm * norms(c))
       // Double.compare ordering = Spark's: NaN greatest, 0.0 above -0.0;
       // strict > keeps the lowest id on true ties (ids ascend)
       if (c == 0 || java.lang.Double.compare(sim, bestSim) > 0) {
-        bestSim = sim; bestId = idsArr(c)
+        bestSim = sim; bestId = ids(c)
       }
       c += 1
     }
     new GenericInternalRow(Array[Any](bestSim, bestId))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val centsRef = ctx.addReferenceObj("bestCellCents", centsArr, "float[][]")
-      val idsRef = ctx.addReferenceObj("bestCellIds", idsArr, "int[]")
-      val normsRef = ctx.addReferenceObj("bestCellNorms", norms, "double[]")
-      val n = ctx.freshName("n")
-      val nx = ctx.freshName("nx")
-      val xi = ctx.freshName("xi")
-      val xnorm = ctx.freshName("xnorm")
-      val bestSim = ctx.freshName("bestSim")
-      val bestId = ctx.freshName("bestId")
-      val c = ctx.freshName("c")
-      val ct = ctx.freshName("ct")
-      val dot = ctx.freshName("dot")
-      val sim = ctx.freshName("sim")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException("best_cell: embedding dim "
-         |    + $n + " != centroid dim " + $dim);
-         |}
-         |double $nx = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $xi = (double) $x.getFloat($i);
-         |  $nx += $xi * $xi;
-         |}
-         |final double $xnorm = Math.sqrt($nx);
-         |double $bestSim = Double.NEGATIVE_INFINITY;
-         |int $bestId = $idsRef[0];
-         |for (int $c = 0; $c < $centsRef.length; $c++) {
-         |  final float[] $ct = $centsRef[$c];
-         |  double $dot = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $dot += (double) $x.getFloat($j) * (double) $ct[$j];
-         |  }
-         |  final double $sim = ($xnorm == 0.0 || $normsRef[$c] == 0.0)
-         |    ? 0.0 : $dot / ($xnorm * $normsRef[$c]);
-         |  // Double.compare = Spark ordering: NaN greatest, 0.0 above -0.0;
-         |  // strict > keeps the lowest id on true ties (ids ascend)
-         |  if ($c == 0 || java.lang.Double.compare($sim, $bestSim) > 0) {
-         |    $bestSim = $sim; $bestId = $idsRef[$c];
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[]{$bestSim, $bestId});
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -24,6 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType,
   *    `cosine_sim` float kernel, so the final answer is bit-identical to
   *    the unfiltered path (ExactnessSpec / Int8PrefilterSpec pin this).
   *
+  * Each kernel's loop lives once, in `compute` on its companion object
+  * (`Int8Enc.compute`, `Int8Est.compute`, `Int8Keep.compute`, the pair
+  * kernels sharing `Int8Blob.dimOf` and `codeDot`): `nullSafeEval` calls
+  * it, and the generated code is one static call to it per row.
+  *
   * Why the estimate needs no scales: with x̂ = s·q the dequantized vector,
   * cos(x̂₁, x̂₂) = (s₁s₂·q₁·q₂)/(s₁‖q₁‖·s₂‖q₂‖) = (q₁·q₂)/(‖q₁‖‖q₂‖) — the
   * per-vector scales cancel, so the pair-time work is one int8 dot product
@@ -76,6 +81,23 @@ object Int8Blob {
 
   /** Provable cosine error margin 2‖x−x̂‖/‖x‖ (blob tail, length-8). */
   def margin(b: Array[Byte]): Double = readDouble(b, b.length - 8)
+
+  /** Length-checked code dimension; blobs must come from the same encoder.
+    * `fn` names the calling kernel in the error. */
+  def dimOf(fn: String, b1: Array[Byte], b2: Array[Byte]): Int = {
+    if (b1.length != b2.length || b1.length < 16)
+      throw new IllegalArgumentException(
+        s"$fn: blob mismatch (${b1.length} vs ${b2.length} bytes)")
+    b1.length - 16
+  }
+
+  /** The int8 code dot product, exact in int64. */
+  def codeDot(b1: Array[Byte], b2: Array[Byte], d: Int): Long = {
+    var dot = 0L
+    var i = 0
+    while (i < d) { dot += (b1(i) * b2(i)).toLong; i += 1 }
+    dot
+  }
 }
 
 /** int8_enc(embedding) → binary blob [d code bytes | ‖q‖ | margin]. */
@@ -85,8 +107,17 @@ case class Int8Enc(child: Expression) extends UnaryExpression with ExpectsInputT
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = Int8Enc.compute(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = graft.expr.Int8Enc.compute($x);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object Int8Enc {
+  def compute(x: ArrayData): Array[Byte] = {
     val n = x.numElements()
     val out = new Array[Byte](n + 16)
     var maxAbs = 0f
@@ -115,93 +146,12 @@ case class Int8Enc(child: Expression) extends UnaryExpression with ExpectsInputT
       if (xx == 0.0) Double.PositiveInfinity else 2.0 * math.sqrt(errsq) / math.sqrt(xx))
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val maxAbs = ctx.freshName("maxAbs")
-      val s = ctx.freshName("s")
-      val qq = ctx.freshName("qq")
-      val errsq = ctx.freshName("errsq")
-      val xx = ctx.freshName("xx")
-      val i = ctx.freshName("i")
-      val xi = ctx.freshName("xi")
-      val qi = ctx.freshName("qi")
-      val dq = ctx.freshName("dq")
-      val diff = ctx.freshName("diff")
-      val av = ctx.freshName("av")
-      s"""
-         |final int $n = $x.numElements();
-         |final byte[] $out = new byte[$n + 16];
-         |float $maxAbs = 0f;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final float $av = Math.abs($x.getFloat($i));
-         |  if ($av > $maxAbs) $maxAbs = $av;
-         |}
-         |final double $s = ((double) $maxAbs) / 127.0;
-         |double $qq = 0.0, $errsq = 0.0, $xx = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $xi = (double) $x.getFloat($i);
-         |  long $qi = 0L;
-         |  if ($s != 0.0) {
-         |    $qi = Math.round($xi / $s);
-         |    if ($qi > 127L) $qi = 127L; else if ($qi < -127L) $qi = -127L;
-         |  }
-         |  $out[$i] = (byte) $qi;
-         |  final double $dq = (double) $qi;
-         |  $qq += $dq * $dq;
-         |  final double $diff = $xi - $s * $dq;
-         |  $errsq += $diff * $diff;
-         |  $xx += $xi * $xi;
-         |}
-         |graft.expr.Int8Blob.putDouble($out, $n, Math.sqrt($qq));
-         |graft.expr.Int8Blob.putDouble($out, $n + 8,
-         |  ($xx == 0.0) ? Double.POSITIVE_INFINITY : 2.0 * Math.sqrt($errsq) / Math.sqrt($xx));
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
-/** Shared blob-pair plumbing for [[Int8Est]] / [[Int8Keep]]. */
+/** Shared input types of [[Int8Est]] / [[Int8Keep]]. */
 abstract class Int8PairExpression extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(BinaryType, BinaryType)
   override def nullIntolerant: Boolean = true
-
-  /** Length-checked code dimension; blobs must come from the same encoder. */
-  protected final def dimOf(b1: Array[Byte], b2: Array[Byte]): Int = {
-    if (b1.length != b2.length || b1.length < 16)
-      throw new IllegalArgumentException(
-        s"$prettyName: blob mismatch (${b1.length} vs ${b2.length} bytes)")
-    b1.length - 16
-  }
-
-  protected final def codeDot(b1: Array[Byte], b2: Array[Byte], d: Int): Long = {
-    var dot = 0L
-    var i = 0
-    while (i < d) { dot += (b1(i) * b2(i)).toLong; i += 1 }
-    dot
-  }
-
-  /** Generated-Java prologue: length check + int8 dot into `$dot`. */
-  protected final def genDotPrologue(ctx: CodegenContext, b1: String, b2: String,
-      d: String, dot: String): String = {
-    val i = ctx.freshName("i")
-    s"""
-       |if ($b1.length != $b2.length || $b1.length < 16) {
-       |  throw new IllegalArgumentException(
-       |    "$prettyName: blob mismatch (" + $b1.length + " vs " + $b2.length + " bytes)");
-       |}
-       |final int $d = $b1.length - 16;
-       |long $dot = 0L;
-       |for (int $i = 0; $i < $d; $i++) {
-       |  $dot += (long) ($b1[$i] * $b2[$i]);
-       |}
-     """.stripMargin
-  }
 }
 
 /** int8_est(b1, b2) → estimated cosine (q₁·q₂)/(‖q₁‖‖q₂‖); NaN when either
@@ -212,26 +162,21 @@ case class Int8Est(left: Expression, right: Expression) extends Int8PairExpressi
   override def prettyName: String = "int8_est"
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val b1 = a.asInstanceOf[Array[Byte]]
-    val b2 = b.asInstanceOf[Array[Byte]]
-    val d = dimOf(b1, b2)
-    codeDot(b1, b2, d).toDouble / (Int8Blob.qnorm(b1) * Int8Blob.qnorm(b2))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Est.compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b1, b2) => {
-      val d = ctx.freshName("d")
-      val dot = ctx.freshName("dot")
-      s"""
-         |${genDotPrologue(ctx, b1, b2, d, dot)}
-         |${ev.value} = ((double) $dot) /
-         |  (graft.expr.Int8Blob.readDouble($b1, $d) * graft.expr.Int8Blob.readDouble($b2, $d));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (b1, b2) => s"${ev.value} = graft.expr.Int8Est.compute($b1, $b2);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object Int8Est {
+  def compute(b1: Array[Byte], b2: Array[Byte]): Double = {
+    val d = Int8Blob.dimOf("int8_est", b1, b2)
+    Int8Blob.codeDot(b1, b2, d).toDouble / (Int8Blob.qnorm(b1) * Int8Blob.qnorm(b2))
+  }
 }
 
 /** int8_keep(b1, b2, θ) → false only when the pair's float cosine is
@@ -245,47 +190,26 @@ case class Int8Keep(left: Expression, right: Expression, theta: Double)
   override def prettyName: String = "int8_keep"
   override def dataType: DataType = BooleanType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val b1 = a.asInstanceOf[Array[Byte]]
-    val b2 = b.asInstanceOf[Array[Byte]]
-    val d = dimOf(b1, b2)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Keep.compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], theta)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (b1, b2) =>
+      s"${ev.value} = graft.expr.Int8Keep.compute($b1, $b2, ${theta}D);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8Keep {
+  def compute(b1: Array[Byte], b2: Array[Byte], theta: Double): Boolean = {
+    val d = Int8Blob.dimOf("int8_keep", b1, b2)
     val qn1 = Int8Blob.qnorm(b1); val m1 = Int8Blob.margin(b1)
     val qn2 = Int8Blob.qnorm(b2); val m2 = Int8Blob.margin(b2)
     if (qn1 == 0.0 || qn2 == 0.0 || m1.isNaN || m2.isNaN) true
     else {
-      val est = codeDot(b1, b2, d).toDouble / (qn1 * qn2)
+      val est = Int8Blob.codeDot(b1, b2, d).toDouble / (qn1 * qn2)
       est >= theta - m1 - m2 - Int8Blob.Eps
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b1, b2) => {
-      val d = ctx.freshName("d")
-      val dot = ctx.freshName("dot")
-      val qn1 = ctx.freshName("qn1")
-      val qn2 = ctx.freshName("qn2")
-      val m1 = ctx.freshName("m1")
-      val m2 = ctx.freshName("m2")
-      val keep = ctx.freshName("keep")
-      // the dot prologue runs before the degenerate check — one extra loop
-      // on an all-zero code vector is cheaper than a branch every real row.
-      // (if/else rather than one ||-expression: Janino misparses the
-      // parenthesized boolean followed by a (double) cast as a cast type
-      // and kicks the whole stage out of codegen)
-      s"""
-         |${genDotPrologue(ctx, b1, b2, d, dot)}
-         |final double $qn1 = graft.expr.Int8Blob.readDouble($b1, $d);
-         |final double $qn2 = graft.expr.Int8Blob.readDouble($b2, $d);
-         |final double $m1 = graft.expr.Int8Blob.readDouble($b1, $d + 8);
-         |final double $m2 = graft.expr.Int8Blob.readDouble($b2, $d + 8);
-         |boolean $keep = true;
-         |if ($qn1 != 0.0 && $qn2 != 0.0 && !Double.isNaN($m1) && !Double.isNaN($m2)) {
-         |  $keep = ((double) $dot) / ($qn1 * $qn2) >= ${theta}D - $m1 - $m2 - ${Int8Blob.Eps}D;
-         |}
-         |${ev.value} = $keep;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

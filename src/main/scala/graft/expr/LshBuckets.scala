@@ -2,7 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** The seeded Rademacher (±1) hyperplane family shared by every LSH
@@ -31,11 +31,14 @@ object Hyperplanes {
   * pays GenericArrayData boxing on every literal element access: measured
   * 275 µs/row at 8×8/dim-64 (5.5 s for a 20k corpus, swamping the whole
   * banded pipeline; the candidate self-join itself was 0.4 s). This kernel
-  * is one codegen loop over the primitive plane matrix shipped as a
-  * reference object: all 64 dots in a few µs, and the bucketing stays
-  * inside whole-stage codegen with the scan.
+  * is one loop over the primitive plane matrix shipped as a reference
+  * object: all 64 dots in a few µs, and the bucketing stays inside
+  * whole-stage codegen with the scan.
   *
-  * Sign math matches the composed form bit-for-bit (left-to-right double
+  * Its body is [[LshProbes.buckets]] at `probeBits = 0` (both eval paths
+  * call it), so every bucket id in the engine comes from one loop and
+  * `lsh_probes`' slot 0 replays this kernel by construction. Sign math
+  * matches the composed form bit-for-bit (left-to-right double
   * accumulation over float elements), so oracle replays and every
   * gate-validated band shape are unchanged.
   */
@@ -51,60 +54,14 @@ case class LshBuckets(child: Expression, nTables: Int, planesPerTable: Int)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    if (x.numElements() != Hyperplanes.Dim)
-      throw new IllegalArgumentException(
-        s"lsh_buckets: embedding dim ${x.numElements()} != plane dim ${Hyperplanes.Dim}")
-    val planes = Hyperplanes.planes
-    val out = new Array[Int](nTables)
-    var t = 0
-    while (t < nTables) {
-      var b = 0; var p = 0
-      while (p < planesPerTable) {
-        val pl = planes(t * planesPerTable + p)
-        var dot = 0.0; var i = 0
-        while (i < pl.length) { dot += x.getFloat(i).toDouble * pl(i); i += 1 }
-        if (dot > 0.0) b |= 1 << p
-        p += 1
-      }
-      out(t) = b
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any = LshProbes.buckets(prettyName,
+    a.asInstanceOf[ArrayData], Hyperplanes.planes, nTables, planesPerTable, 0)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val planesRef = ctx.addReferenceObj("lshPlanes", Hyperplanes.planes, "float[][]")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      val p = ctx.freshName("p")
-      val pl = ctx.freshName("pl")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($x.numElements() != ${Hyperplanes.Dim}) {
-         |  throw new IllegalArgumentException("lsh_buckets: embedding dim "
-         |    + $x.numElements() + " != plane dim " + ${Hyperplanes.Dim});
-         |}
-         |int[] $out = new int[$nTables];
-         |for (int $t = 0; $t < $nTables; $t++) {
-         |  int $b = 0;
-         |  for (int $p = 0; $p < $planesPerTable; $p++) {
-         |    final float[] $pl = $planesRef[$t * $planesPerTable + $p];
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $pl.length; $i++) {
-         |      $dot += (double) $x.getFloat($i) * (double) $pl[$i];
-         |    }
-         |    if ($dot > 0.0) $b |= (1 << $p);
-         |  }
-         |  $out[$t] = $b;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("lshPlanes", Hyperplanes.planes, "float[][]")
+    nullSafeCodeGen(ctx, ev, x => s"""${ev.value} = graft.expr.LshProbes.buckets(
+      |"$prettyName", $x, $planesRef, $nTables, $planesPerTable, 0);""".stripMargin)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -130,28 +87,23 @@ case class LshFirstShared(left: Expression, right: Expression)
   override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    LshFirstShared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expr.LshFirstShared.compute($x, $y);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object LshFirstShared {
+  def compute(x: ArrayData, y: ArrayData): Int = {
     val n = math.min(x.numElements(), y.numElements())
     var i = 0
     while (i < n && x.getInt(i) != y.getInt(i)) i += 1
     if (i < n) i else -1
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |int $i = 0;
-         |while ($i < $n && $x.getInt($i) != $y.getInt($i)) $i++;
-         |${ev.value} = $i < $n ? $i : -1;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

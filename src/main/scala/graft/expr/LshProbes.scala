@@ -21,13 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * expands (`1 + probeBits` rows per table instead of 1); the index side
   * keeps its base buckets, so a probe never changes what the index stores.
   *
-  * Bit-exactness contract: base buckets use the same left-to-right double
-  * accumulation over the shared [[Hyperplanes]] family as `lsh_buckets`,
-  * so slot 0 replays that kernel exactly; a probed run can only ADD
-  * candidate pairs, never lose one (ExactnessSpec pins banded ≡ exact
-  * with the probe knob on).
+  * Bit-exactness contract: [[LshProbes.buckets]] is the one bucketing
+  * body — both eval paths of this kernel and of `lsh_buckets` (at
+  * `probeBits = 0`) call it, so slot 0 replays that kernel by
+  * construction; a probed run can only ADD candidate pairs, never lose
+  * one (ExactnessSpec pins banded ≡ exact with the probe knob on).
   *
-  * Tie/edge rules (identical in interpreted and codegen paths): equal
+  * Tie/edge rules: equal
   * |dot| picks the lower plane position (strict `<` scan); NaN dots are
   * never selected while a finite candidate remains (NaN fails every `<`),
   * and an all-NaN table falls back to flipping the lowest unused
@@ -48,17 +48,34 @@ case class LshProbes(child: Expression, nTables: Int, planesPerTable: Int,
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  private val stride = 1 + probeBits
+  override def nullSafeEval(a: Any): Any = LshProbes.buckets(prettyName,
+    a.asInstanceOf[ArrayData], Hyperplanes.planes, nTables, planesPerTable, probeBits)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("lshPlanes", Hyperplanes.planes, "float[][]")
+    nullSafeCodeGen(ctx, ev, x => s"""${ev.value} = graft.expr.LshProbes.buckets(
+      |"$prettyName", $x, $planesRef, $nTables, $planesPerTable, $probeBits);""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object LshProbes {
+  /** Bucket ids of `x` under `planes`: `nTables * (1 + probeBits)` ids,
+    * stride `1 + probeBits`, laid out as [[LshProbes]] describes. `fn`
+    * names the calling kernel in the dimension error. The probe scratch
+    * arrays exist only when `probeBits > 0`.
+    */
+  def buckets(fn: String, x: ArrayData, planes: Array[Array[Float]],
+      nTables: Int, planesPerTable: Int, probeBits: Int): ArrayData = {
     if (x.numElements() != Hyperplanes.Dim)
       throw new IllegalArgumentException(
-        s"lsh_probes: embedding dim ${x.numElements()} != plane dim ${Hyperplanes.Dim}")
-    val planes = Hyperplanes.planes
+        s"$fn: embedding dim ${x.numElements()} != plane dim ${Hyperplanes.Dim}")
+    val stride = 1 + probeBits
     val out = new Array[Int](nTables * stride)
-    val dots = new Array[Double](planesPerTable)
-    val used = new Array[Boolean](planesPerTable)
+    val dots = if (probeBits > 0) new Array[Double](planesPerTable) else null
+    val used = if (probeBits > 0) new Array[Boolean](planesPerTable) else null
     var t = 0
     while (t < nTables) {
       var b = 0
@@ -68,8 +85,7 @@ case class LshProbes(child: Expression, nTables: Int, planesPerTable: Int,
         var dot = 0.0; var i = 0
         while (i < pl.length) { dot += x.getFloat(i).toDouble * pl(i); i += 1 }
         if (dot > 0.0) b |= 1 << p
-        dots(p) = math.abs(dot)
-        used(p) = false
+        if (probeBits > 0) { dots(p) = math.abs(dot); used(p) = false }
         p += 1
       }
       out(t * stride) = b
@@ -96,63 +112,4 @@ case class LshProbes(child: Expression, nTables: Int, planesPerTable: Int,
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val planesRef = ctx.addReferenceObj("lshPlanes", Hyperplanes.planes, "float[][]")
-      val out = ctx.freshName("out")
-      val dots = ctx.freshName("dots")
-      val used = ctx.freshName("used")
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      val p = ctx.freshName("p")
-      val pl = ctx.freshName("pl")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val k2 = ctx.freshName("k2")
-      val best = ctx.freshName("best")
-      val bestV = ctx.freshName("bestV")
-      s"""
-         |if ($x.numElements() != ${Hyperplanes.Dim}) {
-         |  throw new IllegalArgumentException("lsh_probes: embedding dim "
-         |    + $x.numElements() + " != plane dim " + ${Hyperplanes.Dim});
-         |}
-         |int[] $out = new int[${nTables * stride}];
-         |double[] $dots = new double[$planesPerTable];
-         |boolean[] $used = new boolean[$planesPerTable];
-         |for (int $t = 0; $t < $nTables; $t++) {
-         |  int $b = 0;
-         |  for (int $p = 0; $p < $planesPerTable; $p++) {
-         |    final float[] $pl = $planesRef[$t * $planesPerTable + $p];
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $pl.length; $i++) {
-         |      $dot += (double) $x.getFloat($i) * (double) $pl[$i];
-         |    }
-         |    if ($dot > 0.0) $b |= (1 << $p);
-         |    $dots[$p] = Math.abs($dot);
-         |    $used[$p] = false;
-         |  }
-         |  $out[$t * $stride] = $b;
-         |  for (int $j = 0; $j < $probeBits; $j++) {
-         |    int $best = -1; double $bestV = Double.POSITIVE_INFINITY;
-         |    for (int $k = 0; $k < $planesPerTable; $k++) {
-         |      if (!$used[$k] && $dots[$k] < $bestV) { $best = $k; $bestV = $dots[$k]; }
-         |    }
-         |    if ($best < 0) {
-         |      for (int $k2 = 0; $best < 0 && $k2 < $planesPerTable; $k2++) {
-         |        if (!$used[$k2]) $best = $k2;
-         |      }
-         |    }
-         |    $used[$best] = true;
-         |    $out[$t * $stride + 1 + $j] = $b ^ (1 << $best);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

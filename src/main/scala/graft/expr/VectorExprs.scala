@@ -8,12 +8,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 /** Native Catalyst expressions for vector similarity over `array<float>`
   * embedding columns (SURVEY.md §7.2 step 8).
   *
-  * A codegen `Expression` here beats a Scala UDF by a wide margin at scale:
+  * A native `Expression` here beats a Scala UDF by a wide margin at scale:
   * no boxing of 64 floats per row into WrappedArray, no encoder round-trip,
-  * and the loop stays inside whole-stage codegen so the similarity scan is
-  * one tight JIT-compiled kernel. Accumulation is in double precision
-  * (widen-then-multiply) — bit-deterministic left-to-right, independent of
-  * partitioning, so results are reproducible across cluster sizes.
+  * and the operator stays inside whole-stage codegen. Each kernel's loop
+  * lives once, in `compute` on its companion object: `nullSafeEval` calls
+  * it, and the generated code is one static call to it per row.
+  * Accumulation is in double precision (widen-then-multiply) —
+  * bit-deterministic left-to-right, independent of partitioning, so
+  * results are reproducible across cluster sizes.
   */
 abstract class VectorBinaryExpression extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
@@ -28,9 +30,19 @@ abstract class VectorBinaryExpression extends BinaryExpression with ExpectsInput
 case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expr.CosineSimilarity.compute($x, $y);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (y.numElements() != n)
       throw new IllegalArgumentException(
@@ -43,34 +55,6 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     }
     if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($y.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "cosine_sim: length mismatch (" + $n + " vs " + $y.numElements() + ")");
-         |}
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $xi = (double) $x.getFloat($i);
-         |  final double $yi = (double) $y.getFloat($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = ($nx == 0.0 || $ny == 0.0) ? 0.0 : $dot / (Math.sqrt($nx) * Math.sqrt($ny));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** dot_product(a, b) — same kernel without normalization (for pre-normalized
@@ -79,9 +63,19 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
 case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expr.DotProduct.compute($x, $y);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (y.numElements() != n)
       throw new IllegalArgumentException(
@@ -90,26 +84,4 @@ case class DotProduct(left: Expression, right: Expression) extends VectorBinaryE
     while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
     dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($y.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "dot_product: length mismatch (" + $n + " vs " + $y.numElements() + ")");
-         |}
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

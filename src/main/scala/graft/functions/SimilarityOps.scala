@@ -328,14 +328,8 @@ object SimilarityOps extends QueryPack {
       // larger id. Probing only ADDS candidates over the base route, so
       // banded ≡ exact invariants are preserved (ExactnessSpec runs the
       // knob on).
-      val stride = 1 + probeBits
-      val flipped = withBlob
-        .select(($"vec_id" +: blobCols) :+
-          posexplode(expr(
-            s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)"))
-            .as(Seq("pos", "bucket")): _*)
-        .filter(pmod($"pos", lit(stride)) =!= 0)
-        .withColumn("tbl", expr(s"pos div $stride").cast("int"))
+      val flipped = flippedSlots(withBlob, $"vec_id" +: blobCols,
+        nTables, planesPerTable, probeBits)
       // int8_keep is symmetric, so rejecting before the least/greatest
       // canonicalization filters the same pairs it would after
       val flippedSide = {
@@ -402,6 +396,21 @@ object SimilarityOps extends QueryPack {
     en.select(Seq(col("vec_id").as(v), col("embedding").as(e), col("nrm").as(n)) ++
       extra.map { case (c, a) => col(c).as(a) }: _*)
 
+  /** The multi-probe side of a banded join: `df`'s `carry` columns plus
+    * one (`tbl`, `bucket`) row per FLIPPED `lsh_probes` slot of each
+    * vector. Slot 0 of each table (`pos % stride == 0`) is the base
+    * bucket, which the base join already covers.
+    */
+  private def flippedSlots(df: DataFrame, carry: Seq[Column],
+      nTables: Int, planesPerTable: Int, probeBits: Int): DataFrame = {
+    val stride = 1 + probeBits
+    df.select(carry :+ posexplode(expr(
+        s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)"))
+        .as(Seq("pos", "bucket")): _*)
+      .filter(pmod(col("pos"), lit(stride)) =!= 0)
+      .withColumn("tbl", expr(s"pos div $stride").cast("int"))
+  }
+
   /** Scored LSH neighbor pairs for DUPLICATE-INSENSITIVE consumers (the
     * top-1/argmax family): (v1, within..., v2, cos) rows WITH one row per
     * shared (table, bucket) — a pair colliding in k tables appears k times.
@@ -452,13 +461,8 @@ object SimilarityOps extends QueryPack {
       // probe discoveries are DIRECTED (each vector probes its own
       // low-margin planes) — emit the swap too so the argmax sees the pair
       // from both sides, mirroring the candidate route's union-reverse
-      val stride = 1 + probeBits
-      val flipped = e.select(($"vec_id" +: within.map(col)) :+ $"embedding" :+ $"nrm" :+
-          posexplode(expr(
-            s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)"))
-            .as(Seq("pos", "bucket")): _*)
-        .filter(pmod($"pos", lit(stride)) =!= 0)
-        .withColumn("tbl", expr(s"pos div $stride").cast("int"))
+      val flipped = flippedSlots(e, ($"vec_id" +: within.map(col)) :+ $"embedding" :+ $"nrm",
+        nTables, planesPerTable, probeBits)
       val probed = sideOf(flipped, "v1", "e1", "n1").join(sideOf(bucketed, "v2", "e2", "n2"), keys)
         .filter($"v1" =!= $"v2")
         .select(outCols: _*)

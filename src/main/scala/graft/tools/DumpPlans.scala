@@ -4,7 +4,9 @@ import graft.core.Session
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump the formatted physical plan of every bench headline
-  * query to PLANS.md so plan shapes are reviewable without running Spark.
+  * query to PLANS.md in the working directory, so plan shapes are
+  * reviewable without running Spark. Run from the checkout root:
+  * `sbt "runMain graft.tools.DumpPlans"`.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -55,8 +57,9 @@ object DumpPlans {
       sb.append(s"\n## $name — banded route (graft.sim.exact=false)\n\n```\n$plan```\n")
     }
     spark.conf.unset("graft.sim.exact")
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("WROTE /root/repo/PLANS.md")
+    val out = Paths.get("PLANS.md").toAbsolutePath
+    Files.writeString(out, sb.toString)
+    println(s"WROTE $out")
     spark.stop()
   }
 }

@@ -127,6 +127,11 @@ class LshProbesSpec extends SparkSpec {
     intercept[Exception](kernel("lsh_probes(e, 4, 8, 9)", v))  // bits > planes
     intercept[Exception](kernel("lsh_probes(e, 4, 8, -1)", v)) // negative
     intercept[Exception](kernel("lsh_probes(e, 0, 8, 0)", v))  // no tables
+    // a column where a literal belongs: the message names the function
+    // and the argument
+    val col = intercept[Exception](kernel("lsh_probes(e, 4, size(e), 0)", v))
+    assert(col.getMessage.contains("lsh_probes: planesPerTable must be an integer literal"),
+      col)
   }
 
   test("probed candidates strictly extend base candidates (same shape)") {

@@ -162,6 +162,28 @@ class PlanSpec extends SparkSpec {
     val plan = planOf(df)
     assert(plan.contains("*("), s"expression fell out of codegen:\n$plan")
     assert(df.filter($"self" < 0.999999).count() == 0) // self-similarity == 1
+    // every vector kernel, one query each: the operator line holding the
+    // kernel must carry the `*(n)` whole-stage-codegen prefix (the scan's
+    // own prefix satisfies the check above whatever the kernel does)
+    val cents = typedLit(Seq(Seq.fill(64)(1f), Seq.fill(64)(-1f)))
+    val kernels = Seq(
+      "cosine_sim" -> expr("cosine_sim(embedding, embedding)"),
+      "dot_product" -> expr("dot_product(embedding, embedding)"),
+      "lsh_buckets" -> expr("lsh_buckets(embedding, 4, 4)"),
+      "lsh_first_shared" ->
+        expr("lsh_first_shared(lsh_buckets(embedding, 4, 4), lsh_buckets(embedding, 2, 8))"),
+      "lsh_probes" -> expr("lsh_probes(embedding, 4, 4, 2)"),
+      "int8_enc" -> expr("int8_enc(embedding)"),
+      "int8_est" -> expr("int8_est(int8_enc(embedding), int8_enc(embedding))"),
+      "int8_keep" -> expr("int8_keep(int8_enc(embedding), int8_enc(embedding), 0.5)"),
+      "best_cell" -> call_function("best_cell", $"embedding", lit(Array(3, 7)), cents))
+    kernels.foreach { case (name, k) =>
+      val plan = planOf(e.select($"vec_id", k.as("k"))).split("== Initial Plan ==").head
+      val lines = plan.linesIterator.filter(_.contains(s"$name(")).toSeq
+      assert(lines.nonEmpty, s"no $name operator in:\n$plan")
+      assert(lines.forall(_.dropWhile(" :+-".contains(_)).startsWith("*(")),
+        s"$name operator is outside whole-stage codegen:\n$plan")
+    }
   }
 
   test("int8 quantization is map-only: no shuffle below the output sort") {

@@ -65,4 +65,5 @@ EOF
 verify_route exact true
 verify_route banded false
 
-echo "== GATE GREEN (sf$SF)"
+# main code-line count (ROADMAP item 6's metric), recorded with every run
+echo "== GATE GREEN (sf$SF) — main code lines: $(tools/loc.sh)"
