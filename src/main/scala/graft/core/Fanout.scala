@@ -39,8 +39,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * results, e.g. approx_percentile).
   *
   * It also applies to an EXCHANGE whose work is not proportional to its
-  * bytes: the banded candidate self-join
-  * ([[graft.functions.SimilarityOps.lshCandidateIds]]), keyed on
+  * bytes: the banded embedding self-join
+  * (`SimilarityOps.bandedSelfJoin`, behind
+  * [[graft.functions.SimilarityOps.lshCandidateIds]]), keyed on
   * (tbl, bucket). Its exchange is small (under 1 MB for 2,000 vectors), so
   * AQE merges it under its 1 MB minimum partition size into ONE task, yet
   * that task joins Σ bucket² rows (about 9 M at the 16×2 shape on 1,500
@@ -51,10 +52,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (SCALE.md "The banded self-join runs on every core"). That join
   * keeps each pair once (`lsh_first_shared`) instead of running a pair
   * distinct per task: four partial-distinct hash maps, one 64 MB Tungsten
-  * page each, raised the benchmark's peak heap 225 → 609 MB. Measured
-  * before applying: `lshScoredNeighbors` already runs on every core (its
-  * exchange carries the embeddings), and the minhash band join is not a
-  * long stage.
+  * page each, raised the benchmark's peak heap 225 → 609 MB. The top-1
+  * routes run the same self-join, so their exchange is sized here too.
+  * Measured before applying: the minhash band join is not a long stage.
   *
   * Conservative failure posture: inputs whose size cannot be read cheaply
   * from a local filesystem (object stores, in-memory test frames) pass

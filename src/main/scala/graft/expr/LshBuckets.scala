@@ -1,9 +1,9 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType, IntegerType}
 
 /** The seeded Rademacher (±1) hyperplane family shared by every LSH
   * consumer — held as primitive `float[][]` so kernels index it directly.
@@ -67,43 +67,94 @@ case class LshBuckets(child: Expression, nTables: Int, planesPerTable: Int)
     copy(child = newChild)
 }
 
-/** lsh_first_shared(b1, b2) → the first table at which two `lsh_buckets`
-  * arrays hold the same bucket, or -1 when they share none.
+/** lsh_first_shared(p1, p2[, p1IsLower, probeBits, overCap]) → the
+  * canonical discovery of a pair in the banded self-join, or -1 when the
+  * pair has none.
   *
-  * The banded candidate self-join joins a pair once for EVERY table whose
-  * bucket the two vectors share. Keeping only the row whose table is the
-  * first shared one emits each pair exactly once, so no pair distinct
-  * (a hash map per task) is needed, and rejecting the repeats here, before
-  * `int8_keep`, costs at most that many int compares.
+  * `p1` and `p2` are two vectors' `lsh_probes(emb, t, p, probeBits)`
+  * arrays (stride `1 + probeBits`, slot 0 of each table the base bucket;
+  * at `probeBits = 0` they are `lsh_buckets` arrays). The self-join pairs
+  * every slot of one vector with the base slot of the other, so it finds a
+  * pair once per table where the base buckets collide and once per flip
+  * slot that lands in the other vector's base bucket. The canonical
+  * discovery is the first of those in this order:
+  *  - the lowest table;
+  *  - within it, the base–base collision, then a flip from the lower id,
+  *    then a flip from the higher id (`p1IsLower` says which one `p1` is);
+  *  - skipping any discovery whose base bucket — the bucket the two rows
+  *    meet in — is in `overCap`, the (table, bucket) keys
+  *    ([[LshFirstShared.key]], sorted) a bucket cap dropped from the join.
+  *
+  * The result names the discovering slot: its position `s` in `p1` when
+  * the slot is `p1`'s, `-2 - s` when it is `p2`'s. A base–base collision
+  * is the lower id's slot. A join row whose `v1` slot position equals the
+  * result is the one row the pair keeps, so every pair leaves the join
+  * once and no pair distinct (a hash map per task) is needed. The two-
+  * argument form is `p1IsLower = true, probeBits = 0`, no cap: the first
+  * table at which two bucket arrays agree. The case class names the three
+  * column arguments `first`, `second` and `third`.
   *
   * Deliberately not null-intolerant: the optimizer would otherwise infer
-  * IsNotNull on the carried bucket arrays and re-run the bucketing kernel
-  * in a Filter below the Project that computes them (the best_cell lesson).
-  * A null input still yields null.
+  * IsNotNull on the carried arrays and re-run the bucketing kernel in a
+  * Filter below the Project that computes them (the best_cell lesson).
+  * A null input still yields null. `overCap` is a Seq (structural
+  * equality); the kernel searches a sorted primitive copy of it.
   */
-case class LshFirstShared(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class LshFirstShared(first: Expression, second: Expression,
+    third: Expression = Literal(true), probeBits: Int = 0, overCap: Seq[Long] = Nil)
+    extends TernaryExpression with ExpectsInputTypes {
+  require(probeBits >= 0, s"lsh_first_shared: probeBits $probeBits must be >= 0")
+  @transient private lazy val overArr: Array[Long] = overCap.toArray.sorted
+
   override def prettyName: String = "lsh_first_shared"
-  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
+  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType), BooleanType)
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LshFirstShared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any, lower: Any): Any =
+    LshFirstShared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      lower.asInstanceOf[Boolean], probeBits, overArr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.expr.LshFirstShared.compute($x, $y);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val overRef = ctx.addReferenceObj("lshOverCap", overArr, "long[]")
+    nullSafeCodeGen(ctx, ev, (x, y, lower) =>
+      s"${ev.value} = graft.expr.LshFirstShared.compute($x, $y, $lower, $probeBits, $overRef);")
+  }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 object LshFirstShared {
-  def compute(x: ArrayData, y: ArrayData): Int = {
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
-    while (i < n && x.getInt(i) != y.getInt(i)) i += 1
-    if (i < n) i else -1
+  /** The over-cap lookup key of bucket `bucket` in table `tbl`. */
+  def key(tbl: Int, bucket: Int): Long = (tbl.toLong << 32) | (bucket & 0xFFFFFFFFL)
+
+  def compute(x: ArrayData, y: ArrayData, xIsLower: Boolean, probeBits: Int,
+      overCap: Array[Long]): Int = {
+    val stride = 1 + probeBits
+    val n = math.min(x.numElements(), y.numElements()) / stride
+    def open(t: Int, b: Int) =
+      overCap.length == 0 || java.util.Arrays.binarySearch(overCap, key(t, b)) < 0
+    // the position of `a`'s flip slot in table `t` that equals `target`, or -1
+    def flipInto(a: ArrayData, s: Int, target: Int): Int = {
+      var j = s + 1
+      while (j < s + stride && a.getInt(j) != target) j += 1
+      if (j < s + stride) j else -1
+    }
+    var t = 0
+    while (t < n) {
+      val s = t * stride
+      val bx = x.getInt(s); val by = y.getInt(s)
+      if (bx == by) {
+        if (open(t, bx)) return if (xIsLower) s else -2 - s
+      } else {
+        val fromX = if (open(t, by)) flipInto(x, s, by) else -1
+        val fromY = if (open(t, bx)) flipInto(y, s, bx) else -1
+        if (fromX >= 0 && (xIsLower || fromY < 0)) return fromX
+        if (fromY >= 0) return -2 - fromY
+      }
+      t += 1
+    }
+    -1
   }
 }

@@ -80,15 +80,6 @@ class CappedUniq(cap: Int) extends Aggregator[Long, mutable.Set[Long], UniqRepor
 /** One scored record flowing into [[TopKAgg]]. */
 case class Scored(score: Double, key: Long)
 
-/** Bounded-heap per-key top-k — the scale-optimal form of "top k records
-  * per group". The declarative alternative (window `row_number` + filter)
-  * shuffles EVERY row to sort it inside its partition; this Aggregator
-  * keeps at most k records per (key, partition) on the map side and merges
-  * heaps, so the shuffle carries ≤ k·partitions rows per key regardless of
-  * group size — the per-mapper-heap trick from the reference's top-k
-  * pattern (SURVEY §2.6), generalized per key and map-combined.
-  * Ordering: score desc, then key asc (deterministic ties).
-  */
 /** Bounded-top-k buffer; the element count rides along because
   * `List.length` is O(n) and the insert path must stay O(1).
   */
@@ -126,6 +117,15 @@ abstract class BoundedTopK[S: universe.TypeTag](k: Int, ord: Ordering[S])
   override def finish(l: TopKBuf[S]): Seq[S] = trim(l.items)
 }
 
+/** Bounded-heap per-key top-k — the scale-optimal form of "top k records
+  * per group". The declarative alternative (window `row_number` + filter)
+  * shuffles EVERY row to sort it inside its partition; this Aggregator
+  * keeps at most k records per (key, partition) on the map side and merges
+  * heaps, so the shuffle carries ≤ k·partitions rows per key regardless of
+  * group size — the per-mapper-heap trick from the reference's top-k
+  * pattern (SURVEY §2.6), generalized per key and map-combined.
+  * Ordering: score desc, then key asc (deterministic ties).
+  */
 final class TopKAgg(k: Int) extends BoundedTopK[Scored](k,
     Ordering.by((s: Scored) => (-s.score, s.key))) {
   override def outputEncoder: Encoder[Seq[Scored]] =

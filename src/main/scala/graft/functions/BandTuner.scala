@@ -20,7 +20,7 @@ import graft.core.Tables
   * erratum). Candidate volume stays the right cost proxy after the
   * round-10 int8 prefilter: the threshold routes now evaluate `int8_keep`
   * once per RAW candidate inside the self-join stage (the term Σ|bucket|²
-  * counts), while the pair distinct and float verify downstream see only
+  * counts), while the pair exchange and float verify downstream see only
   * the survivors — a smaller per-candidate constant, same growth law.
   */
 final case class BandShapeAdvice(

@@ -382,8 +382,9 @@ object DedupOps extends QueryPack {
 
   /** The oversized-bucket drop behind BOTH cap dials
     * (`graft.dedup.bucketcap` here, `graft.sim.bucketcap.<key>` in
-    * [[SimilarityOps.lshCandidateIds]]) — one implementation so the two
-    * cannot silently diverge (round-13 review). The bucketed stream is
+    * [[SimilarityOps.lshCandidateIds]] through [[capBuckets]]) — one
+    * implementation so the two cannot silently diverge (round-13 review).
+    * The bucketed stream is
     * materialized ONCE through a `localCheckpoint` so the cap's
     * consumers (the sizes aggregation, the semi-join leg, and every
     * self-join side downstream) read persisted rows instead of each
@@ -436,13 +437,26 @@ object DedupOps extends QueryPack {
     * of silent.
     */
   private[graft] def dropOversizedBuckets(
-      bucketed: DataFrame, keys: Seq[String], cap: Int, dial: String): DataFrame = {
+      bucketed: DataFrame, keys: Seq[String], cap: Int, dial: String): DataFrame =
+    capBuckets(bucketed, keys, cap, dial)._1
+
+  /** [[dropOversizedBuckets]] with the bucket sizes taken over the
+    * `counted` rows only, also returning the over-cap `keys` (one row per
+    * dropped bucket, read from the materialized sizes). The banded
+    * embedding self-join counts base slots, not multi-probe slots, and
+    * hands the over-cap keys to `lsh_first_shared`. A row of `bucketed`
+    * survives iff its bucket holds at most `cap` counted rows; a bucket
+    * with no counted row is dropped too.
+    */
+  private[graft] def capBuckets(bucketed: DataFrame, keys: Seq[String], cap: Int,
+      dial: String, counted: Column = lit(true)): (DataFrame, DataFrame) = {
     val bMat = bucketed.localCheckpoint(false)
     // eager checkpoint: the groupBy over the band stream runs ONCE — the
     // tripwire stats and the semi-join build side below both read the
     // materialized (keys, bkt_n) frame (one narrow row per bucket), not
     // re-run the corpus-proportional aggregation (round-15 review)
-    val sizes = bMat.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bkt_n"))
+    val sizes = bMat.filter(counted).groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("bkt_n"))
       .localCheckpoint(true)
     val bn = col("bkt_n")
     val st = sizes.agg(
@@ -510,7 +524,8 @@ object DedupOps extends QueryPack {
         s"excision this large should be intentional. $remedy")
     }
     val small = sizes.filter(bn <= cap).select(keys.map(col): _*)
-    bMat.join(small.hint("shuffle_hash"), keys, "left_semi")
+    (bMat.join(small.hint("shuffle_hash"), keys, "left_semi"),
+      sizes.filter(bn > cap).select(keys.map(col): _*))
   }
 
   /** `graft.dedup.hashverify` (default on): carry 8-byte xxhash64 shingle
@@ -659,7 +674,8 @@ object DedupOps extends QueryPack {
     * tuning) and the all-pairs O(n²) popcount becomes O(Σ bucket²) with
     * one shuffle on (band, value) — the same construction the reference's
     * dedup pipelines used over MapReduce sort buckets. Candidates carry
-    * two longs; the distinct never touches text.
+    * two longs, and each pair is kept at its first agreeing band only, so
+    * no pair distinct runs.
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -675,16 +691,24 @@ object DedupOps extends QueryPack {
             shiftright($"sig", 16 * t).bitwiseAND(lit(0xFFFFL)).as("bv"))
         }: _*)).as("tb"))
       .select($"doc_id", $"sig", $"tb.band", $"tb.bv")
+    // a pair agreeing on several bands meets once per band: keep it only
+    // at its first agreeing band, so each pair leaves the join once
+    def agree(t: Int) = shiftright($"s1".bitwiseXOR($"s2"), 16 * t).bitwiseAND(lit(0xFFFFL)) === 0
+    val firstBand =
+      (1 until SimhashBands).foldLeft(when(agree(0), 0))((w, t) => w.when(agree(t), t))
     banded.select($"band", $"bv", $"doc_id".as("d1"), $"sig".as("s1"))
       .join(banded.select($"band", $"bv", $"doc_id".as("d2"), $"sig".as("s2")),
         Seq("band", "bv"))
-      .filter($"d1" < $"d2")
-      .select($"d1", $"d2", $"s1", $"s2").distinct()
+      .filter($"d1" < $"d2" && $"band" === firstBand)
       .withColumn("hamming", expr("bit_count(s1 ^ s2)"))
       .filter($"hamming" <= SimhashMaxHamming)
       .select($"d1", $"d2", $"hamming".cast("int").as("hamming"))
       .orderBy($"d1", $"d2")
   }
+
+  /** Near-dup cosine floor, shared by the float verify and the banded
+    * route's int8 prefilter (lossless only at the same θ). */
+  val CosDedupThreshold = 0.9
 
   /** Embedding-cosine near-dup: canonical id = min vec_id among neighbors
     * with cosine ≥ 0.9 (self included — cos(v,v)=1). Exact all-pairs form
@@ -699,10 +723,6 @@ object DedupOps extends QueryPack {
     * ExactnessSpec asserts the two paths agree on the test data.
     * Reference analogue: none (north-star extension).
     */
-  /** Near-dup cosine floor, shared by the float verify and the banded
-    * route's int8 prefilter (lossless only at the same θ). */
-  val CosDedupThreshold = 0.9
-
   def embeddingCosineDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
@@ -767,53 +787,6 @@ object DedupOps extends QueryPack {
     */
   private val MaxStarRounds = 64
 
-  /** Connected-components core: alternating large-star/small-star edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SOCC'14 — a public algorithm) over an undirected edge set.
-    * Returns each node's component label = min node id in its component,
-    * plus the round count (exposed for the convergence-rate spec).
-    *
-    * Why not min-label propagation (the round-11 form): that loop needs
-    * O(graph diameter) rounds, and a near-dup CHAIN (A~B~C~… through
-    * shared boilerplate) makes diameter unbounded — at 25 rounds it exited
-    * SILENTLY un-converged, fracturing clusters with no error. Star
-    * contraction halves path lengths every alternation:
-    *  - large-star: every node u links each STRICTLY LARGER neighbor v to
-    *    m = min(N(u) ∪ {u});
-    *  - small-star: orienting edges toward the larger endpoint u, u and
-    *    each smaller neighbor link to m = min of the small neighborhood.
-    * Both steps preserve connectivity (each dropped edge is re-expressed
-    * through m), keep every intermediate edge (m, v) with m < v, and the
-    * fixpoint is a star per component centered at its min id — the SAME
-    * min-id semantics as label propagation, reached in O(log) rounds
-    * instead of O(diameter). Each round is two groupBy+join shuffles on
-    * id-width rows; `localCheckpoint` truncates lineage per round
-    * (the iterative-algorithm pattern Pregel/GraphFrames use).
-    * Deployment caveat: localCheckpoint stores blocks on executors, so
-    * an executor loss mid-job forfeits them (no lineage left to
-    * recompute) — right for local[32] and on-demand clusters, but on a
-    * PREEMPTIBLE cluster substitute reliable `checkpoint` with a
-    * `sparkContext.setCheckpointDir` to durable storage, at one HDFS
-    * write per round (the standard Pregel production posture).
-    *
-    * Convergence test is EXACT, not a checksum: both edge sets are
-    * distinct, so |next| = |cur| ∧ next∖cur = ∅ ⟺ next = cur — a hash
-    * signature could collide into false convergence (a quiet wrong answer,
-    * the exact failure class this rewrite removes). (next∖cur = ∅ means
-    * next ⊆ cur; with equal cardinalities of distinct sets that IS set
-    * equality, so the left_anti emptiness probe below is the same test
-    * `except(...).isEmpty` ran, minus except's extra distinct shuffle.)
-    *
-    * Job budget per round (round 13, closing the r12 verdict's one
-    * remaining CC inefficiency — ~4 driver actions/round of fixed
-    * overhead): the new edge set is LAZILY localCheckpoint'd and the
-    * `count()` action materializes checkpoint AND cardinality in ONE job;
-    * the set-equality probe only runs in rounds where the cardinality
-    * matched (at most the final round plus checksum-unreachable ties), and
-    * each superseded round's checkpoint blocks are unpersisted
-    * DETERMINISTICALLY (not left to ContextCleaner GC timing — executor
-    * block-store usage stays O(current round), flat in round count).
-    */
   /** One large-star + small-star contraction round over a canonical
     * (lo < hi, distinct) edge frame — the loop body of [[starComponents]],
     * exposed so plan tooling can dump a round's physical plan (the loop
@@ -879,6 +852,53 @@ object DedupOps extends QueryPack {
       .distinct()
   }
 
+  /** Connected-components core: alternating large-star/small-star edge
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SOCC'14 — a public algorithm) over an undirected edge set.
+    * Returns each node's component label = min node id in its component,
+    * plus the round count (exposed for the convergence-rate spec).
+    *
+    * Why not min-label propagation (the round-11 form): that loop needs
+    * O(graph diameter) rounds, and a near-dup CHAIN (A~B~C~… through
+    * shared boilerplate) makes diameter unbounded — at 25 rounds it exited
+    * SILENTLY un-converged, fracturing clusters with no error. Star
+    * contraction halves path lengths every alternation:
+    *  - large-star: every node u links each STRICTLY LARGER neighbor v to
+    *    m = min(N(u) ∪ {u});
+    *  - small-star: orienting edges toward the larger endpoint u, u and
+    *    each smaller neighbor link to m = min of the small neighborhood.
+    * Both steps preserve connectivity (each dropped edge is re-expressed
+    * through m), keep every intermediate edge (m, v) with m < v, and the
+    * fixpoint is a star per component centered at its min id — the SAME
+    * min-id semantics as label propagation, reached in O(log) rounds
+    * instead of O(diameter). Each round is two groupBy+join shuffles on
+    * id-width rows; `localCheckpoint` truncates lineage per round
+    * (the iterative-algorithm pattern Pregel/GraphFrames use).
+    * Deployment caveat: localCheckpoint stores blocks on executors, so
+    * an executor loss mid-job forfeits them (no lineage left to
+    * recompute) — right for local[32] and on-demand clusters, but on a
+    * PREEMPTIBLE cluster substitute reliable `checkpoint` with a
+    * `sparkContext.setCheckpointDir` to durable storage, at one HDFS
+    * write per round (the standard Pregel production posture).
+    *
+    * Convergence test is EXACT, not a checksum: both edge sets are
+    * distinct, so |next| = |cur| ∧ next∖cur = ∅ ⟺ next = cur — a hash
+    * signature could collide into false convergence (a quiet wrong answer,
+    * the exact failure class this rewrite removes). (next∖cur = ∅ means
+    * next ⊆ cur; with equal cardinalities of distinct sets that IS set
+    * equality, so the left_anti emptiness probe below is the same test
+    * `except(...).isEmpty` ran, minus except's extra distinct shuffle.)
+    *
+    * Job budget per round (round 13, closing the r12 verdict's one
+    * remaining CC inefficiency — ~4 driver actions/round of fixed
+    * overhead): the new edge set is LAZILY localCheckpoint'd and the
+    * `count()` action materializes checkpoint AND cardinality in ONE job;
+    * the set-equality probe only runs in rounds where the cardinality
+    * matched (at most the final round plus checksum-unreachable ties), and
+    * each superseded round's checkpoint blocks are unpersisted
+    * DETERMINISTICALLY (not left to ContextCleaner GC timing — executor
+    * block-store usage stays O(current round), flat in round count).
+    */
   private[graft] def starComponents(nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
     val spark = nodes.sparkSession
     import spark.implicits._
@@ -983,12 +1003,6 @@ object DedupOps extends QueryPack {
     "dedup_simhash_pairs" -> (simhashPairs _),
     "dedup_embedding_cosine" -> (embeddingCosineDedup _))
 
-  /** DuckDB rebuild of the md5-derived SimHash, bit-for-bit: same token
-    * counts, same top-8-digest-byte hash (hex-string cast — DuckDB reads
-    * '0x…' into UBIGINT), same vote sums; the output hex is assembled
-    * digit-by-digit from the vote signs (DuckDB's `<<` range-checks at bit
-    * 63, so no shift-based assembly).
-    */
   /** Shared CTE prefix rebuilding the 64 per-bit vote sums (`v_0..v_63`)
     * of the md5-derived SimHash — consumed by both the index oracle
     * (hex digits) and the pairing oracle (bands + hamming). */
@@ -1012,6 +1026,12 @@ object DedupOps extends QueryPack {
        |  FROM h GROUP BY doc_id)""".stripMargin
   }
 
+  /** DuckDB rebuild of the md5-derived SimHash, bit-for-bit: same token
+    * counts, same top-8-digest-byte hash (hex-string cast — DuckDB reads
+    * '0x…' into UBIGINT), same vote sums; the output hex is assembled
+    * digit-by-digit from the vote signs (DuckDB's `<<` range-checks at bit
+    * 63, so no shift-based assembly).
+    */
   private val duckSimhash: String = {
     val digits = (1 to 16).map { i =>
       val base = 4 * (16 - i)

@@ -73,22 +73,21 @@ object SimilarityOps extends QueryPack {
     * its rule on a clustered corpus.
     */
   private[graft] def bandShape(spark: SparkSession, key: String,
-      defTables: Int, defPlanes: Int): (Int, Int) = {
-    val s = spark.conf.get(s"graft.sim.bands.$key", s"${defTables}x$defPlanes")
+      defTables: Int, defPlanes: Int): (Int, Int) =
     // positivity (and parseability — toIntOption, so an all-digit value
     // past Int range fails HERE too, not as a bare NumberFormatException)
     // is validated at the knob so every route fails with the knob error —
     // the minhash route would otherwise die deep in plan build
     // (numHashes=0 → empty agg list) with an opaque NoSuchElementException
-    val parsed = s.toLowerCase.split("x") match {
-      case Array(ts, ps) =>
-        for (t <- ts.trim.toIntOption; p <- ps.trim.toIntOption
-             if t > 0 && p > 0) yield (t, p)
-      case _ => None
+    Profile.knob(spark, s"graft.sim.bands.$key", (defTables, defPlanes),
+        "'<tables>x<planes>' with both positive ints") { s =>
+      s.toLowerCase.split("x") match {
+        case Array(ts, ps) =>
+          for (t <- ts.trim.toIntOption; p <- ps.trim.toIntOption
+               if t > 0 && p > 0) yield (t, p)
+        case _ => None
+      }
     }
-    parsed.getOrElse(sys.error(
-      s"graft.sim.bands.$key must be '<tables>x<planes>' with both positive ints, got '$s'"))
-  }
 
   /** Prefilter knob, `graft.sim.prefilter` (default true): threshold
     * routes that pass `prefilterTheta` to [[lshCandidateIds]] cut candidate
@@ -178,12 +177,13 @@ object SimilarityOps extends QueryPack {
     * per threshold (near-dup at 0.9 tolerates 4-bit tables; a loose 0.4
     * threshold needs 2-bit ones).
     *
-    * Scale shape: one narrow shuffle of (table,bucket,id) rows, a
-    * per-bucket self-join that keeps each pair only at the first table
-    * its two vectors share (so each pair appears once, with no pair
-    * distinct; the capped and probed routes still run one), and one
-    * exchange of id PAIRS only — vectors are NOT carried past the join
-    * (re-joined by id afterwards by callers that need them).
+    * Scale shape: the [[bandedSelfJoin]] (one narrow shuffle of
+    * (table,bucket,id) rows, each pair emitted once at its canonical
+    * discovery, with no pair distinct on any route), then one exchange of
+    * id PAIRS only — vectors are NOT carried past the join (re-joined by
+    * id afterwards by callers that need them). A multi-probe discovery can
+    * come from the higher id's side, so the pair leaves as
+    * (least, greatest).
     *
     * `prefilterTheta`: threshold consumers (pairs ≥ θ) pass their float
     * cosine threshold here; each vector's `int8_enc` blob (d code bytes +
@@ -202,147 +202,123 @@ object SimilarityOps extends QueryPack {
       probeBits: Int = 0, prefilterTheta: Option[Double] = None,
       capKey: String = "adhoc"): DataFrame = {
     import spark.implicits._
-    require(nTables * planesPerTable <= NPlanesMax,
-      s"need ${nTables * planesPerTable} planes, have $NPlanesMax")
-    require(probeBits >= 0 && probeBits <= planesPerTable,
-      s"probeBits $probeBits must be in [0, planesPerTable=$planesPerTable]")
     val theta = prefilterTheta.filter(_ => prefilterOn(spark))
-    // ALL table buckets in one native kernel call per row (`lsh_buckets`,
-    // graft.expr.LshBuckets) — the previous form composed nTables ×
-    // planesPerTable separate CASE WHEN dot_product(emb, <literal>) columns,
-    // whose per-element boxed literal access cost 275 µs/row at 8×8 (the
-    // bucketing, not the candidate join, was 95% of banded wall time;
-    // SCALE.md round 6, "Decomposing wall time"). posexplode yields
-    // (table, bucket) pairs.
-    //
-    // the prefilter blob is computed ONCE per vector, in a projection BELOW
-    // the bucket explode, then rides the (tbl,bucket) shuffle. Two plan
-    // subtleties, both load-bearing: (a) the blob must be a materialized
-    // COLUMN before the posexplode select — listing the int8_enc expression
-    // in the same select would extract the generator underneath it and
-    // re-evaluate the encoder per generated row (t× per vector); as a
-    // pass-through column it lands in the Generate's requiredChildOutput
-    // instead. (b) the coalesce makes the column provably non-null, or the
-    // nullIntolerant int8_keep join filter infers an IsNotNull(blob)
-    // constraint that re-runs the encoder in a Filter below the Project
-    // (Filter/Project don't share subexpressions — the best_cell lesson).
-    // int8_enc is null only for a null embedding, and those rows generate
-    // ZERO bucket rows anyway (posexplode of lsh_buckets' null), so the
-    // empty-blob sentinel can never reach int8_keep.
-    val e0 = Tables.embeddings(spark, dir)
-    val withBlob = theta match {
-      case Some(_) => e0.withColumn("blob",
-        coalesce(expr("int8_enc(embedding)"), lit(Array.emptyByteArray)))
-      case None => e0
-    }
-    val blobCols = if (theta.isDefined) Seq($"blob") else Nil
-    val cap = simBucketCap(spark, capKey)
-    // Uncapped, every row also carries its vector's whole bucket array
-    // (`bk`, nTables ints) so the self-join can keep each pair only at the
-    // first table the two vectors share (`lsh_first_shared`): every pair
-    // leaves the join once and no pair distinct runs. A bucket cap drops
-    // rows, so a pair's first shared bucket may be gone while a later one
-    // survives; the capped route keeps the pair distinct instead.
-    // The generator runs its own lsh_buckets call: exploding the `bk`
-    // column instead makes the optimizer infer size/IsNotNull filters on
-    // it, pushed below the Project as two more kernel calls per vector.
-    val firstShared = cap == 0
-    val bucketsOf = expr(s"lsh_buckets(embedding, $nTables, $planesPerTable)")
-    val withBk = if (firstShared) withBlob.withColumn("bk", bucketsOf) else withBlob
-    val bkCols = if (firstShared) Seq($"bk") else Nil
-    val bucketed = withBk
-      .select(($"vec_id" +: blobCols) ++ bkCols :+
-        posexplode(bucketsOf).as(Seq("tbl", "bucket")): _*)
-    val keys = Seq("tbl", "bucket")
-    // oversized-bucket drop ([[simBucketCap]], off for the gate): the
-    // shared [[DedupOps.dropOversizedBuckets]] helper — the minhash
-    // dial's implementation, one place so the dials cannot diverge (see
-    // its scaladoc for the materialize-once/lazy-checkpoint posture and
-    // block lifetime). The probe route's FLIPPED stream is left
-    // uncapped: its join partner is the capped base stream, so probe
-    // mass into a dropped bucket dies at the join and the output stays
-    // bounded by |flipped| × cap.
-    val bucketedC =
-      if (cap > 0) DedupOps.dropOversizedBuckets(bucketed, keys, cap,
-        s"graft.sim.bucketcap.$capKey")
-      else bucketed
-    // int8_keep rejection runs in the self-join stage, BEFORE any pair
-    // reaches the pair exchange — the filtered mass never shuffles. The
-    // join tests run as ONE filter, cheapest first, so they keep this
-    // order inside the join condition: split over several filters, the
-    // later ones are pushed in ahead of the earlier.
-    val keep = theta.map(t => call_function("int8_keep", $"b1", $"b2", lit(t)))
-    def where(df: DataFrame, tests: Option[Column]*): DataFrame =
-      df.filter(tests.flatten.reduce(_ && _))
-    // shuffle_hash hint on the prefiltered self-join: both sides are the
-    // SAME corpus-sized relation, so broadcast is never the scale-correct
-    // strategy — yet a session with a generous broadcast threshold (SCALE.md
-    // round 10's exact baselines ran at 256 MB) will happily broadcast the blob-carrying side, and at 20k vectors that
-    // 135 MB broadcast measured 5× slower than the shuffle join (SCALE.md
-    // round 10). The unprefiltered path is left to the planner for
-    // round-over-round comparability of the historical crossover numbers.
-    //
-    // The side's exchange is sized by the caller when the input cannot
-    // fill the cores ([[graft.core.Fanout]]): the join's work is
-    // Σ bucket², not bytes, but AQE sizes the exchange by bytes and merged
-    // it into ONE task on small corpora (SCALE.md "The banded self-join
-    // runs on every core"). At scale, and on the capped route's checkpoint
-    // (no input files), the side passes through and AQE's merging and skew
-    // split decide. Either way both sides read one exchange, planned once
-    // and reused. The renames stay below it, in the scan's generated
-    // stage: above it they add two generated stages to the self-join.
-    def side(v: String, b: String, k: String): DataFrame = {
-      val s = graft.core.Fanout.maybeFanout(bucketedC.select(
-        (keys.map(col) :+ $"vec_id".as(v)) ++
-          (if (theta.isDefined) Seq($"blob".as(b)) else Nil) ++
-          bkCols.map(_.as(k)): _*), keys.map(col): _*)
-      if (theta.isDefined) s.hint("shuffle_hash") else s
-    }
-    // Base candidates: the symmetric bucket self-join — every pair appears
-    // in both orders, the `<` keeps one; uncapped, the first-shared-table
-    // test then drops the pair's repeats from its other shared tables,
-    // before the int8 prefilter scores them.
-    val basePairs = where(side("v1", "b1", "k1").join(side("v2", "b2", "k2"), keys),
-      Some($"v1" < $"v2"),
-      Option.when(firstShared)(call_function("lsh_first_shared", $"k1", $"k2") === $"tbl"),
-      keep)
-      .select($"v1", $"v2")
-    // The pairs leave through an exchange of their own: a consumer that
-    // reads them twice (the cosine dedup's two orientations) or samples
-    // them (a sort's range bounds) reuses it instead of running the
-    // self-join again.
-    if (probeBits == 0)
-      if (firstShared) basePairs.repartition($"v1", $"v2") else basePairs.distinct()
-    else {
-      // Multi-probe (probeBits > 0): each vector ALSO probes, per table,
-      // the `probeBits` Hamming-1 neighbor buckets of its lowest-|dot|
-      // planes (`lsh_probes`, graft.expr.LshProbes) — isolated vectors
-      // whose neighbor sits one near-zero sign flip away are found without
-      // adding tables. Only the FLIPPED slots join here (`pos % stride !=
-      // 0`): the base slot is basePairs' job, so probing adds exactly the
-      // neighbor-bucket mass instead of re-discovering (and doubling) the
-      // base mass. The flipped join is asymmetric — each vector probes its
-      // OWN low-margin planes, so a pair can surface from either side only
-      // — hence canonicalize with least/greatest rather than pre-filter
-      // with `<`, which would silently drop discoveries made from the
-      // larger id. Probing only ADDS candidates over the base route, so
-      // banded ≡ exact invariants are preserved (ExactnessSpec runs the
-      // knob on).
-      val flipped = flippedSlots(withBlob, $"vec_id" +: blobCols,
-        nTables, planesPerTable, probeBits)
-      // int8_keep is symmetric, so rejecting before the least/greatest
-      // canonicalization filters the same pairs it would after
-      val flippedSide = {
-        val s = flipped.select((keys.map(col) :+ $"vec_id".as("v1")) ++
-          (if (theta.isDefined) Seq($"blob".as("b1")) else Nil): _*)
-        // same corpus-sized-side reasoning as `side` above
-        if (theta.isDefined) s.hint("shuffle_hash") else s
-      }
-      val probePairs = where(flippedSide.join(side("v2", "b2", "k2"), keys),
-        Some($"v1" =!= $"v2"), keep)
-        .select(least($"v1", $"v2").as("v1"), greatest($"v1", $"v2").as("v2"))
-      basePairs.union(probePairs).distinct()
-    }
+    // the prefilter blob is computed ONCE per vector, below the bucket
+    // explode, and rides the (tbl,bucket) shuffle. The coalesce makes the
+    // column provably non-null, or the nullIntolerant int8_keep join
+    // filter infers an IsNotNull(blob) constraint that re-runs the encoder
+    // in a Filter below the Project (Filter/Project don't share
+    // subexpressions — the best_cell lesson). int8_enc is null only for a
+    // null embedding, and those rows generate ZERO bucket rows anyway, so
+    // the empty-blob sentinel can never reach int8_keep.
+    val blob = theta.map(_ =>
+      "b" -> coalesce(expr("int8_enc(embedding)"), lit(Array.emptyByteArray)))
+    val pairs = bandedSelfJoin(spark, dir, nTables, planesPerTable, probeBits, blob.toSeq,
+      capKey = Some(capKey),
+      test = theta.map(t => call_function("int8_keep", $"b1", $"b2", lit(t))))
+    // unprobed, every pair leaves as v1 < v2 already; least/greatest there
+    // would only add the consumers' inferred IsNotNull tests to the join
+    (if (probeBits == 0) pairs.select($"v1", $"v2")
+     else pairs.select(least($"v1", $"v2").as("v1"), greatest($"v1", $"v2").as("v2")))
+      // The pairs leave through an exchange of their own: a consumer that
+      // reads them twice (the cosine dedup's two orientations) or samples
+      // them (a sort's range bounds) reuses it instead of running the
+      // self-join again.
+      .repartition($"v1", $"v2")
+  }
+
+  /** The banded self-join behind every embedding LSH route: one row per
+    * candidate pair, at the pair's canonical discovery, carrying `v1`,
+    * `v2`, the `within` columns and each `carry` column twice (suffixed
+    * `1` and `2`).
+    *
+    * Each vector's `lsh_probes(embedding, nTables, planesPerTable,
+    * probeBits)` array (`pr`, stride `1 + probeBits`; the base bucket of
+    * each table, then its Hamming-1 neighbors on the lowest-|dot| planes —
+    * [[graft.expr.LshProbes]]) is computed once, below the explode, and
+    * posexploded into one (tbl, bucket) row per slot. The join is (every
+    * slot of v1) ⋈ (the base slot of v2) on (tbl, bucket, within...), so a
+    * pair meets once per table where the base buckets collide and once per
+    * flip of either vector into the other's base bucket. The one
+    * de-duplication rule: a row is kept only when it is the pair's
+    * canonical discovery (`lsh_first_shared` over both rows' arrays —
+    * first table, then base–base, then a flip from the lower id, then one
+    * from the higher), so every pair leaves the join once and no pair
+    * distinct (a 64 MB Tungsten page per task) runs. A base–base row is
+    * canonical only as v1 < v2; unprobed, every row is base–base, so the
+    * cheaper `<` runs first.
+    *
+    * `capKey` names the `graft.sim.bucketcap.<key>` dial ([[simBucketCap]]):
+    * the shared [[DedupOps.capBuckets]] helper counts base slots per
+    * (tbl, bucket), drops every slot row in an over-cap bucket, and its
+    * over-cap keys ride into `lsh_first_shared` as a reference array, so a
+    * pair whose first shared bucket was dropped is kept at the next one.
+    * The generator runs its own `lsh_probes` call: exploding the carried
+    * `pr` column instead makes the optimizer infer size/IsNotNull filters
+    * on it, pushed below the Project as two more kernel calls per vector.
+    * `test` (the int8 prefilter) joins the canonical tests in ONE filter,
+    * cheapest first: split over several filters, the later ones are
+    * pushed in ahead of the earlier.
+    *
+    * Each side is hinted shuffle_hash: both are the SAME corpus-sized
+    * relation, so broadcast is never the scale-correct strategy — yet a
+    * session with a generous broadcast threshold (SCALE.md round 10's
+    * exact baselines ran at 256 MB) broadcast the blob-carrying side, and
+    * at 20k vectors that 135 MB broadcast measured 5× slower than the
+    * shuffle join (SCALE.md round 10). The side's exchange is sized by the
+    * caller when the input cannot fill the cores ([[graft.core.Fanout]]):
+    * the join's work is Σ bucket², not bytes, but AQE sizes the exchange
+    * by bytes and merged it into ONE task on small corpora (SCALE.md "The
+    * banded self-join runs on every core"). At scale, and on the capped
+    * route's checkpoint (no input files), the side passes through and
+    * AQE's merging and skew split decide. Unprobed, both sides read one
+    * exchange, planned once and reused. The renames stay below it, in the
+    * scan's generated stage: above it they add two generated stages to
+    * the self-join.
+    */
+  private def bandedSelfJoin(spark: SparkSession, dir: String,
+      nTables: Int, planesPerTable: Int, probeBits: Int,
+      carry: Seq[(String, Column)], within: Seq[String] = Nil,
+      capKey: Option[String] = None, test: Option[Column] = None): DataFrame = {
+    val stride = 1 + probeBits
+    // the kernel checks the shape (planes available, probeBits in range)
+    val probes = expr(s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)")
+    // carried columns are materialized BEFORE the posexplode select: listed
+    // in the same select, the generator would be extracted underneath them
+    // and they would be re-evaluated per generated row (t× per vector); as
+    // pass-through columns they land in the Generate's requiredChildOutput
+    val ids = col("vec_id") +: within.map(col)
+    val slots = Tables.embeddings(spark, dir)
+      .select((ids :+ col("embedding")) ++ carry.map { case (n, c) => c.as(n) } :+
+        probes.as("pr"): _*)
+      .select((ids ++ carry.map(c => col(c._1)) :+ col("pr")) :+
+        posexplode(probes).as(Seq("pos", "bucket")): _*)
+      // unprobed, a slot IS its table; `pos`, unlike `div`, is non-null,
+      // so the join infers no IsNotNull(tbl) filter into the scan stage
+      .withColumn("tbl", if (probeBits == 0) col("pos") else expr(s"pos div $stride").cast("int"))
+    val keys = Seq("tbl", "bucket") ++ within
+    val isBase = col("pos") % stride === 0
+    val capped = for (k <- capKey; c = simBucketCap(spark, k) if c > 0)
+      yield DedupOps.capBuckets(slots, keys, c, s"graft.sim.bucketcap.$k", counted = isBase)
+    val stream = capped.fold(slots)(_._1)
+    val overCap = capped.toSeq.flatMap(_._2.collect()
+      .map(r => graft.expr.LshFirstShared.key(r.getInt(0), r.getInt(1))))
+    // only v1's slot position is read (the canonical test); unprobed it is
+    // the table, so both sides carry the same columns and share one exchange
+    def side(i: Int, rows: DataFrame, slot: Column*): DataFrame =
+      graft.core.Fanout.maybeFanout(rows.select((keys.map(col) ++ slot :+
+          col("vec_id").as(s"v$i") :+ col("pr").as(s"k$i")) ++
+          carry.map { case (n, _) => col(n).as(s"$n$i") }: _*),
+        keys.map(col): _*)
+      .hint("shuffle_hash")
+    val (v1, v2) = (col("v1"), col("v2"))
+    val (left, right, slot) =
+      if (probeBits == 0) (side(1, stream), side(2, stream), col("tbl"))
+      else (side(1, stream, col("pos").as("pos1")), side(2, stream.filter(isBase)), col("pos1"))
+    val canonical = call_function("lsh_first_shared", col("k1"), col("k2"), v1 < v2,
+      lit(probeBits), typedLit(overCap)) === slot
+    left.join(right, keys)
+      .filter((Option.when(probeBits == 0)(v1 < v2) ++ Seq(canonical) ++ test).reduce(_ && _))
   }
 
   /** Multi-probe knob, `graft.sim.probe.<key>` = number of Hamming-1
@@ -396,79 +372,33 @@ object SimilarityOps extends QueryPack {
     en.select(Seq(col("vec_id").as(v), col("embedding").as(e), col("nrm").as(n)) ++
       extra.map { case (c, a) => col(c).as(a) }: _*)
 
-  /** The multi-probe side of a banded join: `df`'s `carry` columns plus
-    * one (`tbl`, `bucket`) row per FLIPPED `lsh_probes` slot of each
-    * vector. Slot 0 of each table (`pos % stride == 0`) is the base
-    * bucket, which the base join already covers.
-    */
-  private def flippedSlots(df: DataFrame, carry: Seq[Column],
-      nTables: Int, planesPerTable: Int, probeBits: Int): DataFrame = {
-    val stride = 1 + probeBits
-    df.select(carry :+ posexplode(expr(
-        s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)"))
-        .as(Seq("pos", "bucket")): _*)
-      .filter(pmod(col("pos"), lit(stride)) =!= 0)
-      .withColumn("tbl", expr(s"pos div $stride").cast("int"))
-  }
-
-  /** Scored LSH neighbor pairs for DUPLICATE-INSENSITIVE consumers (the
-    * top-1/argmax family): (v1, within..., v2, cos) rows WITH one row per
-    * shared (table, bucket) — a pair colliding in k tables appears k times.
-    * `max` doesn't care, and skipping canonicalization + distinct transforms
-    * the route's exchange profile: [[lshCandidateIds]]-based argmax paid a
-    * distinct exchange on Θ(Σ|bucket|²) id pairs plus two corpus joins whose
-    * second shuffled a 64-float array PER PAIR (the dominant bytes at every
-    * measured size); here the float vectors ride the narrow n·t-row bucket
-    * shuffle once, the cosine runs in the self-join stage, and the only
-    * pair-proportional work is in-stage compute (re-scoring a pair once per
-    * shared table — bounded by nTables, and cheaper than exchanging it even
-    * once). The argmax's partial aggregate then reduces in-stage to one row
-    * per (v1, partition).
+  /** Scored LSH neighbor pairs for the top-1/argmax family: (v1,
+    * within..., v2, cos) rows, each candidate pair once in each
+    * orientation. The float vectors and their norms ride the narrow n·t-row
+    * bucket shuffle of the [[bandedSelfJoin]] once, the cosine runs in the
+    * self-join stage once per pair, and one explode in the same stage
+    * emits both orientations — a union would run the self-join again for
+    * its second child, reusing only the exchanges below it. There is no
+    * candidate distinct and no per-pair float join; the argmax's partial
+    * aggregate then reduces in-stage to one row per (v1, partition).
     *
     * Same hyperplane family, same kernels, same cosine expression as the
-    * candidate route — for any fixed pair the emitted cos is bit-identical,
-    * so argmax results match the distinct-path form exactly (ExactnessSpec
-    * and the annLsh oracle pin it). shuffle_hash on both sides for the same
-    * corpus-sized-sides reason as the prefiltered join above.
+    * candidate route — for any fixed pair the emitted cos is bit-identical
+    * (cosPre), so argmax results match the candidate form exactly
+    * (ExactnessSpec and the annLsh oracle pin it).
     */
   private[graft] def lshScoredNeighbors(spark: SparkSession, dir: String,
       nTables: Int, planesPerTable: Int, within: Seq[String] = Nil,
       probeBits: Int = 0): DataFrame = {
     import spark.implicits._
-    require(nTables * planesPerTable <= NPlanesMax,
-      s"need ${nTables * planesPerTable} planes, have $NPlanesMax")
-    require(probeBits >= 0 && probeBits <= planesPerTable,
-      s"probeBits $probeBits must be in [0, planesPerTable=$planesPerTable]")
-    // norms ride next to the embeddings (normCol, computed once per vector
-    // below the explode — same pass-through-the-Generate shape as the
-    // prefilter blob) so per-pair scoring is one dot, not dot + two Σx²
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", normCol)
-    val bucketed = e.select(($"vec_id" +: within.map(col)) :+ $"embedding" :+ $"nrm" :+
-      posexplode(expr(s"lsh_buckets(embedding, $nTables, $planesPerTable)"))
-        .as(Seq("tbl", "bucket")): _*)
-    val keys = Seq("tbl", "bucket") ++ within
-    def sideOf(df: DataFrame, v: String, em: String, n: String): DataFrame =
-      df.select(keys.map(col) :+ $"vec_id".as(v) :+ $"embedding".as(em) :+ $"nrm".as(n): _*)
-        .hint("shuffle_hash")
-    val outCols = ($"v1" +: within.map(col)) :+ $"v2" :+
-      cosPre("e1", "e2", "n1", "n2").as("cos")
-    // no v1 < v2: both directions fall out of the symmetric self-join
-    val base = sideOf(bucketed, "v1", "e1", "n1").join(sideOf(bucketed, "v2", "e2", "n2"), keys)
-      .filter($"v1" =!= $"v2")
-      .select(outCols: _*)
-    if (probeBits == 0) base
-    else {
-      // probe discoveries are DIRECTED (each vector probes its own
-      // low-margin planes) — emit the swap too so the argmax sees the pair
-      // from both sides, mirroring the candidate route's union-reverse
-      val flipped = flippedSlots(e, ($"vec_id" +: within.map(col)) :+ $"embedding" :+ $"nrm",
-        nTables, planesPerTable, probeBits)
-      val probed = sideOf(flipped, "v1", "e1", "n1").join(sideOf(bucketed, "v2", "e2", "n2"), keys)
-        .filter($"v1" =!= $"v2")
-        .select(outCols: _*)
-      base.union(probed).union(probed.select(
-        ($"v2".as("v1") +: within.map(col)) :+ $"v1".as("v2") :+ $"cos": _*))
-    }
+    // the cosine is projected BEFORE the explode, so it runs once per pair
+    bandedSelfJoin(spark, dir, nTables, planesPerTable, probeBits,
+        Seq("e" -> $"embedding", "n" -> normCol), within)
+      .select((Seq($"v1", $"v2") ++ within.map(col)) :+
+        cosPre("e1", "e2", "n1", "n2").as("cos"): _*)
+      .select((within.map(col) :+ $"cos") :+ explode(array(struct($"v1", $"v2"),
+        struct($"v2".as("v1"), $"v1".as("v2")))).as("o"): _*)
+      .select(($"o.v1".as("v1") +: within.map(col)) :+ $"o.v2".as("v2") :+ $"cos": _*)
   }
 
   /** Brute-force exact top-k: broadcast queries, one codegen scoring scan,
@@ -509,9 +439,8 @@ object SimilarityOps extends QueryPack {
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // duplicate-insensitive consumer → the no-distinct scored form: cosine
-    // runs inside the bucket self-join stage ([[lshScoredNeighbors]]); the
-    // candidate distinct and both per-pair float joins are gone (round 10)
+    // the scored form: cosine runs inside the bucket self-join stage
+    // ([[lshScoredNeighbors]]), once per pair, with no per-pair float join
     val pairs = lshScoredNeighbors(spark, dir, NTables, PlanesPerTable)
     // per-v1 argmax via the flat-buffer arg_max_long aggregate — the
     // max_by(struct, struct) form this replaces carried struct buffers,
@@ -540,7 +469,7 @@ object SimilarityOps extends QueryPack {
     * at that recall the candidate set is nearly all n² pairs, which is why
     * the banded route hands θ to the int8 prefilter
     * ([[lshCandidateIds]] `prefilterTheta`): provably-below-θ pairs die in
-    * the self-join stage, so the pair distinct and the two float-array
+    * the self-join stage, so the pair exchange and the two float-array
     * verify joins below see only near-threshold survivors.
     */
   def pairsAboveThreshold(spark: SparkSession, dir: String): DataFrame = {
@@ -606,9 +535,8 @@ object SimilarityOps extends QueryPack {
       } else {
         // per-label index: buckets pair within a label only (same coverage
         // for same-label pairs as a global index, ~|labels|× less volume).
-        // Top-1 is duplicate-insensitive → the no-distinct scored form
-        // ([[lshScoredNeighbors]]): cosine in the self-join stage, no
-        // candidate distinct, no per-pair float joins (round 10)
+        // The scored form ([[lshScoredNeighbors]]): cosine in the
+        // self-join stage, once per pair, no per-pair float joins
         val (t, p) = bandShape(spark, "samelabel", defTables = 32, defPlanes = 1)
         val banded = lshScoredNeighbors(spark, dir, nTables = t, planesPerTable = p,
             within = Seq("label"), probeBits = probeBitsOf(spark, "samelabel", p))
@@ -685,14 +613,6 @@ object SimilarityOps extends QueryPack {
       .orderBy($"vec_id")
   }
 
-  /** Rescue-tier knob, `graft.sim.rescue.<key>` = cosine confidence floor
-    * below which a banded top-1 answer is re-derived exactly (0 = off, the
-    * default). The two-tier contract: banded answers ≥ floor are kept,
-    * everything else — including vectors with no candidates — pays the
-    * exact label-slice scan. Recall for the rescued population is 1.0 by
-    * construction; residual misses need BOTH a missed true neighbor AND a
-    * spurious confident stand-in above the floor.
-    */
   /** Broadcast-safety bound for the rescue tail — the engineering limit of
     * the "isolated minority" premise, independent of what fraction the
     * refusal knob accepts: past it the tail ships via shuffle join even
@@ -717,6 +637,14 @@ object SimilarityOps extends QueryPack {
     v
   }
 
+  /** Rescue-tier knob, `graft.sim.rescue.<key>` = cosine confidence floor
+    * below which a banded top-1 answer is re-derived exactly (0 = off, the
+    * default). The two-tier contract: banded answers ≥ floor are kept,
+    * everything else — including vectors with no candidates — pays the
+    * exact label-slice scan. Recall for the rescued population is 1.0 by
+    * construction; residual misses need BOTH a missed true neighbor AND a
+    * spurious confident stand-in above the floor.
+    */
   private[graft] def rescueOf(spark: SparkSession, key: String): Double = {
     val v = Profile.knob(spark, s"graft.sim.rescue.$key", 0.0,
       "a cosine in [0, 1)")(_.toDoubleOption)
@@ -1022,7 +950,6 @@ object SimilarityOps extends QueryPack {
   /** Raw k-means IVF ANN rows (q_id, nearest_ivf, cos) — the actual
     * retrieval output; KMeansSpec pins its recall vs brute force. */
   def annIvfKmeansRaw(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val (km, _) = kmeansCentroids(spark, dir)
     ivfSearch(Tables.embeddings(spark, dir), km)
   }
@@ -1062,20 +989,6 @@ object SimilarityOps extends QueryPack {
       .orderBy($"q_id")
   }
 
-  /** Symmetric per-vector int8 quantization — the compression step an
-    * embedding store applies before indexing (4× smaller than float32,
-    * SIMD-friendly dot products). scale = max|x|/127 per vector;
-    * q_i = clamp(round(x_i/scale), ±127). Output is the quantization
-    * audit a pipeline materializes: the scale, two integer checksums of
-    * the quantized vector, and the cosine between the original and its
-    * dequantization (scale-invariant, so computed against the raw int8
-    * codes) — the per-vector fidelity number that decides whether int8 is
-    * safe for a given corpus.
-    *
-    * Scale shape: purely narrow — one codegen scan, no shuffle, no join;
-    * higher-order `transform`/`aggregate` over the array stay inside
-    * whole-stage codegen. At 100 TB this is the ideal map-only operator.
-    */
   /** Symmetric-int8 frame shared by [[quantizeInt8]] and
     * [[topkInt8Rescore]]: the input plus `emb` (double[]), `scale`
     * (max|x|/127) and `q` (clamped round(x/scale) as long[]). Narrow —
@@ -1093,6 +1006,20 @@ object SimilarityOps extends QueryPack {
           .cast("long")))
   }
 
+  /** Symmetric per-vector int8 quantization — the compression step an
+    * embedding store applies before indexing (4× smaller than float32,
+    * SIMD-friendly dot products). scale = max|x|/127 per vector;
+    * q_i = clamp(round(x_i/scale), ±127). Output is the quantization
+    * audit a pipeline materializes: the scale, two integer checksums of
+    * the quantized vector, and the cosine between the original and its
+    * dequantization (scale-invariant, so computed against the raw int8
+    * codes) — the per-vector fidelity number that decides whether int8 is
+    * safe for a given corpus.
+    *
+    * Scale shape: purely narrow — one codegen scan, no shuffle, no join;
+    * higher-order `transform`/`aggregate` over the array stay inside
+    * whole-stage codegen. At 100 TB this is the ideal map-only operator.
+    */
   def quantizeInt8(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = int8Frame(spark, dir)

@@ -24,10 +24,6 @@ object TextOps extends QueryPack {
 
   private def tokens(c: Column): Column = split(c, "\\s+")
 
-  /** Whitespace-collapsed lowercase text — the normalization every
-    * fingerprint/shingle op shares (same as DedupOps). */
-  private def normTextC: Column = DedupOps.normText
-
   /** Non-empty lowercase tokens. */
   // array_remove, not filter(_ =!= ""): identical output on split() tokens
   // (split never yields nulls; both drop exactly the "" elements) but
@@ -235,7 +231,6 @@ object TextOps extends QueryPack {
     */
   def ngramFreq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // bind the token array before the bigram lambda (quadratic-eval
     // hazard — see bigramsOf, whose width filter replaces the old
     // post-explode split-width check)
@@ -430,14 +425,6 @@ object TextOps extends QueryPack {
       .orderBy($"doc_id")
   }
 
-  /** Class-balanced subsample: cap each language at 30 documents, chosen
-    * by md5 order (deterministic, unbiased w.r.t. content). The per-class
-    * selection uses the bounded-heap [[TopKStrAgg]] over a fixed-width
-    * (md5 ‖ zero-padded doc_id) sort key — map-side heaps keep ≤ 30 rows
-    * per (lang, partition) in flight, where a per-class row_number window
-    * would shuffle every document. The oracle is the window form, holding
-    * the heap to the declarative semantics.
-    */
   /** md5-order selection key (md5(doc_id) ‖ zero-padded doc_id): with a
     * constant score the heap keeps the k smallest keys in UTF-8 order;
     * doc_id zero-padded to the max long width (19 digits) so string order
@@ -451,6 +438,14 @@ object TextOps extends QueryPack {
   private def selKeyDocId(key: Column): Column =
     substring(key, 33, 19).cast("bigint")
 
+  /** Class-balanced subsample: cap each language at 30 documents, chosen
+    * by md5 order (deterministic, unbiased w.r.t. content). The per-class
+    * selection uses the bounded-heap [[TopKStrAgg]] over a fixed-width
+    * (md5 ‖ zero-padded doc_id) sort key — map-side heaps keep ≤ 30 rows
+    * per (lang, partition) in flight, where a per-class row_number window
+    * would shuffle every document. The oracle is the window form, holding
+    * the heap to the declarative semantics.
+    */
   def balancedSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cap = 30
@@ -497,29 +492,6 @@ object TextOps extends QueryPack {
       .orderBy($"source", $"rank")
   }
 
-  /** Benchmark decontamination: flag corpus documents that share 3-token
-    * shingles with an evaluation set (doc_id < 5 stands in for the held-out
-    * benchmark). The classic eval-leakage gate every pre-training pipeline
-    * runs before a data release.
-    *
-    * 100 TB shape: the eval side is SMALL by nature (benchmarks are finite)
-    * — its distinct n-grams broadcast, and the corpus-side RAW shingle
-    * stream meets them in a narrow broadcast hash join, so only the MATCHED
-    * slice is ever distinct'd/shuffled; the corpus itself is one scan with
-    * no wide exchange. When the eval-gram set outgrows the broadcast budget
-    * the join degrades to a SHUFFLE of the full corpus shingle stream — the
-    * dominant cost at 100 TB, and almost all of it misses. The
-    * `graft.text.decontam.bloom` path (round 12, r11 verdict #3) is built
-    * for that regime: a bloom filter over the eval grams — ~10 bits per
-    * gram at 1% fpp vs ~25 B per broadcast string, so it fits executors
-    * long after the string set doesn't — sits in the corpus-side SCAN
-    * stage and kills misses before any exchange; the surviving ~matches+1%
-    * then meet the eval grams in a hint-free exact join (AQE picks the
-    * strategy), so false positives cannot reach the output. Correctness is
-    * knob-independent (ExactnessSpec), the bloom-below-join plan shape is
-    * PlanSpec-pinned, and the outgrown-broadcast A/B is in SCALE.md
-    * round 12.
-    */
   /** Per-corpus-doc count of distinct 3-gram overlaps with the eval set —
     * the shared core of [[decontaminate]] and [[corpusSelect]]. */
   private def evalOverlaps(spark: SparkSession, dir: String): DataFrame = {
@@ -578,6 +550,29 @@ object TextOps extends QueryPack {
   private[graft] def decontamBloom(spark: SparkSession): Boolean =
     graft.core.Profile.boolKnob(spark, "graft.text.decontam.bloom", default = false)
 
+  /** Benchmark decontamination: flag corpus documents that share 3-token
+    * shingles with an evaluation set (doc_id < 5 stands in for the held-out
+    * benchmark). The classic eval-leakage gate every pre-training pipeline
+    * runs before a data release.
+    *
+    * 100 TB shape: the eval side is SMALL by nature (benchmarks are finite)
+    * — its distinct n-grams broadcast, and the corpus-side RAW shingle
+    * stream meets them in a narrow broadcast hash join, so only the MATCHED
+    * slice is ever distinct'd/shuffled; the corpus itself is one scan with
+    * no wide exchange. When the eval-gram set outgrows the broadcast budget
+    * the join degrades to a SHUFFLE of the full corpus shingle stream — the
+    * dominant cost at 100 TB, and almost all of it misses. The
+    * `graft.text.decontam.bloom` path (round 12, r11 verdict #3) is built
+    * for that regime: a bloom filter over the eval grams — ~10 bits per
+    * gram at 1% fpp vs ~25 B per broadcast string, so it fits executors
+    * long after the string set doesn't — sits in the corpus-side SCAN
+    * stage and kills misses before any exchange; the surviving ~matches+1%
+    * then meet the eval grams in a hint-free exact join (AQE picks the
+    * strategy), so false positives cannot reach the output. Correctness is
+    * knob-independent (ExactnessSpec), the bloom-below-join plan shape is
+    * PlanSpec-pinned, and the outgrown-broadcast A/B is in SCALE.md
+    * round 12.
+    */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir).filter($"doc_id" >= 5).select($"doc_id")

@@ -4,7 +4,6 @@ import graft.QueryPack
 import graft.core.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Aggregation operators (SURVEY.md §2.5).
   *

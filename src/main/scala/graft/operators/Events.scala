@@ -4,7 +4,6 @@ import graft.QueryPack
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Event-time operators over the `events` table (SURVEY.md §2.9).
   *

@@ -5,7 +5,6 @@ import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Window functions (SURVEY.md §2.8).
   *

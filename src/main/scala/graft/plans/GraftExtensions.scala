@@ -5,7 +5,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Registers graft's native Catalyst functions and its planner strategy.
   *
@@ -38,8 +38,15 @@ object GraftFunctions {
     fn("lsh_buckets", classOf[LshBuckets], 3, "(embedding, nTables, planesPerTable)")(
       args => LshBuckets(args.head, intArg("lsh_buckets", "nTables", args(1)),
         intArg("lsh_buckets", "planesPerTable", args(2)))),
-    fn("lsh_first_shared", classOf[LshFirstShared], 2, "(buckets1, buckets2)")(
-      args => LshFirstShared(args.head, args(1))),
+    fn("lsh_first_shared", classOf[LshFirstShared], 2, "(buckets1, buckets2) or (probes1, " +
+        "probes2, probes1IsLower, probeBits, overCapKeys-bigint-array-literal)", orArity = 5) {
+      case Seq(p1, p2) => LshFirstShared(p1, p2)
+      case Seq(p1, p2, lower, bits, Literal(keys: ArrayData, ArrayType(LongType, _))) =>
+        LshFirstShared(p1, p2, lower, intArg("lsh_first_shared", "probeBits", bits),
+          keys.toLongArray().toSeq)
+      case args => throw new IllegalArgumentException(
+        s"lsh_first_shared: overCapKeys must be a bigint array literal, got ${args(4)}")
+    },
     fn("lsh_probes", classOf[LshProbes], 4,
         "(embedding, nTables, planesPerTable, probeBits)")(
       args => LshProbes(args.head, intArg("lsh_probes", "nTables", args(1)),
@@ -135,12 +142,13 @@ object GraftFunctions {
     })
 
   /** The descriptor of SQL function `name` (class `cls`): its builder fails
-    * with "`name` takes `usage`" unless it gets `arity` arguments. */
-  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
-      build: Seq[Expression] => Expression) =
+    * with "`name` takes `usage`" unless it gets `arity` (or `orArity`)
+    * arguments. */
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String,
+      orArity: Int = -1)(build: Seq[Expression] => Expression) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (args: Seq[Expression]) => {
-        require(args.length == arity, s"$name takes $usage")
+        require(args.length == arity || args.length == orArity, s"$name takes $usage")
         build(args)
       })
 

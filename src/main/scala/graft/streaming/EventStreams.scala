@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.DecimalType
 import java.sql.Timestamp
 
 /** Structured Streaming pack (SURVEY.md §2.9, §7.2 step 7).
@@ -277,6 +276,11 @@ object EventStreams {
         $"v_ts", $"p_ts", $"value")
   }
 
+  /** `graft.stream.checkpoint.checksum` (default false): whether
+    * [[runToMemory]]'s streams write checkpoint checksum sidecars. */
+  private[graft] def checkpointChecksum(spark: SparkSession): Boolean =
+    graft.core.Profile.boolKnob(spark, "graft.stream.checkpoint.checksum", default = false)
+
   /** Run a streaming query to completion over the (finite) file source and
     * return the materialized result — real incremental execution, memory
     * sink, AvailableNow trigger.
@@ -324,7 +328,7 @@ object EventStreams {
     val overrides = Seq(
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        spark.conf.get("graft.stream.checkpoint.checksum", "false"))
+        checkpointChecksum(spark).toString)
     var started: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       started = startLock.synchronized {

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The `lsh_probes` multi-probe kernel: slot-0 replay of `lsh_buckets`,
   * Hamming-1 probe slots on the lowest-|dot| planes, interpreted/codegen
   * parity, and the candidate-superset property the banded routes rely on;
-  * and `lsh_first_shared`, the self-join's one-row-per-pair test.
+  * and `lsh_first_shared`, the self-join's one-row-per-pair test, with the
+  * rule it enforces: every embedding LSH route emits each pair once.
   */
 class LshProbesSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +47,120 @@ class LshProbesSpec extends SparkSpec {
     }
     assert(Seq[(Seq[Int], Option[Seq[Int]])]((Seq(1), None)).toDF("a", "b")
       .select(expr("lsh_first_shared(a, b)")).head().isNullAt(0))
+  }
+
+  test("lsh_first_shared: canonical discovery of probed and capped pairs") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.expr.LshFirstShared
+    GraftFunctions.install(spark)
+    val key = LshFirstShared.key _
+    // (p1, p2, p1IsLower, probeBits, overCap, want): the discovering slot's
+    // position in p1, or -2 - its position in p2; -1 for none
+    val cases = Seq(
+      // base–base collision: the lower id's slot
+      (Seq(4, 5, 6), Seq(4, 0, 2), true, 2, Nil, 0),
+      (Seq(4, 5, 6), Seq(4, 0, 2), false, 2, Nil, -2),
+      // only p1 flips into p2's base, from either id
+      (Seq(1, 3, 5), Seq(3, 2, 0), true, 2, Nil, 1),
+      (Seq(1, 3, 5), Seq(3, 2, 0), false, 2, Nil, 1),
+      // both flip into each other's base: the lower id's flip wins
+      (Seq(1, 3, 9), Seq(3, 1, 8), true, 2, Nil, 1),
+      (Seq(1, 3, 9), Seq(3, 1, 8), false, 2, Nil, -3),
+      // an earlier table beats a base–base collision in a later one
+      (Seq(1, 3, 5, 7, 0, 0), Seq(3, 2, 0, 7, 1, 1), false, 2, Nil, 1),
+      // nothing in table 0; p2's flip in table 1
+      (Seq(1, 2, 3, 7, 6, 5), Seq(4, 5, 6, 0, 7, 9), true, 2, Nil, -6),
+      (Seq(1, 2, 3), Seq(4, 5, 6), true, 2, Nil, -1),
+      // capped: an over-cap first shared bucket passes to the next table
+      (Seq(4, 2), Seq(4, 2), true, 0, Seq(key(0, 4)), 1),
+      (Seq(4, 2), Seq(4, 2), true, 0, Seq(key(1, 2), key(0, 4)), -1),
+      // capped and probed: p1's flip meets an over-cap base, p2's does not
+      (Seq(1, 3, 9), Seq(3, 1, 8), true, 2, Seq(key(0, 3)), -3))
+    cases.foreach { case (a, b, lower, bits, over, want) =>
+      val interpreted = LshFirstShared(Literal.create(a), Literal.create(b),
+        Literal(lower), bits, over).eval()
+      // the repartition keeps the projection out of local-relation folding
+      val generated = Seq((a, b, lower)).toDF("a", "b", "lower").repartition(1)
+        .select(call_function("lsh_first_shared", $"a", $"b", $"lower", lit(bits),
+          typedLit(over)))
+        .as[Int].head()
+      assert(interpreted == want && generated == want,
+        s"$a $b lower=$lower bits=$bits over=$over: interpreted $interpreted, " +
+          s"generated $generated, want $want")
+    }
+  }
+
+  test("probed candidates ≡ base collisions plus flips into the other's base") {
+    import graft.functions.SimilarityOps
+    val (t, p, bits) = (4, 4, 2)
+    val stride = 1 + bits
+    val got = SimilarityOps.lshCandidateIds(spark, sfDir, t, p, probeBits = bits)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    GraftFunctions.install(spark)
+    val vecs = graft.core.Tables.embeddings(spark, sfDir)
+      .filter($"embedding".isNotNull)
+      .select($"vec_id", expr(s"lsh_probes(embedding, $t, $p, $bits)"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
+    def flipsInto(a: Seq[Int], b: Seq[Int], tbl: Int) =
+      (1 to bits).exists(j => a(tbl * stride + j) == b(tbl * stride))
+    val ref = (for {
+      (v1, a) <- vecs.iterator
+      (v2, b) <- vecs.iterator
+      if v1 < v2 && (0 until t).exists(tbl =>
+        a(tbl * stride) == b(tbl * stride) || flipsInto(a, b, tbl) || flipsInto(b, a, tbl))
+    } yield (v1, v2)).toSet
+    assert(got.size == got.toSet.size, "a pair left the self-join twice")
+    assert(got.toSet == ref,
+      s"missing=${(ref -- got).take(5)} spurious=${(got.toSet -- ref).take(5)}")
+  }
+
+  test("every embedding LSH route emits each pair once") {
+    import graft.functions.SimilarityOps
+    def once(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val pairs = df.select($"v1", $"v2")
+      val (n, distinct) = (pairs.count(), pairs.distinct().count())
+      assert(n > 0 && n == distinct, s"$what: $n rows for $distinct distinct pairs")
+    }
+    val dense = tools.Corpora.generateDenseDupVectors(spark, 1000)
+    for (bits <- Seq(0, 2)) {
+      once(s"candidates bits=$bits", SimilarityOps.lshCandidateIds(spark, sfDir, 4, 4,
+        probeBits = bits))
+      spark.conf.set("graft.sim.bucketcap.adhoc", "64")
+      try once(s"capped candidates bits=$bits", SimilarityOps.lshCandidateIds(
+        spark, dense, 8, 4, probeBits = bits))
+      finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+      once(s"scored bits=$bits", SimilarityOps.lshScoredNeighbors(spark, sfDir, 4, 4,
+        probeBits = bits))
+      once(s"scored within label bits=${bits min 1}", SimilarityOps.lshScoredNeighbors(
+        spark, sfDir, 32, 1, within = Seq("label"), probeBits = bits min 1))
+    }
+  }
+
+  test("sim_nearest_same_label's banded argmax reads each ordered pair once") {
+    import graft.functions.SimilarityOps
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    object Plans extends AdaptiveSparkPlanHelper
+    val ordered = SimilarityOps.lshScoredNeighbors(spark, sfDir, 32, 1,
+      within = Seq("label")).select($"v1", $"v2").distinct().count()
+    spark.conf.set("graft.sim.exact", "false")
+    val df = try {
+      val q = SimilarityOps.nearestSameLabel(spark, sfDir)
+      q.collect()
+      q
+    } finally spark.conf.unset("graft.sim.exact")
+    val partial = Plans.collect(df.queryExecution.executedPlan) {
+      case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Partial) => a
+    }
+    assert(partial.size == 1, df.queryExecution.executedPlan)
+    // the nearest operator below the partial argmax that counts its rows
+    var below = partial.head.child
+    while (!below.metrics.contains("numOutputRows")) below = below.children.head
+    val rows = below.metrics("numOutputRows").value
+    assert(ordered > 0 && rows == ordered,
+      s"$rows rows into the partial argmax for $ordered ordered pairs")
   }
 
   test("slot 0 of every table replays lsh_buckets bit-for-bit") {

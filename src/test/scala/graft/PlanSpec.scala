@@ -146,6 +146,39 @@ class PlanSpec extends SparkSpec {
     finally spark.conf.unset("graft.sim.bucketcap.adhoc")
   }
 
+  test("no banded candidate or top-1 plan de-duplicates pairs with an aggregate") {
+    // every embedding LSH route keeps a pair only at its canonical
+    // discovery; a HashAggregate keyed on exactly (v1, v2) is a pair
+    // distinct, whose per-task hash map the rule exists to avoid
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.functions.SimilarityOps
+    object Plans extends AdaptiveSparkPlanHelper
+    def pairAggregates(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      Plans.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec
+            if a.groupingExpressions.map(_.name) == Seq("v1", "v2") => a
+      }.map(_.toString)
+    def routes(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(0, 2).flatMap { bits =>
+      Seq(s"candidates bits=$bits" ->
+          SimilarityOps.lshCandidateIds(spark, sfDir, 8, 4, probeBits = bits),
+        s"scored bits=$bits" -> SimilarityOps.lshScoredNeighbors(spark, sfDir, 4, 4,
+          within = Seq("label"), probeBits = bits))
+    } ++ Seq("sim_ann_lsh" -> SimilarityOps.annLsh(spark, sfDir))
+    spark.conf.set("graft.sim.exact", "false")
+    try {
+      for ((name, df) <- routes() :+
+          ("sim_nearest_same_label" -> SimilarityOps.nearestSameLabel(spark, sfDir)))
+        assert(pairAggregates(df).isEmpty, s"$name: ${pairAggregates(df)}")
+      spark.conf.set("graft.sim.bucketcap.adhoc", "64")
+      for ((name, df) <- routes() if name.startsWith("candidates"))
+        assert(pairAggregates(df).isEmpty, s"capped $name: ${pairAggregates(df)}")
+    } finally {
+      spark.conf.unset("graft.sim.exact")
+      spark.conf.unset("graft.sim.bucketcap.adhoc")
+    }
+  }
+
   test("cosine top-k merges bounded heaps map-side, no window rank shuffle") {
     val plan = graft.functions.SimilarityOps.cosineTopK(spark, sfDir)
       .queryExecution.executedPlan.toString

@@ -69,7 +69,10 @@ class ProfileSpec extends SparkSpec {
       ("graft.sim.bucketcap.pairs", "big", () => SimilarityOps.simBucketCap(spark, "pairs")),
       ("graft.sim.rescue.samelabel", "high", () => SimilarityOps.rescueOf(spark, "samelabel")),
       ("graft.sim.rescue.maxfrac.samelabel", "most",
-        () => SimilarityOps.rescueMaxFracOf(spark, "samelabel")))
+        () => SimilarityOps.rescueMaxFracOf(spark, "samelabel")),
+      ("graft.sim.bands.pairs", "8by4", () => SimilarityOps.bandShape(spark, "pairs", 16, 2)),
+      ("graft.stream.checkpoint.checksum", "yes",
+        () => graft.streaming.EventStreams.checkpointChecksum(spark)))
     for ((key, bad, read) <- readers) withConf(key -> bad) {
       val msg = intercept[RuntimeException](read()).getMessage
       assert(msg.contains(key) && msg.contains(s"'$bad'"), s"$key=$bad: $msg")

@@ -5,6 +5,8 @@
 # builder's ritual checked pieces (a spec here, a query there) instead of
 # the whole contract. This script runs the contract end-to-end at the
 # fast scale factor and fails loudly on ANY regression:
+#   0. perfbench's own unit tests (the benchmark harness: stats, guard,
+#      oracle compare)
 #   1. sbt test            — every spec suite incl. AnalysisGuardSpec
 #                            (schema drift guard + all-query analysis
 #                            sweep); live counts echoed from sbt output
@@ -21,6 +23,13 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-0.001}"
 OUT="/tmp/graft_gate_sf$SF"
+
+echo "== gate: perfbench unit tests"
+if ! PYLOG="$(PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests 2>&1)"; then
+  echo "$PYLOG" | tail -20
+  echo "GATE FAILED: perfbench unit tests"; exit 1
+fi
+echo "$PYLOG" | tail -1
 
 echo "== gate: sbt test"
 TESTLOG="$(mktemp)"
