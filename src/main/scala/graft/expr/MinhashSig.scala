@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and on adversarial token shapes): output equals the composed pipeline
   * `min(xxhash64(xxhash64(shingle), lit(i)))` over `shingledOf`'s 3-token
   * shingles, exactly. The input MUST already be [[DedupOps.normText]]-
-  * normalized (single-space separated); the kernel then reproduces the
-  * composed chain byte-for-byte:
+  * normalized (single-space separated); the kernel's walk
+  * ([[ShingleSet.hashes]]) then reproduces the composed chain byte-for-byte:
   *  - `split(text, " ")` with Java limit -1 semantics == byte segments
   *    between 0x20 bytes (0x20 never occurs inside a multi-byte UTF-8
   *    sequence, so the byte scan is exact), empty segments included;
@@ -75,15 +75,14 @@ object MinhashSig {
   private final val Seed = 42L // Spark's xxhash64 default seed
 
   /** Shingle count above which the fused kernel stops counting distinct
-    * shingles and emits [[CardUnknown]] instead (round 12, r11 advice):
-    * the card's open-addressed set is PER-ROW transient memory — 2·shingles
-    * longs — so a single multi-GB document would allocate gigabytes (and
-    * past 2^29 the capacity doubling overflows, the round-11 loud-fail).
-    * 2^22 shingles ≈ a 30 MB document caps the table at 64 MB — generous
-    * for any real corpus document (a long book is ~200k tokens) while
-    * bounding the worst row. Above it the doc keeps its exact SIGNATURE
-    * (banding is unaffected) and merely loses the size-ratio prefilter,
-    * which the consumer must honor by passing sentinel rows through
+    * shingles and emits [[CardUnknown]] instead. The count's
+    * open-addressed set is PER-ROW transient memory, 2·shingles longs, so
+    * a single multi-GB document would allocate gigabytes; 2^22 shingles
+    * (about a 30 MB document) caps the table at 64 MB, far past any real
+    * corpus document (a long book is ~200k tokens). Above it the doc keeps
+    * its exact SIGNATURE (banding is unaffected) and merely loses the
+    * size-ratio prefilter, which the consumer must honor by passing
+    * sentinel rows through
     * ([[graft.functions.DedupOps.minhashCandidatesPlan]]) — the verify
     * stage re-derives true sizes for survivors, so answers are identical.
     */
@@ -104,72 +103,20 @@ object MinhashSig {
   /** Fused signature + distinct-shingle count: slots 0..numHashes-1 are
     * the signature (bit-identical to [[compute]]), slot numHashes is
     * [[ShingleCard.compute]]'s count — or [[CardUnknown]] past
-    * [[CardCapShingles]] shingles (the per-row degrade, see that
-    * constant's doc). ONE tokenization and ONE string hash per shingle —
-    * the card's set probes reuse the shingle hash the signature chain
-    * computes anyway, so the deployed prefiltered scan pays a set insert
-    * per shingle instead of a second full hash pass (r11 review finding).
+    * [[CardCapShingles]] shingles. One tokenization and one string hash
+    * per shingle serve both: the card counts the hashes the signature
+    * chain consumes.
     */
   def computeWithCard(s: UTF8String, numHashes: Int): Array[Long] =
     core(s, numHashes, withCard = true)
 
   private def core(s: UTF8String, numHashes: Int, withCard: Boolean): Array[Long] = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val n = s.numBytes
-    // token starts: one at 0, one after every 0x20 byte
-    var numToks = 1
-    var p = 0
-    while (p < n) {
-      if (Platform.getByte(base, off + p) == 0x20) numToks += 1
-      p += 1
-    }
-    // starts(j) = byte index of token j; starts(numToks) = n + 1 sentinel so
-    // tokEnd(j) = starts(j + 1) - 1 holds for the last token too
-    val starts = new Array[Int](numToks + 1)
-    var j = 1
-    p = 0
-    while (p < n) {
-      if (Platform.getByte(base, off + p) == 0x20) { starts(j) = p + 1; j += 1 }
-      p += 1
-    }
-    starts(numToks) = n + 1
-    val nShingles = math.max(numToks - 2, 1)
+    val hs = ShingleSet.hashes(s)
     val mins = new Array[Long](if (withCard) numHashes + 1 else numHashes)
     java.util.Arrays.fill(mins, 0, numHashes, Long.MaxValue)
-    // distinct-shingle set (card only): same open-addressed scheme as
-    // ShingleCard.compute, fed by the h already computed for the chain
-    // past CardCapShingles the card degrades to the CardUnknown sentinel
-    // (prefilter optional PER ROW, r11 advice) instead of allocating a
-    // giant per-row table or — past 2^29, where cap <<= 1 overflows —
-    // failing the whole query; the signature stays exact either way
-    val trackCard = withCard && nShingles <= CardCapShingles
-    var table: Array[Long] = null
-    var mask = 0
-    var seenZero = false
-    var card = 0L
-    if (trackCard) {
-      var cap = 4
-      while (cap < nShingles * 2) cap <<= 1
-      table = new Array[Long](cap)
-      mask = cap - 1
-    }
     var sh = 0
-    while (sh < nShingles) {
-      val start = starts(sh)
-      val lastTok = math.min(sh + 2, numToks - 1)
-      val end = starts(lastTok + 1) - 1
-      val h = XXH64.hashUnsafeBytes(base, off + start, end - start, Seed)
-      if (trackCard) {
-        if (h == 0L) {
-          if (!seenZero) { seenZero = true; card += 1 }
-        } else {
-          var idx = (h ^ (h >>> 32)).toInt & mask
-          while (table(idx) != 0L && table(idx) != h) idx = (idx + 1) & mask
-          if (table(idx) == 0L) { table(idx) = h; card += 1 }
-        }
-      }
-      val seeded = XXH64.hashLong(h, Seed)
+    while (sh < hs.length) {
+      val seeded = XXH64.hashLong(hs(sh), Seed)
       var i = 0
       while (i < numHashes) {
         val v = XXH64.hashInt(i, seeded)
@@ -178,7 +125,8 @@ object MinhashSig {
       }
       sh += 1
     }
-    if (withCard) mins(numHashes) = if (trackCard) card else CardUnknown
+    if (withCard) mins(numHashes) =
+      if (hs.length <= CardCapShingles) ShingleSet.distinctCount(hs) else CardUnknown
     mins
   }
 }
@@ -217,33 +165,26 @@ case class MinhashSigCard(child: Expression, numHashes: Int)
 }
 
 /** shingle_card(normalized_text) → long: the document's DISTINCT 3-token
-  * shingle count, computed in the same one-pass, no-explode, no-shuffle
-  * style as [[MinhashSig]] — tokenization and shingling are byte-for-byte
-  * the chain documented there (the two kernels MUST agree on what a
-  * shingle is, or the size-ratio prefilter below reasons about different
-  * sets than the signature banded on).
+  * shingle count, from the same tokenize-and-hash walk as [[MinhashSig]]
+  * ([[ShingleSet.hashes]]). The two kernels must agree on what a shingle
+  * is, or the size-ratio prefilter would reason about different sets than
+  * the signature banded on.
   *
-  * Exists for the minhash candidate self-join's size-ratio prefilter
-  * (round 11, the int8-prefilter pattern applied to the Jaccard family):
-  * J(A,B) ≥ θ implies min(|A|,|B|)/max(|A|,|B|) ≥ θ — an exact bound with
-  * zero tuning — so carrying each doc's |distinct shingles| (ONE long)
+  * It feeds the minhash candidate self-join's size-ratio prefilter:
+  * J(A,B) ≥ θ implies min(|A|,|B|)/max(|A|,|B|) ≥ θ, an exact bound with
+  * zero tuning, so carrying each doc's |distinct shingles| (ONE long)
   * through the (band,bucket) shuffle lets the bucket self-join reject
-  * size-mismatched pairs in-stage, before the pair distinct and the
-  * shingle re-join verify ([[graft.functions.DedupOps]]). This standalone
-  * kernel is the SEMANTIC DEFINITION the specs pin; the deployed scan
-  * uses the fused [[MinhashSigCard]], which computes the same count from
-  * the shingle hashes the signature chain already produces (one string
-  * hash per shingle instead of two).
+  * size-mismatched pairs in-stage, before the verify
+  * ([[graft.functions.DedupOps]]). This standalone kernel is the SEMANTIC
+  * DEFINITION the specs pin; the deployed scan uses the fused
+  * [[MinhashSigCard]], which counts the same hashes.
   *
   * Distinctness is counted over the 64-bit xxhash64 of each shingle's
-  * bytes (open-addressed set, O(shingles-per-doc) — per-ROW state, not an
-  * aggregation buffer), not the strings themselves: a within-doc hash
-  * collision undercounts by one. That is the SAME no-collision assumption
-  * the minhash signature itself already rests on (colliding shingles
-  * perturb the signature and hence banding recall), so the prefilter adds
-  * no new assumption class; the prefiltered ≡ unfiltered equivalence is
-  * pinned by ExactnessSpec and the exact-Jaccard oracle either way, since
-  * the verify stage recomputes true sizes from the strings for survivors.
+  * bytes, not the strings themselves: a within-doc hash collision
+  * undercounts by one. That is the SAME no-collision assumption the
+  * minhash signature itself already rests on (colliding shingles perturb
+  * the signature and hence banding recall), and the verify counts the
+  * same hash sets ([[ShingleSet]]), so bound and verify agree exactly.
   */
 case class ShingleCard(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -264,50 +205,107 @@ case class ShingleCard(child: Expression)
 }
 
 object ShingleCard {
+  def compute(s: UTF8String): Long = ShingleSet.distinctCount(ShingleSet.hashes(s)).toLong
+}
+
+/** shingle_set(normalized_text) → array<long>: the document's sorted,
+  * distinct xxhash64 3-token shingle set, the input of the per-document
+  * Jaccard verify ([[graft.functions.DedupOps]]): one array per candidate
+  * document, so a pair's intersection is computed from two id-keyed rows
+  * instead of a row per shingle. Equals the composed
+  * `array_sort(array_distinct(transform(word_shingles(split(t, " ")),
+  * xxhash64)))`, and its size is [[ShingleCard]]'s count (MinhashSigSpec
+  * pins both). Sorted, so a merge can intersect two sets, as a
+  * prefix-filtered join would.
+  */
+case class ShingleSet(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "shingle_set"
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+
+  override def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(ShingleSet.compute(input.asInstanceOf[UTF8String]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x => s"""
+      |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      |  .fromPrimitiveArray(graft.expr.ShingleSet.compute($x));""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The one tokenize-and-hash walk under `minhash_sig`, `minhash_sig_card`,
+  * `shingle_card` and `shingle_set`. */
+object ShingleSet {
   private final val Seed = 42L // Spark's xxhash64 default seed
 
-  def compute(s: UTF8String): Long = {
+  def compute(s: UTF8String): Array[Long] = {
+    val hs = hashes(s)
+    java.util.Arrays.sort(hs)
+    var k = 0 // distinct values compacted to the front: k ≤ the read index
+    for (h <- hs) if (k == 0 || h != hs(k - 1)) { hs(k) = h; k += 1 }
+    java.util.Arrays.copyOf(hs, k)
+  }
+
+  /** xxhash64 (seed 42, Spark's `xxhash64(string)`) of each 3-token
+    * shingle of a normalized text, in text order, duplicates kept. Tokens
+    * are the byte segments between 0x20 bytes, empty ones included
+    * (`split(text, " ")` with limit -1; 0x20 never occurs inside a
+    * multi-byte UTF-8 sequence). Shingle i is the byte range from token
+    * i's start to token i+2's end, which is `concat_ws(" ", slice(toks,
+    * i, 3))` because the joiner equals the separator. A text of fewer
+    * than three tokens is one shingle, the whole text.
+    */
+  def hashes(s: UTF8String): Array[Long] = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
-    // tokenization identical to MinhashSig.compute (see its contract doc)
     var numToks = 1
     var p = 0
     while (p < n) {
       if (Platform.getByte(base, off + p) == 0x20) numToks += 1
       p += 1
     }
-    val starts = new Array[Int](numToks + 1)
-    var j = 1
+    if (numToks < 3) return Array(XXH64.hashUnsafeBytes(base, off, n, Seed))
+    val out = new Array[Long](numToks - 2)
+    // starts of tokens j-2, j-1 and j while token j is scanned; the space
+    // ending token j ≥ 2 closes shingle j-2
+    var a = 0; var b = 0; var c = 0
+    var j = 0
     p = 0
     while (p < n) {
-      if (Platform.getByte(base, off + p) == 0x20) { starts(j) = p + 1; j += 1 }
+      if (Platform.getByte(base, off + p) == 0x20) {
+        if (j >= 2) out(j - 2) = XXH64.hashUnsafeBytes(base, off + a, p - a, Seed)
+        a = b; b = c; c = p + 1; j += 1
+      }
       p += 1
     }
-    starts(numToks) = n + 1
-    val nShingles = math.max(numToks - 2, 1)
-    // open-addressed long set, capacity = smallest power of two ≥ 2·n —
-    // load factor ≤ 0.5 keeps probe chains short; 0 is the empty slot, a
-    // genuine h == 0 is tracked by a flag. This SEMANTIC-DEFINITION kernel
-    // keeps the loud 2^29 overflow guard and always returns the true
-    // count; the DEPLOYED fused kernel instead degrades to the
-    // MinhashSig.CardUnknown sentinel past MinhashSig.CardCapShingles
-    // (see that constant's doc) — callers wanting the prefilter semantics
-    // must use the fused form
-    require(nShingles <= (1 << 29),
-      s"shingle_card: document has $nShingles shingles (limit ${1 << 29})")
+    out(j - 2) = XXH64.hashUnsafeBytes(base, off + a, n - a, Seed)
+    out
+  }
+
+  /** How many distinct values `hs` holds, in O(hs.length): an
+    * open-addressed long set of capacity the smallest power of two ≥
+    * 2·length (load ≤ 0.5 keeps probe chains short). 0 is the empty slot;
+    * a genuine 0 is tracked by a flag. Sorting counts the same in
+    * O(n log n), measurably slower on the deployed signature scan.
+    */
+  def distinctCount(hs: Array[Long]): Int = {
+    // past 2^29 the capacity doubling below overflows: fail loudly instead
+    require(hs.length <= (1 << 29),
+      s"shingle_card: document has ${hs.length} shingles (limit ${1 << 29})")
     var cap = 4
-    while (cap < nShingles * 2) cap <<= 1
+    while (cap < hs.length * 2) cap <<= 1
     val table = new Array[Long](cap)
     val mask = cap - 1
     var seenZero = false
-    var card = 0L
-    var sh = 0
-    while (sh < nShingles) {
-      val start = starts(sh)
-      val lastTok = math.min(sh + 2, numToks - 1)
-      val end = starts(lastTok + 1) - 1
-      val h = XXH64.hashUnsafeBytes(base, off + start, end - start, Seed)
+    var card = 0
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i)
       if (h == 0L) {
         if (!seenZero) { seenZero = true; card += 1 }
       } else {
@@ -315,7 +313,7 @@ object ShingleCard {
         while (table(idx) != 0L && table(idx) != h) idx = (idx + 1) & mask
         if (table(idx) == 0L) { table(idx) = h; card += 1 }
       }
-      sh += 1
+      i += 1
     }
     card
   }

@@ -264,7 +264,7 @@ object BandTuner {
           val szs = sizes.select($"bc").distinct().collect().map(_.getLong(0))
           val raw = suggestCapFrom(szs, s, n)
           // SHAPE-PRECONDITION cross-check (the SCALE.md r13 measured
-          // footgun, now also a runtime tripwire in dropOversizedBuckets):
+          // footgun, now also a runtime tripwire in capBuckets):
           // sign-LSH has only 2^planes buckets per table, so a cap below
           // corpus / 2^planes puts EVERY bucket over the cap and empties
           // the index. A suggestion landing below that floor means the

@@ -42,11 +42,8 @@ object DedupOps extends QueryPack {
   private[functions] def contentSha: Column = sha2(normText, 256)
 
   /** doc_id → 3-token shingles (exploded, WITH duplicates — narrow, no
-    * shuffle) for any frame with (doc_id, text). Used by the exact-verify
-    * slice ([[jaccardStats]]), the exact self-join baseline, and the
-    * composed reference form the `minhash_sig` kernel is spec-checked
-    * against. Callers that need set semantics apply `.distinct()` on the
-    * (much smaller) slice they actually need.
+    * shuffle) for any frame with (doc_id, text): the composed reference
+    * form the shingle kernels are spec-checked against.
     */
   private[graft] def shingledOf(docs: DataFrame): DataFrame =
     docs
@@ -70,12 +67,9 @@ object DedupOps extends QueryPack {
         explode(call_function("word_shingles", col("toks"))).as("shingle"))
   }
 
-  private def shingledRaw(spark: SparkSession, dir: String): DataFrame =
-    shingledKernelOf(Tables.documents(spark, dir))
-
   /** doc_id → distinct 3-token shingles (exploded). */
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    shingledRaw(spark, dir).distinct()
+    shingledKernelOf(Tables.documents(spark, dir)).distinct()
 
   /** Exact dedup: canonical id per normalized-content hash. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
@@ -204,25 +198,37 @@ object DedupOps extends QueryPack {
         (0 until numHashes).map(i => col("sig").getItem(i).as(s"mh_$i")): _*)
   }
 
-  /** (doc_id, bb) band-bucket memberships from a signature frame: band b's
-    * bucket is the hash of its `rows` consecutive min-hashes. Shared by the
-    * candidate path and [[BandTuner.suggestMinhash]]'s cost sample so the
-    * priced bucketing is the deployed bucketing.
+  /** (doc_id, bhs, bb) band-bucket memberships from a signature frame:
+    * band b's bucket hash is the hash of its `rows` consecutive min-hashes,
+    * `bhs` is the document's array of all `bands` of them, and `bb` is one
+    * (band, bh) row per band. Shared by the candidate path and
+    * [[BandTuner.suggestMinhash]]'s cost sample so the priced bucketing is
+    * the deployed bucketing.
     */
   private[functions] def bandBuckets(sigs: DataFrame, bands: Int, rows: Int,
       carry: Seq[String] = Nil): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until rows).map(r => col(s"mh_${b * rows + r}")): _*).as("bh"))
-    }
-    // `carry` columns (the prefilter's n_sh) are already materialized
-    // columns of `sigs`, so they land in the Generate's
-    // requiredChildOutput — listing a fresh expression here instead would
-    // re-evaluate it once per band row (the int8-blob lesson,
-    // SimilarityOps.lshCandidateIds)
-    sigs.select((col("doc_id") +: carry.map(col)) :+
-      explode(array(bandCols: _*)).as("bb"): _*)
+    val ids = col("doc_id") +: carry.map(col)
+    val bhs = array((0 until bands).map(b =>
+      xxhash64((0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)): _*)
+    // `bhs` and the `carry` columns (the prefilter's n_sh) are materialized
+    // before the explode, so they land in the Generate's requiredChildOutput;
+    // a fresh expression listed next to the generator would be re-evaluated
+    // once per band row (the int8-blob lesson, SimilarityOps). The generator
+    // reads `bhs` through an inline array: exploding the bare column would
+    // make the optimizer infer size and IsNotNull filters on it, computed
+    // below the Project as more band hashes per document.
+    sigs.select(ids :+ bhs.as("bhs"): _*)
+      .select((ids :+ col("bhs")) :+ explode(array((0 until bands).map(b =>
+        struct(lit(b).as("band"), col("bhs")(b).as("bh"))): _*)).as("bb"): _*)
   }
+
+  /** The lowest band `t` in `0 until bands` where `agree(t)` holds for a
+    * joined pair, or null when none does. A band self-join meets a pair
+    * once per band whose bucket it shares; keeping only the row whose band
+    * is this one emits each pair once, with no pair distinct.
+    */
+  private def firstAgreeingBand(bands: Int)(agree: Int => Column): Column =
+    (1 until bands).foldLeft(when(agree(0), 0))((w, t) => w.when(agree(t), t))
 
   /** MinHash+LSH near-dup: band-bucket candidates, exact-verify, emit pairs
     * with their true Jaccard. Hash-gated by EQUIVALENCE: candidates are
@@ -236,12 +242,12 @@ object DedupOps extends QueryPack {
     * Shuffle budget (the 100 TB view): signatures are computed by the
     * one-pass `minhash_sig` kernel inside the scan — ZERO corpus-wide
     * shuffle on the whole candidate path (the first shuffle is the
-    * (band,bucket) groupBy over `bands` rows per doc). Everything
-    * downstream — candidate pairing, distinct-shingle sets, Jaccard sizes
-    * and intersections — runs on the candidate slice only, reached by
-    * broadcasting the candidate doc-id set into a semi-join against the
-    * (re-scanned, narrow) shingle stream. Banding exists precisely to make
-    * that slice tiny relative to corpus.
+    * (band,bucket) self-join over `bands` rows per doc). Everything
+    * downstream — shingle sets, Jaccard sizes and intersections — runs on
+    * the candidate slice only: one set per candidate document, reached by
+    * broadcasting the candidate doc-id set into a semi-join against a
+    * re-scan of the documents. Banding exists precisely to make that slice
+    * tiny relative to corpus.
     */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -251,9 +257,8 @@ object DedupOps extends QueryPack {
       .orderBy($"d1", $"d2")
   }
 
-  /** Band-bucket candidate (d1 < d2) pairs from the MinHash signatures —
-    * signature computation is shuffle-free ([[minhashSigsOf]]); the first
-    * shuffle on this path is the (band,bucket) groupBy below.
+  /** Band-bucket candidate (d1 < d2) pairs from the MinHash signatures,
+    * each pair once ([[minhashCandidatesPlan]]).
     */
   private def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
     // localCheckpoint instead of CacheManager .cache(): the pair set is
@@ -261,15 +266,10 @@ object DedupOps extends QueryPack {
     // pinned until an explicit unpersist — repeated invocations in a long
     // session would accumulate storage. The checkpoint's backing blocks
     // are released by the ContextCleaner as soon as the returned plan is
-    // unreferenced. LAZY since round 22 (was eager): the dedicated
-    // construction-time materialization job sat inside the bench's timed
-    // region; letting the first consumer materialize it drops one job per
-    // pass with NO double-compute of the scan+signature subtree (profiled:
-    // the band-stream map stage runs once per pass either way — the first
-    // consumer is jaccardStats' candDocs broadcast build, which completes
-    // before the pair joins submit). A/B min-of-3 at sf0.1: eager
-    // 1.40/1.16 s vs lazy 1.25/1.03 s, jobs 14 → 12 (with the shN
-    // checkpoint below going lazy in the same change).
+    // unreferenced. Lazy, so no construction-time job runs: the first
+    // consumer (jaccardStats' candidate doc-id broadcast) materializes it,
+    // and the signature/band stage still runs once per pass
+    // (LazyCheckpointSpec).
     minhashCandidatesPlan(spark, dir).localCheckpoint(false)
 
   /** The candidate-generation subtree WITHOUT the closing checkpoint
@@ -277,79 +277,72 @@ object DedupOps extends QueryPack {
     * so plan dumps (DumpPlans) can show the signature/banding stages that
     * the checkpoint otherwise collapses to `Scan ExistingRDD`.
     *
-    * CAP-ON NOTE: with [[bucketCap]] > 0 the band stream is routed through
-    * an INNER `localCheckpoint` so the cap's consumers (the sizes
-    * aggregation and both self-join legs) read one materialized stream
-    * instead of each embedding its own copy of the scan+signature subtree
-    * (measured 4 full passes; ReuseExchange did not unify them — PlanSpec
-    * pins the single-pass shape). The checkpoint is LAZY (round 13, r12
-    * advice #4): constructing this frame runs NO job — the first action
-    * materializes the band stream once and every later pass reads the
-    * persisted blocks. (On the very first action, AQE may submit the two
-    * leaf stages that share the stream concurrently, so a partition can be
-    * computed twice in that race — a bounded first-run cost, chosen over
-    * the eager form's construction-time corpus job, which made plan dumps,
-    * analysis-only tests, and A/B frame construction execute Spark jobs as
-    * a side effect.) A dump with the cap set shows the capped subtree
-    * above `Scan ExistingRDD`; dump with the cap unset (the default) to
-    * see the full lazy pipeline.
+    * A bucket SELF-JOIN on (band, bucket), not collect_set-then-explode²:
+    * that form holds every bucket's doc list in one aggregation buffer and
+    * expands |bucket|² pairs from a single row, and a degenerate band value
+    * (near-empty documents share signatures) is an unbounded array no
+    * executor survives. The join streams the same pairs, spills, and lets
+    * AQE split a hot bucket. Two rules cut what leaves it:
+    *  - *One row per pair.* A pair meets once per band whose bucket it
+    *    shares. Each band row carries its document's band-hash array
+    *    (`bhs`), and a pair is kept only at its first agreeing band
+    *    ([[firstAgreeingBand]], the rule `dedup_simhash_pairs` uses), so no
+    *    pair distinct runs.
+    *  - *Size ratio.* With `graft.sim.prefilter` on, each doc's
+    *    distinct-shingle count n_sh (ONE long, from the fused
+    *    `minhash_sig_card` kernel in the scan) rides the shuffle, and pairs
+    *    failing the lossless bound min(n1,n2) ≥ JaccardTheta·max(n1,n2) are
+    *    rejected inside the join, before the verify (ExactnessSpec:
+    *    prefiltered ≡ unfiltered).
+    *
+    * CAP-ON NOTE: with [[bucketCap]] > 0 the band stream goes through
+    * [[capBuckets]], whose lazy `localCheckpoint` lets the cap's consumers
+    * (the sizes aggregation and both self-join legs) read one materialized
+    * stream instead of each re-running the scan+signature subtree (PlanSpec
+    * pins the single pass). A band whose bucket the cap dropped does not
+    * count as agreeing, so a pair whose first shared bucket was dropped is
+    * kept at its next shared one, as the embedding route does. On the very
+    * first action AQE may submit the two leaf stages that share the stream
+    * concurrently, so a partition can be computed twice in that race — a
+    * bounded first-run cost, chosen over an eager checkpoint whose
+    * construction-time job would make plan dumps and analysis-only tests
+    * run Spark jobs. A dump with the cap set shows the capped subtree above
+    * `Scan ExistingRDD`; dump with the cap unset (the default) to see the
+    * full lazy pipeline.
     */
   private[graft] def minhashCandidatesPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (bands, rows) = minhashShape(spark)
-    // bucket SELF-JOIN, not collect_set-then-explode² (round 10): the old
-    // form materialized every bucket's doc list in ONE aggregation buffer
-    // and then expanded |bucket|² pairs from a single row — at corpus scale
-    // a degenerate band value (near-empty documents share signatures) is an
-    // unbounded array in one ObjectHashAggregate buffer and a one-row
-    // explosion no executor survives. The join streams the same pair set,
-    // spills gracefully, and AQE's skew handling can split a hot bucket;
-    // it is also the shape the embedding-side candidate route has always
-    // used. shuffle_hash for the usual corpus-sized-sides reason.
-    // size-ratio prefilter (round 11, the int8_keep pattern applied to the
-    // Jaccard family): each doc's distinct-shingle count n_sh (ONE long,
-    // `shingle_card` computed in the scan next to the signature) rides the
-    // (band,bucket) shuffle, and pairs failing the lossless bound
-    // min(n1,n2) ≥ JaccardTheta·max(n1,n2) are rejected INSIDE the bucket
-    // self-join — before the pair distinct and the shingle re-join verify,
-    // which now see only plausibly-above-θ survivors. Same A/B knob as the
-    // embedding-side prefilter; answers are identical either way
-    // (ExactnessSpec's prefiltered ≡ unfiltered test).
     val pf = SimilarityOps.prefilterOn(spark)
     val sigs = minhashSigsOf(Tables.documents(spark, dir), bands * rows,
       withCard = pf)
     val b = bandBuckets(sigs, bands, rows,
       carry = if (pf) Seq("n_sh") else Nil)
-    // oversized-bucket drop ([[bucketCap]], off for the gate). The band
-    // stream is MATERIALIZED once (lazy localCheckpoint — see the CAP-ON
-    // NOTE in the scaladoc) before the cap's consumers: without it, each
-    // self-join leg embeds its own copy of both the band stream and the
-    // (bb,count) aggregation — measured 4 full scan+signature passes
-    // where one suffices (ReuseExchange did not unify the duplicated
-    // subtrees; the probe is pinned in PlanSpec). The materialized stream
-    // is bands × corpus rows of id-width longs — the same width the
-    // (band,bucket) shuffle already carries — and the cost is paid only
-    // when the dial is on.
     val cap = bucketCap(spark)
-    val bc =
-      if (cap > 0) dropOversizedBuckets(b, Seq("bb"), cap, "graft.dedup.bucketcap")
-      else b
-    def side(d: String, ns: String): DataFrame =
-      bc.select($"bb" +: $"doc_id".as(d) +:
-        (if (pf) Seq($"n_sh".as(ns)) else Nil): _*).hint("shuffle_hash")
-    val joined = side("d1", "ns1").join(side("d2", "ns2"), Seq("bb"))
-      .filter($"d1" < $"d2")
-    // sentinel pass-through (round 12, r11 advice): a doc past the fused
-    // kernel's CardCapShingles carries CardUnknown (0) instead of a count
-    // — such rows must never be rejected (the prefilter is optional per
-    // row; the verify stage recomputes true sizes for survivors). 0 can't
-    // collide with a real count (every doc has ≥ 1 shingle).
+    val capped = Option.when(cap > 0)(
+      capBuckets(b, Seq("bb"), cap, "graft.dedup.bucketcap"))
+    val overCap = capped.toSeq.flatMap(_._2.collect().map(_.getStruct(0)))
+      .groupMap(_.getInt(0))(_.getLong(1))
+    def side(i: Int): DataFrame =
+      capped.fold(b)(_._1).select($"bb" +: $"doc_id".as(s"d$i") +: $"bhs".as(s"h$i") +:
+        (if (pf) Seq($"n_sh".as(s"ns$i")) else Nil): _*).hint("shuffle_hash")
+    val first = firstAgreeingBand(bands) { t =>
+      val agree = $"h1"(t) === $"h2"(t)
+      overCap.get(t).fold(agree)(over => agree && !$"h1"(t).isin(over: _*))
+    }
+    // sentinel pass-through: a doc past the fused kernel's CardCapShingles
+    // carries CardUnknown (0) instead of a count — such rows must never be
+    // rejected (the prefilter is optional per row; the verify recomputes
+    // true sizes for survivors). 0 can't collide with a real count (every
+    // doc has ≥ 1 shingle).
     val unknown = lit(graft.expr.MinhashSig.CardUnknown)
-    val kept = if (pf)
-      joined.filter($"ns1" === unknown || $"ns2" === unknown ||
-        least($"ns1", $"ns2") >= lit(JaccardTheta) * greatest($"ns1", $"ns2"))
-    else joined
-    kept.select($"d1", $"d2").distinct()
+    val sizeOk = Option.when(pf)($"ns1" === unknown || $"ns2" === unknown ||
+      least($"ns1", $"ns2") >= lit(JaccardTheta) * greatest($"ns1", $"ns2"))
+    // one filter, cheapest test first: split over several filters, the
+    // later ones are pushed into the join condition ahead of the earlier
+    side(1).join(side(2), Seq("bb"))
+      .filter((Seq($"d1" < $"d2") ++ sizeOk :+ ($"bb.band" === first)).reduce(_ && _))
+      .select($"d1", $"d2")
   }
 
   /** `graft.dedup.bucketcap` (default 0 = off): before the candidate
@@ -382,8 +375,14 @@ object DedupOps extends QueryPack {
 
   /** The oversized-bucket drop behind BOTH cap dials
     * (`graft.dedup.bucketcap` here, `graft.sim.bucketcap.<key>` in
-    * [[SimilarityOps.lshCandidateIds]] through [[capBuckets]]) — one
-    * implementation so the two cannot silently diverge (round-13 review).
+    * [[SimilarityOps.lshCandidateIds]]) — one implementation so the two
+    * cannot silently diverge. Returns the rows of `bucketed` whose bucket
+    * holds at most `cap` of the `counted` rows (a bucket with no counted
+    * row is dropped too), and the over-cap `keys`, one row per dropped
+    * bucket, read from the materialized sizes. The banded embedding
+    * self-join counts base slots, not multi-probe slots, and hands the
+    * over-cap keys to `lsh_first_shared`; the MinHash candidate join uses
+    * them so a dropped band does not count as agreeing.
     * The bucketed stream is
     * materialized ONCE through a `localCheckpoint` so the cap's
     * consumers (the sizes aggregation, the semi-join leg, and every
@@ -435,18 +434,6 @@ object DedupOps extends QueryPack {
     * query proceeds: excising a dominant hot cluster is the dial's
     * documented purpose; the warning makes the magnitude visible instead
     * of silent.
-    */
-  private[graft] def dropOversizedBuckets(
-      bucketed: DataFrame, keys: Seq[String], cap: Int, dial: String): DataFrame =
-    capBuckets(bucketed, keys, cap, dial)._1
-
-  /** [[dropOversizedBuckets]] with the bucket sizes taken over the
-    * `counted` rows only, also returning the over-cap `keys` (one row per
-    * dropped bucket, read from the materialized sizes). The banded
-    * embedding self-join counts base slots, not multi-probe slots, and
-    * hands the over-cap keys to `lsh_first_shared`. A row of `bucketed`
-    * survives iff its bucket holds at most `cap` counted rows; a bucket
-    * with no counted row is dropped too.
     */
   private[graft] def capBuckets(bucketed: DataFrame, keys: Seq[String], cap: Int,
       dial: String, counted: Column = lit(true)): (DataFrame, DataFrame) = {
@@ -528,84 +515,78 @@ object DedupOps extends QueryPack {
       sizes.filter(bn > cap).select(keys.map(col): _*))
   }
 
-  /** `graft.dedup.hashverify` (default on): carry 8-byte xxhash64 shingle
-    * keys instead of shingle STRINGS through the verify stage's shuffles
-    * (round 12, r11 verdict #2 — the strings were the widest payload still
-    * crossing a shuffle on the dedup path). Off = the legacy string-keyed
-    * verify, kept as the A/B control and the collision-free semantic
-    * reference (ExactnessSpec asserts the two paths emit identical rows).
+  /** `graft.dedup.hashverify` (default on): verify over each candidate
+    * document's sorted set of 8-byte xxhash64 shingle keys (`shingle_set`)
+    * instead of its set of shingle STRINGS. Off = the string-set verify,
+    * kept as the A/B control and the collision-free semantic reference
+    * (ExactnessSpec asserts the two paths emit identical rows).
     */
   private[graft] def hashVerify(spark: SparkSession): Boolean =
     graft.core.Profile.boolKnob(spark, "graft.dedup.hashverify", default = true)
 
-  /** Exact Jaccard stats (common, n1, n2, jaccard) computed for the given
-    * candidate (d1, d2) pairs only: shingle sets are re-derived for the
-    * candidate doc-id slice alone (broadcast semi-join against the narrow
-    * shingle stream), never for the full corpus.
+  /** Exact Jaccard stats (common, n1, n2, jaccard) for the given candidate
+    * (d1, d2) pairs only. Each candidate document gets ONE row, its
+    * distinct shingle set, computed from a re-scan cut to the candidate
+    * doc-id slice (a broadcast semi-join on ids), never for the full
+    * corpus. A pair joins the two sets by id and intersects them:
+    * common = |s1 ∩ s2|, n = |s|. That replaces a row per shingle, with its
+    * distinct, per-document size and (pair × shingle) join, by a row per
+    * document and a row per pair.
     *
-    * With [[hashVerify]] on (default), the slice is keyed by
-    * `xxhash64(shingle)` — 8 bytes — below its distinct, so every verify
-    * shuffle (slice distinct, sizes groupBy, both legs of the common join)
-    * carries fixed-width longs where it carried ~15–30 B strings. Both
-    * n1/n2 and common then count hash-distinct sets: Jaccard drifts from
-    * the string-set value only if xxhash64 collides among a candidate
-    * document's shingles (~n²/2^64 per doc — the same accepted class as
-    * the ShingleCard note), and the drift direction is symmetric (a
-    * within-doc collision shrinks n, a cross-doc collision grows common).
-    * CONSISTENCY BONUS that closes the r11 advice nit: the size-ratio
-    * prefilter's n_sh is hash-distinct (ShingleCard, same seed-42
-    * xxhash64), so prefilter bound and verify sizes now count the SAME
-    * sets — the lossless bound holds exactly even under a collision,
-    * instead of holding only up to string-vs-hash count skew.
+    * With [[hashVerify]] on (default), a set is `shingle_set`'s sorted
+    * xxhash64 keys — 8 bytes a shingle where strings are ~15–30 B. Jaccard
+    * then drifts from the string-set value only if xxhash64 collides among
+    * a candidate document's shingles (~n²/2^64 per doc — the same accepted
+    * class as the ShingleCard note), and the prefilter's n_sh counts the
+    * SAME hash sets, so the lossless size bound holds exactly even under a
+    * collision.
+    *
+    * A document with null text has no shingles, so it yields no pair.
     */
   private def jaccardStats(spark: SparkSession, dir: String,
       candidates: DataFrame): DataFrame = {
     import spark.implicits._
+    // candidate-slice only; localCheckpoint over .cache() for the same
+    // ContextCleaner-managed lifetime as minhashCandidates. Lazy: the
+    // first join leg materializes the sets, the second reads the persisted
+    // blocks, so the slice scan runs once per pass (LazyCheckpointSpec)
+    val sets = candidateSets(spark, dir, candidates).localCheckpoint(false)
+    def side(i: Int): DataFrame = sets.select($"doc_id".as(s"d$i"), $"set".as(s"s$i"))
+    // NO broadcast hint on the candidate PAIR set: it is
+    // candidate-proportional, and a forced broadcast of it measured fatal
+    // on a boilerplate corpus at the 16x1 recall-total shape (37 M pairs →
+    // notEnoughMemoryToBuildAndBroadcastTableError on the driver). AQE
+    // broadcasts these joins at runtime when the sides are genuinely
+    // small, and shuffles them when they aren't; the id-width candDocs
+    // semi-join in candidateSets keeps its hint because it IS the slice
+    // contract (ids only, never pair-shaped).
+    // the sizes come out of ONE generator row: computed in a Project, they
+    // would be inlined into the consumers' jaccard filter, which is pushed
+    // into the join condition, so every kept pair would intersect twice
+    candidates.join(side(1), Seq("d1")).join(side(2), Seq("d2"))
+      .select($"d1", $"d2", inline(array(struct(
+        size(array_intersect($"s1", $"s2")).cast("long").as("common"),
+        size($"s1").cast("long").as("n1"), size($"s2").cast("long").as("n2")))))
+      .withColumn("jaccard", $"common" / ($"n1" + $"n2" - $"common"))
+  }
+
+  /** (doc_id, set): the distinct shingle set of each document named in
+    * `candidates` with non-null text — [[jaccardStats]]' slice before its
+    * checkpoint, exposed so plan checks and dumps can see the scan the
+    * checkpoint otherwise collapses to `Scan ExistingRDD`.
+    */
+  private[graft] def candidateSets(spark: SparkSession, dir: String,
+      candidates: DataFrame): DataFrame = {
+    import spark.implicits._
     val candDocs = candidates
       .select(explode(array($"d1", $"d2")).as("doc_id")).distinct()
-    // hash ABOVE the semi-join: only the candidate slice pays the
-    // per-shingle xxhash64, not the whole corpus stream (the semi-join's
-    // condition needs doc_id alone, so the slice cut comes first)
-    val sliced = shingledRaw(spark, dir)
+    val set =
+      if (hashVerify(spark)) call_function("shingle_set", normText)
+      else array_distinct(call_function("word_shingles", split(normText, " ")))
+    Tables.documents(spark, dir)
+      .where($"text".isNotNull)
       .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-    // per-doc set size as a WINDOW computed INSIDE the checkpointed slice
-    // (round 21): the previous shape aggregated sizes separately and
-    // joined them onto the per-pair stats twice — one aggregation exchange
-    // plus two joins (each an AQE stage + broadcast build). Carrying `n`
-    // on the slice rows through the intersection joins costs one
-    // exchange+sort on doc_id, runs ONCE in the checkpoint
-    // materialization (both join legs read the persisted blocks), and
-    // deletes all three; output identical (n is constant per doc_id
-    // group; min() in the pair agg just picks it up).
-    // Slice-proportional like everything here, so scale posture unchanged.
-    val shN = (if (hashVerify(spark))
-        sliced.select($"doc_id", xxhash64($"shingle").as("shingle"))
-      else sliced)
-      .distinct()
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
-      // candidate-slice only; localCheckpoint over .cache() for the same
-      // ContextCleaner-managed lifetime as minhashCandidates above. LAZY
-      // since round 22 (was eager), same reasoning and A/B as there: the
-      // first join leg materializes the slice, the second reads the
-      // persisted blocks — one construction job less per pass, slice
-      // subtree still computed exactly once (profiled).
-      .localCheckpoint(false)
-    // NO broadcast hint on the candidate PAIR set (round 11): it is
-    // candidate-proportional, and a forced broadcast of it is the same
-    // pathology class as the r10 blob broadcast — measured fatal on a
-    // boilerplate corpus at the 16x1 recall-total shape (37 M surviving
-    // pairs → notEnoughMemoryToBuildAndBroadcastTableError on the
-    // driver). AQE converts these joins to broadcast at runtime whenever
-    // the sides are genuinely small (the gate corpus), and shuffles them
-    // when they aren't — the id-width candDocs semi-join above keeps its
-    // hint because it IS the slice contract (ids only, never
-    // pair-shaped).
-    candidates
-      .join(shN.select($"doc_id".as("d1"), $"shingle", $"n".as("n1")), Seq("d1"))
-      .join(shN.select($"doc_id".as("d2"), $"shingle", $"n".as("n2")), Seq("d2", "shingle"))
-      .groupBy($"d1", $"d2")
-      .agg(count(lit(1)).as("common"), min($"n1").as("n1"), min($"n2").as("n2"))
-      .withColumn("jaccard", $"common" / ($"n1" + $"n2" - $"common"))
+      .select($"doc_id", set.as("set"))
   }
 
   /** 64-bit SimHash signatures as a LONG column over any frame with
@@ -691,11 +672,8 @@ object DedupOps extends QueryPack {
             shiftright($"sig", 16 * t).bitwiseAND(lit(0xFFFFL)).as("bv"))
         }: _*)).as("tb"))
       .select($"doc_id", $"sig", $"tb.band", $"tb.bv")
-    // a pair agreeing on several bands meets once per band: keep it only
-    // at its first agreeing band, so each pair leaves the join once
-    def agree(t: Int) = shiftright($"s1".bitwiseXOR($"s2"), 16 * t).bitwiseAND(lit(0xFFFFL)) === 0
-    val firstBand =
-      (1 until SimhashBands).foldLeft(when(agree(0), 0))((w, t) => w.when(agree(t), t))
+    val firstBand = firstAgreeingBand(SimhashBands)(t =>
+      shiftright($"s1".bitwiseXOR($"s2"), 16 * t).bitwiseAND(lit(0xFFFFL)) === 0)
     banded.select($"band", $"bv", $"doc_id".as("d1"), $"sig".as("s1"))
       .join(banded.select($"band", $"bv", $"doc_id".as("d2"), $"sig".as("s2")),
         Seq("band", "bv"))

@@ -136,7 +136,7 @@ object SimilarityOps extends QueryPack {
     * vectors share every sign bit) while the background spreads, and the
     * cap separates cleanly. Since round 15 the precondition is also a
     * RUNTIME tripwire, not just this paragraph: the shared
-    * [[DedupOps.dropOversizedBuckets]] helper require-fails when the cap
+    * [[DedupOps.capBuckets]] helper require-fails when the cap
     * would empty the index — ≥ 99% of buckets over the cap, or ≥ 99% of
     * bucketed rows over it without the few-hot-buckets signature — and
     * warns when over-cap buckets hold ≥ 50% of the rows, so the measured
@@ -246,7 +246,8 @@ object SimilarityOps extends QueryPack {
     * from the higher), so every pair leaves the join once and no pair
     * distinct (a 64 MB Tungsten page per task) runs. A base–base row is
     * canonical only as v1 < v2; unprobed, every row is base–base, so the
-    * cheaper `<` runs first.
+    * cheaper `<` runs first and `lsh_first_shared` is passed its result as
+    * `true` rather than testing it again.
     *
     * `capKey` names the `graft.sim.bucketcap.<key>` dial ([[simBucketCap]]):
     * the shared [[DedupOps.capBuckets]] helper counts base slots per
@@ -315,8 +316,9 @@ object SimilarityOps extends QueryPack {
     val (left, right, slot) =
       if (probeBits == 0) (side(1, stream), side(2, stream), col("tbl"))
       else (side(1, stream, col("pos").as("pos1")), side(2, stream.filter(isBase)), col("pos1"))
-    val canonical = call_function("lsh_first_shared", col("k1"), col("k2"), v1 < v2,
-      lit(probeBits), typedLit(overCap)) === slot
+    // unprobed, the `<` pre-test below has already established v1 < v2
+    val canonical = call_function("lsh_first_shared", col("k1"), col("k2"),
+      if (probeBits == 0) lit(true) else v1 < v2, lit(probeBits), typedLit(overCap)) === slot
     left.join(right, keys)
       .filter((Option.when(probeBits == 0)(v1 < v2) ++ Seq(canonical) ++ test).reduce(_ && _))
   }

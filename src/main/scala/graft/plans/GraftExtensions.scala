@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshBuckets, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, SimhashSig}
+import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshBuckets, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, ShingleSet, SimhashSig}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -58,6 +58,8 @@ object GraftFunctions {
       args => MinhashSigCard(args.head, intArg("minhash_sig_card", "numHashes", args(1)))),
     fn("shingle_card", classOf[ShingleCard], 1, "(normalized_text)")(
       args => ShingleCard(args.head)),
+    fn("shingle_set", classOf[ShingleSet], 1, "(normalized_text)")(
+      args => ShingleSet(args.head)),
     fn("simhash_sig", classOf[SimhashSig], 1, "(normalized_text)")(
       args => SimhashSig(args.head)),
     fn("int8_enc", classOf[Int8Enc], 1, "(embedding)")(args => Int8Enc(args.head)),

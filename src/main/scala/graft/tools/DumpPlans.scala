@@ -2,13 +2,30 @@ package graft.tools
 
 import graft.core.Session
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump the formatted physical plan of every bench headline
   * query to PLANS.md in the working directory, so plan shapes are
   * reviewable without running Spark. Run from the checkout root:
-  * `sbt "runMain graft.tools.DumpPlans"`.
+  * `sbt "runMain graft.tools.DumpPlans"`. Plans are written through
+  * [[mask]], so a regenerated file differs only where a plan did.
   */
 object DumpPlans {
+  /** `plan` with what varies between runs, or moves with unrelated edits,
+    * masked: expression and exchange plan ids (`#123L` → `#_L`,
+    * `plan_id=742` → `plan_id=_`), object hash codes (`TopKAgg@4c255e8` →
+    * `TopKAgg@_`), and the RDD id and source line of a `localCheckpoint`
+    * call site (`[44] at localCheckpoint at DedupOps.scala:577` →
+    * `[_] at localCheckpoint at DedupOps.scala:_`).
+    */
+  def mask(plan: String): String = plan
+    .replaceAll("#\\d+", "#_")
+    .replaceAll("plan_id=\\d+", "plan_id=_")
+    .replaceAll("(\\w)@[0-9a-f]+\\b", "$1@_")
+    .replaceAll("\\[\\d+\\] at localCheckpoint at (\\w+\\.scala):\\d+",
+      "[_] at localCheckpoint at $1:_")
+
   def main(args: Array[String]): Unit = {
     val spark = Session.local(appName = "dump-plans")
     spark.conf.set("graft.sums.exact", "false")
@@ -20,6 +37,8 @@ object DumpPlans {
     sb.append("`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin` for\n")
     sb.append("dims, partial→final `HashAggregate` pairs, `TakeOrderedAndProject`\n")
     sb.append("for top-k, and `WholeStageCodegen` subtree ids.\n")
+    def section(title: String, df: DataFrame): Unit = sb.append(s"\n## $title\n\n```\n" +
+      mask(df.queryExecution.explainString(FormattedMode)) + "```\n")
     // headline set plus the round-3 operators whose plan SHAPE is the
     // point (map-only quantization, bounded sketch shuffle, aggregation-
     // only funnel, model-join LM scoring, salt-transparent agg)
@@ -29,18 +48,16 @@ object DumpPlans {
       // round 5: shuffle-free IVF cell assignment (per-row argmax over the
       // inline centroid literal — no hashpartitioning(vec_id) anywhere)
       "sim_ann_ivf")
-    (graft.Bench.headline ++ extras).foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
-    }
-    // dedup_minhash_lsh truncates lineage at an eager localCheckpoint (the
-    // candidate pair set), so its plan above shows `Scan ExistingRDD` where
-    // the signature/banding stages ran — dump that subtree separately.
-    val candPlan = graft.functions.DedupOps.minhashCandidatesPlan(spark, dir)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    sb.append(s"\n## dedup_minhash_lsh — candidate subtree above the checkpoint boundary\n\n```\n$candPlan```\n")
+    (graft.Bench.headline ++ extras).foreach(name =>
+      section(name, graft.SparkEntry.queries(name)(spark, dir)))
+    // dedup_minhash_lsh truncates lineage at two lazy localCheckpoints (the
+    // candidate pair set and the candidate documents' shingle sets), so its
+    // plan above shows `Scan ExistingRDD` where the signature/banding and
+    // the set stages ran — dump those subtrees separately.
+    val cands = graft.functions.DedupOps.minhashCandidatesPlan(spark, dir)
+    section("dedup_minhash_lsh — candidate subtree above the checkpoint boundary", cands)
+    section("dedup_minhash_lsh — candidate-set slice above the checkpoint boundary",
+      graft.functions.DedupOps.candidateSets(spark, dir, cands))
     // the banded (deployment) routes, iterated from [[graft.Bench.banded]]
     // so this dump can never drift from the set the bench times (round 21
     // — previously 3 of the 4 were hardcoded and dedup_ngram_jaccard's
@@ -51,11 +68,9 @@ object DumpPlans {
     // form on sim_nearest_same_label (round 10) — nothing
     // pair-proportional exchanges.
     spark.conf.set("graft.sim.exact", "false")
-    for (name <- graft.Bench.banded) {
-      val plan = graft.SparkEntry.queries(name)(spark, dir)
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name — banded route (graft.sim.exact=false)\n\n```\n$plan```\n")
-    }
+    for (name <- graft.Bench.banded)
+      section(s"$name — banded route (graft.sim.exact=false)",
+        graft.SparkEntry.queries(name)(spark, dir))
     spark.conf.unset("graft.sim.exact")
     val out = Paths.get("PLANS.md").toAbsolutePath
     Files.writeString(out, sb.toString)

@@ -84,6 +84,26 @@ class DegenerateDataSpec extends SparkSpec {
       finite(name, f(spark, dir))
   }
 
+  test("a null-text document yields no Jaccard pair on any route") {
+    // null text signs like empty text, so the null-text docs are band
+    // candidates of every empty doc and of each other; they have no
+    // shingles, so no route may pair them
+    val d = java.nio.file.Files.createTempDirectory("graft_nulltext").toString
+    Seq((0L, null.asInstanceOf[String]), (1L, ""), (2L, null.asInstanceOf[String]), (3L, ""),
+        (4L, "the quick brown fox jumps"), (5L, "the quick brown fox jumps over"))
+      .map { case (id, t) => (id, t, "en", "web", Option(t).map(_.length.toLong).getOrElse(0L)) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    def pairs(df: DataFrame) = df.select($"d1", $"d2").as[(Long, Long)].collect().toSet
+    assert(Set((0L, 1L), (0L, 2L)).subsetOf(pairs(DedupOps.minhashCandidatesPlan(spark, d))))
+    val want = Set((1L, 3L), (4L, 5L))
+    assert(pairs(DedupOps.minhashLsh(spark, d)) == want)
+    assert(pairs(DedupOps.ngramJaccard(spark, d)) == want)
+    spark.conf.set("graft.sim.exact", "false")
+    try assert(pairs(DedupOps.ngramJaccard(spark, d)) == want)
+    finally spark.conf.unset("graft.sim.exact")
+  }
+
   test("multimodal operators complete on degenerate documents (empty payloads)") {
     for ((name, f) <- Seq[(String, (SparkSession, String) => DataFrame)](
         "mm_payload_stats" -> (MultimodalOps.payloadStats _),

@@ -244,39 +244,44 @@ class ExactnessSpec extends SparkSpec {
     // bucket both docs share holds ≤ cap docs (one small shared band is
     // enough; only pairs whose every collision is degenerate drop).
     // Prefilter off so the reference is purely banding + cap semantics.
+    // Two shapes: at 16x1, unlike the gate's 8x2, pairs whose first shared
+    // bucket is over the cap and a later one is not occur, so the join's
+    // first-agreeing-band rule must skip dropped bands to keep them.
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = tools.Corpora.generateBoilerplateDocs(spark, 1000)
     val cap = 8
     def pairsOf: Set[(Long, Long)] = DedupOps.minhashCandidatesPlan(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("graft.sim.prefilter", "false")
-    try {
+    for ((bands, rows) <- Seq((DedupOps.NumBands, DedupOps.BandRows), (16, 1))) try {
+      spark.conf.set("graft.sim.prefilter", "false")
+      spark.conf.set("graft.sim.bands.minhash", s"${bands}x$rows")
       val uncapped = pairsOf
       spark.conf.set("graft.dedup.bucketcap", cap.toString)
       val capped = pairsOf
       val sigs = DedupOps.minhashSigsOf(
-        graft.core.Tables.documents(spark, dir), DedupOps.NumHashes)
+        graft.core.Tables.documents(spark, dir), bands * rows)
       val membership = sigs.select($"doc_id", explode(array(
-          (0 until DedupOps.NumBands).map(b => struct(lit(b).as("band"),
-            xxhash64((0 until DedupOps.BandRows)
-              .map(r => $"mh_${b * DedupOps.BandRows + r}"): _*).as("bh"))): _*)).as("bb"))
+          (0 until bands).map(b => struct(lit(b).as("band"),
+            xxhash64((0 until rows)
+              .map(r => $"mh_${b * rows + r}"): _*).as("bh"))): _*)).as("bb"))
         .select($"doc_id", $"bb".cast("string").as("bk"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
         .groupBy(_._2).view.mapValues(_.map(_._1).sorted.toSeq).toMap
       def pairsFrom(buckets: Iterable[Seq[Long]]): Set[(Long, Long)] =
         buckets.flatMap(ds => for (a <- ds; b <- ds if a < b) yield (a, b)).toSet
       assert(uncapped == pairsFrom(membership.values),
-        "reference banding disagrees with the candidate plan")
+        s"${bands}x$rows: reference banding disagrees with the candidate plan")
       val expected = pairsFrom(membership.values.filter(_.size <= cap))
       assert(capped == expected,
-        s"missing=${expected -- capped} spurious=${capped -- expected}")
+        s"${bands}x$rows: missing=${expected -- capped} spurious=${capped -- expected}")
       val maxBucket = membership.values.map(_.size).max
       assert(capped.size < uncapped.size,
-        s"cap=$cap never bit: ${uncapped.size} pairs uncapped vs " +
+        s"cap=$cap never bit at ${bands}x$rows: ${uncapped.size} pairs uncapped vs " +
           s"${capped.size} capped, max bucket $maxBucket docs")
     } finally {
       spark.conf.unset("graft.sim.prefilter")
+      spark.conf.unset("graft.sim.bands.minhash")
       spark.conf.unset("graft.dedup.bucketcap")
     }
   }
@@ -341,7 +346,7 @@ class ExactnessSpec extends SparkSpec {
     // only 2^planesPerTable buckets per table, so at 8×4 with 20k vectors
     // every bucket holds ~1250 and a cap of 512 drops ALL of them — the
     // candidate index silently emptied and a dedup would report "no
-    // near-dups" on a corpus full of them. The shared dropOversizedBuckets
+    // near-dups" on a corpus full of them. The shared capBuckets
     // helper must now require-fail on exactly that shape (its sizes
     // aggregation already walks the per-bucket counts, so the tripwire is
     // one reused pass), naming the dial and the shape rule.
@@ -390,7 +395,7 @@ class ExactnessSpec extends SparkSpec {
     val skewed = bucketFrame((0 until 90).map(b => (b, 1000L)) ++
       (90 until 100).map(b => (b, 1L)))
     val e = intercept[IllegalArgumentException] {
-      DedupOps.dropOversizedBuckets(skewed, Seq("bucket"), 10, "graft.sim.bucketcap.adhoc")
+      DedupOps.capBuckets(skewed, Seq("bucket"), 10, "graft.sim.bucketcap.adhoc")._1
     }
     assert(e.getMessage.contains("silently"), e.getMessage)
     // 2 of 100 buckets hold 5000 rows (over cap), 98 hold 1 row: over
@@ -398,8 +403,8 @@ class ExactnessSpec extends SparkSpec {
     // hot-cluster signature MUST run, keeping exactly the 98 small rows
     val hot = bucketFrame((0 until 2).map(b => (b, 5000L)) ++
       (2 until 100).map(b => (b + 1000, 1L)))
-    val kept = DedupOps.dropOversizedBuckets(hot, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc")
+    val kept = DedupOps.capBuckets(hot, Seq("bucket"), 10,
+      "graft.sim.bucketcap.adhoc")._1
     assert(kept.count() == 98L, "hot-cluster corpus must keep its small buckets")
     // MULTI-cluster hot corpus (round-16 review, 2nd pass): 13 of 100
     // buckets hold 1000 rows each — over mass 99.3% AND over-cap buckets
@@ -409,8 +414,8 @@ class ExactnessSpec extends SparkSpec {
     // hatch keeps it running with the 87 background rows intact.
     val multiHot = bucketFrame((0 until 13).map(b => (b, 1000L)) ++
       (13 until 100).map(b => (b + 1000, 1L)))
-    val keptMulti = DedupOps.dropOversizedBuckets(multiHot, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc")
+    val keptMulti = DedupOps.capBuckets(multiHot, Seq("bucket"), 10,
+      "graft.sim.bucketcap.adhoc")._1
     assert(keptMulti.count() == 87L,
       "multi-cluster hot corpus must keep its background buckets")
     // BOUNDARY of the majority hatch (r17 advice #3): with mass ≥99% gone,
@@ -427,8 +432,8 @@ class ExactnessSpec extends SparkSpec {
     // (≥50% of mass dropped) covers it — asserted, not just claimed
     // (r17 review #2)
     withDedupWarnCapture { captured =>
-      assert(DedupOps.dropOversizedBuckets(fortyOver, Seq("bucket"), 10,
-        "graft.sim.bucketcap.adhoc").count() == 60L,
+      assert(DedupOps.capBuckets(fortyOver, Seq("bucket"), 10,
+        "graft.sim.bucketcap.adhoc")._1.count() == 60L,
         "40%-of-buckets-over with 99%+ mass gone is the documented " +
           "many-cluster tradeoff: it must run, keeping the background")
       assert(captured.synchronized(captured.toList)
@@ -438,14 +443,14 @@ class ExactnessSpec extends SparkSpec {
     }
     val halfOver = bucketFrame((0 until 50).map(b => (b, 1000L)) ++
       (50 until 100).map(b => (b + 1000, 1L)))
-    assert(DedupOps.dropOversizedBuckets(halfOver, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc").count() == 50L,
+    assert(DedupOps.capBuckets(halfOver, Seq("bucket"), 10,
+      "graft.sim.bucketcap.adhoc")._1.count() == 50L,
       "exactly half the buckets over is not a strict majority: must run")
     val majorityOver = bucketFrame((0 until 51).map(b => (b, 1000L)) ++
       (51 until 100).map(b => (b + 1000, 1L)))
     val eMaj = intercept[IllegalArgumentException] {
-      DedupOps.dropOversizedBuckets(majorityOver, Seq("bucket"), 10,
-        "graft.sim.bucketcap.adhoc")
+      DedupOps.capBuckets(majorityOver, Seq("bucket"), 10,
+        "graft.sim.bucketcap.adhoc")._1
     }
     assert(eMaj.getMessage.contains("silently"), eMaj.getMessage)
   }
@@ -609,7 +614,7 @@ class ExactnessSpec extends SparkSpec {
     // 37M pairs on a boilerplate corpus (SCALE.md round 11). The pair and
     // sizes joins must stay hint-free (AQE decides at runtime). The one
     // legitimate hint — the id-width candDocs semi-join — sits BELOW the
-    // shCand localCheckpoint and never surfaces in this plan, so any
+    // sets localCheckpoint and never surfaces in this plan, so any
     // broadcast ResolvedHint visible here is a pair-proportional
     // re-introduction by construction.
     val df = withCandidatePath(DedupOps.ngramJaccard(spark, sfDir))

@@ -4,11 +4,11 @@ import graft.core.Tables
 import graft.functions.DedupOps
 
 /** The lazy `localCheckpoint`s on the MinHash route (the candidate pair set
-  * in `minhashCandidates`, the verify slice `shN` in `jaccardStats`)
+  * in `minhashCandidates`, the per-document shingle sets in `jaccardStats`)
   * compute their upstream ONCE per action: the first consumer materializes
   * the blocks, every later consumer reads them. Each lost guarantee shows
-  * as a repeated stage: the signature/band map stage, the slice scan, or
-  * the slice's per-document window.
+  * as a repeated stage: the signature/band map stage or the slice's set
+  * stage.
   */
 class LazyCheckpointSpec extends SparkSpec {
 
@@ -26,16 +26,18 @@ class LazyCheckpointSpec extends SparkSpec {
           s.taskMetrics.inputMetrics.recordsRead,
           s.taskMetrics.shuffleReadMetrics.recordsRead,
           s.taskMetrics.shuffleWriteMetrics.recordsWritten)).mkString("\n")
-        // two corpus scans: signatures, and the candidate slice's shingles
+        // two corpus scans: signatures, and the candidate slice's sets
         assert(stages.count(isScan) == 2, show)
         // the band stream is NumBands rows per document
         val bandRows = DedupOps.NumBands * Tables.documents(spark, sfDir).count()
         assert(stages.count(s => isScan(s) &&
           s.taskMetrics.shuffleWriteMetrics.recordsWritten == bandRows) == 1, show)
-        // the slice window reads its exchange once; the second join leg
-        // reads the checkpointed blocks instead
-        assert(stages.count(s => s.rddInfos.exists(_.scope.exists(_.name == "Window")) &&
-          s.taskMetrics.shuffleReadMetrics.recordsRead > 0) == 1, show)
+        // the slice's set stage reads documents once; the second join leg
+        // reads the checkpointed sets instead
+        val docs = Tables.documents(spark, sfDir).count()
+        assert(stages.count(s => isScan(s) &&
+          s.taskMetrics.shuffleWriteMetrics.recordsWritten != bandRows &&
+          s.taskMetrics.inputMetrics.recordsRead == docs) == 1, show)
       } finally spark.conf.unset("graft.sim.exact")
     }
 }

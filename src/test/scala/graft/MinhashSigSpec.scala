@@ -106,6 +106,42 @@ class MinhashSigSpec extends SparkSpec {
     ).toDF("doc_id", "text"))
   }
 
+  test("shingle_set is sorted, distinct, the composed hash set, of size shingle_card") {
+    graft.plans.GraftFunctions.install(spark)
+    def check(docs: org.apache.spark.sql.DataFrame): Unit = {
+      val norm = regexp_replace(trim(lower($"text")), "\\s+", " ")
+      val rows = docs.select($"doc_id",
+        call_function("shingle_set", norm),
+        array_sort(array_distinct(transform(
+          call_function("word_shingles", split(norm, " ")), s => xxhash64(s)))),
+        call_function("shingle_card", norm)).collect()
+      assert(rows.exists(!_.isNullAt(1)))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        if (r.isNullAt(1)) assert(r.isNullAt(2) && r.isNullAt(3), s"doc $id: null text")
+        else {
+          val set = r.getSeq[Long](1)
+          assert(set == set.sorted && set == set.distinct, s"doc $id: $set")
+          assert(set == r.getSeq[Long](2), s"doc $id: composed ${r.getSeq[Long](2)}")
+          assert(set.size.toLong == r.getLong(3), s"doc $id: card ${r.getLong(3)}")
+        }
+      }
+    }
+    check(graft.core.Tables.documents(spark, sfDir).select($"doc_id", $"text"))
+    check(Seq(
+      (1L, ""),
+      (2L, "one"),
+      (3L, "one two"),
+      (4L, "one two three"),
+      (5L, "one two three four"),
+      (6L, "  leading and   multiple   spaces  "),
+      (7L, "\ttab\tseparated\ttokens\t"),
+      (8L, "ünïcödé tökens über ällés"),
+      (9L, Seq.fill(500)("repeat me often").mkString(" ")),
+      (10L, null.asInstanceOf[String])
+    ).toDF("doc_id", "text"))
+  }
+
   test("minhash_sig_card fuses minhash_sig + shingle_card bit-for-bit") {
     // the deployed prefiltered scan uses the fused kernel; pin it against
     // the two standalone kernels it fuses, on raw (unnormalized) strings —

@@ -104,12 +104,50 @@ class PlanSpec extends SparkSpec {
   }
 
   test("minhash signature aggregation is map-combined (objHashAggregate or partial min)") {
-    // the corpus-wide signature groupBy must run partial→final so the only
-    // full shuffle carries partial signatures, not exploded shingles
-    val plan = graft.functions.DedupOps.minhashLsh(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    // the composed signature groupBy (the reference the minhash_sig kernel
+    // is pinned against; the deployed route runs no signature aggregation)
+    // must run partial→final so its shuffle carries partial signatures,
+    // not exploded shingles
+    import graft.functions.DedupOps
+    val plan = planOf(DedupOps.minhashSignatures(
+      DedupOps.shingledOf(Tables.documents(spark, sfDir)), DedupOps.NumHashes))
     assert(plan.contains("partial_min") || plan.contains("partial_"),
       s"expected map-side partial min for signatures:\n$plan")
+  }
+
+  test("the MinHash routes keep each pair once and verify per document") {
+    // dedup_minhash_lsh and banded dedup_ngram_jaccard: no pair distinct
+    // (a HashAggregate keyed on exactly (d1, d2)), no per-document window
+    // and no shingle explode — in the candidate subtree, the candidate-set
+    // slice, or the query above both checkpoints
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.functions.DedupOps
+    object Plans extends AdaptiveSparkPlanHelper
+    def offenders(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      df.collect() // AQE-final plan
+      Plans.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("d1", "d2") => a
+        case w: WindowExec => w
+        case g: GenerateExec if g.generator.toString.contains("shingle") => g
+      }.map(_.simpleString(200))
+    }
+    for ((name, exact) <- Seq("dedup_minhash_lsh" -> "true", "dedup_ngram_jaccard" -> "false")) {
+      spark.conf.set("graft.sim.exact", exact)
+      try {
+        val query = graft.SparkEntry.queries(name)(spark, sfDir)
+        val cands = DedupOps.minhashCandidatesPlan(spark, sfDir)
+        for ((part, df) <- Seq("query" -> query,
+            "candidates" -> cands, "sets" -> DedupOps.candidateSets(spark, sfDir, cands)))
+          assert(offenders(df).isEmpty, s"$name $part: ${offenders(df)}")
+        // and each pair's sets are intersected once, not again in a join
+        // condition the jaccard filter was pushed into
+        val finalPlan = query.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+        assert("array_intersect".r.findAllIn(finalPlan).length == 1, s"$name:\n$finalPlan")
+      } finally spark.conf.unset("graft.sim.exact")
+    }
   }
 
   test("percentile sketch aggregates partial then final (mergeable at scale)") {
@@ -176,6 +214,25 @@ class PlanSpec extends SparkSpec {
     } finally {
       spark.conf.unset("graft.sim.exact")
       spark.conf.unset("graft.sim.bucketcap.adhoc")
+    }
+  }
+
+  test("the unprobed banded join tests v1 < v2 once") {
+    // unprobed, the cheap `<` pre-test establishes the order, so
+    // lsh_first_shared is passed `true`; probed, the order is its argument
+    import org.apache.spark.sql.catalyst.expressions.LessThan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    for (bits <- Seq(0, 2)) {
+      val df = graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir, 8, 4, probeBits = bits)
+      df.collect()
+      val conds = Plans.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec if j.condition.exists(_.toString.contains("lsh_first_shared")) =>
+          j.condition.get
+      }
+      assert(conds.size == 1, s"bits=$bits: $conds")
+      assert(conds.head.collect { case l: LessThan => l }.size == 1, s"bits=$bits: ${conds.head}")
     }
   }
 

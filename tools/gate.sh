@@ -6,7 +6,8 @@
 # the whole contract. This script runs the contract end-to-end at the
 # fast scale factor and fails loudly on ANY regression:
 #   0. perfbench's own unit tests (the benchmark harness: stats, guard,
-#      oracle compare)
+#      oracle compare), and its JVM program compiled against src/main, so
+#      a renamed engine entry point fails here, not in the benchmark run
 #   1. sbt test            — every spec suite incl. AnalysisGuardSpec
 #                            (schema drift guard + all-query analysis
 #                            sweep); live counts echoed from sbt output
@@ -30,6 +31,20 @@ if ! PYLOG="$(PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbenc
   echo "GATE FAILED: perfbench unit tests"; exit 1
 fi
 echo "$PYLOG" | tail -1
+
+echo "== gate: perfbench JVM program compiles against src/main"
+if ! PBLOG="$(PYTHONDONTWRITEBYTECODE=1 python3 - "$PWD" /tmp/graft_gate_perfbench 2>&1 <<'PY'
+import os, sys
+root, out = sys.argv[1], sys.argv[2]
+sys.path.insert(0, os.path.join(root, "perfbench"))
+from bench import build
+print("perfbench classes:", build.ensure_built(root, out))
+PY
+)"; then
+  echo "$PBLOG" | tail -20
+  echo "GATE FAILED: perfbench build"; exit 1
+fi
+echo "$PBLOG" | tail -1
 
 echo "== gate: sbt test"
 TESTLOG="$(mktemp)"
