@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Fmt.jsonString
+import graft.core.Knobs
 
 /** Benchmark main (driver contract): times the headline query set from
   * BASELINE.md on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -313,7 +314,7 @@ object Bench {
     val spark = core.Session.local(cores)
     // deployment arithmetic: plain double sums (the decimal-exact path is
     // a reproducibility feature the correctness gate uses — see QueryPack)
-    spark.conf.set("graft.sums.exact", "false")
+    spark.conf.set(Knobs.SumsExact.key, "false")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -383,12 +384,11 @@ object Bench {
     // the configuration a 100 TB deployment runs the similarity/dedup
     // family under. Separate JSON key so the headline block (and its
     // total) stays comparable round-over-round.
-    val bandedSet = banded
-    spark.conf.set("graft.sim.exact", "false")
-    bandedSet.foreach(run) // warmup: banded plans codegen fresh classes
-    val bandedResults = measure(bandedSet)
+    val bandedResults = Knobs.withConf(spark, Knobs.SimExact.key -> "false") {
+      banded.foreach(run) // warmup: banded plans codegen fresh classes
+      measure(banded)
+    }
     val bq = toJson(bandedResults)
-    spark.conf.set("graft.sim.exact", "true")
     // calibration anchor AFTER the measured passes: it shares the window
     // that produced them without stealing cache/CPU warmth from the first
     // warmup, and a load spike during measurement shows up in it

@@ -21,6 +21,7 @@ trait QueryPack {
 }
 
 object QueryPack {
+  import graft.core.Knobs.SumsExact
   import org.apache.spark.sql.{Column, SparkSession}
   import org.apache.spark.sql.expressions.WindowSpec
   import org.apache.spark.sql.functions.sum
@@ -33,24 +34,13 @@ object QueryPack {
   def decSumSql(expr: String, alias: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,6))) AS DOUBLE) AS $alias"
 
-  /** Exactness knob: `graft.sums.exact=true` (default under the gate
-    * profile) routes double sums through decimal — bit-reproducible across
-    * partitionings and engines, which the hash-equality correctness gate
-    * requires, at ~3x the agg cost. `false` is the plain-double deployment
-    * path (industry-standard last-ulp nondeterminism); Bench opts into it,
-    * and `graft.profile=deployment` makes it the default
-    * ([[graft.core.Profile]]).
-    */
-  def exactSums(spark: SparkSession): Boolean =
-    graft.core.Profile.exactKnob(spark, "graft.sums.exact")
-
-  /** SUM over doubles honoring the exactness knob. */
+  /** SUM over doubles honoring the exactness knob ([[SumsExact]]). */
   def decSum(spark: SparkSession)(c: Column): Column =
-    if (exactSums(spark)) sum(c.cast(DecimalType(18, 6))).cast("double")
+    if (SumsExact(spark)) sum(c.cast(DecimalType(18, 6))).cast("double")
     else sum(c)
 
   /** Windowed SUM honoring the exactness knob. */
   def decSumOver(spark: SparkSession)(c: Column, w: WindowSpec): Column =
-    if (exactSums(spark)) sum(c.cast(DecimalType(18, 6))).over(w).cast("double")
+    if (SumsExact(spark)) sum(c.cast(DecimalType(18, 6))).over(w).cast("double")
     else sum(c).over(w)
 }

@@ -36,7 +36,7 @@ object Verify {
     // SPARK_GRAFT_SIM_EXACT=false re-runs the whole gate over the
     // banded-LSH candidate paths — the oracles must STILL hash-match
     // (exact ≡ banded on the test data; see ExactnessSpec)
-    spark.conf.set("graft.sim.exact", sys.env.getOrElse("SPARK_GRAFT_SIM_EXACT", "true"))
+    spark.conf.set(graft.core.Knobs.SimExact.key, sys.env.getOrElse("SPARK_GRAFT_SIM_EXACT", "true"))
     new java.io.File(outDir).mkdirs()
     // driver contract: result at outDir/<name>.parquet (a parquet directory
     // with that exact name, so both dir-globbing and direct reads find it)

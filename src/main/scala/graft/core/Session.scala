@@ -16,7 +16,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
   /** `SPARK_GRAFT_CPUS`, or 32 — the default core count of every session. */
-  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(32)
+  def defaultCores: Int = coresFrom(sys.env.get)
+
+  /** The core count an environment asks for ([[defaultCores]]). A value
+    * that is not a positive int fails naming the variable, not with a bare
+    * `For input string`. */
+  private[graft] def coresFrom(env: String => Option[String]): Int =
+    env("SPARK_GRAFT_CPUS").fold(32)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive int, got '$v'")))
 
   def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()

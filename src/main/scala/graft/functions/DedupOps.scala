@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.QueryPack
-import graft.core.Tables
+import graft.core.{Knobs, Tables}
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -96,7 +96,7 @@ object DedupOps extends QueryPack {
     */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    if (!SimilarityOps.exactSim(spark))
+    if (!Knobs.SimExact(spark))
       return jaccardStats(spark, dir, minhashCandidates(spark, dir))
         .filter($"jaccard" >= JaccardTheta)
         .select($"d1", $"d2", $"common", $"n1", $"n2", $"jaccard")
@@ -116,11 +116,9 @@ object DedupOps extends QueryPack {
       .orderBy($"d1", $"d2")
   }
 
-  // gate shape: 8 bands x 2 rows = 16 hashes; minhashShape's defaults
-  // derive from these so the constants and the knob default can't drift
-  val BandRows = 2
-  val NumBands = 8
-  val NumHashes = NumBands * BandRows
+  /** Signature length at the MinHash route's default shape, 8 bands x 2
+    * rows = 16 hashes. */
+  val NumHashes: Int = Knobs.MinHash.tables * Knobs.MinHash.planes
 
   /** The Jaccard threshold every minhash-candidate consumer filters at
     * ([[ngramJaccard]], [[minhashLsh]], and [[connectedComponents]]
@@ -131,18 +129,6 @@ object DedupOps extends QueryPack {
     * not reuse the prefiltered candidates.
     */
   val JaccardTheta = 0.5
-
-  /** Runtime MinHash band shape, `graft.sim.bands.minhash` =
-    * `"<bands>x<rows>"` (default the gate's 8x2) — the document-side twin
-    * of the embedding family's corpus-tunable shapes, resolved through the
-    * same knob machinery. Rows per band trade recall for pruning exactly
-    * like planes per table (band match probability is j^rows); the gate
-    * never sets the knob, and the oracle is shape-independent (exact
-    * Jaccard over the emitted pairs), so any recall-total shape
-    * hash-matches. [[BandTuner.suggestMinhash]] picks a shape for a corpus.
-    */
-  private[graft] def minhashShape(spark: SparkSession): (Int, Int) =
-    SimilarityOps.bandShape(spark, "minhash", defTables = NumBands, defPlanes = BandRows)
 
   /** MinHash signatures mh_0..mh_{n-1}, COMPOSED REFERENCE FORM. Each
     * shingle STRING is hashed once (xxhash64); the n hash functions re-hash
@@ -295,7 +281,7 @@ object DedupOps extends QueryPack {
     *    rejected inside the join, before the verify (ExactnessSpec:
     *    prefiltered ≡ unfiltered).
     *
-    * CAP-ON NOTE: with [[bucketCap]] > 0 the band stream goes through
+    * CAP-ON NOTE: with [[Knobs.DedupBucketCap]] > 0 the band stream goes through
     * [[capBuckets]], whose lazy `localCheckpoint` lets the cap's consumers
     * (the sizes aggregation and both self-join legs) read one materialized
     * stream instead of each re-running the scan+signature subtree (PlanSpec
@@ -312,15 +298,14 @@ object DedupOps extends QueryPack {
     */
   private[graft] def minhashCandidatesPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (bands, rows) = minhashShape(spark)
-    val pf = SimilarityOps.prefilterOn(spark)
+    val (bands, rows) = Knobs.MinHash.bands(spark)
+    val pf = Knobs.SimPrefilter(spark)
     val sigs = minhashSigsOf(Tables.documents(spark, dir), bands * rows,
       withCard = pf)
     val b = bandBuckets(sigs, bands, rows,
       carry = if (pf) Seq("n_sh") else Nil)
-    val cap = bucketCap(spark)
-    val capped = Option.when(cap > 0)(
-      capBuckets(b, Seq("bb"), cap, "graft.dedup.bucketcap"))
+    val cap = Knobs.DedupBucketCap(spark)
+    val capped = Option.when(cap > 0)(capBuckets(b, Seq("bb"), cap, Knobs.DedupBucketCap))
     val overCap = capped.toSeq.flatMap(_._2.collect().map(_.getStruct(0)))
       .groupMap(_.getInt(0))(_.getLong(1))
     def side(i: Int): DataFrame =
@@ -345,37 +330,9 @@ object DedupOps extends QueryPack {
       .select($"d1", $"d2")
   }
 
-  /** `graft.dedup.bucketcap` (default 0 = off): before the candidate
-    * self-join, DROP every (band,bucket) group holding more than this many
-    * documents. The quadratic hazard it bounds is measured, not
-    * hypothetical (SCALE.md round 12): on a boilerplate corpus the 8×2
-    * shape's candidate mass grows ~quadratically in corpus size — shared
-    * banner shingles supply the per-band minima for short documents, so a
-    * constant FRACTION of same-size doc pairs collides, mass the size-ratio
-    * prefilter cannot touch (equal sizes pass the bound) — and at 100k
-    * docs the uncapped verify fan-out kills the local JVM outright. A
-    * bucket of c docs contributes c(c−1)/2 enumerated pairs; capping
-    * bounds total candidate mass to O(corpus × cap) — linear again.
-    *
-    * Semantics, stated honestly: capping is LOSSY, which is why the gate
-    * profile leaves it off (the DuckDB oracle replays exact banding). A
-    * pair at Jaccard j collides in each band independently with
-    * probability j^rows, so a pair losing k of its colliding bands to the
-    * cap is still found with 1−(1−j^rows)^(B−k) — near-dup pairs that
-    * share ANY small bucket survive. What the cap removes outright is
-    * pairs ALL of whose shared buckets are degenerate — i.e. documents
-    * whose similarity IS the boilerplate (or thousand-fold identical
-    * copies, which exact dedup upstream handles cheaper). ExactnessSpec
-    * pins both directions: a permissive cap is a no-op on the gate corpus,
-    * and the capped candidate set equals the independent
-    * pairs-sharing-a-small-bucket reference on a boilerplate corpus.
-    */
-  private[graft] def bucketCap(spark: SparkSession): Int =
-    graft.core.Profile.intKnob(spark, "graft.dedup.bucketcap", 0)
-
-  /** The oversized-bucket drop behind BOTH cap dials
-    * (`graft.dedup.bucketcap` here, `graft.sim.bucketcap.<key>` in
-    * [[SimilarityOps.lshCandidateIds]]) — one implementation so the two
+  /** The oversized-bucket drop behind every bucket-cap knob `dial`
+    * ([[Knobs.DedupBucketCap]] here, a sign-LSH route's cap in
+    * [[SimilarityOps.lshCandidateIds]]) — one implementation so the routes
     * cannot silently diverge. Returns the rows of `bucketed` whose bucket
     * holds at most `cap` of the `counted` rows (a bucket with no counted
     * row is dropped too), and the over-cap `keys`, one row per dropped
@@ -436,7 +393,7 @@ object DedupOps extends QueryPack {
     * of silent.
     */
   private[graft] def capBuckets(bucketed: DataFrame, keys: Seq[String], cap: Int,
-      dial: String, counted: Column = lit(true)): (DataFrame, DataFrame) = {
+      dial: Knobs.Cap, counted: Column = lit(true)): (DataFrame, DataFrame) = {
     val bMat = bucketed.localCheckpoint(false)
     // eager checkpoint: the groupBy over the band stream runs ONCE — the
     // tripwire stats and the semi-join build side below both read the
@@ -455,23 +412,7 @@ object DedupOps extends QueryPack {
     val (total, over) = (st.getLong(0), st.getLong(1))
     val (buckets, overBuckets, minOver) =
       (st.getLong(2), st.getLong(3), st.getLong(4))
-    // remediation differs by dial: the sign-LSH dials have 2^planes
-    // buckets per table (the measured corpus/2^planes rule); the minhash
-    // dial's band buckets are hashed band values, where the fix is more
-    // rows per band, not more buckets
-    val remedy =
-      if (dial.startsWith("graft.sim.bucketcap"))
-        "This is a band-SHAPE mismatch, not a corpus property: sign-LSH has " +
-          "2^planes buckets per table, so a cap below corpus/2^planes puts " +
-          s"every bucket over the cap. Raise the cap to at least the smallest " +
-          s"over-cap bucket ($minOver) or sharpen the shape (more planes per " +
-          "table via graft.sim.bands.<key>; BandTuner.suggest names a " +
-          "corpus-matched shape and cap)."
-      else
-        "Nearly every band bucket is degenerate at this shape: raise the cap " +
-          s"to at least the smallest over-cap bucket ($minOver) or sharpen the " +
-          "bands (more rows per band via graft.sim.bands.minhash; " +
-          "BandTuner.suggestMinhash names a corpus-matched shape and cap)."
+    val remedy = dial.remedy(minOver)
     // footgun = EITHER nearly every bucket drowned (the pure shape
     // mismatch) OR ≥99% of the candidate mass gone while over-cap buckets
     // are also the MAJORITY of observed buckets (round-16 review #3: a
@@ -491,7 +432,7 @@ object DedupOps extends QueryPack {
     val drowned = overBuckets >= 0.99 * buckets
     val massGoneBeyondHotCluster = over >= 0.99 * total && overBuckets > 0.5 * buckets
     require(total == 0L || !(drowned || massGoneBeyondHotCluster),
-      s"$dial=$cap would drop ${if (over == total) "ALL" else s"$over of $total"} " +
+      s"${dial.key}=$cap would drop ${if (over == total) "ALL" else s"$over of $total"} " +
         s"bucketed rows ($overBuckets of $buckets buckets over the cap) — the " +
         "candidate index would be silently empty(ish) and the dedup would " +
         s"report no near-dups on any corpus. $remedy")
@@ -503,7 +444,7 @@ object DedupOps extends QueryPack {
       // the JVM default locale, so a comma-decimal JVM would log '98,70%'
       val overPct = math.floor(overBuckets * 10000.0 / math.max(buckets, 1L)) / 100
       val overPctStr = graft.core.Fmt.num(overPct, 2)
-      log.warn(s"$dial=$cap drops $over of $total bucketed rows — over half " +
+      log.warn(s"${dial.key}=$cap drops $over of $total bucketed rows — over half " +
         s"the candidate mass ($overBuckets of $buckets buckets over the cap, " +
         s"smallest over-cap bucket $minOver). Legal — the guard reads " +
         s"$overPctStr% of buckets over the cap, below the footgun regime — " +
@@ -515,15 +456,6 @@ object DedupOps extends QueryPack {
       sizes.filter(bn > cap).select(keys.map(col): _*))
   }
 
-  /** `graft.dedup.hashverify` (default on): verify over each candidate
-    * document's sorted set of 8-byte xxhash64 shingle keys (`shingle_set`)
-    * instead of its set of shingle STRINGS. Off = the string-set verify,
-    * kept as the A/B control and the collision-free semantic reference
-    * (ExactnessSpec asserts the two paths emit identical rows).
-    */
-  private[graft] def hashVerify(spark: SparkSession): Boolean =
-    graft.core.Profile.boolKnob(spark, "graft.dedup.hashverify", default = true)
-
   /** Exact Jaccard stats (common, n1, n2, jaccard) for the given candidate
     * (d1, d2) pairs only. Each candidate document gets ONE row, its
     * distinct shingle set, computed from a re-scan cut to the candidate
@@ -533,7 +465,7 @@ object DedupOps extends QueryPack {
     * distinct, per-document size and (pair × shingle) join, by a row per
     * document and a row per pair.
     *
-    * With [[hashVerify]] on (default), a set is `shingle_set`'s sorted
+    * With [[Knobs.DedupHashVerify]] on (default), a set is `shingle_set`'s sorted
     * xxhash64 keys — 8 bytes a shingle where strings are ~15–30 B. Jaccard
     * then drifts from the string-set value only if xxhash64 collides among
     * a candidate document's shingles (~n²/2^64 per doc — the same accepted
@@ -581,7 +513,7 @@ object DedupOps extends QueryPack {
     val candDocs = candidates
       .select(explode(array($"d1", $"d2")).as("doc_id")).distinct()
     val set =
-      if (hashVerify(spark)) call_function("shingle_set", normText)
+      if (Knobs.DedupHashVerify(spark)) call_function("shingle_set", normText)
       else array_distinct(call_function("word_shingles", split(normText, " ")))
     Tables.documents(spark, dir)
       .where($"text".isNotNull)
@@ -705,7 +637,7 @@ object DedupOps extends QueryPack {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val neighbors =
-      if (SimilarityOps.exactSim(spark)) {
+      if (Knobs.SimExact(spark)) {
         // exact theta-join scores C(n,2) pairs: precomputed norms + cosPre
         // (bit-identical to the cosine_sim kernel incl. the zero-norm →
         // 0.0 convention, ~3× less per-pair work — SimilarityOps.cosPre)
@@ -716,10 +648,8 @@ object DedupOps extends QueryPack {
             SimilarityOps.cosPre("e1", "e2", "n1", "n2") >= CosDedupThreshold)
           .select($"v1", $"v2")
       } else {
-        val (t, p) = SimilarityOps.bandShape(spark, "cosdedup", defTables = 8, defPlanes = 4)
-        val cand = SimilarityOps.lshCandidateIds(spark, dir, nTables = t, planesPerTable = p,
-          probeBits = SimilarityOps.probeBitsOf(spark, "cosdedup", p),
-          prefilterTheta = Some(CosDedupThreshold), capKey = "cosdedup")
+        val cand = SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
+          prefilterTheta = Some(CosDedupThreshold))
         val near = cand.union(cand.select($"v2".as("v1"), $"v1".as("v2")))
           .join(e.select($"vec_id".as("v1"), $"embedding".as("e1")), Seq("v1"))
           .join(e.select($"vec_id".as("v2"), $"embedding".as("e2")), Seq("v2"))

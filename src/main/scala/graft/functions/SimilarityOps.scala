@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.QueryPack
-import graft.core.{Profile, Tables}
+import graft.core.{Knobs, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,129 +49,11 @@ object SimilarityOps extends QueryPack {
   lazy val hyperplanes: Seq[Seq[Float]] =
     graft.expr.Hyperplanes.planes.toSeq.map(_.toSeq)
 
-  /** Exactness knob (mirrors `graft.sums.exact`): `graft.sim.exact=true`
-    * (default) keeps the all-pairs exact baselines; `false` routes
-    * `sim_pairs_threshold` / `dedup_embedding_cosine` through the banded
-    * LSH candidate generator — the 100 TB path. ExactnessSpec asserts the
-    * two paths produce identical rows on the test data (the band shapes
-    * below are chosen so candidate recall is total there; `tools/
-    * lsh_recall.py` is the measurement that picked them).
-    */
-  def exactSim(spark: SparkSession): Boolean =
-    Profile.exactKnob(spark, "graft.sim.exact")
-
-  /** Corpus-tunable band shape for a banded route: `graft.sim.bands.<key>`
-    * = `"<tables>x<planes>"` (e.g. `"8x4"`). Defaults are the shapes the
-    * oracle gate has always validated (chosen for TOTAL candidate recall on
-    * the driver's near-uniform test embeddings — tools/lsh_recall.py). The
-    * knob exists because band shapes are a corpus property, not a code
-    * property: candidate volume is Θ(Σ|bucket|²), so a clustered deployment
-    * corpus wants more planes per table (smaller buckets) than the
-    * worst-case-uniform gate corpus. [[graft.functions.BandTuner.suggest]]
-    * picks a shape for a deployment's own corpus (analytic recall + sampled
-    * Σ|bucket|²); SCALE.md rounds 6–7 hold the measurements that validated
-    * its rule on a clustered corpus.
-    */
-  private[graft] def bandShape(spark: SparkSession, key: String,
-      defTables: Int, defPlanes: Int): (Int, Int) =
-    // positivity (and parseability — toIntOption, so an all-digit value
-    // past Int range fails HERE too, not as a bare NumberFormatException)
-    // is validated at the knob so every route fails with the knob error —
-    // the minhash route would otherwise die deep in plan build
-    // (numHashes=0 → empty agg list) with an opaque NoSuchElementException
-    Profile.knob(spark, s"graft.sim.bands.$key", (defTables, defPlanes),
-        "'<tables>x<planes>' with both positive ints") { s =>
-      s.toLowerCase.split("x") match {
-        case Array(ts, ps) =>
-          for (t <- ts.trim.toIntOption; p <- ps.trim.toIntOption
-               if t > 0 && p > 0) yield (t, p)
-        case _ => None
-      }
-    }
-
-  /** Prefilter knob, `graft.sim.prefilter` (default true): threshold
-    * routes that pass `prefilterTheta` to [[lshCandidateIds]] cut candidate
-    * pairs with the provably-lossless [[graft.expr.Int8Keep]] int8 bound
-    * BEFORE the pair exchange and the float verify joins. Answers are
-    * identical either way (Int8PrefilterSpec / ExactnessSpec); the knob
-    * exists for A/B measurement, not semantics.
-    */
-  private[graft] def prefilterOn(spark: SparkSession): Boolean =
-    Profile.boolKnob(spark, "graft.sim.prefilter", default = true)
-
-  /** `graft.sim.bucketcap.<key>` (default 0 = off): before the candidate
-    * self-join, DROP every (table, bucket) group holding more than this
-    * many vectors — the embedding-side twin of `graft.dedup.bucketcap`
-    * (SCALE.md round 12 named it the symmetric hazard; round 13 measures
-    * it). The int8 prefilter cannot touch this mass: a hot bucket of
-    * near-IDENTICAL vectors (a thousand-fold-duplicated embedding, a
-    * zero-vector pile, a template artifact) passes any cosine bound BY
-    * VALUE, so its c(c−1)/2 pairs all reach the pair exchange and the
-    * float verify — quadratic in the duplication factor. Capping bounds
-    * candidate mass to O(corpus × cap).
-    *
-    * Semantics, stated honestly (the minhash dial's argument transposed):
-    * capping is LOSSY, which is why the gate leaves it off. A pair at
-    * cosine c collides per table with probability (1−θ/π)^planes, so a
-    * pair losing k of its colliding tables to the cap is still found
-    * through any surviving shared bucket — near-neighbor pairs that share
-    * ANY small bucket survive. What the cap removes outright is pairs ALL
-    * of whose shared buckets are degenerate — i.e. vectors whose
-    * similarity IS the mass duplication, which exact dedup upstream (or
-    * [[SimilarityOps.quantizeInt8]]-keyed grouping) handles cheaper than
-    * any pairwise route. ExactnessSpec pins both directions: a permissive
-    * cap is a no-op on the gate corpus, and the capped candidate set
-    * equals the independent pairs-sharing-a-small-bucket reference on a
-    * dense-duplicate corpus.
-    *
-    * PRECONDITION — corpus-matched band shape. Sign-LSH has only
-    * 2^planesPerTable buckets per table, so a cap below
-    * corpus / 2^planes puts EVERY bucket over the cap and silently
-    * empties the index (measured, SCALE.md round 13: 8×4 at 20k vectors
-    * with cap 512 → 0 candidates — every bucket held ~1250). The dial
-    * belongs with the shape rule SCALE.md round 6 already mandates
-    * (bucket count ≫ cluster count, via `graft.sim.bands.<key>` and
-    * [[graft.functions.BandTuner.suggest]]); on a matched shape the hot
-    * cluster still collapses into ONE bucket per table (near-identical
-    * vectors share every sign bit) while the background spreads, and the
-    * cap separates cleanly. Since round 15 the precondition is also a
-    * RUNTIME tripwire, not just this paragraph: the shared
-    * [[DedupOps.capBuckets]] helper require-fails when the cap
-    * would empty the index — ≥ 99% of buckets over the cap, or ≥ 99% of
-    * bucketed rows over it without the few-hot-buckets signature — and
-    * warns when over-cap buckets hold ≥ 50% of the rows, so the measured
-    * silent-empty shape fails loud at construction and sub-fatal mass
-    * loss is visible (see its scaladoc for the full predicate).
-    *
-    * SCOPED PER CONSUMER (round 15, r14 advice #3): the dial is keyed
-    * like the band shapes — `graft.sim.bucketcap.cosdedup` caps the
-    * embedding-dedup route, `.pairs` the threshold route, `.adhoc` direct
-    * [[lshCandidateIds]] calls (tools, specs) — because one global value
-    * tuned for dedup's hot-bucket excision silently degraded every OTHER
-    * `lshCandidateIds` consumer in the same session: a top-1 route that
-    * loses a hot-bucket member's only shared bucket loses that vector's
-    * true nearest outright, where dedup merely re-finds the pair through
-    * transitive small buckets. The legacy un-scoped name fails loud with
-    * a migration message rather than capping everything.
-    */
-  private[graft] def simBucketCap(spark: SparkSession, key: String): Int = {
-    // a legacy value that PARSES to off (≤ 0, the documented old default)
-    // stays the no-op it always was; anything else — a real cap or
-    // garbage — fails loud with the migration message
-    require(spark.conf.getOption("graft.sim.bucketcap")
-        .forall(v => v.toIntOption.exists(_ <= 0)),
-      "graft.sim.bucketcap is no longer a global dial: one value capped EVERY " +
-        "banded-candidate consumer in the session, so a cap tuned for dedup " +
-        "silently degraded top-1 routes. Set graft.sim.bucketcap.<key> for the " +
-        "consumer you mean (cosdedup, pairs, or adhoc for direct " +
-        "lshCandidateIds calls).")
-    Profile.intKnob(spark, s"graft.sim.bucketcap.$key", 0,
-      "an int bucket cap (<= 0 = off)")
-  }
-
   /** Banded candidate pairs: distinct (v1 < v2) id pairs that share at
-    * least one (table, bucket) under `nTables` tables of `planesPerTable`
-    * hyperplane sign bits each. The dial every LSH consumer turns:
+    * least one (table, bucket) under `b.tables` tables of `b.planes`
+    * hyperplane sign bits each, probing `b.probeBits` neighbor buckets and
+    * capped at `b.bucketCap` (the route's knobs, [[Knobs.LshRoute]]). The
+    * dial every LSH consumer turns:
     * more planes per table → smaller buckets → cheaper but lower recall;
     * more tables → more chances to collide → higher recall. Callers pick
     * per threshold (near-dup at 0.9 tolerates 4-bit tables; a loose 0.4
@@ -197,12 +79,10 @@ object SimilarityOps extends QueryPack {
     * every ExactnessSpec invariant is unchanged. Top-1/argmax consumers
     * have no threshold to prefilter against and pass None.
     */
-  def lshCandidateIds(spark: SparkSession, dir: String,
-      nTables: Int, planesPerTable: Int,
-      probeBits: Int = 0, prefilterTheta: Option[Double] = None,
-      capKey: String = "adhoc"): DataFrame = {
+  def lshCandidateIds(spark: SparkSession, dir: String, b: Knobs.Banding,
+      prefilterTheta: Option[Double] = None): DataFrame = {
     import spark.implicits._
-    val theta = prefilterTheta.filter(_ => prefilterOn(spark))
+    val theta = prefilterTheta.filter(_ => Knobs.SimPrefilter(spark))
     // the prefilter blob is computed ONCE per vector, below the bucket
     // explode, and rides the (tbl,bucket) shuffle. The coalesce makes the
     // column provably non-null, or the nullIntolerant int8_keep join
@@ -213,12 +93,12 @@ object SimilarityOps extends QueryPack {
     // the empty-blob sentinel can never reach int8_keep.
     val blob = theta.map(_ =>
       "b" -> coalesce(expr("int8_enc(embedding)"), lit(Array.emptyByteArray)))
-    val pairs = bandedSelfJoin(spark, dir, nTables, planesPerTable, probeBits, blob.toSeq,
-      capKey = Some(capKey),
+    val pairs = bandedSelfJoin(spark, dir, b.tables, b.planes, b.probeBits, blob.toSeq,
+      cap = b.cap,
       test = theta.map(t => call_function("int8_keep", $"b1", $"b2", lit(t))))
     // unprobed, every pair leaves as v1 < v2 already; least/greatest there
     // would only add the consumers' inferred IsNotNull tests to the join
-    (if (probeBits == 0) pairs.select($"v1", $"v2")
+    (if (b.probeBits == 0) pairs.select($"v1", $"v2")
      else pairs.select(least($"v1", $"v2").as("v1"), greatest($"v1", $"v2").as("v2")))
       // The pairs leave through an exchange of their own: a consumer that
       // reads them twice (the cosine dedup's two orientations) or samples
@@ -249,7 +129,7 @@ object SimilarityOps extends QueryPack {
     * cheaper `<` runs first and `lsh_first_shared` is passed its result as
     * `true` rather than testing it again.
     *
-    * `capKey` names the `graft.sim.bucketcap.<key>` dial ([[simBucketCap]]):
+    * `cap` is a route's bucket-cap knob and its value ([[Knobs.LshRoute]]):
     * the shared [[DedupOps.capBuckets]] helper counts base slots per
     * (tbl, bucket), drops every slot row in an over-cap bucket, and its
     * over-cap keys ride into `lsh_first_shared` as a reference array, so a
@@ -280,7 +160,7 @@ object SimilarityOps extends QueryPack {
   private def bandedSelfJoin(spark: SparkSession, dir: String,
       nTables: Int, planesPerTable: Int, probeBits: Int,
       carry: Seq[(String, Column)], within: Seq[String] = Nil,
-      capKey: Option[String] = None, test: Option[Column] = None): DataFrame = {
+      cap: Option[(Knobs.Cap, Int)] = None, test: Option[Column] = None): DataFrame = {
     val stride = 1 + probeBits
     // the kernel checks the shape (planes available, probeBits in range)
     val probes = expr(s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)")
@@ -299,8 +179,8 @@ object SimilarityOps extends QueryPack {
       .withColumn("tbl", if (probeBits == 0) col("pos") else expr(s"pos div $stride").cast("int"))
     val keys = Seq("tbl", "bucket") ++ within
     val isBase = col("pos") % stride === 0
-    val capped = for (k <- capKey; c = simBucketCap(spark, k) if c > 0)
-      yield DedupOps.capBuckets(slots, keys, c, s"graft.sim.bucketcap.$k", counted = isBase)
+    val capped = for ((dial, c) <- cap)
+      yield DedupOps.capBuckets(slots, keys, c, dial, counted = isBase)
     val stream = capped.fold(slots)(_._1)
     val overCap = capped.toSeq.flatMap(_._2.collect()
       .map(r => graft.expr.LshFirstShared.key(r.getInt(0), r.getInt(1))))
@@ -321,22 +201,6 @@ object SimilarityOps extends QueryPack {
       if (probeBits == 0) lit(true) else v1 < v2, lit(probeBits), typedLit(overCap)) === slot
     left.join(right, keys)
       .filter((Option.when(probeBits == 0)(v1 < v2) ++ Seq(canonical) ++ test).reduce(_ && _))
-  }
-
-  /** Multi-probe knob, `graft.sim.probe.<key>` = number of Hamming-1
-    * neighbor buckets to visit per table on the probe side (default 0 =
-    * off, the gate posture; the band shapes the gate validates are already
-    * recall-total there). A deployment turns it on to buy top-1 recall on
-    * isolated vectors WITHOUT adding tables — candidate volume grows by at
-    * most (1+bits)×, concentrated on the low-margin planes where misses
-    * live. Clamped to planesPerTable ([[graft.expr.LshProbes]] can only
-    * flip bits a table has).
-    */
-  private[graft] def probeBitsOf(spark: SparkSession, key: String,
-      planesPerTable: Int): Int = {
-    val v = Profile.intKnob(spark, s"graft.sim.probe.$key", 0, "a non-negative int")
-    require(v >= 0, s"graft.sim.probe.$key must be >= 0, got $v")
-    math.min(v, planesPerTable)
   }
 
   /** Per-vector L2 norm, precomputed ONCE in the narrow scan so per-pair
@@ -478,7 +342,7 @@ object SimilarityOps extends QueryPack {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val pairs =
-      if (exactSim(spark)) {
+      if (Knobs.SimExact(spark)) {
         // exact all-pairs leg scores C(n,2) pairs: precomputed norms +
         // cosPre (bit-identical to cosine_sim, ~3× less per-pair work)
         val en = e.withColumn("nrm", normCol)
@@ -489,10 +353,7 @@ object SimilarityOps extends QueryPack {
       } else {
         // banded verify runs on the int8-prefiltered survivor slice — tiny
         // by construction, so the plain kernel form stays
-        val (t, p) = bandShape(spark, "pairs", defTables = 16, defPlanes = 2)
-        lshCandidateIds(spark, dir, nTables = t, planesPerTable = p,
-          probeBits = probeBitsOf(spark, "pairs", p),
-          prefilterTheta = Some(PairsThreshold), capKey = "pairs")
+        lshCandidateIds(spark, dir, Knobs.Pairs(spark), prefilterTheta = Some(PairsThreshold))
           .join(e.select($"vec_id".as("v1"), $"embedding".as("e1"), $"label".as("l1")), Seq("v1"))
           .join(e.select($"vec_id".as("v2"), $"embedding".as("e2"), $"label".as("l2")), Seq("v2"))
           .withColumn("cos", expr("cosine_sim(e1, e2)"))
@@ -530,7 +391,7 @@ object SimilarityOps extends QueryPack {
       .agg(expr("arg_max_long(v2, cos)").as("b"))
     val en = e.withColumn("nrm", normCol)
     val best =
-      if (exactSim(spark)) {
+      if (Knobs.SimExact(spark)) {
         val a = vecSide(en, "v1", "e1", "n1", "label" -> "label")
         val b = vecSide(en, "v2", "e2", "n2", "label" -> "label")
         argmaxOf(a.join(b, Seq("label")).filter($"v1" =!= $"v2"))
@@ -539,13 +400,13 @@ object SimilarityOps extends QueryPack {
         // for same-label pairs as a global index, ~|labels|× less volume).
         // The scored form ([[lshScoredNeighbors]]): cosine in the
         // self-join stage, once per pair, no per-pair float joins
-        val (t, p) = bandShape(spark, "samelabel", defTables = 32, defPlanes = 1)
-        val banded = lshScoredNeighbors(spark, dir, nTables = t, planesPerTable = p,
-            within = Seq("label"), probeBits = probeBitsOf(spark, "samelabel", p))
+        val r = Knobs.SameLabel
+        val band = r(spark)
+        val banded = lshScoredNeighbors(spark, dir, band.tables, band.planes,
+            within = Seq("label"), probeBits = band.probeBits)
           .groupBy($"v1", $"label")
           .agg(expr("arg_max_long(v2, cos)").as("b"))
-        val key = "samelabel"
-        val rescue = rescueOf(spark, key)
+        val rescue = r.rescue(spark)
         if (rescue <= 0.0) banded
         else {
           // Rescue tier: top-1 retrieval has no threshold to hide behind —
@@ -584,15 +445,15 @@ object SimilarityOps extends QueryPack {
           val total = e.count()
           val unresolved = total - resolved.count()
           val frac = if (total == 0) 0.0 else unresolved.toDouble / total
-          val maxFrac = rescueMaxFracOf(spark, key)
+          val maxFrac = r.rescueMaxFrac(spark)
           if (frac > maxFrac) sys.error(
             f"rescue tier: $unresolved of $total vectors (${frac * 100}%.1f%% > " +
-              f"graft.sim.rescue.maxfrac.$key=$maxFrac%.2f) fell below the " +
-              s"confidence floor graft.sim.rescue.$key=$rescue — the banded " +
+              f"${r.rescueMaxFrac.key}=$maxFrac%.2f) fell below the " +
+              s"confidence floor ${r.rescue.key}=$rescue — the banded " +
               "index shape does not fit this corpus. Re-shape with " +
-              s"BandTuner.suggest (graft.sim.bands.$key / " +
-              s"graft.sim.probe.$key), lower the rescue floor, or raise " +
-              s"graft.sim.rescue.maxfrac.$key to accept a shuffled " +
+              s"BandTuner.suggest (${r.bands.key} / " +
+              s"${r.probe.key}), lower the rescue floor, or raise " +
+              s"${r.rescueMaxFrac.key} to accept a shuffled " +
               "(non-broadcast) rescue join.")
           // broadcast only while the tail honors the premise; a fatter
           // (but knob-accepted) tail ships through a shuffle join, which
@@ -603,7 +464,7 @@ object SimilarityOps extends QueryPack {
             en.join(resolved.select($"v1".as("vec_id")), Seq("vec_id"), "left_anti"),
             "v1", "e1", "n1", "label" -> "label")
           val probes =
-            if (frac <= BroadcastSafeRescueFrac) broadcast(probesBase) else probesBase
+            if (frac <= r.BroadcastSafeFrac) broadcast(probesBase) else probesBase
           val tail = probes
             .join(vecSide(en, "v2", "e2", "n2", "label" -> "label"), Seq("label"))
             .filter($"v1" =!= $"v2")
@@ -613,46 +474,6 @@ object SimilarityOps extends QueryPack {
     best
       .select($"v1".as("vec_id"), $"label", $"b.id".as("nearest"), round($"b.score", 6).as("cos"))
       .orderBy($"vec_id")
-  }
-
-  /** Broadcast-safety bound for the rescue tail — the engineering limit of
-    * the "isolated minority" premise, independent of what fraction the
-    * refusal knob accepts: past it the tail ships via shuffle join even
-    * when the run is allowed to proceed, because broadcasting a
-    * corpus-proportional set is a memory bomb at any knob setting.
-    */
-  val BroadcastSafeRescueFrac = 0.05
-
-  /** Refusal knob, `graft.sim.rescue.maxfrac.<key>` = largest unresolved
-    * fraction the rescue tier will run with (default
-    * [[BroadcastSafeRescueFrac]]). Above it the tier fails with an error
-    * naming [[BandTuner.suggest]] rather than paying a corpus-proportional
-    * exact re-scan the advisor would have rejected; raising the knob past
-    * the broadcast-safe bound swaps the broadcast for a shuffle join, so
-    * accepting a fat tail costs time, never memory.
-    */
-  private[graft] def rescueMaxFracOf(spark: SparkSession, key: String): Double = {
-    val v = Profile.knob(spark, s"graft.sim.rescue.maxfrac.$key",
-      BroadcastSafeRescueFrac, "a fraction in [0, 1]")(_.toDoubleOption)
-    require(v >= 0.0 && v <= 1.0,
-      s"graft.sim.rescue.maxfrac.$key must be a fraction in [0, 1], got $v")
-    v
-  }
-
-  /** Rescue-tier knob, `graft.sim.rescue.<key>` = cosine confidence floor
-    * below which a banded top-1 answer is re-derived exactly (0 = off, the
-    * default). The two-tier contract: banded answers ≥ floor are kept,
-    * everything else — including vectors with no candidates — pays the
-    * exact label-slice scan. Recall for the rescued population is 1.0 by
-    * construction; residual misses need BOTH a missed true neighbor AND a
-    * spurious confident stand-in above the floor.
-    */
-  private[graft] def rescueOf(spark: SparkSession, key: String): Double = {
-    val v = Profile.knob(spark, s"graft.sim.rescue.$key", 0.0,
-      "a cosine in [0, 1)")(_.toDoubleOption)
-    require(v >= 0.0 && v < 1.0,
-      s"graft.sim.rescue.$key must be a cosine in [0, 1), got $v")
-    v
   }
 
   val IvfCells = 16

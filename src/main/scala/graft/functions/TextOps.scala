@@ -505,7 +505,7 @@ object TextOps extends QueryPack {
       .select($"shingle").distinct()
     val corpus = DedupOps.shingledKernelOf(docs.filter($"doc_id" >= 5))
     val matched =
-      if (!decontamBloom(spark)) corpus.join(broadcast(evalGrams), Seq("shingle"))
+      if (!graft.core.Knobs.TextDecontamBloom(spark)) corpus.join(broadcast(evalGrams), Seq("shingle"))
       else {
         // checkpoint: the gram set feeds the count, the bloom build, and
         // the exact join — one computation, ContextCleaner-managed blocks
@@ -539,16 +539,6 @@ object TextOps extends QueryPack {
       .distinct() // matched slice only — the full shingle stream never shuffles
       .groupBy($"doc_id").agg(count(lit(1)).as("n_overlap"))
   }
-
-  /** `graft.text.decontam.bloom` (default off): route [[evalOverlaps]]
-    * through a bloom prefilter instead of broadcasting the eval-gram
-    * strings — the outgrow path for eval sets past the broadcast budget.
-    * Off is right whenever the grams DO broadcast (the gate, and most real
-    * benchmark suites): the broadcast hash join already kills misses
-    * in-stage, and the bloom would only add a probe per shingle.
-    */
-  private[graft] def decontamBloom(spark: SparkSession): Boolean =
-    graft.core.Profile.boolKnob(spark, "graft.text.decontam.bloom", default = false)
 
   /** Benchmark decontamination: flag corpus documents that share 3-token
     * shingles with an evaluation set (doc_id < 5 stands in for the held-out

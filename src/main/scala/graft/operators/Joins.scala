@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.core.Tables
+import graft.core.{Knobs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +58,7 @@ object Joins extends QueryPack {
   def threeWayAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    val exact = QueryPack.exactSums(spark)
+    val exact = Knobs.SumsExact(spark)
     val rev = $"l_extendedprice" * (lit(1.0) - $"l_discount")
     val perOrder = Tables.lineitem(spark, dir)
       .groupBy($"l_orderkey")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Knobs
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -276,11 +277,6 @@ object EventStreams {
         $"v_ts", $"p_ts", $"value")
   }
 
-  /** `graft.stream.checkpoint.checksum` (default false): whether
-    * [[runToMemory]]'s streams write checkpoint checksum sidecars. */
-  private[graft] def checkpointChecksum(spark: SparkSession): Boolean =
-    graft.core.Profile.boolKnob(spark, "graft.stream.checkpoint.checksum", default = false)
-
   /** Run a streaming query to completion over the (finite) file source and
     * return the materialized result — real incremental execution, memory
     * sink, AvailableNow trigger.
@@ -328,11 +324,11 @@ object EventStreams {
     val overrides = Seq(
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        checkpointChecksum(spark).toString)
+        Knobs.StreamCheckpointChecksum(spark).toString)
     var started: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       started = startLock.synchronized {
-        withConf(spark, overrides) {
+        Knobs.withConf(spark, overrides: _*) {
           streamed.writeStream
             .format("memory").queryName(name).outputMode(mode)
             .trigger(Trigger.AvailableNow())
@@ -365,18 +361,4 @@ object EventStreams {
 
   /** Serializes [[runToMemory]]'s conf window across threads and sessions. */
   private val startLock = new Object
-
-  /** Run `body` with `overrides` set on the session conf, then restore each
-    * key's prior value (unset where it had none), also when `body` throws.
-    */
-  private def withConf[T](spark: SparkSession, overrides: Seq[(String, String)])(
-      body: => T): T = {
-    val prior = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 }

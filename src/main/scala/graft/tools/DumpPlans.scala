@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.Session
+import graft.core.{Knobs, Session}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
@@ -28,7 +28,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val spark = Session.local(appName = "dump-plans")
-    spark.conf.set("graft.sums.exact", "false")
+    spark.conf.set(Knobs.SumsExact.key, "false")
     val dir = "/root/testdata/sf0.1"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the bench headline set\n\n")
@@ -67,11 +67,11 @@ object DumpPlans {
     // only survivors (threshold routes); the scored no-distinct argmax
     // form on sim_nearest_same_label (round 10) — nothing
     // pair-proportional exchanges.
-    spark.conf.set("graft.sim.exact", "false")
-    for (name <- graft.Bench.banded)
-      section(s"$name — banded route (graft.sim.exact=false)",
-        graft.SparkEntry.queries(name)(spark, dir))
-    spark.conf.unset("graft.sim.exact")
+    Knobs.withConf(spark, Knobs.SimExact.key -> "false") {
+      for (name <- graft.Bench.banded)
+        section(s"$name — banded route (graft.sim.exact=false)",
+          graft.SparkEntry.queries(name)(spark, dir))
+    }
     val out = Paths.get("PLANS.md").toAbsolutePath
     Files.writeString(out, sb.toString)
     println(s"WROTE $out")

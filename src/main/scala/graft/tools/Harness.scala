@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.Session
+import graft.core.{Knobs, Session}
 import graft.functions.{BandTuner, DedupOps, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -278,8 +278,8 @@ object Harness {
 
   /** Per-stage decomposition of a registered query (round 21): one warmup
     * pass, then one measured pass read through [[BusDrain.jobsAndStagesOf]],
-    * printing every stage's wall, task count, summed executor run time, and
-    * shuffle bytes. The
+    * printing every stage's wall, task count, summed executor run time,
+    * shuffle bytes and operator scopes ([[stageLabel]]). The
     * round-21 fan-out A/B showed per-STAGE fixed overhead (~0.1 s at
     * local[32]/sf0.1) dominating several bench queries — this instrument
     * attributes each query's wall to stages so shuffle-removal work aims
@@ -289,7 +289,7 @@ object Harness {
     */
   private def profileStages(args: Array[String]): Unit = {
     val spark = Session.local(appName = "profile-stages")
-    spark.conf.set("graft.sums.exact", "false")
+    spark.conf.set(Knobs.SumsExact.key, "false")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).count() // session warm
     val names =
@@ -297,22 +297,16 @@ object Harness {
       else args.toSeq
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
-      val banded = graft.Bench.banded.contains(name)
-      // save-and-restore, not reset-to-"true" (ADVICE r21 #4): the dial was
-      // unset before this tool ran, and clobbering it to a literal would
-      // override a profile- or user-supplied default for the session's rest
-      val priorExact = spark.conf.getOption("graft.sim.exact")
-      if (banded) spark.conf.set("graft.sim.exact", "false")
-      noop(fn(spark, dir)) // warm: codegen/JIT, like Bench's untimed pass
+      val overrides =
+        if (graft.Bench.banded.contains(name)) Seq(Knobs.SimExact.key -> "false") else Nil
       var wall = 0.0
-      val (jobs, stages) = BusDrain.jobsAndStagesOf(spark) {
-        val t0 = System.nanoTime()
-        noop(fn(spark, dir))
-        wall = (System.nanoTime() - t0) / 1e9
-      }
-      if (banded) priorExact match {
-        case Some(v) => spark.conf.set("graft.sim.exact", v)
-        case None    => spark.conf.unset("graft.sim.exact")
+      val (jobs, stages) = Knobs.withConf(spark, overrides: _*) {
+        noop(fn(spark, dir)) // warm: codegen/JIT, like Bench's untimed pass
+        BusDrain.jobsAndStagesOf(spark) {
+          val t0 = System.nanoTime()
+          noop(fn(spark, dir))
+          wall = (System.nanoTime() - t0) / 1e9
+        }
       }
       println(f"PROFILE $name wall=$wall%.3fs jobs=$jobs")
       stages.sortBy(_.stageId).foreach { si =>
@@ -322,11 +316,20 @@ object Harness {
         println(f"  stage ${si.stageId}%3d ${si.numTasks}%4d tasks " +
           f"wall=${stageWall / 1e3}%6.3fs run=${m.executorRunTime / 1e3}%7.3fs " +
           f"sread=${m.shuffleReadMetrics.totalBytesRead}%9d " +
-          f"swrite=${m.shuffleWriteMetrics.bytesWritten}%9d  ${si.name.takeWhile(_ != '\n')}")
+          f"swrite=${m.shuffleWriteMetrics.bytesWritten}%9d  ${stageLabel(si)}")
       }
     }
     spark.stop()
   }
+
+  /** The distinct operator scopes of a stage's RDDs, e.g.
+    * `WholeStageCodegen (3), Exchange`. The stage name is no label under
+    * AQE: every stage but the final one is named after the thread-pool
+    * call site that submitted it (`$anonfun$withThreadLocalCaptured$2 at
+    * CompletableFuture.java`).
+    */
+  private def stageLabel(si: org.apache.spark.scheduler.StageInfo): String =
+    si.rddInfos.flatMap(_.scope).map(_.name.trim).distinct.mkString(", ")
 
   /** Time arbitrary registered queries across scale factors — the
     * per-operator scaling measurement behind SCALE.md's tables. Dirs come
@@ -336,7 +339,7 @@ object Harness {
     */
   private def timeQueries(args: Array[String]): Unit = {
     val spark = Session.local(appName = "time-queries")
-    spark.conf.set("graft.sums.exact", "false")
+    spark.conf.set(Knobs.SumsExact.key, "false")
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIRS",
       "/root/testdata/sf0.01,/root/testdata/sf0.1").split(",").toSeq
     for (name <- args.toSeq; dir <- dirs) {
@@ -385,16 +388,15 @@ object Harness {
       val skipExact = sys.env.contains("SPARK_GRAFT_DOCSX_SKIP_EXACT")
       val (tExact, exactOpt) =
         if (skipExact) (Double.NaN, None)
-        else {
-          spark.conf.set("graft.sim.exact", "true")
+        else Knobs.withConf(spark, Knobs.SimExact.key -> "true") {
           val t = Corpora.timed(2)(run())
           (t, Some(DedupOps.ngramJaccard(spark, dir).localCheckpoint()))
         }
       val nExact = exactOpt.map(e => math.max(e.count(), 1L)).getOrElse(1L)
-      // the advised shape, plus the gate's recall-heavy 8x2 for contrast
-      for (shape <- Seq(advice.shape, "8x2").distinct) {
-        spark.conf.set("graft.sim.exact", "false")
-        spark.conf.set("graft.sim.bands.minhash", shape)
+      // the advised shape, plus the gate's recall-heavy default for contrast
+      val gateShape = s"${Knobs.MinHash.tables}x${Knobs.MinHash.planes}"
+      for (shape <- Seq(advice.shape, gateShape).distinct) Knobs.withConf(spark,
+          Knobs.SimExact.key -> "false", Knobs.MinHash.bands.key -> shape) {
         val tBanded = Corpora.timed(2)(run())
         val bandedDf = DedupOps.ngramJaccard(spark, dir).localCheckpoint()
         val found = exactOpt.map(e => e.select($"d1", $"d2")
@@ -405,10 +407,9 @@ object Harness {
         // prices RAW bucket mass, so count with the size-ratio prefilter
         // off — prefiltered counts would read as spurious prediction error
         // on a size-heterogeneous corpus (r11 review finding)
-        spark.conf.set("graft.sim.prefilter", "false")
-        val nCand =
-          try DedupOps.minhashCandidatesPlan(spark, dir).count()
-          finally spark.conf.unset("graft.sim.prefilter")
+        val nCand = Knobs.withConf(spark, Knobs.SimPrefilter.key -> "false") {
+          DedupOps.minhashCandidatesPlan(spark, dir).count()
+        }
         val allPairs = n.toDouble * (n - 1) / 2
         println(f"DOCSX n=$n shape=$shape%-5s exact=$tExact%8.2fs banded=$tBanded%8.2fs " +
           f"speedup=${tExact / tBanded}%5.2fx recall=${found.toDouble / nExact}%.4f " +
@@ -417,9 +418,7 @@ object Harness {
           f"measuredFrac=${nCand / allPairs}%.6f " +
           f"predictedFrac=${advice.candidateFraction}%.6f " +
           f"candidates=$nCand")
-        spark.conf.unset("graft.sim.bands.minhash")
       }
-      spark.conf.set("graft.sim.exact", "true")
     }
     spark.stop()
   }

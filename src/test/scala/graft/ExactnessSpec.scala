@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Knobs
 import graft.functions.{DedupOps, SimilarityOps, TextOps}
 
 /** The `graft.sim.exact` knob: exact all-pairs baselines vs the banded-LSH
@@ -11,10 +12,10 @@ import graft.functions.{DedupOps, SimilarityOps, TextOps}
   */
 class ExactnessSpec extends SparkSpec {
 
-  private def withCandidatePath[A](body: => A): A = {
-    spark.conf.set("graft.sim.exact", "false")
-    try body finally spark.conf.unset("graft.sim.exact")
-  }
+  private def withCandidatePath[A](body: => A): A = withConf(Knobs.SimExact.key -> "false")(body)
+
+  /** The embedding dedup route's bucket-cap knob. */
+  private val cosdedupCap = Knobs.CosDedup.bucketCap.get
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
@@ -66,7 +67,7 @@ class ExactnessSpec extends SparkSpec {
     spark.conf.set("graft.sim.rescue.samelabel", "0.999")
     // floor 0.999 rescues nearly every vector, far past the default 5%
     // refusal knob — accept it, which also pins the SHUFFLE-join rescue
-    // path (the broadcast hint is dropped past BroadcastSafeRescueFrac)
+    // path (the broadcast hint is dropped past Knobs.SameLabel.BroadcastSafeFrac)
     spark.conf.set("graft.sim.rescue.maxfrac.samelabel", "1.0")
     try {
       // floor 0.999 rescues nearly every vector → answer is exact by
@@ -253,7 +254,7 @@ class ExactnessSpec extends SparkSpec {
     val cap = 8
     def pairsOf: Set[(Long, Long)] = DedupOps.minhashCandidatesPlan(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for ((bands, rows) <- Seq((DedupOps.NumBands, DedupOps.BandRows), (16, 1))) try {
+    for ((bands, rows) <- Seq((Knobs.MinHash.tables, Knobs.MinHash.planes), (16, 1))) try {
       spark.conf.set("graft.sim.prefilter", "false")
       spark.conf.set("graft.sim.bands.minhash", s"${bands}x$rows")
       val uncapped = pairsOf
@@ -314,31 +315,28 @@ class ExactnessSpec extends SparkSpec {
     val dir = tools.Corpora.generateDenseDupVectors(spark, 1000)
     val (tables, planes) = (8, 4)
     val cap = 64
-    def pairsOf: Set[(Long, Long)] = SimilarityOps.lshCandidateIds(
-        spark, dir, nTables = tables, planesPerTable = planes)
+    def pairsOf(c: Int): Set[(Long, Long)] = SimilarityOps.lshCandidateIds(
+        spark, dir, Knobs.Banding(Knobs.CosDedup, tables, planes, bucketCap = c))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
-      val uncapped = pairsOf
-      spark.conf.set("graft.sim.bucketcap.adhoc", cap.toString)
-      val capped = pairsOf
-      val membership = graft.core.Tables.embeddings(spark, dir)
-        .select($"vec_id", posexplode(
-          expr(s"lsh_buckets(embedding, $tables, $planes)")).as(Seq("tbl", "bucket")))
-        .select($"vec_id", concat_ws(":", $"tbl", $"bucket").as("bk"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-        .groupBy(_._2).view.mapValues(_.map(_._1).sorted.toSeq).toMap
-      def pairsFrom(buckets: Iterable[Seq[Long]]): Set[(Long, Long)] =
-        buckets.flatMap(ds => for (a <- ds; b <- ds if a < b) yield (a, b)).toSet
-      assert(uncapped == pairsFrom(membership.values),
-        "reference banding disagrees with the candidate route")
-      val expected = pairsFrom(membership.values.filter(_.size <= cap))
-      assert(capped == expected,
-        s"missing=${(expected -- capped).take(5)} spurious=${(capped -- expected).take(5)}")
-      val maxBucket = membership.values.map(_.size).max
-      assert(capped.size < uncapped.size,
-        s"cap=$cap never bit: ${uncapped.size} pairs uncapped vs " +
-          s"${capped.size} capped, max bucket $maxBucket vectors")
-    } finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    val uncapped = pairsOf(0)
+    val capped = pairsOf(cap)
+    val membership = graft.core.Tables.embeddings(spark, dir)
+      .select($"vec_id", posexplode(
+        expr(s"lsh_buckets(embedding, $tables, $planes)")).as(Seq("tbl", "bucket")))
+      .select($"vec_id", concat_ws(":", $"tbl", $"bucket").as("bk"))
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .groupBy(_._2).view.mapValues(_.map(_._1).sorted.toSeq).toMap
+    def pairsFrom(buckets: Iterable[Seq[Long]]): Set[(Long, Long)] =
+      buckets.flatMap(ds => for (a <- ds; b <- ds if a < b) yield (a, b)).toSet
+    assert(uncapped == pairsFrom(membership.values),
+      "reference banding disagrees with the candidate route")
+    val expected = pairsFrom(membership.values.filter(_.size <= cap))
+    assert(capped == expected,
+      s"missing=${(expected -- capped).take(5)} spurious=${(capped -- expected).take(5)}")
+    val maxBucket = membership.values.map(_.size).max
+    assert(capped.size < uncapped.size,
+      s"cap=$cap never bit: ${uncapped.size} pairs uncapped vs " +
+        s"${capped.size} capped, max bucket $maxBucket vectors")
   }
 
   test("embedding bucket cap below corpus/2^planes fails LOUD, not silently empty") {
@@ -351,28 +349,26 @@ class ExactnessSpec extends SparkSpec {
     // aggregation already walks the per-bucket counts, so the tripwire is
     // one reused pass), naming the dial and the shape rule.
     val dir = tools.Corpora.generateDenseDupVectors(spark, 20000)
-    spark.conf.set("graft.sim.bucketcap.adhoc", "512")
-    try {
+    withConf(cosdedupCap.key -> "512") {
       val e = intercept[IllegalArgumentException] {
         // the guard fires at plan CONSTRUCTION (the helper's eager sizes
         // pass) — no action needed for the failure to surface
-        SimilarityOps.lshCandidateIds(spark, dir, nTables = 8, planesPerTable = 4,
+        SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
           prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
       }
-      assert(e.getMessage.contains("graft.sim.bucketcap.adhoc=512"), e.getMessage)
+      assert(e.getMessage.contains("graft.sim.bucketcap.cosdedup=512"), e.getMessage)
       assert(e.getMessage.contains("2^planes"), e.getMessage)
       assert(e.getMessage.contains("silently"), e.getMessage)
-    } finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    }
     // control: the SAME corpus and cap on a corpus-matched shape (8×10 =
     // 1024 buckets/table, the SCALE.md r13 deployment shape) passes the
     // guard and keeps a non-empty candidate set — the tripwire fires on
     // the shape mismatch, not on the dial being on
-    spark.conf.set("graft.sim.bucketcap.adhoc", "512")
-    try {
-      val kept = SimilarityOps.lshCandidateIds(spark, dir, nTables = 8,
-        planesPerTable = 10, prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
+    withConf(cosdedupCap.key -> "512", Knobs.CosDedup.bands.key -> "8x10") {
+      val kept = SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
+        prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
       assert(kept > 0, "matched shape must keep candidates under the same cap")
-    } finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    }
   }
 
   test("tripwire combined predicate: skewed mismatch fails, extreme hot cluster runs") {
@@ -395,7 +391,7 @@ class ExactnessSpec extends SparkSpec {
     val skewed = bucketFrame((0 until 90).map(b => (b, 1000L)) ++
       (90 until 100).map(b => (b, 1L)))
     val e = intercept[IllegalArgumentException] {
-      DedupOps.capBuckets(skewed, Seq("bucket"), 10, "graft.sim.bucketcap.adhoc")._1
+      DedupOps.capBuckets(skewed, Seq("bucket"), 10, cosdedupCap)._1
     }
     assert(e.getMessage.contains("silently"), e.getMessage)
     // 2 of 100 buckets hold 5000 rows (over cap), 98 hold 1 row: over
@@ -404,7 +400,7 @@ class ExactnessSpec extends SparkSpec {
     val hot = bucketFrame((0 until 2).map(b => (b, 5000L)) ++
       (2 until 100).map(b => (b + 1000, 1L)))
     val kept = DedupOps.capBuckets(hot, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc")._1
+      cosdedupCap)._1
     assert(kept.count() == 98L, "hot-cluster corpus must keep its small buckets")
     // MULTI-cluster hot corpus (round-16 review, 2nd pass): 13 of 100
     // buckets hold 1000 rows each — over mass 99.3% AND over-cap buckets
@@ -415,7 +411,7 @@ class ExactnessSpec extends SparkSpec {
     val multiHot = bucketFrame((0 until 13).map(b => (b, 1000L)) ++
       (13 until 100).map(b => (b + 1000, 1L)))
     val keptMulti = DedupOps.capBuckets(multiHot, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc")._1
+      cosdedupCap)._1
     assert(keptMulti.count() == 87L,
       "multi-cluster hot corpus must keep its background buckets")
     // BOUNDARY of the majority hatch (r17 advice #3): with mass ≥99% gone,
@@ -433,24 +429,24 @@ class ExactnessSpec extends SparkSpec {
     // (r17 review #2)
     withDedupWarnCapture { captured =>
       assert(DedupOps.capBuckets(fortyOver, Seq("bucket"), 10,
-        "graft.sim.bucketcap.adhoc")._1.count() == 60L,
+        cosdedupCap)._1.count() == 60L,
         "40%-of-buckets-over with 99%+ mass gone is the documented " +
           "many-cluster tradeoff: it must run, keeping the background")
       assert(captured.synchronized(captured.toList)
-        .exists(m => m.contains("graft.sim.bucketcap.adhoc=10") &&
+        .exists(m => m.contains("graft.sim.bucketcap.cosdedup=10") &&
           m.contains("bucketed rows")),
         s"the 99%-mass hatch corpus must warn, captured: $captured")
     }
     val halfOver = bucketFrame((0 until 50).map(b => (b, 1000L)) ++
       (50 until 100).map(b => (b + 1000, 1L)))
     assert(DedupOps.capBuckets(halfOver, Seq("bucket"), 10,
-      "graft.sim.bucketcap.adhoc")._1.count() == 50L,
+      cosdedupCap)._1.count() == 50L,
       "exactly half the buckets over is not a strict majority: must run")
     val majorityOver = bucketFrame((0 until 51).map(b => (b, 1000L)) ++
       (51 until 100).map(b => (b + 1000, 1L)))
     val eMaj = intercept[IllegalArgumentException] {
       DedupOps.capBuckets(majorityOver, Seq("bucket"), 10,
-        "graft.sim.bucketcap.adhoc")._1
+        cosdedupCap)._1
     }
     assert(eMaj.getMessage.contains("silently"), eMaj.getMessage)
   }
@@ -502,13 +498,13 @@ class ExactnessSpec extends SparkSpec {
     // (excising the hot cluster is the dial's purpose) and a WARNING must
     // fire with the shape arithmetic, from the stats row already in hand.
     val dir = tools.Corpora.generateDenseDupVectors(spark, 20000, hotFrac = 0.9)
-    spark.conf.set("graft.sim.bucketcap.adhoc", "512")
-    try withDedupWarnCapture { captured =>
-      val kept = SimilarityOps.lshCandidateIds(spark, dir, nTables = 8,
-        planesPerTable = 10, prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
+    withConf(cosdedupCap.key -> "512", Knobs.CosDedup.bands.key -> "8x10")(
+        withDedupWarnCapture { captured =>
+      val kept = SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
+        prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
       assert(kept > 0, "sub-fatal mass loss must not empty the candidate set")
       val warns = captured.synchronized(captured.toList)
-        .filter(_.contains("graft.sim.bucketcap.adhoc=512"))
+        .filter(_.contains("graft.sim.bucketcap.cosdedup=512"))
       assert(warns.nonEmpty, s"expected a warn-tier message, captured: $captured")
       assert(warns.exists(m => m.contains("bucketed rows") &&
         m.contains("BandTuner.suggest")), warns.mkString("\n"))
@@ -522,12 +518,12 @@ class ExactnessSpec extends SparkSpec {
       // re-run it under the appender and assert no new warning
       val before = captured.synchronized(captured.size)
       val ctl = tools.Corpora.generateDenseDupVectors(spark, 20000)
-      SimilarityOps.lshCandidateIds(spark, ctl, nTables = 8,
-        planesPerTable = 10, prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
+      SimilarityOps.lshCandidateIds(spark, ctl, Knobs.CosDedup(spark),
+        prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
       assert(captured.synchronized(captured.size) == before,
         "a 20%-hot corpus under a matched shape must not warn: " +
           captured.synchronized(captured.drop(before)).mkString("\n"))
-    } finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    })
   }
 
   test("sim bucket cap is scoped per consumer: a dedup-tuned cap cannot degrade other routes") {
@@ -646,7 +642,8 @@ class ExactnessSpec extends SparkSpec {
       val scored = SimilarityOps.lshScoredNeighbors(spark, sfDir, 4, 4, probeBits = bits)
         .groupBy($"v1").agg(expr("arg_max_long(v2, cos)").as("b"))
         .select($"v1", $"b.id".as("nearest"), round($"b.score", 6).as("cos"))
-      val cand = SimilarityOps.lshCandidateIds(spark, sfDir, 4, 4, probeBits = bits)
+      val cand = SimilarityOps.lshCandidateIds(spark, sfDir,
+        Knobs.Banding(Knobs.Pairs, 4, 4, probeBits = bits))
       val viaDistinct = cand.union(cand.select($"v2".as("v1"), $"v1".as("v2")))
         .join(e.select($"vec_id".as("v1"), $"embedding".as("e1")), Seq("v1"))
         .join(e.select($"vec_id".as("v2"), $"embedding".as("e2")), Seq("v2"))
@@ -674,7 +671,7 @@ class ExactnessSpec extends SparkSpec {
   }
 
   test("band-shape knob rejects zero/negative/garbage shapes with the knob error") {
-    // every malformed value must die at bandShape with the knob's own
+    // every malformed value must die at the band-shape knob with its own
     // message — never deep in plan build (a 0x4 minhash shape used to
     // surface as a NoSuchElementException from an empty agg list)
     for (bad <- Seq("0x4", "4x0", "-2x4", "x4", "4x", "abc", "4x4x4",

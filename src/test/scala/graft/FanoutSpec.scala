@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Fanout, Tables}
+import graft.core.{Fanout, Knobs, Tables}
 import graft.expr.Int8Keep
 import graft.functions.SimilarityOps
 import graft.plans.GraftFunctions
@@ -30,15 +30,9 @@ class FanoutSpec extends SparkSpec {
     // the production no-op path: AQE's merging and skew split stay in charge
     val file = java.nio.file.Paths.get(sfDir, "embeddings.parquet")
     val maxPartitionBytes = java.nio.file.Files.size(file) / parallelism
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, maxPartitionBytes.toString)
-    try {
+    withConf("spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString) {
       val df = Tables.embeddings(spark, sfDir)
       assert(Fanout.maybeFanout(df, $"vec_id") eq df)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -56,7 +50,7 @@ class FanoutSpec extends SparkSpec {
 
   test("banded self-join runs on every core: unmerged (tbl, bucket) exchange, same pairs") {
     val theta = 0.4
-    val cand = SimilarityOps.lshCandidateIds(spark, sfDir, 16, 2,
+    val cand = SimilarityOps.lshCandidateIds(spark, sfDir, Knobs.Pairs(spark),
       prefilterTheta = Some(theta))
     var pairs = Set.empty[(Long, Long)]
     val stages = stagesOf {

@@ -148,7 +148,7 @@ class Int8PrefilterSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
     try {
       val plan = planOf(SimilarityOps.lshCandidateIds(spark, sfDir,
-        nTables = 16, planesPerTable = 2, probeBits = 1,
+        graft.core.Knobs.Banding(graft.core.Knobs.Pairs, 16, 2, probeBits = 1),
         prefilterTheta = Some(SimilarityOps.PairsThreshold)))
       assert(plan.contains("int8_keep"), plan.linesIterator.take(20).mkString("\n"))
       // every join evaluating the prefilter must be the shuffled form

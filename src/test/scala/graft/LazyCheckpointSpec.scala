@@ -28,8 +28,8 @@ class LazyCheckpointSpec extends SparkSpec {
           s.taskMetrics.shuffleWriteMetrics.recordsWritten)).mkString("\n")
         // two corpus scans: signatures, and the candidate slice's sets
         assert(stages.count(isScan) == 2, show)
-        // the band stream is NumBands rows per document
-        val bandRows = DedupOps.NumBands * Tables.documents(spark, sfDir).count()
+        // the band stream is one row per band per document
+        val bandRows = graft.core.Knobs.MinHash.tables * Tables.documents(spark, sfDir).count()
         assert(stages.count(s => isScan(s) &&
           s.taskMetrics.shuffleWriteMetrics.recordsWritten == bandRows) == 1, show)
         // the slice's set stage reads documents once; the second join leg

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Knobs
 import graft.expr.Hyperplanes
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
@@ -94,7 +95,7 @@ class LshProbesSpec extends SparkSpec {
     import graft.functions.SimilarityOps
     val (t, p, bits) = (4, 4, 2)
     val stride = 1 + bits
-    val got = SimilarityOps.lshCandidateIds(spark, sfDir, t, p, probeBits = bits)
+    val got = SimilarityOps.lshCandidateIds(spark, sfDir, Knobs.Banding(Knobs.Pairs, t, p, bits))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     GraftFunctions.install(spark)
     val vecs = graft.core.Tables.embeddings(spark, sfDir)
@@ -123,12 +124,10 @@ class LshProbesSpec extends SparkSpec {
     }
     val dense = tools.Corpora.generateDenseDupVectors(spark, 1000)
     for (bits <- Seq(0, 2)) {
-      once(s"candidates bits=$bits", SimilarityOps.lshCandidateIds(spark, sfDir, 4, 4,
-        probeBits = bits))
-      spark.conf.set("graft.sim.bucketcap.adhoc", "64")
-      try once(s"capped candidates bits=$bits", SimilarityOps.lshCandidateIds(
-        spark, dense, 8, 4, probeBits = bits))
-      finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+      once(s"candidates bits=$bits", SimilarityOps.lshCandidateIds(spark, sfDir,
+        Knobs.Banding(Knobs.Pairs, 4, 4, bits)))
+      once(s"capped candidates bits=$bits", SimilarityOps.lshCandidateIds(spark, dense,
+        Knobs.Banding(Knobs.CosDedup, 8, 4, bits, bucketCap = 64)))
       once(s"scored bits=$bits", SimilarityOps.lshScoredNeighbors(spark, sfDir, 4, 4,
         probeBits = bits))
       once(s"scored within label bits=${bits min 1}", SimilarityOps.lshScoredNeighbors(
@@ -251,9 +250,10 @@ class LshProbesSpec extends SparkSpec {
 
   test("probed candidates strictly extend base candidates (same shape)") {
     import graft.functions.SimilarityOps
-    val base = SimilarityOps.lshCandidateIds(spark, sfDir, 4, 4)
+    val base = SimilarityOps.lshCandidateIds(spark, sfDir, Knobs.Banding(Knobs.Pairs, 4, 4))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val probed = SimilarityOps.lshCandidateIds(spark, sfDir, 4, 4, probeBits = 2)
+    val probed = SimilarityOps.lshCandidateIds(spark, sfDir,
+      Knobs.Banding(Knobs.Pairs, 4, 4, probeBits = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base.subsetOf(probed),
       s"lost pairs: ${(base -- probed).take(5)}")

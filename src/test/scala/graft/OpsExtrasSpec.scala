@@ -258,14 +258,14 @@ class OpsExtrasSpec extends SparkSpec {
     spark.conf.set("graft.sim.bucketcap.cosdedup", "abc")
     try {
       val e = intercept[RuntimeException] {
-        graft.functions.SimilarityOps.simBucketCap(spark, "cosdedup")
+        graft.core.Knobs.CosDedup(spark)
       }
       assert(e.getMessage.contains("graft.sim.bucketcap.cosdedup"), e.getMessage)
       assert(e.getMessage.contains("'abc'"), e.getMessage)
     } finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
     // and a well-formed scoped value still parses
     spark.conf.set("graft.sim.bucketcap.cosdedup", "512")
-    try assert(graft.functions.SimilarityOps.simBucketCap(spark, "cosdedup") == 512)
+    try assert(graft.core.Knobs.CosDedup(spark).bucketCap == 512)
     finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
   }
 }

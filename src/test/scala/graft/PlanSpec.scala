@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Knobs, Tables}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the 100 TB discipline checks
@@ -170,18 +170,16 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     object Plans extends AdaptiveSparkPlanHelper
-    def pairExchangeInputs(): Seq[Seq[String]] = Plans.collect(
+    def pairExchangeInputs(cap: Int): Seq[Seq[String]] = Plans.collect(
       graft.functions.SimilarityOps
-        .lshCandidateIds(spark, sfDir, nTables = 8, planesPerTable = 4)
+        .lshCandidateIds(spark, sfDir, Knobs.Banding(Knobs.CosDedup, 8, 4, bucketCap = cap))
         .queryExecution.executedPlan) {
       case e: ShuffleExchangeExec
           if Set("v1", "v2").subsetOf(e.output.map(_.name).toSet) =>
         e.child.output.map(_.name)
     }
-    assert(pairExchangeInputs() == Seq(Seq("v1", "v2")))
-    spark.conf.set("graft.sim.bucketcap.adhoc", "64")
-    try assert(pairExchangeInputs() == Seq(Seq("v1", "v2")))
-    finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    assert(pairExchangeInputs(0) == Seq(Seq("v1", "v2")))
+    assert(pairExchangeInputs(64) == Seq(Seq("v1", "v2")))
   }
 
   test("no banded candidate or top-1 plan de-duplicates pairs with an aggregate") {
@@ -197,23 +195,18 @@ class PlanSpec extends SparkSpec {
         case a: BaseAggregateExec
             if a.groupingExpressions.map(_.name) == Seq("v1", "v2") => a
       }.map(_.toString)
-    def routes(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(0, 2).flatMap { bits =>
-      Seq(s"candidates bits=$bits" ->
-          SimilarityOps.lshCandidateIds(spark, sfDir, 8, 4, probeBits = bits),
+    def routes(cap: Int): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(0, 2).flatMap { bits =>
+      Seq(s"candidates bits=$bits" -> SimilarityOps.lshCandidateIds(spark, sfDir,
+          Knobs.Banding(Knobs.CosDedup, 8, 4, probeBits = bits, bucketCap = cap)),
         s"scored bits=$bits" -> SimilarityOps.lshScoredNeighbors(spark, sfDir, 4, 4,
           within = Seq("label"), probeBits = bits))
     } ++ Seq("sim_ann_lsh" -> SimilarityOps.annLsh(spark, sfDir))
-    spark.conf.set("graft.sim.exact", "false")
-    try {
-      for ((name, df) <- routes() :+
+    withConf(Knobs.SimExact.key -> "false") {
+      for ((name, df) <- routes(0) :+
           ("sim_nearest_same_label" -> SimilarityOps.nearestSameLabel(spark, sfDir)))
         assert(pairAggregates(df).isEmpty, s"$name: ${pairAggregates(df)}")
-      spark.conf.set("graft.sim.bucketcap.adhoc", "64")
-      for ((name, df) <- routes() if name.startsWith("candidates"))
+      for ((name, df) <- routes(64) if name.startsWith("candidates"))
         assert(pairAggregates(df).isEmpty, s"capped $name: ${pairAggregates(df)}")
-    } finally {
-      spark.conf.unset("graft.sim.exact")
-      spark.conf.unset("graft.sim.bucketcap.adhoc")
     }
   }
 
@@ -225,7 +218,8 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     object Plans extends AdaptiveSparkPlanHelper
     for (bits <- Seq(0, 2)) {
-      val df = graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir, 8, 4, probeBits = bits)
+      val df = graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir,
+        Knobs.Banding(Knobs.CosDedup, 8, 4, probeBits = bits))
       df.collect()
       val conds = Plans.collect(df.queryExecution.executedPlan) {
         case j: BaseJoinExec if j.condition.exists(_.toString.contains("lsh_first_shared")) =>
@@ -402,15 +396,11 @@ class PlanSpec extends SparkSpec {
     // (sizes agg, cap semi-join, both self-join legs) must read the ONE
     // materialized (tbl,bucket,id,blob) stream — no scan+lsh_buckets
     // subtree may be duplicated into the plan
-    spark.conf.set("graft.sim.bucketcap.adhoc", "64")
-    try {
-      val plan = planOf(graft.functions.SimilarityOps.lshCandidateIds(
-        spark, sfDir, nTables = 8, planesPerTable = 4,
-        prefilterTheta = Some(0.9)))
-      assert(!plan.contains("Scan parquet"),
-        s"capped embedding candidate plan rescans the corpus:\n$plan")
-      assert(plan.contains("LeftSemi"), s"cap semi-join missing:\n$plan")
-    } finally spark.conf.unset("graft.sim.bucketcap.adhoc")
+    val plan = planOf(graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir,
+      Knobs.Banding(Knobs.CosDedup, 8, 4, bucketCap = 64), prefilterTheta = Some(0.9)))
+    assert(!plan.contains("Scan parquet"),
+      s"capped embedding candidate plan rescans the corpus:\n$plan")
+    assert(plan.contains("LeftSemi"), s"cap semi-join missing:\n$plan")
   }
 
   test("bucket cap: one signature pass — the capped candidate plan rescans nothing") {

@@ -29,15 +29,6 @@ class SmallSortSpec extends SparkSpec {
     try body finally exp.extraStrategies = prev
   }
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
 
   /** AQE's final plan only: its toString also prints the initial plan. */
@@ -80,7 +71,7 @@ class SmallSortSpec extends SparkSpec {
 
   test("a sort input AQE would not merge into one task keeps range partitioning") {
     // the at-scale path: over the advisory partition size ...
-    def rangeSorted(key: String): Unit = withConf(key, "1") {
+    def rangeSorted(key: String): Unit = withConf(key -> "1") {
       val plan = finalPlan(query("q1_pricing_summary"))
       assert(plan.contains("rangepartitioning") && !plan.contains("SmallSortInput"),
         s"expected the range sort with $key=1:\n$plan")
@@ -89,8 +80,8 @@ class SmallSortSpec extends SparkSpec {
     // ... and, when coalescing puts parallelism first, over the minimum
     // partition size, above which AQE keeps several sort tasks
     rangeSorted("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    withConf("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false") {
-      withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
+    withConf("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
+      withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
         assert(!finalPlan(query("q1_pricing_summary")).contains("rangepartitioning"))
       }
     }

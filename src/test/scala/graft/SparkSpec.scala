@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Session
+import graft.core.{Knobs, Session}
 import graft.tools.BusDrain
 import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
@@ -17,6 +17,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.collect() // materialize so AQE settles
     df.queryExecution.executedPlan.toString
   }
+
+  /** Run `body` with `kvs` set on the session conf, then restore each key's
+    * prior value ([[Knobs.withConf]]). */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = Knobs.withConf(spark, kvs: _*)(body)
 
   /** Every stage that completed while `action` ran, in completion order
     * ([[BusDrain.jobsAndStagesOf]]). */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Knobs, Tables}
 import graft.streaming.EventStreams
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -60,10 +60,7 @@ class StreamingSpec extends SparkSpec {
   test("runToMemory writes checkpoint checksum sidecars only when the dial asks") {
     // with spark.sql.streaming.checkpointLocation set, a stream checkpoints
     // to <location>/<query name> and the directory outlives the query
-    val cpConf = "spark.sql.streaming.checkpointLocation"
-    val dial = "graft.stream.checkpoint.checksum"
     val root = java.nio.file.Files.createTempDirectory("graft_cp_sums")
-    val prior = spark.conf.getOption(cpConf)
     // Spark's sidecar is <file>.crc; Hadoop's local file system writes its
     // own .<file>.crc beside every file regardless of the setting
     def sidecars(name: String): Seq[String] = {
@@ -73,17 +70,12 @@ class StreamingSpec extends SparkSpec {
         .filter(f => f.endsWith(".crc") && !f.startsWith(".")).toList
       finally walk.close()
     }
-    spark.conf.set(cpConf, root.toString)
-    try {
+    try withConf("spark.sql.streaming.checkpointLocation" -> root.toString) {
       tumblingToMemory("t_spec_sums_off")
       assert(sidecars("t_spec_sums_off").isEmpty)
-      spark.conf.set(dial, "true")
-      try tumblingToMemory("t_spec_sums_on") finally spark.conf.unset(dial)
+      withConf(Knobs.StreamCheckpointChecksum.key -> "true")(tumblingToMemory("t_spec_sums_on"))
       assert(sidecars("t_spec_sums_on").nonEmpty)
-    } finally {
-      prior.fold(spark.conf.unset(cpConf))(spark.conf.set(cpConf, _))
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("file-source streaming sliding counts == batch sliding counts") {

@@ -89,5 +89,5 @@ EOF
 verify_route exact true
 verify_route banded false
 
-# main code-line count (ROADMAP item 6's metric), recorded with every run
+# main code-line count (ROADMAP item 10's metric), recorded with every run
 echo "== GATE GREEN (sf$SF) — main code lines: $(tools/loc.sh)"
