@@ -145,12 +145,6 @@ object Knobs {
   val TextDecontamBloom: Knob[Boolean] = flag("graft.text.decontam.bloom", default = false,
     "decontamination through a bloom prefilter instead of a broadcast")
 
-  /** Whether [[graft.streaming.EventStreams.runToMemory]]'s streams write
-    * checkpoint checksum sidecars; its scaladoc holds the measurement
-    * behind the default. */
-  val StreamCheckpointChecksum: Knob[Boolean] = flag("graft.stream.checkpoint.checksum",
-    default = false, "streaming checkpoint checksum sidecars")
-
   /** A banded candidate route and its default shape, `tables` x `planes`
     * (for MinHash, bands x rows per band). Its band-shape knob
     * `graft.sim.bands.<name>` = `"<tables>x<planes>"` exists because band
@@ -330,7 +324,7 @@ object Knobs {
 
   /** Every live key. */
   val all: Seq[Knob[_]] = Seq(Profile, SumsExact, SimExact, SimPrefilter, DedupBucketCap,
-    DedupHashVerify, TextDecontamBloom, StreamCheckpointChecksum) ++
+    DedupHashVerify, TextDecontamBloom) ++
     Seq(Pairs, SameLabel, CosDedup, MinHash).flatMap(_.knobs)
 
   /** Retired: `graft.sim.bucketcap` capped EVERY banded consumer in the

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 import scala.collection.mutable
 import scala.reflect.runtime.universe
@@ -117,13 +117,32 @@ abstract class BoundedTopK[S: universe.TypeTag](k: Int, ord: Ordering[S])
   override def finish(l: TopKBuf[S]): Seq[S] = trim(l.items)
 }
 
-/** Bounded-heap per-key top-k — the scale-optimal form of "top k records
-  * per group". The declarative alternative (window `row_number` + filter)
-  * shuffles EVERY row to sort it inside its partition; this Aggregator
-  * keeps at most k records per (key, partition) on the map side and merges
-  * heaps, so the shuffle carries ≤ k·partitions rows per key regardless of
-  * group size — the per-mapper-heap trick from the reference's top-k
-  * pattern (SURVEY §2.6), generalized per key and map-combined.
+object BoundedTopK {
+  /** Ranked top-k per group: `groups ++ (rank, key, score)`, the `k`
+    * highest-scoring rows of each group numbered from 1 (score desc, then
+    * key asc), with `key` and `score` under their input names and `score`
+    * as a double. The one place a query builds a heap aggregator: a string
+    * key runs [[TopKStrAgg]] (UTF-8 binary tie order), any other key
+    * [[TopKAgg]]. Map-side partial heaps mean the shuffle carries ≤ k rows
+    * per (group, partition), where a window `row_number` shuffles and sorts
+    * every row — the per-mapper-heap top-k of the reference (SURVEY §2.6),
+    * per group and map-combined. A group smaller than k keeps all its rows.
+    */
+  def ranked(df: DataFrame, groups: Seq[String], score: String, key: String,
+      k: Int): DataFrame = {
+    val heap =
+      if (df.schema(key).dataType == StringType) udaf(new TopKStrAgg(k))
+      else udaf(new TopKAgg(k))
+    val g = groups.map(col)
+    df.groupBy(g: _*)
+      .agg(heap(col(score).cast("double"), col(key)).as("top"))
+      .select(g :+ posexplode(col("top")): _*)
+      .select(g ++ Seq((col("pos") + 1).cast("int").as("rank"),
+        col("col.key").as(key), col("col.score").as(score)): _*)
+  }
+}
+
+/** Long-keyed bounded heap behind [[BoundedTopK.ranked]].
   * Ordering: score desc, then key asc (deterministic ties).
   */
 final class TopKAgg(k: Int) extends BoundedTopK[Scored](k,
@@ -152,10 +171,10 @@ object ScoredStr {
   }
 }
 
-/** String-keyed bounded-heap per-key top-k; same contract as [[TopKAgg]]
-  * (score desc, key asc ties — UTF-8 binary order, matching engine/oracle),
-  * for vocabulary-shaped payloads where the per-group domain is unbounded
-  * at scale.
+/** String-keyed bounded heap behind [[BoundedTopK.ranked]]; same contract
+  * as [[TopKAgg]] (score desc, key asc ties — UTF-8 binary order, matching
+  * engine/oracle), for vocabulary-shaped payloads where the per-group
+  * domain is unbounded at scale.
   */
 final class TopKStrAgg(k: Int) extends BoundedTopK[ScoredStr](k,
     Ordering.by((s: ScoredStr) => (-s.score, s.key))(

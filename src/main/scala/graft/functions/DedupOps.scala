@@ -621,44 +621,22 @@ object DedupOps extends QueryPack {
   val CosDedupThreshold = 0.9
 
   /** Embedding-cosine near-dup: canonical id = min vec_id among neighbors
-    * with cosine ≥ 0.9 (self included — cos(v,v)=1). Exact all-pairs form
-    * is the oracle-checked baseline; with `graft.sim.exact=false` the SAME
-    * neighbor filter + canonical groupBy runs over banded LSH candidates
-    * ([[SimilarityOps.lshCandidateIds]]) — a tight 0.9 threshold (26°)
-    * tolerates 4-bit tables, so 8 tables × 4 planes: candidate volume
-    * O(Σ bucket²) instead of the n² cross join, int8-prefiltered inside
-    * the candidate self-join ([[SimilarityOps.lshCandidateIds]]
-    * `prefilterTheta` — lossless by the [[graft.expr.Int8Blob]] margin
-    * bound, so the float verify below sees near-threshold survivors only).
-    * ExactnessSpec asserts the two paths agree on the test data.
+    * with cosine ≥ 0.9, self included. The pairs come from
+    * [[SimilarityOps.cosinePairs]] on the `cosdedup` route, each unordered
+    * pair scored once: one explode emits both orientations, and the self
+    * rows are unioned in (a vector is its own neighbor even when its
+    * cosine with itself is not 1, as for a zero vector). A tight 0.9
+    * threshold (26°) tolerates 4-bit tables, so 8 tables × 4 planes:
+    * candidate volume O(Σ bucket²) instead of the n² cross join.
+    * ExactnessSpec asserts the two routes agree on the test data.
     * Reference analogue: none (north-star extension).
     */
   def embeddingCosineDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-    val neighbors =
-      if (Knobs.SimExact(spark)) {
-        // exact theta-join scores C(n,2) pairs: precomputed norms + cosPre
-        // (bit-identical to the cosine_sim kernel incl. the zero-norm →
-        // 0.0 convention, ~3× less per-pair work — SimilarityOps.cosPre)
-        val en = e.withColumn("nrm", SimilarityOps.normCol)
-        val a = SimilarityOps.vecSide(en, "v1", "e1", "n1")
-        val b = SimilarityOps.vecSide(en, "v2", "e2", "n2")
-        a.join(b, $"v1" === $"v2" ||
-            SimilarityOps.cosPre("e1", "e2", "n1", "n2") >= CosDedupThreshold)
-          .select($"v1", $"v2")
-      } else {
-        val cand = SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
-          prefilterTheta = Some(CosDedupThreshold))
-        val near = cand.union(cand.select($"v2".as("v1"), $"v1".as("v2")))
-          .join(e.select($"vec_id".as("v1"), $"embedding".as("e1")), Seq("v1"))
-          .join(e.select($"vec_id".as("v2"), $"embedding".as("e2")), Seq("v2"))
-          .filter(expr("cosine_sim(e1, e2)") >= CosDedupThreshold)
-          .select($"v1", $"v2")
-        // self-pairs (cos(v,v)=1) join the candidate hits explicitly
-        near.union(e.select($"vec_id".as("v1"), $"vec_id".as("v2")))
-      }
-    neighbors
+    SimilarityOps.cosinePairs(spark, dir, Knobs.CosDedup, CosDedupThreshold)
+      .select(explode(array(struct($"v1", $"v2"), struct($"v2".as("v1"), $"v1".as("v2")))).as("o"))
+      .select($"o.v1".as("v1"), $"o.v2".as("v2"))
+      .union(Tables.embeddings(spark, dir).select($"vec_id".as("v1"), $"vec_id".as("v2")))
       .groupBy($"v1")
       .agg(min($"v2").as("canonical_id"), (count(lit(1)) - 1).as("n_near_dups"))
       .select($"v1".as("vec_id"), $"canonical_id", $"n_near_dups")

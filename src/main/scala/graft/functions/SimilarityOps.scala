@@ -101,9 +101,8 @@ object SimilarityOps extends QueryPack {
     (if (b.probeBits == 0) pairs.select($"v1", $"v2")
      else pairs.select(least($"v1", $"v2").as("v1"), greatest($"v1", $"v2").as("v2")))
       // The pairs leave through an exchange of their own: a consumer that
-      // reads them twice (the cosine dedup's two orientations) or samples
-      // them (a sort's range bounds) reuses it instead of running the
-      // self-join again.
+      // samples them (a sort's range bounds) reuses it instead of running
+      // the self-join again.
       .repartition($"v1", $"v2")
   }
 
@@ -268,27 +267,31 @@ object SimilarityOps extends QueryPack {
   }
 
   /** Brute-force exact top-k: broadcast queries, one codegen scoring scan,
-    * then the bounded-heap [[graft.functions.TopKAgg]] per query id —
-    * map-side partial heaps mean the shuffle carries ≤ k rows per
-    * (query, partition), versus the window row_number form which shuffles
-    * EVERY scored candidate to rank it. Same output (heap order = window
-    * order: score desc, id asc), oracle-checked either way.
+    * then the bounded-heap [[BoundedTopK.ranked]] per query id — map-side
+    * partial heaps mean the shuffle carries ≤ k rows per (query,
+    * partition), versus the window row_number form which shuffles EVERY
+    * scored candidate to rank it. Same output (heap order = window order:
+    * score desc, id asc), oracle-checked either way.
     */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    BoundedTopK.ranked(scoredQueries(spark, dir), Seq("q_id"), "cos", "c_id", 3)
+      .select($"q_id", $"rank", $"c_id", round($"cos", 6).as("cos"))
+      .orderBy($"q_id", $"rank")
+  }
+
+  /** (c_id, q_id, cos) for every corpus vector against each of the five
+    * query vectors (`vec_id < 5`) other than itself: the queries are
+    * broadcast, so the corpus streams through one codegen scoring scan.
+    */
+  private def scoredQueries(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val q = e.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val c = e.select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
-    val topk = udaf(new graft.functions.TopKAgg(3))
-    c.join(broadcast(q), $"c_id" =!= $"q_id")
-      .withColumn("cos", expr("cosine_sim(q_emb, c_emb)"))
-      .groupBy($"q_id")
-      .agg(topk($"cos", $"c_id").as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rank"),
-        $"col.key".as("c_id"), round($"col.score", 6).as("cos"))
-      .orderBy($"q_id", $"rank")
+    e.select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
+      .join(broadcast(q), $"c_id" =!= $"q_id")
+      .select($"c_id", $"q_id", expr("cosine_sim(q_emb, c_emb)").as("cos"))
   }
 
   val NTables = 4
@@ -326,40 +329,57 @@ object SimilarityOps extends QueryPack {
     * drift apart (the prefilter bound is only lossless at the SAME θ). */
   val PairsThreshold = 0.4
 
-  /** Embedding near-dup: all pairs with cosine >= 0.4. Exact form is the
-    * all-pairs join (oracle-checked baseline); with `graft.sim.exact=false`
-    * the SAME verify step runs on banded LSH candidates instead — the only
-    * corpus-wide work becomes the (table,bucket) shuffle. 0.4 is a loose
-    * threshold (66°), so the candidate config is recall-heavy: 16 tables of
-    * 2 sign bits (covers every qualifying test pair — tools/lsh_recall.py);
-    * at that recall the candidate set is nearly all n² pairs, which is why
-    * the banded route hands θ to the int8 prefilter
-    * ([[lshCandidateIds]] `prefilterTheta`): provably-below-θ pairs die in
-    * the self-join stage, so the pair exchange and the two float-array
-    * verify joins below see only near-threshold survivors.
+  /** Cosine-threshold pairs: `(v1, v2, carried..., cos)` for every pair of
+    * embeddings with v1 < v2 and cosine ≥ `theta`, each unordered pair
+    * once. Every `(column, prefix)` in `carry` rides along as `<prefix>1`
+    * (v1's value) and `<prefix>2` (v2's).
+    *
+    * Exact (`graft.sim.exact`): the all-pairs `v1 < v2` theta join, scoring
+    * C(n,2) pairs with precomputed norms and [[cosPre]] (bit-identical to
+    * `cosine_sim`, ~3× less per-pair work). Banded: the `route`'s
+    * candidates with θ handed to the int8 prefilter ([[lshCandidateIds]]
+    * `prefilterTheta`), so provably-below-θ pairs die in the self-join
+    * stage, and the pair exchange and the two float-array re-joins see only
+    * near-threshold survivors — few enough that the plain `cosine_sim`
+    * kernel verifies them. Both cosines are symmetric in their arguments,
+    * so a consumer that wants both orientations of a pair emits them from
+    * this one row instead of scoring the pair twice.
+    */
+  private[functions] def cosinePairs(spark: SparkSession, dir: String, route: Knobs.LshRoute,
+      theta: Double, carry: (String, String)*): DataFrame = {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, dir)
+    def carried(i: Int) = carry.map { case (c, p) => c -> s"$p$i" }
+    val pairs =
+      if (Knobs.SimExact(spark)) {
+        val en = e.withColumn("nrm", normCol)
+        vecSide(en, "v1", "e1", "n1", carried(1): _*)
+          .join(vecSide(en, "v2", "e2", "n2", carried(2): _*), $"v1" < $"v2")
+          .withColumn("cos", cosPre("e1", "e2", "n1", "n2"))
+      } else {
+        def side(i: Int) = e.select(Seq($"vec_id".as(s"v$i"), $"embedding".as(s"e$i")) ++
+          carried(i).map { case (c, a) => col(c).as(a) }: _*)
+        lshCandidateIds(spark, dir, route(spark), prefilterTheta = Some(theta))
+          .join(side(1), Seq("v1"))
+          .join(side(2), Seq("v2"))
+          .withColumn("cos", expr("cosine_sim(e1, e2)"))
+      }
+    pairs.filter($"cos" >= theta)
+      .select(Seq($"v1", $"v2") ++ (carried(1) ++ carried(2)).map(a => col(a._2)) :+ $"cos": _*)
+  }
+
+  /** Embedding near-dup: all pairs with cosine >= 0.4, from [[cosinePairs]]
+    * on the `pairs` route. Exact form is the all-pairs join (oracle-checked
+    * baseline); banded, the only corpus-wide work is the (table,bucket)
+    * shuffle. 0.4 is a loose threshold (66°), so the candidate config is
+    * recall-heavy: 16 tables of 2 sign bits (covers every qualifying test
+    * pair — tools/lsh_recall.py); at that recall the candidate set is
+    * nearly all n² pairs, which is why the int8 prefilter carries the
+    * banded route.
     */
   def pairsAboveThreshold(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-    val pairs =
-      if (Knobs.SimExact(spark)) {
-        // exact all-pairs leg scores C(n,2) pairs: precomputed norms +
-        // cosPre (bit-identical to cosine_sim, ~3× less per-pair work)
-        val en = e.withColumn("nrm", normCol)
-        val a = vecSide(en, "v1", "e1", "n1", "label" -> "l1")
-        val b = vecSide(en, "v2", "e2", "n2", "label" -> "l2")
-        a.join(b, $"v1" < $"v2")
-          .withColumn("cos", cosPre("e1", "e2", "n1", "n2"))
-      } else {
-        // banded verify runs on the int8-prefiltered survivor slice — tiny
-        // by construction, so the plain kernel form stays
-        lshCandidateIds(spark, dir, Knobs.Pairs(spark), prefilterTheta = Some(PairsThreshold))
-          .join(e.select($"vec_id".as("v1"), $"embedding".as("e1"), $"label".as("l1")), Seq("v1"))
-          .join(e.select($"vec_id".as("v2"), $"embedding".as("e2"), $"label".as("l2")), Seq("v2"))
-          .withColumn("cos", expr("cosine_sim(e1, e2)"))
-      }
-    pairs
-      .filter($"cos" >= PairsThreshold)
+    cosinePairs(spark, dir, Knobs.Pairs, PairsThreshold, "label" -> "l")
       .select($"v1", $"v2", $"l1", $"l2", round($"cos", 6).as("cos"))
       .orderBy($"v1", $"v2")
   }
@@ -786,27 +806,21 @@ object SimilarityOps extends QueryPack {
     * the oracle, round-before-rank so a sub-ulp cosine divergence can't
     * flip it) plus one in-engine assertion that the k-means IVF probe
     * recovered an exact-top-3 neighbor for ≥3 of the 5 queries — the same
-    * bound KMeansSpec pins, now hash-checked every round. The raw ANN rows
+    * bound KMeansSpec pins, hash-checked on every gate run. The raw ANN rows
     * remain available via [[annIvfKmeansRaw]]; KMeansSpec exercises them.
     */
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
     val ivf = annIvfKmeansRaw(spark, dir)
       .select($"q_id", $"nearest_ivf")
-    // exact brute-force top-3 per query: broadcast query side, one codegen
-    // corpus scan, bounded-heap cut — same shape as cosineTopK
-    val q = e.filter($"vec_id" < 5).select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val topk = udaf(new graft.functions.TopKAgg(3))
-    val exact = e.select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
-      .join(broadcast(q), $"c_id" =!= $"q_id")
-      .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 6))
-      .groupBy($"q_id")
-      .agg(topk($"cos", $"c_id").as("top"))
-      .select($"q_id", transform($"top", s => s.getField("key")).as("top3"))
+    // exact brute-force top-3 per query, the cosineTopK shape on the
+    // 6dp-rounded cosine; a hit is an IVF answer among the three
+    val exact = BoundedTopK.ranked(
+      scoredQueries(spark, dir).withColumn("cos", round($"cos", 6)), Seq("q_id"), "cos", "c_id", 3)
     val hits = exact.join(ivf, Seq("q_id"))
-      .select($"q_id", element_at($"top3", 1).as("exact_nearest"),
-        array_contains($"top3", $"nearest_ivf").cast("int").as("hit"))
+      .groupBy($"q_id")
+      .agg(max(when($"rank" === 1, $"c_id")).as("exact_nearest"),
+        max(($"c_id" === $"nearest_ivf").cast("int")).as("hit"))
     val recallOk = hits.agg((sum($"hit") >= 3).as("recall3_ok"))
     hits.select($"q_id", $"exact_nearest").crossJoin(broadcast(recallOk))
       .orderBy($"q_id")
@@ -892,15 +906,11 @@ object SimilarityOps extends QueryPack {
       .withColumn("est",
         aggregate(zip_with($"q_q", $"c_q", (a, b) => a * b), lit(0L), (s, v) => s + v)
           .cast("double") * $"q_scale" * $"c_scale")
-    val top10 = udaf(new graft.functions.TopKAgg(RescoreCandidates))
-    val cand = est.groupBy($"q_id")
-      .agg(top10($"est", $"c_id").as("top"))
-      .select($"q_id", explode($"top").as("s"))
-      .select($"q_id", $"s.key".as("c_id"))
+    val cand = BoundedTopK.ranked(est, Seq("q_id"), "est", "c_id", RescoreCandidates)
+      .select($"q_id", $"c_id")
     // full-precision rescore of the <= 5×10 survivors: candidates broadcast
     // into one corpus scan, queries broadcast in after
-    val topk = udaf(new graft.functions.TopKAgg(3))
-    Tables.embeddings(spark, dir).select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
+    val rescored = Tables.embeddings(spark, dir).select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
       .join(broadcast(cand), Seq("c_id"))
       .join(broadcast(Tables.embeddings(spark, dir).filter($"vec_id" < 5)
         .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))), Seq("q_id"))
@@ -908,11 +918,7 @@ object SimilarityOps extends QueryPack {
       // c_id) — a sub-ulp cosine divergence between Spark's codegen kernel
       // and DuckDB's list_cosine_similarity on a near-tie can't flip ranks
       .withColumn("cos", round(expr("cosine_sim(q_emb, c_emb)"), 6))
-      .groupBy($"q_id")
-      .agg(topk($"cos", $"c_id").as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", ($"pos" + 1).cast("int").as("rank"),
-        $"col.key".as("c_id"), $"col.score".as("cos"))
+    BoundedTopK.ranked(rescored, Seq("q_id"), "cos", "c_id", 3)
       .orderBy($"q_id", $"rank")
   }
 

@@ -201,13 +201,14 @@ object TextOps extends QueryPack {
       .orderBy($"doc_id")
   }
 
-  /** Document fingerprinting: md5 of normalized text (exact-dup key) plus a
+  /** Document fingerprinting: md5 of the text under the dedup pack's
+    * normalization ([[DedupOps.normText]], the exact-dup key) plus a
     * shingle-min fingerprint (min md5 over 3-token shingles — a 1-permutation
     * MinHash, stable under small edits).
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val norm = regexp_replace(trim(lower($"text")), "\\s+", " ")
+    val norm = DedupOps.normText
     // min_md5_shingle kernel ≡ array_min(transform(shingles, md5))
     // (TextKernelsSpec): the composed form built the shingle array through
     // an interpreted transform, md5'd each shingle through the interpreted
@@ -242,12 +243,8 @@ object TextOps extends QueryPack {
       .groupBy($"lang", $"bigram").agg(count(lit(1)).as("n"))
     // bounded heap per lang: at corpus scale the per-language vocabulary is
     // unbounded — a window rank would shuffle and sort the whole vocabulary
-    val topk = org.apache.spark.sql.functions.udaf(new TopKStrAgg(5))
-    counts.groupBy($"lang")
-      .agg(topk($"n".cast("double"), $"bigram").as("top"))
-      .select($"lang", posexplode($"top"))
-      .select($"lang", ($"pos" + 1).cast("int").as("rank"),
-        $"col.key".as("bigram"), $"col.score".cast("long").as("n"))
+    BoundedTopK.ranked(counts, Seq("lang"), "n", "bigram", 5)
+      .select($"lang", $"rank", $"bigram", $"n".cast("long").as("n"))
       .orderBy($"lang", $"rank")
   }
 
@@ -256,7 +253,7 @@ object TextOps extends QueryPack {
     * aggregations (term frequency per doc, document frequency per term) and
     * one vocabulary-sized join; the corpus-wide doc count rides in as a
     * broadcast single row. Per-doc top-3 goes through the bounded-heap
-    * [[TopKStrAgg]] — map-side heaps of ≤3 entries, never a full
+    * [[BoundedTopK.ranked]] — map-side heaps of ≤3 entries, never a full
     * (doc, vocab) window sort. Scores are rounded to 6dp BEFORE ranking so
     * Spark and the oracle rank identical values (ln differs in the last ulp
     * across engines; two mathematically-equal scores computed as tf·ln(N/df)
@@ -276,12 +273,7 @@ object TextOps extends QueryPack {
     val scored = tf.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("tfidf", round($"tf" * log($"n_docs".cast("double") / $"df"), 6))
-    val topk = udaf(new TopKStrAgg(3))
-    scored.groupBy($"doc_id")
-      .agg(topk($"tfidf", $"term").as("top"))
-      .select($"doc_id", posexplode($"top"))
-      .select($"doc_id", ($"pos" + 1).cast("int").as("rank"),
-        $"col.key".as("term"), $"col.score".as("tfidf"))
+    BoundedTopK.ranked(scored, Seq("doc_id"), "tfidf", "term", 3)
       .orderBy($"doc_id", $"rank")
   }
 
@@ -425,22 +417,23 @@ object TextOps extends QueryPack {
       .orderBy($"doc_id")
   }
 
-  /** md5-order selection key (md5(doc_id) ‖ zero-padded doc_id): with a
-    * constant score the heap keeps the k smallest keys in UTF-8 order;
-    * doc_id zero-padded to the max long width (19 digits) so string order
-    * == numeric order on the tiebreak and the round-trip never truncates.
-    * [[selKeyDocId]] is the inverse; the 32+19 layout lives only here.
+  /** (group, rank, doc_id): the first k documents of each `group` in md5
+    * order, ranked from 1. The selection key is md5(doc_id) ‖ zero-padded
+    * doc_id: with a constant score the heap keeps the k smallest keys in
+    * UTF-8 order; doc_id zero-padded to the max long width (19 digits) so
+    * string order == numeric order on the tiebreak and the round-trip never
+    * truncates. The 32+19 layout lives only here.
     */
-  private def selKeyC: Column = concat(md5(col("doc_id").cast("string")),
-    lpad(col("doc_id").cast("string"), 19, "0"))
-
-  /** Recover doc_id from a [[selKeyC]] value. */
-  private def selKeyDocId(key: Column): Column =
-    substring(key, 33, 19).cast("bigint")
+  private def selectByMd5(docs: DataFrame, group: String, k: Int): DataFrame = {
+    val id = col("doc_id").cast("string")
+    BoundedTopK.ranked(docs.select(col(group), lit(0.0).as("score"),
+        concat(md5(id), lpad(id, 19, "0")).as("sel")), Seq(group), "score", "sel", k)
+      .select(col(group), col("rank"), substring(col("sel"), 33, 19).cast("bigint").as("doc_id"))
+  }
 
   /** Class-balanced subsample: cap each language at 30 documents, chosen
     * by md5 order (deterministic, unbiased w.r.t. content). The per-class
-    * selection uses the bounded-heap [[TopKStrAgg]] over a fixed-width
+    * selection uses the bounded-heap [[BoundedTopK.ranked]] over a fixed-width
     * (md5 ‖ zero-padded doc_id) sort key — map-side heaps keep ≤ 30 rows
     * per (lang, partition) in flight, where a per-class row_number window
     * would shuffle every document. The oracle is the window form, holding
@@ -448,14 +441,7 @@ object TextOps extends QueryPack {
     */
   def balancedSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cap = 30
-    val topk = org.apache.spark.sql.functions.udaf(new TopKStrAgg(cap))
-    Tables.documents(spark, dir)
-      .groupBy($"lang")
-      .agg(topk(lit(0.0), selKeyC).as("sel"))
-      .select($"lang", posexplode($"sel"))
-      .select($"lang", ($"pos" + 1).cast("int").as("rank"),
-        selKeyDocId($"col.key").as("doc_id"))
+    selectByMd5(Tables.documents(spark, dir), "lang", 30)
       .orderBy($"lang", $"rank")
   }
 
@@ -479,16 +465,10 @@ object TextOps extends QueryPack {
     val budget = counts.map(_._2).sum / 2
     val base = budget / counts.size
     val quotas = counts.map { case (s, n) => (s, math.min(n, base)) }
-    val capMax = quotas.map(_._2).max.toInt
-    val topk = org.apache.spark.sql.functions.udaf(new TopKStrAgg(capMax))
-    docs.groupBy($"source")
-      .agg(topk(lit(0.0), selKeyC).as("sel"))
-      .select($"source", posexplode($"sel"))
-      .select($"source", ($"pos" + 1).cast("long").as("rank"),
-        selKeyDocId($"col.key").as("doc_id"))
+    selectByMd5(docs, "source", quotas.map(_._2).max.toInt)
       .join(broadcast(quotas.toSeq.toDF("source", "quota")), Seq("source"))
       .filter($"rank" <= $"quota")
-      .select($"source", $"rank".cast("int").as("rank"), $"doc_id")
+      .select($"source", $"rank", $"doc_id")
       .orderBy($"source", $"rank")
   }
 

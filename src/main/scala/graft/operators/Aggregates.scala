@@ -313,21 +313,16 @@ object Aggregates extends QueryPack {
       .orderBy($"event_type")
   }
 
-  /** Per-key top-k via the bounded-heap [[graft.functions.TopKAgg]]
-    * Aggregator: map-side partial heaps mean the shuffle carries ≤ k rows
-    * per (key, partition) — versus window row_number which shuffles every
-    * row. Oracle: the window form (same values, so the heap is held to the
-    * declarative semantics).
+  /** Per-key top-k through the bounded-heap
+    * [[graft.functions.BoundedTopK.ranked]] operator: map-side partial
+    * heaps mean the shuffle carries ≤ k rows per (key, partition) — versus
+    * window row_number which shuffles every row. Oracle: the window form
+    * (same values, so the heap is held to the declarative semantics).
     */
   def topKPerKey(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val topk = org.apache.spark.sql.functions.udaf(new graft.functions.TopKAgg(3))
-    Tables.orders(spark, dir)
-      .groupBy($"o_orderstatus")
-      .agg(topk($"o_totalprice", $"o_orderkey").as("top"))
-      .select($"o_orderstatus", posexplode($"top"))
-      .select($"o_orderstatus", ($"pos" + 1).cast("int").as("rank"),
-        $"col.key".as("o_orderkey"), $"col.score".as("o_totalprice"))
+    graft.functions.BoundedTopK.ranked(Tables.orders(spark, dir),
+        Seq("o_orderstatus"), "o_totalprice", "o_orderkey", 3)
       .orderBy($"o_orderstatus", $"rank")
   }
 

@@ -281,9 +281,9 @@ object EventStreams {
     * return the materialized result — real incremental execution, memory
     * sink, AvailableNow trigger.
     *
-    * Two settings are overridden, and only across `start()`: that is where
-    * `StreamExecution` clones the session, and the clone keeps the conf it
-    * was cloned with for the whole run. Both are restored on return, also
+    * The settings below are overridden, and only across `start()`: that is
+    * where `StreamExecution` clones the session, and the clone keeps the conf
+    * it was cloned with for the whole run. They are restored on return, also
     * when `start()` throws, and a lock serializes the window so that
     * overlapping calls cannot save each other's temporary values.
     *
@@ -299,8 +299,10 @@ object EventStreams {
     *    isolate here. A session that carries session-scoped jars or files
     *    (Spark Connect) must not use this helper: its stream would not see
     *    them.
-    *  - `spark.sql.streaming.checkpoint.fileChecksum.enabled`, from
-    *    `graft.stream.checkpoint.checksum` (default false). Spark 4.1's
+    *  - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`, only
+    *    when the stream's checkpoint is temporary: the session sets no
+    *    `spark.sql.streaming.checkpointLocation` (this helper never passes
+    *    a location of its own). Spark 4.1's
     *    ChecksumCheckpointFileManager writes a sidecar per checkpoint file
     *    and every state-store commit blocks on that async write (thread
     *    dumps: tasks parked in `ChecksumCancellableFSDataOutputStream.close`
@@ -311,20 +313,16 @@ object EventStreams {
     *    the stateful stage's summed executor time by 30–35% on all three
     *    witnesses (tumbling 2.18 → 1.47 s over the two runs), while the
     *    whole-query walls moved within run-to-run noise (tumbling
-    *    1.19–1.47 s on, 1.11–1.48 s off). The default stays off: the
-    *    sidecars cost executor time and protect nothing here. They detect
-    *    corruption of DURABLE checkpoints across restarts; these witnesses
-    *    run on TEMPORARY checkpoint dirs deleted when the query ends. On
-    *    HDFS the filesystem already checksums every block; set the dial to
-    *    true where the checkpoint is durable and the store doesn't
-    *    checksum.
+    *    1.19–1.47 s on, 1.11–1.48 s off). The sidecars detect corruption
+    *    of DURABLE checkpoints across restarts, so a temporary checkpoint,
+    *    deleted when the query ends, pays their executor time for nothing.
+    *    A durable location keeps Spark's own setting.
     */
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val overrides = Seq(
-      "spark.sql.artifact.isolation.enabled" -> "false",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        Knobs.StreamCheckpointChecksum(spark).toString)
+    val temporary = spark.conf.getOption("spark.sql.streaming.checkpointLocation").isEmpty
+    val overrides = ("spark.sql.artifact.isolation.enabled" -> "false") +:
+      Option.when(temporary)("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false").toSeq
     var started: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       started = startLock.synchronized {

@@ -59,13 +59,13 @@ object DumpPlans {
     section("dedup_minhash_lsh — candidate-set slice above the checkpoint boundary",
       graft.functions.DedupOps.candidateSets(spark, dir, cands))
     // the banded (deployment) routes, iterated from [[graft.Bench.banded]]
-    // so this dump can never drift from the set the bench times (round 21
-    // — previously 3 of the 4 were hardcoded and dedup_ngram_jaccard's
-    // banded plan never landed here). Things to see: int8_enc in the scan
-    // projection next to lsh_buckets, int8_keep filtering the self-join
-    // output BEFORE the pair-distinct exchange, the float verify joining
-    // only survivors (threshold routes); the scored no-distinct argmax
-    // form on sim_nearest_same_label (round 10) — nothing
+    // so this dump can never drift from the set the bench times. Things to
+    // see: int8_enc in the scan projection next to lsh_probes; int8_keep in
+    // the self-join condition, so only survivors reach the pair exchange
+    // (a repartition of id pairs — no route runs a pair distinct) and the
+    // float verify re-joins (threshold routes); one verify per pair on
+    // dedup_embedding_cosine, with both orientations exploded above it;
+    // the scored argmax form on sim_nearest_same_label, where nothing
     // pair-proportional exchanges.
     Knobs.withConf(spark, Knobs.SimExact.key -> "false") {
       for (name <- graft.Bench.banded)

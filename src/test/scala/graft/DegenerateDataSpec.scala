@@ -68,11 +68,10 @@ class DegenerateDataSpec extends SparkSpec {
     // build a filter over them (count ≥ 1 floor) and both paths must
     // agree row-for-row
     val broadcastRows = TextOps.decontaminate(spark, dir).collect().map(_.toString).toSeq
-    spark.conf.set("graft.text.decontam.bloom", "true")
-    try {
+    withConf("graft.text.decontam.bloom" -> "true") {
       val bloomRows = TextOps.decontaminate(spark, dir).collect().map(_.toString).toSeq
       assert(broadcastRows.nonEmpty && bloomRows == broadcastRows)
-    } finally spark.conf.unset("graft.text.decontam.bloom")
+    }
   }
 
   test("dedup operators complete with finite outputs on degenerate documents") {
@@ -99,9 +98,7 @@ class DegenerateDataSpec extends SparkSpec {
     val want = Set((1L, 3L), (4L, 5L))
     assert(pairs(DedupOps.minhashLsh(spark, d)) == want)
     assert(pairs(DedupOps.ngramJaccard(spark, d)) == want)
-    spark.conf.set("graft.sim.exact", "false")
-    try assert(pairs(DedupOps.ngramJaccard(spark, d)) == want)
-    finally spark.conf.unset("graft.sim.exact")
+    withConf("graft.sim.exact" -> "false")(assert(pairs(DedupOps.ngramJaccard(spark, d)) == want))
   }
 
   test("multimodal operators complete on degenerate documents (empty payloads)") {
@@ -178,13 +175,45 @@ class DegenerateDataSpec extends SparkSpec {
   }
 
   test("banded similarity routes complete with finite outputs on degenerate embeddings") {
-    spark.conf.set("graft.sim.exact", "false")
-    try {
+    withConf("graft.sim.exact" -> "false") {
       for ((name, f) <- Seq[(String, (SparkSession, String) => DataFrame)](
           "sim_pairs_threshold" -> (SimilarityOps.pairsAboveThreshold _),
           "sim_nearest_same_label" -> (SimilarityOps.nearestSameLabel _),
           "dedup_embedding_cosine" -> (DedupOps.embeddingCosineDedup _)))
         finite(name, f(spark, embDir))
-    } finally spark.conf.unset("graft.sim.exact")
+    }
+    // the two threshold queries answer exactly on the degenerates: zero
+    // vectors (cosine 0 with everything, themselves included), duplicates
+    // and antipodal constants
+    for (f <- Seq[(SparkSession, String) => DataFrame](
+        SimilarityOps.pairsAboveThreshold, DedupOps.embeddingCosineDedup)) {
+      def rows = f(spark, embDir).collect().map(_.toString).toSeq
+      val exact = withConf("graft.sim.exact" -> "true")(rows)
+      val banded = withConf("graft.sim.exact" -> "false")(rows)
+      assert(exact.nonEmpty && banded == exact,
+        s"missing=${exact.toSet -- banded.toSet} spurious=${banded.toSet -- exact.toSet}")
+    }
+  }
+
+  test("a ragged embedding fails both threshold queries loudly on both routes") {
+    // neither route may answer around a vector of the wrong length: the
+    // exact scan's dot_product and the banded route's lsh_probes both
+    // refuse it, so no knob turns a ragged corpus into silently fewer pairs
+    val d = java.nio.file.Files.createTempDirectory("graft_degen_ragged").toString
+    val rnd = new scala.util.Random(13)
+    ((0L until 6L).map(i => (i, Seq.fill(SimilarityOps.Dim)(rnd.nextFloat()), (i % 2).toInt)) :+
+        ((6L, Seq.fill(SimilarityOps.Dim - 1)(rnd.nextFloat()), 0)))
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    for ((name, f) <- Seq[(String, (SparkSession, String) => DataFrame)](
+        "sim_pairs_threshold" -> (SimilarityOps.pairsAboveThreshold _),
+        "dedup_embedding_cosine" -> (DedupOps.embeddingCosineDedup _));
+        exact <- Seq("true", "false")) {
+      val e = intercept[Exception](withConf("graft.sim.exact" -> exact)(f(spark, d).collect()))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.matches("(?s).*(length mismatch|!= plane dim).*")),
+        s"$name exact=$exact: ${msgs.mkString(" | ")}")
+    }
   }
 }

@@ -49,12 +49,11 @@ class ExactnessSpec extends SparkSpec {
     // are a superset of the unprobed banded run — the answer must stay
     // identical to exact even with the deployment probe knob on
     val exact = rowsOf(SimilarityOps.nearestSameLabel(spark, sfDir))
-    spark.conf.set("graft.sim.probe.samelabel", "1")
-    try {
+    withConf("graft.sim.probe.samelabel" -> "1") {
       val probed = withCandidatePath(rowsOf(SimilarityOps.nearestSameLabel(spark, sfDir)))
       assert(probed == exact,
         s"missing=${exact.toSet -- probed.toSet} spurious=${probed.toSet -- exact.toSet}")
-    } finally spark.conf.unset("graft.sim.probe.samelabel")
+    }
   }
 
   test("sim_nearest_same_label: rescue tier ≡ exact (confident kept, tail re-derived)") {
@@ -63,23 +62,17 @@ class ExactnessSpec extends SparkSpec {
     // at a deliberately sharp shape (4x4) whose unprobed banded run would
     // miss neighbors on this corpus
     val exact = rowsOf(SimilarityOps.nearestSameLabel(spark, sfDir))
-    spark.conf.set("graft.sim.bands.samelabel", "4x4")
-    spark.conf.set("graft.sim.rescue.samelabel", "0.999")
     // floor 0.999 rescues nearly every vector, far past the default 5%
     // refusal knob — accept it, which also pins the SHUFFLE-join rescue
     // path (the broadcast hint is dropped past Knobs.SameLabel.BroadcastSafeFrac)
-    spark.conf.set("graft.sim.rescue.maxfrac.samelabel", "1.0")
-    try {
+    withConf("graft.sim.bands.samelabel" -> "4x4", "graft.sim.rescue.samelabel" -> "0.999",
+        "graft.sim.rescue.maxfrac.samelabel" -> "1.0") {
       // floor 0.999 rescues nearly every vector → answer is exact by
       // construction; this pins the tier's plumbing (anti-join coverage,
       // union schema, vectors with no candidates)
       val rescued = withCandidatePath(rowsOf(SimilarityOps.nearestSameLabel(spark, sfDir)))
       assert(rescued == exact,
         s"missing=${exact.toSet -- rescued.toSet} spurious=${rescued.toSet -- exact.toSet}")
-    } finally {
-      spark.conf.unset("graft.sim.bands.samelabel")
-      spark.conf.unset("graft.sim.rescue.samelabel")
-      spark.conf.unset("graft.sim.rescue.maxfrac.samelabel")
     }
   }
 
@@ -101,8 +94,7 @@ class ExactnessSpec extends SparkSpec {
     Seq.tabulate(40)(i => (i.toLong, unit(), i % 2))
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    spark.conf.set("graft.sim.rescue.samelabel", "0.9")
-    try {
+    withConf("graft.sim.rescue.samelabel" -> "0.9") {
       val err = intercept[RuntimeException] {
         withCandidatePath(SimilarityOps.nearestSameLabel(spark, dir))
       }
@@ -110,14 +102,12 @@ class ExactnessSpec extends SparkSpec {
       assert(err.getMessage.contains("graft.sim.rescue.maxfrac.samelabel"), err.getMessage)
       // raising the refusal knob accepts the fat tail — through the
       // SHUFFLED rescue join — and the answer equals exact by construction
-      spark.conf.set("graft.sim.rescue.maxfrac.samelabel", "1.0")
-      val exact = rowsOf(SimilarityOps.nearestSameLabel(spark, dir))
-      val rescued = withCandidatePath(rowsOf(SimilarityOps.nearestSameLabel(spark, dir)))
-      assert(exact.size == 40 && rescued == exact,
-        s"missing=${exact.toSet -- rescued.toSet} spurious=${rescued.toSet -- exact.toSet}")
-    } finally {
-      spark.conf.unset("graft.sim.rescue.samelabel")
-      spark.conf.unset("graft.sim.rescue.maxfrac.samelabel")
+      withConf("graft.sim.rescue.maxfrac.samelabel" -> "1.0") {
+        val exact = rowsOf(SimilarityOps.nearestSameLabel(spark, dir))
+        val rescued = withCandidatePath(rowsOf(SimilarityOps.nearestSameLabel(spark, dir)))
+        assert(exact.size == 40 && rescued == exact,
+          s"missing=${exact.toSet -- rescued.toSet} spurious=${rescued.toSet -- exact.toSet}")
+      }
     }
   }
 
@@ -126,21 +116,17 @@ class ExactnessSpec extends SparkSpec {
     // the interesting case is a sharper shape (8x4) where probing must
     // still return the exact answer because it only widens the candidates
     val exact = rowsOf(SimilarityOps.pairsAboveThreshold(spark, sfDir))
-    spark.conf.set("graft.sim.bands.pairs", "8x4")
-    spark.conf.set("graft.sim.probe.pairs", "4")
-    try {
-      val probed = withCandidatePath(rowsOf(SimilarityOps.pairsAboveThreshold(spark, sfDir)))
+    withConf("graft.sim.bands.pairs" -> "8x4") {
+      def banded(probe: Int) = withConf("graft.sim.probe.pairs" -> probe.toString)(
+        withCandidatePath(rowsOf(SimilarityOps.pairsAboveThreshold(spark, sfDir))))
+      val probed = banded(4)
       // 8x4 probed must cover at least the unprobed 8x4 run; vs exact we
       // assert no SPURIOUS pairs ever (verify filter is exact) and that
       // probing recovered every pair the unprobed shape found
-      spark.conf.set("graft.sim.probe.pairs", "0")
-      val unprobed = withCandidatePath(rowsOf(SimilarityOps.pairsAboveThreshold(spark, sfDir)))
+      val unprobed = banded(0)
       assert(probed.toSet.subsetOf(exact.toSet), "banded may never invent pairs")
       assert(unprobed.toSet.subsetOf(probed.toSet),
         s"probing lost pairs: ${unprobed.toSet -- probed.toSet}")
-    } finally {
-      spark.conf.unset("graft.sim.bands.pairs")
-      spark.conf.unset("graft.sim.probe.pairs")
     }
   }
 
@@ -157,12 +143,11 @@ class ExactnessSpec extends SparkSpec {
     // (1-(1-j)^16 ≥ 0.9999), so the runtime shape knob must preserve the
     // answer exactly, same as the embedding-side band knobs do
     val exact = rowsOf(DedupOps.ngramJaccard(spark, sfDir))
-    spark.conf.set("graft.sim.bands.minhash", "16x1")
-    try {
+    withConf("graft.sim.bands.minhash" -> "16x1") {
       val banded = withCandidatePath(rowsOf(DedupOps.ngramJaccard(spark, sfDir)))
       assert(banded == exact,
         s"missing=${exact.toSet -- banded.toSet} spurious=${banded.toSet -- exact.toSet}")
-    } finally spark.conf.unset("graft.sim.bands.minhash")
+    }
   }
 
   test("dedup_ngram_jaccard: size-ratio prefiltered candidates ≡ unfiltered") {
@@ -171,12 +156,11 @@ class ExactnessSpec extends SparkSpec {
     // not change the banded answer — the minhash twin of the int8
     // prefilter's never-changes-answers contract
     val pre = withCandidatePath(rowsOf(DedupOps.ngramJaccard(spark, sfDir)))
-    spark.conf.set("graft.sim.prefilter", "false")
-    try {
+    withConf("graft.sim.prefilter" -> "false") {
       val unfiltered = withCandidatePath(rowsOf(DedupOps.ngramJaccard(spark, sfDir)))
       assert(pre.nonEmpty && pre == unfiltered,
         s"missing=${unfiltered.toSet -- pre.toSet} spurious=${pre.toSet -- unfiltered.toSet}")
-    } finally spark.conf.unset("graft.sim.prefilter")
+    }
   }
 
   test("size-ratio prefilter genuinely cuts candidates on a size-heterogeneous corpus") {
@@ -189,15 +173,11 @@ class ExactnessSpec extends SparkSpec {
     // producing size-mismatched banding collisions under regeneration
     // (r11 advice: suite green must not depend on fixture composition)
     val dir = graft.tools.Corpora.generateBoilerplateDocs(spark, 1000)
-    spark.conf.set("graft.sim.bands.minhash", "16x1")
-    try {
+    withConf("graft.sim.bands.minhash" -> "16x1") {
       val nPre = DedupOps.minhashCandidatesPlan(spark, dir).count()
-      spark.conf.set("graft.sim.prefilter", "false")
-      val nAll = DedupOps.minhashCandidatesPlan(spark, dir).count()
+      val nAll = withConf("graft.sim.prefilter" -> "false")(
+        DedupOps.minhashCandidatesPlan(spark, dir).count())
       assert(nPre < nAll, s"prefilter rejected nothing: $nPre vs $nAll")
-    } finally {
-      spark.conf.unset("graft.sim.prefilter")
-      spark.conf.unset("graft.sim.bands.minhash")
     }
   }
 
@@ -210,12 +190,8 @@ class ExactnessSpec extends SparkSpec {
       def both(f: => org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
         // set the hashed leg explicitly — relying on the session default
         // would compare string against string if the default ever flips
-        spark.conf.set("graft.dedup.hashverify", "true")
-        try {
-          val hashed = rowsOf(f)
-          spark.conf.set("graft.dedup.hashverify", "false")
-          (hashed, rowsOf(f))
-        } finally spark.conf.unset("graft.dedup.hashverify")
+        def verified(hashed: Boolean) = withConf("graft.dedup.hashverify" -> hashed.toString)(rowsOf(f))
+        (verified(true), verified(false))
       }
       val (h, s) =
         if (banded) withCandidatePath(both(DedupOps.ngramJaccard(spark, sfDir)))
@@ -230,12 +206,11 @@ class ExactnessSpec extends SparkSpec {
     // boilerplate-bucket mass; with the cap above every gate bucket size
     // it must change nothing — pairs, jaccards, ordering
     val uncapped = rowsOf(DedupOps.minhashLsh(spark, sfDir))
-    spark.conf.set("graft.dedup.bucketcap", "1000000")
-    try {
+    withConf("graft.dedup.bucketcap" -> "1000000") {
       val capped = rowsOf(DedupOps.minhashLsh(spark, sfDir))
       assert(uncapped.nonEmpty && capped == uncapped,
         s"missing=${uncapped.toSet -- capped.toSet} spurious=${capped.toSet -- uncapped.toSet}")
-    } finally spark.conf.unset("graft.dedup.bucketcap")
+    }
   }
 
   test("bucket cap: capped candidates ≡ the pairs-sharing-a-small-bucket reference") {
@@ -254,12 +229,10 @@ class ExactnessSpec extends SparkSpec {
     val cap = 8
     def pairsOf: Set[(Long, Long)] = DedupOps.minhashCandidatesPlan(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for ((bands, rows) <- Seq((Knobs.MinHash.tables, Knobs.MinHash.planes), (16, 1))) try {
-      spark.conf.set("graft.sim.prefilter", "false")
-      spark.conf.set("graft.sim.bands.minhash", s"${bands}x$rows")
+    for ((bands, rows) <- Seq((Knobs.MinHash.tables, Knobs.MinHash.planes), (16, 1)))
+        withConf("graft.sim.prefilter" -> "false", "graft.sim.bands.minhash" -> s"${bands}x$rows") {
       val uncapped = pairsOf
-      spark.conf.set("graft.dedup.bucketcap", cap.toString)
-      val capped = pairsOf
+      val capped = withConf("graft.dedup.bucketcap" -> cap.toString)(pairsOf)
       val sigs = DedupOps.minhashSigsOf(
         graft.core.Tables.documents(spark, dir), bands * rows)
       val membership = sigs.select($"doc_id", explode(array(
@@ -280,10 +253,6 @@ class ExactnessSpec extends SparkSpec {
       assert(capped.size < uncapped.size,
         s"cap=$cap never bit at ${bands}x$rows: ${uncapped.size} pairs uncapped vs " +
           s"${capped.size} capped, max bucket $maxBucket docs")
-    } finally {
-      spark.conf.unset("graft.sim.prefilter")
-      spark.conf.unset("graft.sim.bands.minhash")
-      spark.conf.unset("graft.dedup.bucketcap")
     }
   }
 
@@ -292,12 +261,11 @@ class ExactnessSpec extends SparkSpec {
     // (round 13); with the cap above every gate bucket size the banded
     // dedup must change nothing — canonicals, counts, ordering
     val uncapped = withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, sfDir)))
-    spark.conf.set("graft.sim.bucketcap.cosdedup", "1000000")
-    try {
+    withConf("graft.sim.bucketcap.cosdedup" -> "1000000") {
       val capped = withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, sfDir)))
       assert(uncapped.nonEmpty && capped == uncapped,
         s"missing=${uncapped.toSet -- capped.toSet} spurious=${capped.toSet -- uncapped.toSet}")
-    } finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
+    }
   }
 
   test("embedding bucket cap: capped candidates ≡ the pairs-sharing-a-small-bucket reference") {
@@ -537,8 +505,7 @@ class ExactnessSpec extends SparkSpec {
     val topkU = rowsOf(SimilarityOps.cosineTopK(spark, dir))
     val pairsU = withCandidatePath(rowsOf(SimilarityOps.pairsAboveThreshold(spark, dir)))
     val dedupU = withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, dir)))
-    spark.conf.set("graft.sim.bucketcap.cosdedup", "64")
-    try {
+    withConf("graft.sim.bucketcap.cosdedup" -> "64") {
       assert(rowsOf(SimilarityOps.cosineTopK(spark, dir)) == topkU,
         "the dedup-scoped cap leaked into the brute-force top-k route")
       val pairsC = withCandidatePath(rowsOf(SimilarityOps.pairsAboveThreshold(spark, dir)))
@@ -546,24 +513,22 @@ class ExactnessSpec extends SparkSpec {
       val dedupC = withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, dir)))
       assert(dedupC != dedupU,
         "cap=64 must still bite the 200-vector hot cluster on its OWN consumer")
-    } finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
+    }
     // the legacy un-scoped name is a loud migration error, not an
     // everything-cap: misuse fails instead of silently degrading
-    spark.conf.set("graft.sim.bucketcap", "64")
-    try {
+    withConf("graft.sim.bucketcap" -> "64") {
       val e = intercept[IllegalArgumentException] {
         withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, dir)))
       }
       assert(e.getMessage.contains("graft.sim.bucketcap.<key>"), e.getMessage)
-    } finally spark.conf.unset("graft.sim.bucketcap")
+    }
     // …but a legacy value that parses to OFF (0 was the documented old
     // default) stays the no-op it always was — a session that had
     // explicitly disabled the old dial must not crash on upgrade
-    spark.conf.set("graft.sim.bucketcap", "0")
-    try {
+    withConf("graft.sim.bucketcap" -> "0") {
       assert(withCandidatePath(rowsOf(DedupOps.embeddingCosineDedup(spark, dir))) == dedupU,
         "legacy bucketcap=0 must remain a no-op")
-    } finally spark.conf.unset("graft.sim.bucketcap")
+    }
   }
 
   test("plantedGenuinePairs matches the dense-dup generator's cluster layout") {
@@ -597,11 +562,10 @@ class ExactnessSpec extends SparkSpec {
     // standalone query or composed through corpus_select
     val d0 = rowsOf(TextOps.decontaminate(spark, sfDir))
     val c0 = rowsOf(TextOps.corpusSelect(spark, sfDir))
-    spark.conf.set("graft.text.decontam.bloom", "true")
-    try {
+    withConf("graft.text.decontam.bloom" -> "true") {
       assert(d0.nonEmpty && rowsOf(TextOps.decontaminate(spark, sfDir)) == d0)
       assert(c0.nonEmpty && rowsOf(TextOps.corpusSelect(spark, sfDir)) == c0)
-    } finally spark.conf.unset("graft.text.decontam.bloom")
+    }
   }
 
   test("banded verify carries no forced broadcast above the checkpoint boundary") {
@@ -676,12 +640,11 @@ class ExactnessSpec extends SparkSpec {
     // surface as a NoSuchElementException from an empty agg list)
     for (bad <- Seq("0x4", "4x0", "-2x4", "x4", "4x", "abc", "4x4x4",
         "99999999999x2" /* all-digit but past Int range */)) {
-      spark.conf.set("graft.sim.bands.minhash", bad)
-      try {
+      withConf("graft.sim.bands.minhash" -> bad) {
         val e = intercept[RuntimeException](
           DedupOps.minhashCandidatesPlan(spark, sfDir))
         assert(e.getMessage.contains("graft.sim.bands.minhash"), s"shape '$bad': ${e.getMessage}")
-      } finally spark.conf.unset("graft.sim.bands.minhash")
+      }
     }
   }
 }

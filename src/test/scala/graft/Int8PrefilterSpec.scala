@@ -144,9 +144,7 @@ class Int8PrefilterSpec extends SparkSpec {
     // autoBroadcastJoinThreshold (the crossover harness uses 256 MB for its
     // exact baseline) must NOT broadcast it into the candidate self-join —
     // the shuffle_hash hint pins the strategy in the plan itself
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> (256L << 20).toString) {
       val plan = planOf(SimilarityOps.lshCandidateIds(spark, sfDir,
         graft.core.Knobs.Banding(graft.core.Knobs.Pairs, 16, 2, probeBits = 1),
         prefilterTheta = Some(SimilarityOps.PairsThreshold)))
@@ -156,7 +154,7 @@ class Int8PrefilterSpec extends SparkSpec {
         .filter(l => l.contains("BroadcastHashJoin") && l.contains("int8_keep"))
       assert(offending.isEmpty, offending.mkString("\n"))
       assert(plan.contains("ShuffledHashJoin"), plan.linesIterator.take(20).mkString("\n"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("prefiltered banded routes ≡ unfiltered banded routes (both on and off)") {
@@ -164,15 +162,9 @@ class Int8PrefilterSpec extends SparkSpec {
     // pins the knob itself — turning the prefilter OFF changes cost, not
     // rows, so the two banded forms must be row-identical
     def banded(q: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        prefilter: Boolean): Seq[String] = {
-      spark.conf.set("graft.sim.exact", "false")
-      spark.conf.set("graft.sim.prefilter", prefilter.toString)
-      try q(spark, sfDir).collect().map(_.toString).toSeq
-      finally {
-        spark.conf.unset("graft.sim.exact")
-        spark.conf.unset("graft.sim.prefilter")
-      }
-    }
+        prefilter: Boolean): Seq[String] =
+      withConf("graft.sim.exact" -> "false", "graft.sim.prefilter" -> prefilter.toString)(
+        q(spark, sfDir).collect().map(_.toString).toSeq)
     for (q <- Seq(SimilarityOps.pairsAboveThreshold _, DedupOps.embeddingCosineDedup _)) {
       val on = banded(q, prefilter = true)
       val off = banded(q, prefilter = false)

@@ -79,20 +79,24 @@ class LawsSpec extends SparkSpec {
     assert(r1 == r2) // quantities integral: exact under reordering
   }
 
+  /** Seeded scored lists; coarse scores force ties. */
+  private lazy val topKCases: Seq[List[graft.functions.Scored]] = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val genVals = Gen.listOf(for {
+      s <- Gen.choose(0, 50).map(_.toDouble)
+      k <- Gen.choose(0L, 30L)
+    } yield graft.functions.Scored(s, k))
+    (0 until 30).map(i => genVals(Gen.Parameters.default, Seed(7L + i)).getOrElse(Nil))
+  }
+
   test("bounded top-k heap: merge is order-insensitive and equals sort-take (distribution law)") {
     // the Aggregator contract under arbitrary partial aggregation: any
     // grouping/ordering of reduce+merge must equal global sort-take —
     // this is exactly what makes the map-side heap safe on any cluster
-    import graft.functions.{Scored, ScoredStr, TopKAgg, TopKStrAgg}
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
+    import graft.functions.{ScoredStr, TopKAgg, TopKStrAgg}
     val agg = new TopKAgg(3)
-    val genVals = Gen.listOf(for {
-      s <- Gen.choose(0, 50).map(_.toDouble) // coarse scores force ties
-      k <- Gen.choose(0L, 30L)
-    } yield Scored(s, k))
-    (0 until 30).foreach { i =>
-      val vals = genVals(Gen.Parameters.default, Seed(7L + i)).getOrElse(Nil)
+    topKCases.zipWithIndex.foreach { case (vals, i) =>
       val expected = vals.sortBy(s => (-s.score, s.key)).take(3)
       // arbitrary partition split + merge order
       val split = vals.grouped(math.max(1, vals.size / 3)).toList
@@ -110,6 +114,31 @@ class LawsSpec extends SparkSpec {
     val out = sAgg.finish(tied.foldLeft(sAgg.zero)(sAgg.reduce))
     // binary UTF-8: 'z' (0x7A) < U+FFE5 (0xEF..) < U+1F600 (0xF0..)
     assert(out == List(ScoredStr(2.0, "a"), ScoredStr(1.0, "z")), s"got $out")
+  }
+
+  test("ranked top-k operator: per-group sort-take ranked from 1, UTF-8 ties, k past the group") {
+    import graft.functions.BoundedTopK
+    // the heap law's cases, one group each, split over partitions
+    val scored = topKCases.zipWithIndex.flatMap { case (vals, g) => vals.map(s => (g, s.score, s.key)) }
+      .toDF("g", "score", "key").repartition(3)
+    val ranked = BoundedTopK.ranked(scored, Seq("g"), "score", "key", 3)
+    assert(ranked.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("g" -> "int", "rank" -> "int", "key" -> "bigint", "score" -> "double"))
+    val got = ranked.as[(Int, Int, Long, Double)].collect().toSeq.groupBy(_._1)
+    topKCases.zipWithIndex.foreach { case (vals, g) =>
+      val want = vals.sortBy(s => (-s.score, s.key)).take(3).zipWithIndex
+        .map { case (s, i) => (g, i + 1, s.key, s.score) }
+      assert(got.getOrElse(g, Nil).sortBy(_._2) == want, s"group $g")
+    }
+    // string keys tied on score rank in UTF-8 binary order:
+    // 'z' (0x7A) < U+FFE5 (0xEF..) < U+1F600 (0xF0..); a group smaller than
+    // k keeps every row
+    val words = Seq(("t", 1.0, "￥"), ("t", 1.0, "😀"), ("t", 1.0, "z"), ("t", 2.0, "a"),
+      ("t", 0.5, "b"), ("one", 5.0, "q")).toDF("g", "score", "word")
+    val strs = BoundedTopK.ranked(words, Seq("g"), "score", "word", 4)
+      .as[(String, Int, String, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+    assert(strs == Seq(("one", 1, "q", 5.0),
+      ("t", 1, "a", 2.0), ("t", 2, "z", 1.0), ("t", 3, "￥", 1.0), ("t", 4, "😀", 1.0)), s"got $strs")
   }
 
   test("as-of join matches brute-force model") {

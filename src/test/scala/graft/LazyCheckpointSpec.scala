@@ -17,8 +17,7 @@ class LazyCheckpointSpec extends SparkSpec {
 
   for ((name, exact) <- Seq("dedup_minhash_lsh" -> "true", "dedup_ngram_jaccard" -> "false"))
     test(s"$name: signature/band stage and verify slice each run once per action") {
-      spark.conf.set("graft.sim.exact", exact)
-      try {
+      withConf("graft.sim.exact" -> exact) {
         // construction inside the window: under AQE, a lazy checkpoint's
         // shuffle stages already run when its frame is built
         val stages = stagesOf(graft.SparkEntry.queries(name)(spark, sfDir).collect())
@@ -38,6 +37,6 @@ class LazyCheckpointSpec extends SparkSpec {
         assert(stages.count(s => isScan(s) &&
           s.taskMetrics.shuffleWriteMetrics.recordsWritten != bandRows &&
           s.taskMetrics.inputMetrics.recordsRead == docs) == 1, show)
-      } finally spark.conf.unset("graft.sim.exact")
+      }
     }
 }

@@ -143,12 +143,11 @@ class LshProbesSpec extends SparkSpec {
     object Plans extends AdaptiveSparkPlanHelper
     val ordered = SimilarityOps.lshScoredNeighbors(spark, sfDir, 32, 1,
       within = Seq("label")).select($"v1", $"v2").distinct().count()
-    spark.conf.set("graft.sim.exact", "false")
-    val df = try {
+    val df = withConf("graft.sim.exact" -> "false") {
       val q = SimilarityOps.nearestSameLabel(spark, sfDir)
       q.collect()
       q
-    } finally spark.conf.unset("graft.sim.exact")
+    }
     val partial = Plans.collect(df.queryExecution.executedPlan) {
       case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty &&
           a.aggregateExpressions.forall(_.mode == Partial) => a
@@ -205,15 +204,9 @@ class LshProbesSpec extends SparkSpec {
   test("interpreted eval matches codegen") {
     val v = vec()
     val codegen = kernel("lsh_probes(e, 8, 10, 4)", v)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = kernel("lsh_probes(e, 8, 10, 4)", v)
-      assert(codegen == interp)
-    } finally {
-      spark.conf.unset("spark.sql.codegen.wholeStage")
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+    val interp = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(kernel("lsh_probes(e, 8, 10, 4)", v))
+    assert(codegen == interp)
   }
 
   test("NaN embedding: deterministic output, parity, no selection of NaN planes") {
@@ -227,13 +220,8 @@ class LshProbesSpec extends SparkSpec {
       assert((codegen(t * 3 + 1) ^ base) == 1) // lowest position first
       assert((codegen(t * 3 + 2) ^ base) == 2)
     }
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(kernel("lsh_probes(e, 2, 4, 2)", v) == codegen)
-    finally {
-      spark.conf.unset("spark.sql.codegen.wholeStage")
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(assert(kernel("lsh_probes(e, 2, 4, 2)", v) == codegen))
   }
 
   test("bad shapes fail at plan build") {

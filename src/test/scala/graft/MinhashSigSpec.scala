@@ -242,13 +242,12 @@ class MinhashSigSpec extends SparkSpec {
     Seq((0L, giant), (1L, giant2), (2L, "x y z w"), (3L, "x y z w v"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    spark.conf.set("graft.sim.prefilter", "true")
-    try {
+    withConf("graft.sim.prefilter" -> "true") {
       val cands = graft.functions.DedupOps.minhashCandidatesPlan(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(cands.contains((0L, 1L)),
         s"sentinel pair rejected by the prefilter: $cands")
-    } finally spark.conf.unset("graft.sim.prefilter")
+    }
   }
 
   test("compute matches Spark's xxhash64 chain on a hand-built shingle") {

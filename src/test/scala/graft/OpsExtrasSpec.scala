@@ -255,17 +255,15 @@ class OpsExtrasSpec extends SparkSpec {
     // round-16 advice #3: garbage in a SCOPED cap key must fail naming
     // the key and expected form, not with a bare NumberFormatException
     // (the legacy-key migration message covers only the un-scoped name)
-    spark.conf.set("graft.sim.bucketcap.cosdedup", "abc")
-    try {
+    withConf("graft.sim.bucketcap.cosdedup" -> "abc") {
       val e = intercept[RuntimeException] {
         graft.core.Knobs.CosDedup(spark)
       }
       assert(e.getMessage.contains("graft.sim.bucketcap.cosdedup"), e.getMessage)
       assert(e.getMessage.contains("'abc'"), e.getMessage)
-    } finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
+    }
     // and a well-formed scoped value still parses
-    spark.conf.set("graft.sim.bucketcap.cosdedup", "512")
-    try assert(graft.core.Knobs.CosDedup(spark).bucketCap == 512)
-    finally spark.conf.unset("graft.sim.bucketcap.cosdedup")
+    withConf("graft.sim.bucketcap.cosdedup" -> "512")(
+      assert(graft.core.Knobs.CosDedup(spark).bucketCap == 512))
   }
 }

@@ -45,11 +45,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("co-bucketed tables join without a shuffle (CompositeInputFormat parity)") {
-    // save/restore, not unset: unset falls back to Spark's default, not to
-    // whatever the session was built with, and later suites share the session
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the in-memory catalog is fresh each session but the warehouse dir is
       // not: clear both, or saveAsTable trips over the stale location
       Seq("b_orders", "b_lineitem").foreach { t =>
@@ -67,7 +63,7 @@ class PlanSpec extends SparkSpec {
       val plan = planOf(joined)
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
       assert(joined.count() == Tables.lineitem(spark, sfDir).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("point lookup on a bucketed table prunes to one bucket (MapFile parity)") {
@@ -76,13 +72,12 @@ class PlanSpec extends SparkSpec {
     graft.sources.Formats.bucketedJoin(spark, sfDir).collect()
     // the auto heuristic turns bucketed scans off when no join/agg wants the
     // distribution — but a point lookup wants bucket PRUNING, so pin it on
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
+    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val one = spark.table("fq_orders").filter($"o_orderkey" === 7L)
       val scan = one.queryExecution.executedPlan.toString
       assert(scan.contains("SelectedBucketsCount: 1 out of 8"),
         s"expected single-bucket pruning:\n$scan")
-    } finally spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    }
   }
 
   test("partitionBy demux prunes partitions on read") {
@@ -135,8 +130,7 @@ class PlanSpec extends SparkSpec {
       }.map(_.simpleString(200))
     }
     for ((name, exact) <- Seq("dedup_minhash_lsh" -> "true", "dedup_ngram_jaccard" -> "false")) {
-      spark.conf.set("graft.sim.exact", exact)
-      try {
+      withConf("graft.sim.exact" -> exact) {
         val query = graft.SparkEntry.queries(name)(spark, sfDir)
         val cands = DedupOps.minhashCandidatesPlan(spark, sfDir)
         for ((part, df) <- Seq("query" -> query,
@@ -146,7 +140,7 @@ class PlanSpec extends SparkSpec {
         // condition the jaccard filter was pushed into
         val finalPlan = query.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
         assert("array_intersect".r.findAllIn(finalPlan).length == 1, s"$name:\n$finalPlan")
-      } finally spark.conf.unset("graft.sim.exact")
+      }
     }
   }
 
@@ -207,6 +201,27 @@ class PlanSpec extends SparkSpec {
         assert(pairAggregates(df).isEmpty, s"$name: ${pairAggregates(df)}")
       for ((name, df) <- routes(64) if name.startsWith("candidates"))
         assert(pairAggregates(df).isEmpty, s"capped $name: ${pairAggregates(df)}")
+    }
+  }
+
+  test("banded dedup_embedding_cosine scores each pair at one cosine_sim, with no union below it") {
+    // the pair producer emits each unordered pair once; both orientations
+    // come from one explode above the verify, never from a union of the
+    // candidates with their swap, which ran both float re-joins twice
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    withConf(Knobs.SimExact.key -> "false") {
+      // the planned tree, not the final one: on a small corpus AQE prunes
+      // an empty candidate branch, verify included
+      val plan = graft.functions.DedupOps.embeddingCosineDedup(spark, sfDir)
+        .queryExecution.executedPlan
+      val verify = Plans.collect(plan) {
+        case p if p.expressions.exists(_.toString.contains("cosine_sim")) => p
+      }
+      assert(verify.size == 1, plan.toString)
+      val unions = Plans.collect(verify.head) { case u: UnionExec => u }
+      assert(unions.isEmpty, verify.head.toString)
     }
   }
 
@@ -357,8 +372,7 @@ class PlanSpec extends SparkSpec {
     // codegen-breaking UDF form
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
-    spark.conf.set("graft.text.decontam.bloom", "true")
-    try {
+    withConf("graft.text.decontam.bloom" -> "true") {
       val df = graft.functions.TextOps.decontaminate(spark, sfDir)
       val plan = df.queryExecution.optimizedPlan
       def bloomBelow(p: LogicalPlan): Boolean = p.collectFirst {
@@ -370,7 +384,7 @@ class PlanSpec extends SparkSpec {
       assert(plan.collectFirst {
         case f: Filter if f.condition.exists(_.isInstanceOf[ScalaUDF]) => f
       }.isEmpty, s"the bloom probe regressed to a ScalaUDF:\n$plan")
-    } finally spark.conf.unset("graft.text.decontam.bloom")
+    }
   }
 
   test("bloom membership probes through the native kernel — no ScalaUDF anywhere in the plan") {
@@ -411,12 +425,11 @@ class PlanSpec extends SparkSpec {
     // SCALE.md round 12). The checkpoint makes the single pass a plan
     // property: the capped candidate subtree must contain NO parquet
     // scan — every consumer reads the materialized band stream.
-    spark.conf.set("graft.dedup.bucketcap", "64")
-    try {
+    withConf("graft.dedup.bucketcap" -> "64") {
       val plan = planOf(graft.functions.DedupOps.minhashCandidatesPlan(spark, sfDir))
       assert(!plan.contains("Scan parquet"),
         s"capped candidate plan rescans the corpus:\n$plan")
       assert(plan.contains("LeftSemi"), s"cap semi-join missing:\n$plan")
-    } finally spark.conf.unset("graft.dedup.bucketcap")
+    }
   }
 }

@@ -28,18 +28,11 @@ class SplitPlanningSpec extends SparkSpec {
   }
 
   test("NLineInputFormat parity: shrinking split size grows task count") {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val before = spark.conf.get(key)
-    try {
-      val coarse = graft.core.Tables.lineitem(spark, sfDir).rdd.getNumPartitions
-      spark.conf.set(key, "16384")
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
-      val fine = graft.core.Tables.lineitem(spark, sfDir).rdd.getNumPartitions
-      assert(fine > coarse,
-        s"16 KiB splits should plan more tasks than default ($fine vs $coarse)")
-    } finally {
-      spark.conf.set(key, before)
-      spark.conf.unset("spark.sql.files.openCostInBytes")
-    }
+    val coarse = graft.core.Tables.lineitem(spark, sfDir).rdd.getNumPartitions
+    val fine = withConf("spark.sql.files.maxPartitionBytes" -> "16384",
+        "spark.sql.files.openCostInBytes" -> "0")(
+      graft.core.Tables.lineitem(spark, sfDir).rdd.getNumPartitions)
+    assert(fine > coarse,
+      s"16 KiB splits should plan more tasks than default ($fine vs $coarse)")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Knobs, Tables}
+import graft.core.Tables
 import graft.streaming.EventStreams
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -57,9 +57,10 @@ class StreamingSpec extends SparkSpec {
     } finally holder.stop()
   }
 
-  test("runToMemory writes checkpoint checksum sidecars only when the dial asks") {
+  test("runToMemory writes checksum sidecars only to a durable checkpoint") {
     // with spark.sql.streaming.checkpointLocation set, a stream checkpoints
-    // to <location>/<query name> and the directory outlives the query
+    // to <location>/<query name> and the directory outlives the query, so
+    // Spark's own setting stands
     val root = java.nio.file.Files.createTempDirectory("graft_cp_sums")
     // Spark's sidecar is <file>.crc; Hadoop's local file system writes its
     // own .<file>.crc beside every file regardless of the setting
@@ -71,11 +72,19 @@ class StreamingSpec extends SparkSpec {
       finally walk.close()
     }
     try withConf("spark.sql.streaming.checkpointLocation" -> root.toString) {
-      tumblingToMemory("t_spec_sums_off")
-      assert(sidecars("t_spec_sums_off").isEmpty)
-      withConf(Knobs.StreamCheckpointChecksum.key -> "true")(tumblingToMemory("t_spec_sums_on"))
-      assert(sidecars("t_spec_sums_on").nonEmpty)
+      tumblingToMemory("t_spec_sums_durable")
+      assert(sidecars("t_spec_sums_durable").nonEmpty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    // without one the checkpoint is temporary, and the stream runs with the
+    // sidecars off: its tasks read the conf its session clone started with
+    val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    val before = spark.conf.getOption(key)
+    val seen = udf(() => org.apache.spark.sql.internal.SQLConf.get.getConfString(key, "unset"))
+      .asNondeterministic()
+    val got = EventStreams.runToMemory(spark,
+      EventStreams.fileSource(spark, sfDir).groupBy(seen().as("v")).count(), "t_spec_sums_temp")
+    assert(got.collect().map(_.getString(0)).toSeq == Seq("false"))
+    assert(spark.conf.getOption(key) == before)
   }
 
   test("file-source streaming sliding counts == batch sliding counts") {

@@ -59,15 +59,10 @@ class VectorExprSpec extends SparkSpec {
     val rnd = new scala.util.Random(2)
     val a = Seq.fill(64)(rnd.nextFloat()); val b = Seq.fill(64)(rnd.nextFloat())
     val codegen = df2(a, b).select(expr("cosine_sim(a,b)")).collect().head.getDouble(0)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df2(a, b).select(expr("cosine_sim(a,b)")).collect().head.getDouble(0)
-      assert(codegen == interp)
-    } finally {
-      spark.conf.unset("spark.sql.codegen.wholeStage")
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+    val interp = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(
+      df2(a, b).select(expr("cosine_sim(a,b)")).collect().head.getDouble(0))
+    assert(codegen == interp)
   }
 
   test("dot_product matches scala model") {

@@ -7,7 +7,9 @@
 # fast scale factor and fails loudly on ANY regression:
 #   0. perfbench's own unit tests (the benchmark harness: stats, guard,
 #      oracle compare), and its JVM program compiled against src/main, so
-#      a renamed engine entry point fails here, not in the benchmark run
+#      a renamed engine entry point fails here, not in the benchmark run;
+#      and no spec unsets a session conf key: a set-then-unset window wipes
+#      a value set before the test, where SparkSpec.withConf restores it
 #   1. sbt test            — every spec suite incl. AnalysisGuardSpec
 #                            (schema drift guard + all-query analysis
 #                            sweep); live counts echoed from sbt output
@@ -45,6 +47,11 @@ PY
   echo "GATE FAILED: perfbench build"; exit 1
 fi
 echo "$PBLOG" | tail -1
+
+echo "== gate: spec conf windows restore (SparkSpec.withConf, never spark.conf.unset)"
+if grep -rn "spark\.conf\.unset" src/test/scala; then
+  echo "GATE FAILED: a spec unsets a conf key; use SparkSpec.withConf"; exit 1
+fi
 
 echo "== gate: sbt test"
 TESTLOG="$(mktemp)"
