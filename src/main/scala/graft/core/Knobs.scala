@@ -52,7 +52,7 @@ object Knobs {
     new Knob(key, "true or false", doc, _ => default, _.toBooleanOption)
 
   /** A bucket-cap knob (0 or less = off), with the advice its empty-index
-    * tripwire ([[graft.functions.DedupOps.capBuckets]]) gives; `remedy`
+    * tripwire ([[graft.functions.Banding.capBuckets]]) gives; `remedy`
     * is handed the smallest over-cap bucket.
     */
   final class Cap private[Knobs] (key: String, expected: String, doc: String,
@@ -221,7 +221,7 @@ object Knobs {
     * [[graft.functions.BandTuner.suggest]]); on a matched shape the hot
     * cluster still collapses into ONE bucket per table (near-identical
     * vectors share every sign bit) while the background spreads, and the
-    * cap separates cleanly. [[graft.functions.DedupOps.capBuckets]] fails
+    * cap separates cleanly. [[graft.functions.Banding.capBuckets]] fails
     * the silent-empty shape loud at construction and warns when over-cap
     * buckets hold half the rows (its scaladoc has the predicate).
     *

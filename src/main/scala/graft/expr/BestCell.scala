@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * centroid by cosine, ties to the LOWEST cent_id — the per-row argmax at
   * the heart of IVF cell assignment and every Lloyd k-means round.
   *
-  * Exists for the same reason as [[LshBuckets]]: the composed form —
+  * Exists for the same reason as [[LshProbes]]: the composed form —
   * `array_max(transform(<centroid literal>, c → struct(cosine_sim(...))))`
   * — routes through higher-order functions (codegen-fallback, interpreted
   * per element) over boxed literal arrays, paying two orders of magnitude

@@ -1,17 +1,48 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType, IntegerType, LongType}
+
+/** The seeded Rademacher (±1) hyperplane family shared by every LSH
+  * consumer — held as primitive `float[][]` so kernels index it directly.
+  * scala.util.Random(42), plane-major: extending `Max` APPENDS planes
+  * without changing existing ones (each plane consumes `Dim` booleans of
+  * the stream in order), so every previously validated band config is
+  * byte-identical under a wider family. Mirrored by tools/lsh_recall.py
+  * and inlined into the DuckDB oracle as constants.
+  */
+object Hyperplanes {
+  val Dim = 64
+  val Max = 128 // admits 8×10+ shapes for 100k+-cluster corpora
+  lazy val planes: Array[Array[Float]] = {
+    val rnd = new scala.util.Random(42)
+    Array.fill(Max)(Array.fill(Dim)(if (rnd.nextBoolean()) 1.0f else -1.0f))
+  }
+}
 
 /** lsh_probes(embedding, nTables, planesPerTable, probeBits) → array<int>
   * of `nTables * (1 + probeBits)` bucket ids, stride `1 + probeBits` per
-  * table: slot 0 of each table is the base [[LshBuckets]] bucket, slots
+  * table: slot 0 of each table is the base bucket — bit p is set iff
+  * dot(embedding, plane[t*planesPerTable+p]) > 0 — and slots
   * 1..probeBits are its Hamming-1 neighbors for the `probeBits` planes
-  * whose dot products sit CLOSEST to zero (ascending |dot|).
+  * whose dot products sit CLOSEST to zero (ascending |dot|). At
+  * `probeBits = 0` it is the plain one-bucket-per-table bucketing.
   *
-  * This is query-side multi-probe LSH (Lv et al., VLDB'07, public
+  * Exists because the composed form — `planesPerTable × nTables` separate
+  * `CASE WHEN dot_product(emb, <array literal>) > 0` column expressions —
+  * pays GenericArrayData boxing on every literal element access: measured
+  * 275 µs/row at 8×8/dim-64 (5.5 s for a 20k corpus, swamping the whole
+  * banded pipeline; the candidate self-join itself was 0.4 s). This kernel
+  * is one loop over the primitive plane matrix shipped as a reference
+  * object, and the bucketing stays inside whole-stage codegen with the
+  * scan. Sign math matches the composed form bit-for-bit (left-to-right
+  * double accumulation over float elements), so oracle replays and every
+  * gate-validated band shape are unchanged.
+  *
+  * The probes are query-side multi-probe LSH (Lv et al., VLDB'07, public
   * technique): a vector whose true neighbor lands one sign-flip away —
   * exactly the planes the vector nearly touches — is found by probing the
   * adjacent bucket instead of by adding whole tables. Confidence-ordered
@@ -22,10 +53,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * keeps its base buckets, so a probe never changes what the index stores.
   *
   * Bit-exactness contract: [[LshProbes.buckets]] is the one bucketing
-  * body — both eval paths of this kernel and of `lsh_buckets` (at
-  * `probeBits = 0`) call it, so slot 0 replays that kernel by
-  * construction; a probed run can only ADD candidate pairs, never lose
-  * one (ExactnessSpec pins banded ≡ exact with the probe knob on).
+  * body, so slot 0 is the same base bucket at every `probeBits`; a probed
+  * run can only ADD candidate pairs, never lose one (ExactnessSpec pins
+  * banded ≡ exact with the probe knob on).
   *
   * Tie/edge rules: equal
   * |dot| picks the lower plane position (strict `<` scan); NaN dots are
@@ -111,5 +141,108 @@ object LshProbes {
       t += 1
     }
     new GenericArrayData(out)
+  }
+}
+
+/** lsh_first_shared(p1, p2[, p1IsLower, probeBits, overCap]) → the
+  * canonical discovery of a pair in the banded self-join, or -1 when the
+  * pair has none. The one canonical-pair rule of every banded route.
+  *
+  * `p1` and `p2` are two rows' band-key arrays, both `array<int>` or both
+  * `array<bigint>` (the element type is read from the inputs at plan
+  * time): `lsh_probes(emb, t, p, probeBits)` arrays on the embedding
+  * routes, MinHash band hashes, SimHash band values. Stride
+  * `1 + probeBits`, slot 0 of each table the base bucket. The self-join
+  * pairs every slot of one row with the base slot of the other, so it
+  * finds a pair once per table where the base buckets collide and once per
+  * flip slot that lands in the other row's base bucket. The canonical
+  * discovery is the first of those in this order:
+  *  - the lowest table;
+  *  - within it, the base–base collision, then a flip from the lower id,
+  *    then a flip from the higher id (`p1IsLower` says which one `p1` is);
+  *  - skipping any discovery whose base bucket — the bucket the two rows
+  *    meet in — a bucket cap dropped from the join: `overCap(t)` holds
+  *    table `t`'s dropped buckets (widened to bigint), one array per table
+  *    up to the last table with any.
+  *
+  * The result names the discovering slot: its position `s` in `p1` when
+  * the slot is `p1`'s, `-2 - s` when it is `p2`'s. A base–base collision
+  * is the lower id's slot. A join row whose `v1` slot position equals the
+  * result is the one row the pair keeps, so every pair leaves the join
+  * once and no pair distinct (a hash map per task) is needed. The two-
+  * argument form is `p1IsLower = true, probeBits = 0`, no cap: the first
+  * table at which two key arrays agree. The case class names the three
+  * column arguments `first`, `second` and `third`.
+  *
+  * Deliberately not null-intolerant: the optimizer would otherwise infer
+  * IsNotNull on the carried arrays and re-run the bucketing kernel in a
+  * Filter below the Project that computes them (the best_cell lesson).
+  * A null input still yields null. `overCap` is a Seq (structural
+  * equality); the kernel searches sorted primitive copies of it.
+  */
+case class LshFirstShared(first: Expression, second: Expression,
+    third: Expression = Literal(true), probeBits: Int = 0, overCap: Seq[Seq[Long]] = Nil)
+    extends TernaryExpression with ExpectsInputTypes {
+  require(probeBits >= 0, s"lsh_first_shared: probeBits $probeBits must be >= 0")
+  @transient private lazy val overArr: Array[Array[Long]] = overCap.map(_.toArray.sorted).toArray
+  private def wide: Boolean = first.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  override def prettyName: String = "lsh_first_shared"
+  override def inputTypes = Seq(first.dataType, first.dataType, BooleanType)
+  override def checkInputDataTypes(): TypeCheckResult = first.dataType match {
+    case ArrayType(IntegerType | LongType, _) => super.checkInputDataTypes()
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"lsh_first_shared: keys must be array<int> or array<bigint>, got ${other.simpleString}")
+  }
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(a: Any, b: Any, lower: Any): Any =
+    LshFirstShared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      lower.asInstanceOf[Boolean], probeBits, overArr, wide)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val overRef = ctx.addReferenceObj("lshOverCap", overArr, "long[][]")
+    nullSafeCodeGen(ctx, ev, (x, y, lower) =>
+      s"${ev.value} = graft.expr.LshFirstShared.compute($x, $y, $lower, $probeBits, $overRef, $wide);")
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object LshFirstShared {
+  /** The body of both eval paths; `wide` reads the keys as bigints. */
+  def compute(x: ArrayData, y: ArrayData, xIsLower: Boolean, probeBits: Int,
+      overCap: Array[Array[Long]], wide: Boolean): Int = {
+    val stride = 1 + probeBits
+    val n = math.min(x.numElements(), y.numElements()) / stride
+    def at(a: ArrayData, i: Int): Long = if (wide) a.getLong(i) else a.getInt(i)
+    def open(t: Int, b: Long) =
+      t >= overCap.length || java.util.Arrays.binarySearch(overCap(t), b) < 0
+    // the position of `a`'s flip slot in table `t` that equals `target`, or -1
+    def flipInto(a: ArrayData, s: Int, target: Long): Int = {
+      var j = s + 1
+      while (j < s + stride && at(a, j) != target) j += 1
+      if (j < s + stride) j else -1
+    }
+    var t = 0
+    while (t < n) {
+      val s = t * stride
+      val bx = at(x, s); val by = at(y, s)
+      if (bx == by) {
+        if (open(t, bx)) return if (xIsLower) s else -2 - s
+      } else {
+        val fromX = if (open(t, by)) flipInto(x, s, by) else -1
+        val fromY = if (open(t, bx)) flipInto(y, s, bx) else -1
+        if (fromX >= 0 && (xIsLower || fromY < 0)) return fromX
+        if (fromY >= 0) return -2 - fromY
+      }
+      t += 1
+    }
+    -1
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * complete MinHash signature (mh_0..mh_{numHashes-1}) in ONE pass over the
   * text bytes — no shingle explode, no per-doc aggregation, no shuffle.
   *
-  * Exists for the same reason as [[LshBuckets]] on the embedding side: the
+  * Exists for the same reason as [[LshProbes]] on the embedding side: the
   * composed form pays row amplification. `shingledOf` explodes ~one row per
   * token (a 100 TB corpus becomes a multi-PB shingle stream), and the
   * 16-way `min` groupBy that follows is the ONLY corpus-wide shuffle on the

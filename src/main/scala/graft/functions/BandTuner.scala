@@ -226,9 +226,7 @@ object BandTuner {
       val (mass, cap) =
         if (s < 2) (0.0, 0)
         else {
-          val sizes = sample
-            .select(posexplode(expr(s"lsh_buckets(embedding, $nTables, $planes)"))
-              .as(Seq("tbl", "bucket")))
+          val sizes = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, 0), 0)
             .groupBy($"tbl", $"bucket").agg(count(lit(1)).as("bc"))
             .localCheckpoint(true)
           val m =
@@ -244,11 +242,7 @@ object BandTuner {
               // contributes ½ instead of 1, which the per-table union bound's
               // overcount offsets; the advisor's margin-based recommendation
               // absorbs the residual (validated against measurement, SCALE.md).
-              val probe = sample
-                .select(posexplode(
-                  expr(s"lsh_probes(embedding, $nTables, $planes, $bits)"))
-                  .as(Seq("pos", "bucket")))
-                .withColumn("tbl", expr(s"pos div ${1 + bits}").cast("int"))
+              val probe = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, bits), bits)
                 .groupBy($"tbl", $"bucket").agg(count(lit(1)).as("pc"))
               val directed = probe.join(sizes, Seq("tbl", "bucket"))
                 .agg(coalesce(sum($"pc" * $"bc"), lit(0L)))
@@ -264,7 +258,7 @@ object BandTuner {
           val szs = sizes.select($"bc").distinct().collect().map(_.getLong(0))
           val raw = suggestCapFrom(szs, s, n)
           // SHAPE-PRECONDITION cross-check (the SCALE.md r13 measured
-          // footgun, now also a runtime tripwire in capBuckets):
+          // footgun, now also a runtime tripwire in Banding.capBuckets):
           // sign-LSH has only 2^planes buckets per table, so a cap below
           // corpus / 2^planes puts EVERY bucket over the cap and empties
           // the index. A suggestion landing below that floor means the
@@ -435,10 +429,10 @@ object BandTuner {
           // checkpointed signature pass feeds banding AND the cv agg
           val sigs = DedupOps.minhashSigsOf(sample, bands * rows, withCard = true)
             .localCheckpoint(true)
-          val bb = DedupOps.bandBuckets(sigs, bands, rows, carry = Seq("n_sh"))
-          // one (bb → size) aggregation feeds the mass estimate AND the
-          // bucket-cap suggestion's size distribution
-          val sizes = bb.groupBy($"bb").agg(count(lit(1)).as("c"))
+          val banded = Banding.slots(sigs, Seq($"n_sh"), Banding.minhash(bands, rows), 0)
+          // one (band bucket → size) aggregation feeds the mass estimate AND
+          // the bucket-cap suggestion's size distribution
+          val sizes = banded.groupBy($"tbl", $"bucket").agg(count(lit(1)).as("c"))
             .localCheckpoint(true)
           val total = sizes
             .agg(coalesce(sum($"c" * ($"c" - 1)), lit(0L)))
@@ -463,22 +457,22 @@ object BandTuner {
           // class 0 would count their pairs as killed and break the
           // keep-is-an-upper-bound contract. They're priced separately
           // below as all-kept, and excluded from the cv (a 0 isn't a card).
-          val byCls = bb.filter($"n_sh" =!= sentinel).select($"bb",
+          val byCls = banded.filter($"n_sh" =!= sentinel).select($"tbl", $"bucket",
               floor(log(greatest($"n_sh", lit(1L)).cast("double")) /
                 math.log(1.0 / theta)).as("cls"))
-            .groupBy($"bb", $"cls").agg(count(lit(1)).as("c"))
+            .groupBy($"tbl", $"bucket", $"cls").agg(count(lit(1)).as("c"))
             .localCheckpoint(true)
           val same = byCls
             .agg(coalesce(sum($"c" * ($"c" - 1)), lit(0L)))
             .head.getLong(0) / 2.0
-          val adjacent = byCls.select($"bb", $"cls", $"c".as("c1"))
-            .join(byCls.select($"bb", ($"cls" - 1).as("cls"), $"c".as("c2")),
-              Seq("bb", "cls"))
+          val adjacent = byCls.select($"tbl", $"bucket", $"cls", $"c".as("c1"))
+            .join(byCls.select($"tbl", $"bucket", ($"cls" - 1).as("cls"), $"c".as("c2")),
+              Seq("tbl", "bucket", "cls"))
             .agg(coalesce(sum($"c1" * $"c2"), lit(0L)))
             .head.getLong(0).toDouble
           // every pair touching a sentinel survives: within-sentinel plus
           // sentinel × normal, per bucket
-          val sentKept = bb.groupBy($"bb").agg(
+          val sentKept = banded.groupBy($"tbl", $"bucket").agg(
               count(lit(1)).as("cT"),
               coalesce(sum(when($"n_sh" === sentinel, 1L).otherwise(0L)),
                 lit(0L)).as("cS"))

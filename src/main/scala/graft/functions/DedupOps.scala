@@ -23,13 +23,9 @@ import org.apache.spark.sql.functions._
   *    P(candidate) = 1-(1-s²)^8 ≈ 1 — recall asserted in DedupSpec.
   *  - SimHash: 64-bit weighted-token signature; near-dups differ in ≤ k
   *    bits. Emitted as doc→signature (the index table); pairing is a
-  *    bucketed hamming join in DedupSpec.
+  *    banded hamming join ([[simhashPairs]]).
   */
 object DedupOps extends QueryPack {
-
-  // explicit name (not getClass, whose `$` suffix varies) so the
-  // ExactnessSpec warn-tier appender can address this logger exactly
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.functions.DedupOps")
 
   /** THE normalization under every content identity in the library —
     * shared (package-visible) so TextOps' fingerprints and corpus-select
@@ -184,38 +180,6 @@ object DedupOps extends QueryPack {
         (0 until numHashes).map(i => col("sig").getItem(i).as(s"mh_$i")): _*)
   }
 
-  /** (doc_id, bhs, bb) band-bucket memberships from a signature frame:
-    * band b's bucket hash is the hash of its `rows` consecutive min-hashes,
-    * `bhs` is the document's array of all `bands` of them, and `bb` is one
-    * (band, bh) row per band. Shared by the candidate path and
-    * [[BandTuner.suggestMinhash]]'s cost sample so the priced bucketing is
-    * the deployed bucketing.
-    */
-  private[functions] def bandBuckets(sigs: DataFrame, bands: Int, rows: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    val ids = col("doc_id") +: carry.map(col)
-    val bhs = array((0 until bands).map(b =>
-      xxhash64((0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)): _*)
-    // `bhs` and the `carry` columns (the prefilter's n_sh) are materialized
-    // before the explode, so they land in the Generate's requiredChildOutput;
-    // a fresh expression listed next to the generator would be re-evaluated
-    // once per band row (the int8-blob lesson, SimilarityOps). The generator
-    // reads `bhs` through an inline array: exploding the bare column would
-    // make the optimizer infer size and IsNotNull filters on it, computed
-    // below the Project as more band hashes per document.
-    sigs.select(ids :+ bhs.as("bhs"): _*)
-      .select((ids :+ col("bhs")) :+ explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), col("bhs")(b).as("bh"))): _*)).as("bb"): _*)
-  }
-
-  /** The lowest band `t` in `0 until bands` where `agree(t)` holds for a
-    * joined pair, or null when none does. A band self-join meets a pair
-    * once per band whose bucket it shares; keeping only the row whose band
-    * is this one emits each pair once, with no pair distinct.
-    */
-  private def firstAgreeingBand(bands: Int)(agree: Int => Column): Column =
-    (1 until bands).foldLeft(when(agree(0), 0))((w, t) => w.when(agree(t), t))
-
   /** MinHash+LSH near-dup: band-bucket candidates, exact-verify, emit pairs
     * with their true Jaccard. Hash-gated by EQUIVALENCE: candidates are
     * exact-verified so precision is 1.0 by construction, and banding recall
@@ -252,10 +216,11 @@ object DedupOps extends QueryPack {
     // pinned until an explicit unpersist — repeated invocations in a long
     // session would accumulate storage. The checkpoint's backing blocks
     // are released by the ContextCleaner as soon as the returned plan is
-    // unreferenced. Lazy, so no construction-time job runs: the first
-    // consumer (jaccardStats' candidate doc-id broadcast) materializes it,
-    // and the signature/band stage still runs once per pass
-    // (LazyCheckpointSpec).
+    // unreferenced. Lazy, but not free to build: under AQE the checkpoint's
+    // shuffle stages (the signature/band stage) run while the frame is
+    // constructed, and the first consumer (jaccardStats' candidate doc-id
+    // broadcast) reads the materialized blocks; the signature/band stage
+    // runs once per pass either way (LazyCheckpointSpec).
     minhashCandidatesPlan(spark, dir).localCheckpoint(false)
 
   /** The candidate-generation subtree WITHOUT the closing checkpoint
@@ -263,38 +228,35 @@ object DedupOps extends QueryPack {
     * so plan dumps (DumpPlans) can show the signature/banding stages that
     * the checkpoint otherwise collapses to `Scan ExistingRDD`.
     *
-    * A bucket SELF-JOIN on (band, bucket), not collect_set-then-explode²:
-    * that form holds every bucket's doc list in one aggregation buffer and
-    * expands |bucket|² pairs from a single row, and a degenerate band value
-    * (near-empty documents share signatures) is an unbounded array no
-    * executor survives. The join streams the same pairs, spills, and lets
-    * AQE split a hot bucket. Two rules cut what leaves it:
-    *  - *One row per pair.* A pair meets once per band whose bucket it
-    *    shares. Each band row carries its document's band-hash array
-    *    (`bhs`), and a pair is kept only at its first agreeing band
-    *    ([[firstAgreeingBand]], the rule `dedup_simhash_pairs` uses), so no
-    *    pair distinct runs.
-    *  - *Size ratio.* With `graft.sim.prefilter` on, each doc's
-    *    distinct-shingle count n_sh (ONE long, from the fused
-    *    `minhash_sig_card` kernel in the scan) rides the shuffle, and pairs
-    *    failing the lossless bound min(n1,n2) ≥ JaccardTheta·max(n1,n2) are
-    *    rejected inside the join, before the verify (ExactnessSpec:
-    *    prefiltered ≡ unfiltered).
+    * The banded self-join ([[Banding.selfJoin]]) over each document's
+    * `bands` 64-bit band hashes ([[Banding.minhash]]), not
+    * collect_set-then-explode²: that form holds every bucket's doc list in
+    * one aggregation buffer and expands |bucket|² pairs from a single row,
+    * and a degenerate band value (near-empty documents share signatures)
+    * is an unbounded array no executor survives. The join streams the same
+    * pairs, spills, and lets AQE split a hot bucket. It keeps each pair
+    * once, at its first agreeing band (`lsh_first_shared`, the rule every
+    * banded route shares), so no pair distinct runs. With
+    * `graft.sim.prefilter` on, each doc's distinct-shingle count n_sh (ONE
+    * long, from the fused `minhash_sig_card` kernel in the scan) rides the
+    * shuffle, and pairs failing the lossless bound
+    * min(n1,n2) ≥ JaccardTheta·max(n1,n2) are rejected inside the join,
+    * before the verify (ExactnessSpec: prefiltered ≡ unfiltered).
     *
-    * CAP-ON NOTE: with [[Knobs.DedupBucketCap]] > 0 the band stream goes through
-    * [[capBuckets]], whose lazy `localCheckpoint` lets the cap's consumers
-    * (the sizes aggregation and both self-join legs) read one materialized
-    * stream instead of each re-running the scan+signature subtree (PlanSpec
-    * pins the single pass). A band whose bucket the cap dropped does not
-    * count as agreeing, so a pair whose first shared bucket was dropped is
-    * kept at its next shared one, as the embedding route does. On the very
-    * first action AQE may submit the two leaf stages that share the stream
-    * concurrently, so a partition can be computed twice in that race — a
-    * bounded first-run cost, chosen over an eager checkpoint whose
-    * construction-time job would make plan dumps and analysis-only tests
-    * run Spark jobs. A dump with the cap set shows the capped subtree above
-    * `Scan ExistingRDD`; dump with the cap unset (the default) to see the
-    * full lazy pipeline.
+    * With [[Knobs.DedupBucketCap]] > 0 the band stream goes through the
+    * join's bucket cap ([[Banding.capBuckets]]): a band whose bucket the
+    * cap dropped does not count as agreeing, so a pair whose first shared
+    * bucket was dropped is kept at its next shared one. The cap's lazy
+    * `localCheckpoint` lets its consumers (the sizes aggregation and both
+    * self-join legs) read one materialized stream instead of each
+    * re-running the scan+signature subtree (PlanSpec pins the single
+    * pass). On the very first action AQE may submit the two leaf stages
+    * that share the stream concurrently, so a partition can be computed
+    * twice in that race — a bounded first-run cost, chosen over an eager
+    * checkpoint whose construction-time job would make plan dumps and
+    * analysis-only tests run Spark jobs. A dump with the cap set shows the
+    * capped subtree above `Scan ExistingRDD`; dump with the cap unset (the
+    * default) to see the full lazy pipeline.
     */
   private[graft] def minhashCandidatesPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -302,19 +264,7 @@ object DedupOps extends QueryPack {
     val pf = Knobs.SimPrefilter(spark)
     val sigs = minhashSigsOf(Tables.documents(spark, dir), bands * rows,
       withCard = pf)
-    val b = bandBuckets(sigs, bands, rows,
-      carry = if (pf) Seq("n_sh") else Nil)
     val cap = Knobs.DedupBucketCap(spark)
-    val capped = Option.when(cap > 0)(capBuckets(b, Seq("bb"), cap, Knobs.DedupBucketCap))
-    val overCap = capped.toSeq.flatMap(_._2.collect().map(_.getStruct(0)))
-      .groupMap(_.getInt(0))(_.getLong(1))
-    def side(i: Int): DataFrame =
-      capped.fold(b)(_._1).select($"bb" +: $"doc_id".as(s"d$i") +: $"bhs".as(s"h$i") +:
-        (if (pf) Seq($"n_sh".as(s"ns$i")) else Nil): _*).hint("shuffle_hash")
-    val first = firstAgreeingBand(bands) { t =>
-      val agree = $"h1"(t) === $"h2"(t)
-      overCap.get(t).fold(agree)(over => agree && !$"h1"(t).isin(over: _*))
-    }
     // sentinel pass-through: a doc past the fused kernel's CardCapShingles
     // carries CardUnknown (0) instead of a count — such rows must never be
     // rejected (the prefilter is optional per row; the verify recomputes
@@ -323,137 +273,10 @@ object DedupOps extends QueryPack {
     val unknown = lit(graft.expr.MinhashSig.CardUnknown)
     val sizeOk = Option.when(pf)($"ns1" === unknown || $"ns2" === unknown ||
       least($"ns1", $"ns2") >= lit(JaccardTheta) * greatest($"ns1", $"ns2"))
-    // one filter, cheapest test first: split over several filters, the
-    // later ones are pushed into the join condition ahead of the earlier
-    side(1).join(side(2), Seq("bb"))
-      .filter((Seq($"d1" < $"d2") ++ sizeOk :+ ($"bb.band" === first)).reduce(_ && _))
+    Banding.selfJoin(sigs, "doc_id" -> "d", Banding.minhash(bands, rows),
+        carry = if (pf) Seq("ns" -> $"n_sh") else Nil,
+        cap = Option.when(cap > 0)(Knobs.DedupBucketCap -> cap), test = sizeOk)
       .select($"d1", $"d2")
-  }
-
-  /** The oversized-bucket drop behind every bucket-cap knob `dial`
-    * ([[Knobs.DedupBucketCap]] here, a sign-LSH route's cap in
-    * [[SimilarityOps.lshCandidateIds]]) — one implementation so the routes
-    * cannot silently diverge. Returns the rows of `bucketed` whose bucket
-    * holds at most `cap` of the `counted` rows (a bucket with no counted
-    * row is dropped too), and the over-cap `keys`, one row per dropped
-    * bucket, read from the materialized sizes. The banded embedding
-    * self-join counts base slots, not multi-probe slots, and hands the
-    * over-cap keys to `lsh_first_shared`; the MinHash candidate join uses
-    * them so a dropped band does not count as agreeing.
-    * The bucketed stream is
-    * materialized ONCE through a `localCheckpoint` so the cap's
-    * consumers (the sizes aggregation, the semi-join leg, and every
-    * self-join side downstream) read persisted rows instead of each
-    * re-running the scan+signature subtree (measured 4 passes without
-    * it); the blocks are ContextCleaner-released once the returned frame
-    * is unreferenced. `shuffle_hash` on the (keys,count) side: it is
-    * strictly smaller than the stream it filters, but
-    * corpus-proportional — broadcast is never the scale-correct strategy
-    * for it. Callers gate on cap > 0.
-    *
-    * EMPTY-INDEX TRIPWIRE (round 15 — r13's #1 ordered fix; discriminator
-    * reworked round 16 per advice #1): a cap below corpus /
-    * buckets-per-table puts EVERY bucket over the cap and the drop
-    * silently returns an empty candidate set — a dedup run that quietly
-    * reports "no near-dups" on a corpus full of them (measured, SCALE.md
-    * round 13: sign-LSH 8×4 at 20k vectors with cap 512 → 0 candidates;
-    * every bucket held ~1250). The sizes aggregation this helper computes
-    * anyway makes the check nearly free: ONE eager pass over the
-    * checkpointed blocks at construction (blocks the first consumer would
-    * materialize immediately after). The hard-fail is a COMBINED
-    * predicate: (a) ≥ 99% of BUCKETS over the cap — the pure shape
-    * mismatch, which drowns every bucket at once — OR (b) ≥ 99% of the
-    * row MASS over the cap while over-cap buckets are also the MAJORITY
-    * of observed buckets — the skewed mismatch, where a tail of
-    * near-empty buckets keeps the bucket fraction under (a) while the
-    * index still empties (round-16 review). Row mass alone (the round-15
-    * predicate) cannot tell either footgun from a legitimately extreme
-    * hot-cluster corpus — ≥ 99% of rows in hot buckets on a matched
-    * shape, exactly the case the cap exists for, which must run, not
-    * fail (r16 advice #1) — hence the majority hatch in (b): a mismatch
-    * means the MEAN bucket is over the cap, so uniform hashing drowns
-    * essentially every occupied bucket, while a hot-cluster corpus is
-    * bimodal — its background population outnumbers the hot buckets in
-    * COUNT even when negligible in mass. The hatch deliberately measures
-    * against OBSERVED (non-empty) buckets and stays at the 50% boundary:
-    * tighter drafts (10%) hard-failed legitimate multi-cluster /
-    * thin-background corpora, whose observed-bucket count shrinks as
-    * clusters dominate. 99%, not 100%, on buckets in (a): the mismatch
-    * drowns every bucket; a matched shape keeps its many small
-    * background buckets under the cap.
-    *
-    * WARN TIER (round 16 — r15 verdict #1): below the hard-fail, a cap
-    * can still legally excise most of the candidate MASS (a 90%-hot
-    * corpus drops 90% of bucketed rows without tripping any guard). When
-    * over-cap buckets hold ≥ 50% of bucketed rows — and the shape guard
-    * above did not fire — log a WARNING with the same shape arithmetic
-    * and the BandTuner pointer, from the stats row already in hand. The
-    * query proceeds: excising a dominant hot cluster is the dial's
-    * documented purpose; the warning makes the magnitude visible instead
-    * of silent.
-    */
-  private[graft] def capBuckets(bucketed: DataFrame, keys: Seq[String], cap: Int,
-      dial: Knobs.Cap, counted: Column = lit(true)): (DataFrame, DataFrame) = {
-    val bMat = bucketed.localCheckpoint(false)
-    // eager checkpoint: the groupBy over the band stream runs ONCE — the
-    // tripwire stats and the semi-join build side below both read the
-    // materialized (keys, bkt_n) frame (one narrow row per bucket), not
-    // re-run the corpus-proportional aggregation (round-15 review)
-    val sizes = bMat.filter(counted).groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bkt_n"))
-      .localCheckpoint(true)
-    val bn = col("bkt_n")
-    val st = sizes.agg(
-      coalesce(sum(bn), lit(0L)).as("total"),
-      coalesce(sum(when(bn > cap, bn)), lit(0L)).as("over"),
-      count(lit(1)).as("buckets"),
-      coalesce(sum(when(bn > cap, lit(1L))), lit(0L)).as("overBuckets"),
-      coalesce(min(when(bn > cap, bn)), lit(0L)).as("minOver")).head
-    val (total, over) = (st.getLong(0), st.getLong(1))
-    val (buckets, overBuckets, minOver) =
-      (st.getLong(2), st.getLong(3), st.getLong(4))
-    val remedy = dial.remedy(minOver)
-    // footgun = EITHER nearly every bucket drowned (the pure shape
-    // mismatch) OR ≥99% of the candidate mass gone while over-cap buckets
-    // are also the MAJORITY of observed buckets (round-16 review #3: a
-    // skewed mismatch — 250 of 256 buckets over, a tail of near-empty
-    // buckets under — evades the bucket-count test alone while emptying
-    // the index). The majority threshold separates the two occupancy
-    // shapes: a mismatch means mean bucket size > cap, so uniform hashing
-    // puts essentially every occupied bucket over (fraction → 1); a
-    // hot-cluster corpus is BIMODAL — hot buckets plus a real background
-    // population that outnumbers them in bucket COUNT even when it is
-    // negligible in mass. `buckets` counts OBSERVED (non-empty) buckets,
-    // which shrinks as clusters dominate — a tighter hatch (an earlier
-    // draft used 10%) hard-failed legitimate multi-cluster or
-    // thin-background corpora for exactly that reason (review second
-    // pass): 15 clusters × 8 tables = 120 hot of ~920 observed is
-    // already 13%.
-    val drowned = overBuckets >= 0.99 * buckets
-    val massGoneBeyondHotCluster = over >= 0.99 * total && overBuckets > 0.5 * buckets
-    require(total == 0L || !(drowned || massGoneBeyondHotCluster),
-      s"${dial.key}=$cap would drop ${if (over == total) "ALL" else s"$over of $total"} " +
-        s"bucketed rows ($overBuckets of $buckets buckets over the cap) — the " +
-        "candidate index would be silently empty(ish) and the dedup would " +
-        s"report no near-dups on any corpus. $remedy")
-    if (total > 0L && over >= 0.5 * total) {
-      // floored, not rounded: a 98.7% fraction must never print as the
-      // 99% hard-fail threshold it sits below (round-16 review, 2nd pass);
-      // Locale.ROOT via core.Fmt, not the f-interpolator (round-16
-      // advice #4's bench fix, extended here by r17 advice #2): f"" uses
-      // the JVM default locale, so a comma-decimal JVM would log '98,70%'
-      val overPct = math.floor(overBuckets * 10000.0 / math.max(buckets, 1L)) / 100
-      val overPctStr = graft.core.Fmt.num(overPct, 2)
-      log.warn(s"${dial.key}=$cap drops $over of $total bucketed rows — over half " +
-        s"the candidate mass ($overBuckets of $buckets buckets over the cap, " +
-        s"smallest over-cap bucket $minOver). Legal — the guard reads " +
-        s"$overPctStr% of buckets over the cap, below the footgun regime — " +
-        "but verify the dial is sized to THIS corpus: a hot-cluster " +
-        s"excision this large should be intentional. $remedy")
-    }
-    val small = sizes.filter(bn <= cap).select(keys.map(col): _*)
-    (bMat.join(small.hint("shuffle_hash"), keys, "left_semi"),
-      sizes.filter(bn > cap).select(keys.map(col): _*))
   }
 
   /** Exact Jaccard stats (common, n1, n2, jaccard) for the given candidate
@@ -556,13 +379,18 @@ object DedupOps extends QueryPack {
     * shuffles (the (doc,token) count groupBy and the 64-vote groupBy).
     * Bit-identical by the kernel's compatibility contract (SimhashSigSpec);
     * the `text IS NOT NULL` filter mirrors the composed form, where a null
-    * text explodes to nothing and the doc never reaches the frame.
+    * text explodes to nothing and the doc never reaches the frame. Past
+    * that filter the signature is never null, and the `coalesce` says so:
+    * a nullable `sig` under a null-intolerant consumer (the pairing's
+    * hamming test) has the optimizer infer IsNotNull(sig) and push it
+    * below the fan-out as a second kernel call per document.
     */
   private[graft] def simhashSigsOf(docs: DataFrame): DataFrame = {
     GraftFunctions.install(docs.sparkSession)
     docs
       .where(col("text").isNotNull)
-      .select(col("doc_id"), call_function("simhash_sig", normText).as("sig"))
+      .select(col("doc_id"),
+        coalesce(call_function("simhash_sig", normText), lit(0L)).as("sig"))
   }
 
   /** SimHash index table (doc_id → signature hex), the artifact a
@@ -586,30 +414,21 @@ object DedupOps extends QueryPack {
     * band, so band-equality buckets have recall 1 by theorem (not by
     * tuning) and the all-pairs O(n²) popcount becomes O(Σ bucket²) with
     * one shuffle on (band, value) — the same construction the reference's
-    * dedup pipelines used over MapReduce sort buckets. Candidates carry
-    * two longs, and each pair is kept at its first agreeing band only, so
-    * no pair distinct runs.
+    * dedup pipelines used over MapReduce sort buckets. The bands are the
+    * keys of the shared banded self-join ([[Banding.selfJoin]],
+    * [[Banding.simhash]]), which keeps each pair at its first agreeing
+    * band, so no pair distinct runs; each side carries the signature for
+    * the hamming filter.
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // fan out: unlike [[simhash]] (index only, where the A/B measured the
-    // exchange costing more than the kernel), the pairing pays the sig
-    // kernel AND the band self-join above one scan task — fan-out
-    // measured 1.0 -> 0.6-0.7 s
+    // fan out: unlike [[simhash]] (index only, where the exchange measured
+    // costlier than the kernel), the pairing pays the sig kernel AND the
+    // band self-join above one scan task — fan-out measured 1.0 -> 0.6-0.7 s
     val sigs = simhashSigsOf(graft.core.Fanout.maybeFanout(
       Tables.documents(spark, dir), col("doc_id")))
-    val banded = sigs.select($"doc_id", $"sig",
-        explode(array((0 until SimhashBands).map { t =>
-          struct(lit(t).as("band"),
-            shiftright($"sig", 16 * t).bitwiseAND(lit(0xFFFFL)).as("bv"))
-        }: _*)).as("tb"))
-      .select($"doc_id", $"sig", $"tb.band", $"tb.bv")
-    val firstBand = firstAgreeingBand(SimhashBands)(t =>
-      shiftright($"s1".bitwiseXOR($"s2"), 16 * t).bitwiseAND(lit(0xFFFFL)) === 0)
-    banded.select($"band", $"bv", $"doc_id".as("d1"), $"sig".as("s1"))
-      .join(banded.select($"band", $"bv", $"doc_id".as("d2"), $"sig".as("s2")),
-        Seq("band", "bv"))
-      .filter($"d1" < $"d2" && $"band" === firstBand)
+    Banding.selfJoin(sigs, "doc_id" -> "d", Banding.simhash(SimhashBands),
+        carry = Seq("s" -> $"sig"))
       .withColumn("hamming", expr("bit_count(s1 ^ s2)"))
       .filter($"hamming" <= SimhashMaxHamming)
       .select($"d1", $"d2", $"hamming".cast("int").as("hamming"))

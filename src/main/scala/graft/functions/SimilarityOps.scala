@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   *    [[graft.expr.CosineSimilarity]] — the correctness baseline. Queries
   *    are broadcast, so the candidate side streams through one codegen
   *    stage: at 100 TB this is a single scan, no shuffle.
-  *  - `sim_ann_lsh`: random-hyperplane LSH — each vector hashed to a
-  *    16-bit signature bucket; candidates only meet within a bucket. This
-  *    is the scale path: the all-pairs O(n²) becomes O(Σ bucket²), one
-  *    shuffle on bucket id.
+  *  - `sim_ann_lsh`: random-hyperplane LSH — each vector hashed into 4
+  *    tables of 4 sign bits (one 16-way bucket per table); candidates only
+  *    meet within a shared (table, bucket). This is the scale path: the
+  *    all-pairs O(n²) becomes O(Σ bucket²), one shuffle on (table,
+  *    bucket).
   *  - `sim_pairs_threshold`: all pairs above a cosine threshold
   *    (embedding near-dup dedup) — exact small-n form; at scale the same
   *    verify step runs on LSH candidates instead of all pairs.
@@ -43,7 +44,7 @@ object SimilarityOps extends QueryPack {
 
   /** Seeded Rademacher (±1) hyperplanes: deterministic, no data dependence.
     * Canonical storage is [[graft.expr.Hyperplanes]] (primitive float[][]
-    * for the `lsh_buckets` kernel); this is the Seq view the oracle-SQL
+    * for the `lsh_probes` kernel); this is the Seq view the oracle-SQL
     * generator and tools consume.
     */
   lazy val hyperplanes: Seq[Seq[Float]] =
@@ -59,7 +60,7 @@ object SimilarityOps extends QueryPack {
     * per threshold (near-dup at 0.9 tolerates 4-bit tables; a loose 0.4
     * threshold needs 2-bit ones).
     *
-    * Scale shape: the [[bandedSelfJoin]] (one narrow shuffle of
+    * Scale shape: the [[Banding.selfJoin]] (one narrow shuffle of
     * (table,bucket,id) rows, each pair emitted once at its canonical
     * discovery, with no pair distinct on any route), then one exchange of
     * id PAIRS only — vectors are NOT carried past the join (re-joined by
@@ -93,7 +94,8 @@ object SimilarityOps extends QueryPack {
     // the empty-blob sentinel can never reach int8_keep.
     val blob = theta.map(_ =>
       "b" -> coalesce(expr("int8_enc(embedding)"), lit(Array.emptyByteArray)))
-    val pairs = bandedSelfJoin(spark, dir, b.tables, b.planes, b.probeBits, blob.toSeq,
+    val pairs = Banding.selfJoin(Tables.embeddings(spark, dir), "vec_id" -> "v",
+      Banding.signLsh(b.tables, b.planes, b.probeBits), b.probeBits, blob.toSeq,
       cap = b.cap,
       test = theta.map(t => call_function("int8_keep", $"b1", $"b2", lit(t))))
     // unprobed, every pair leaves as v1 < v2 already; least/greatest there
@@ -104,102 +106,6 @@ object SimilarityOps extends QueryPack {
       // samples them (a sort's range bounds) reuses it instead of running
       // the self-join again.
       .repartition($"v1", $"v2")
-  }
-
-  /** The banded self-join behind every embedding LSH route: one row per
-    * candidate pair, at the pair's canonical discovery, carrying `v1`,
-    * `v2`, the `within` columns and each `carry` column twice (suffixed
-    * `1` and `2`).
-    *
-    * Each vector's `lsh_probes(embedding, nTables, planesPerTable,
-    * probeBits)` array (`pr`, stride `1 + probeBits`; the base bucket of
-    * each table, then its Hamming-1 neighbors on the lowest-|dot| planes —
-    * [[graft.expr.LshProbes]]) is computed once, below the explode, and
-    * posexploded into one (tbl, bucket) row per slot. The join is (every
-    * slot of v1) ⋈ (the base slot of v2) on (tbl, bucket, within...), so a
-    * pair meets once per table where the base buckets collide and once per
-    * flip of either vector into the other's base bucket. The one
-    * de-duplication rule: a row is kept only when it is the pair's
-    * canonical discovery (`lsh_first_shared` over both rows' arrays —
-    * first table, then base–base, then a flip from the lower id, then one
-    * from the higher), so every pair leaves the join once and no pair
-    * distinct (a 64 MB Tungsten page per task) runs. A base–base row is
-    * canonical only as v1 < v2; unprobed, every row is base–base, so the
-    * cheaper `<` runs first and `lsh_first_shared` is passed its result as
-    * `true` rather than testing it again.
-    *
-    * `cap` is a route's bucket-cap knob and its value ([[Knobs.LshRoute]]):
-    * the shared [[DedupOps.capBuckets]] helper counts base slots per
-    * (tbl, bucket), drops every slot row in an over-cap bucket, and its
-    * over-cap keys ride into `lsh_first_shared` as a reference array, so a
-    * pair whose first shared bucket was dropped is kept at the next one.
-    * The generator runs its own `lsh_probes` call: exploding the carried
-    * `pr` column instead makes the optimizer infer size/IsNotNull filters
-    * on it, pushed below the Project as two more kernel calls per vector.
-    * `test` (the int8 prefilter) joins the canonical tests in ONE filter,
-    * cheapest first: split over several filters, the later ones are
-    * pushed in ahead of the earlier.
-    *
-    * Each side is hinted shuffle_hash: both are the SAME corpus-sized
-    * relation, so broadcast is never the scale-correct strategy — yet a
-    * session with a generous broadcast threshold (SCALE.md round 10's
-    * exact baselines ran at 256 MB) broadcast the blob-carrying side, and
-    * at 20k vectors that 135 MB broadcast measured 5× slower than the
-    * shuffle join (SCALE.md round 10). The side's exchange is sized by the
-    * caller when the input cannot fill the cores ([[graft.core.Fanout]]):
-    * the join's work is Σ bucket², not bytes, but AQE sizes the exchange
-    * by bytes and merged it into ONE task on small corpora (SCALE.md "The
-    * banded self-join runs on every core"). At scale, and on the capped
-    * route's checkpoint (no input files), the side passes through and
-    * AQE's merging and skew split decide. Unprobed, both sides read one
-    * exchange, planned once and reused. The renames stay below it, in the
-    * scan's generated stage: above it they add two generated stages to
-    * the self-join.
-    */
-  private def bandedSelfJoin(spark: SparkSession, dir: String,
-      nTables: Int, planesPerTable: Int, probeBits: Int,
-      carry: Seq[(String, Column)], within: Seq[String] = Nil,
-      cap: Option[(Knobs.Cap, Int)] = None, test: Option[Column] = None): DataFrame = {
-    val stride = 1 + probeBits
-    // the kernel checks the shape (planes available, probeBits in range)
-    val probes = expr(s"lsh_probes(embedding, $nTables, $planesPerTable, $probeBits)")
-    // carried columns are materialized BEFORE the posexplode select: listed
-    // in the same select, the generator would be extracted underneath them
-    // and they would be re-evaluated per generated row (t× per vector); as
-    // pass-through columns they land in the Generate's requiredChildOutput
-    val ids = col("vec_id") +: within.map(col)
-    val slots = Tables.embeddings(spark, dir)
-      .select((ids :+ col("embedding")) ++ carry.map { case (n, c) => c.as(n) } :+
-        probes.as("pr"): _*)
-      .select((ids ++ carry.map(c => col(c._1)) :+ col("pr")) :+
-        posexplode(probes).as(Seq("pos", "bucket")): _*)
-      // unprobed, a slot IS its table; `pos`, unlike `div`, is non-null,
-      // so the join infers no IsNotNull(tbl) filter into the scan stage
-      .withColumn("tbl", if (probeBits == 0) col("pos") else expr(s"pos div $stride").cast("int"))
-    val keys = Seq("tbl", "bucket") ++ within
-    val isBase = col("pos") % stride === 0
-    val capped = for ((dial, c) <- cap)
-      yield DedupOps.capBuckets(slots, keys, c, dial, counted = isBase)
-    val stream = capped.fold(slots)(_._1)
-    val overCap = capped.toSeq.flatMap(_._2.collect()
-      .map(r => graft.expr.LshFirstShared.key(r.getInt(0), r.getInt(1))))
-    // only v1's slot position is read (the canonical test); unprobed it is
-    // the table, so both sides carry the same columns and share one exchange
-    def side(i: Int, rows: DataFrame, slot: Column*): DataFrame =
-      graft.core.Fanout.maybeFanout(rows.select((keys.map(col) ++ slot :+
-          col("vec_id").as(s"v$i") :+ col("pr").as(s"k$i")) ++
-          carry.map { case (n, _) => col(n).as(s"$n$i") }: _*),
-        keys.map(col): _*)
-      .hint("shuffle_hash")
-    val (v1, v2) = (col("v1"), col("v2"))
-    val (left, right, slot) =
-      if (probeBits == 0) (side(1, stream), side(2, stream), col("tbl"))
-      else (side(1, stream, col("pos").as("pos1")), side(2, stream.filter(isBase)), col("pos1"))
-    // unprobed, the `<` pre-test below has already established v1 < v2
-    val canonical = call_function("lsh_first_shared", col("k1"), col("k2"),
-      if (probeBits == 0) lit(true) else v1 < v2, lit(probeBits), typedLit(overCap)) === slot
-    left.join(right, keys)
-      .filter((Option.when(probeBits == 0)(v1 < v2) ++ Seq(canonical) ++ test).reduce(_ && _))
   }
 
   /** Per-vector L2 norm, precomputed ONCE in the narrow scan so per-pair
@@ -240,7 +146,7 @@ object SimilarityOps extends QueryPack {
   /** Scored LSH neighbor pairs for the top-1/argmax family: (v1,
     * within..., v2, cos) rows, each candidate pair once in each
     * orientation. The float vectors and their norms ride the narrow n·t-row
-    * bucket shuffle of the [[bandedSelfJoin]] once, the cosine runs in the
+    * bucket shuffle of the [[Banding.selfJoin]] once, the cosine runs in the
     * self-join stage once per pair, and one explode in the same stage
     * emits both orientations — a union would run the self-join again for
     * its second child, reusing only the exchanges below it. There is no
@@ -257,7 +163,8 @@ object SimilarityOps extends QueryPack {
       probeBits: Int = 0): DataFrame = {
     import spark.implicits._
     // the cosine is projected BEFORE the explode, so it runs once per pair
-    bandedSelfJoin(spark, dir, nTables, planesPerTable, probeBits,
+    Banding.selfJoin(Tables.embeddings(spark, dir), "vec_id" -> "v",
+        Banding.signLsh(nTables, planesPerTable, probeBits), probeBits,
         Seq("e" -> $"embedding", "n" -> normCol), within)
       .select((Seq($"v1", $"v2") ++ within.map(col)) :+
         cosPre("e1", "e2", "n1", "n2").as("cos"): _*)
@@ -512,7 +419,7 @@ object SimilarityOps extends QueryPack {
     * `array_max(transform(...))`; r6 replaced THAT with the native kernel,
     * because higher-order functions are codegen-fallback — the composed
     * argmax evaluated 16 interpreted cosine kernels over boxed literals
-    * per corpus row, the same pathology `lsh_buckets` fixed for bucketing
+    * per corpus row, the same pathology `lsh_probes` fixed for bucketing
     * (SCALE.md round 6). The kernel also hoists the k centroid norms out
     * of the per-row loop entirely.
     *

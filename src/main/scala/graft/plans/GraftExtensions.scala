@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshBuckets, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, ShingleSet, SimhashSig}
+import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, ShingleSet, SimhashSig}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -35,17 +35,14 @@ object GraftFunctions {
       args => CosineSimilarity(args.head, args(1))),
     fn("dot_product", classOf[DotProduct], 2, "2 arguments")(
       args => DotProduct(args.head, args(1))),
-    fn("lsh_buckets", classOf[LshBuckets], 3, "(embedding, nTables, planesPerTable)")(
-      args => LshBuckets(args.head, intArg("lsh_buckets", "nTables", args(1)),
-        intArg("lsh_buckets", "planesPerTable", args(2)))),
-    fn("lsh_first_shared", classOf[LshFirstShared], 2, "(buckets1, buckets2) or (probes1, " +
-        "probes2, probes1IsLower, probeBits, overCapKeys-bigint-array-literal)", orArity = 5) {
+    fn("lsh_first_shared", classOf[LshFirstShared], 2, "(keys1, keys2) or (keys1, keys2, " +
+        "keys1IsLower, probeBits, overCap-per-table-array<array<bigint>>-literal)", orArity = 5) {
       case Seq(p1, p2) => LshFirstShared(p1, p2)
-      case Seq(p1, p2, lower, bits, Literal(keys: ArrayData, ArrayType(LongType, _))) =>
+      case Seq(p1, p2, lower, bits, Literal(over: ArrayData, ArrayType(ArrayType(LongType, _), _))) =>
         LshFirstShared(p1, p2, lower, intArg("lsh_first_shared", "probeBits", bits),
-          keys.toLongArray().toSeq)
+          (0 until over.numElements()).map(t => over.getArray(t).toLongArray().toSeq))
       case args => throw new IllegalArgumentException(
-        s"lsh_first_shared: overCapKeys must be a bigint array literal, got ${args(4)}")
+        s"lsh_first_shared: overCap must be an array<array<bigint>> literal, got ${args(4)}")
     },
     fn("lsh_probes", classOf[LshProbes], 4,
         "(embedding, nTables, planesPerTable, probeBits)")(

@@ -47,7 +47,10 @@ object DumpPlans {
       "skew_salted_agg",
       // round 5: shuffle-free IVF cell assignment (per-row argmax over the
       // inline centroid literal — no hashpartitioning(vec_id) anywhere)
-      "sim_ann_ivf")
+      "sim_ann_ivf",
+      // the banded self-join's callers that have no exact route: one
+      // (tbl, bucket) join whose condition holds lsh_first_shared
+      "sim_ann_lsh", "dedup_simhash_pairs")
     (graft.Bench.headline ++ extras).foreach(name =>
       section(name, graft.SparkEntry.queries(name)(spark, dir)))
     // dedup_minhash_lsh truncates lineage at two lazy localCheckpoints (the

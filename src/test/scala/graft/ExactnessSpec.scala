@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Knobs
-import graft.functions.{DedupOps, SimilarityOps, TextOps}
+import graft.functions.{Banding, DedupOps, SimilarityOps, TextOps}
 
 /** The `graft.sim.exact` knob: exact all-pairs baselines vs the banded-LSH
   * candidate path must produce IDENTICAL rows on the test data (band shapes
@@ -270,8 +270,8 @@ class ExactnessSpec extends SparkSpec {
 
   test("embedding bucket cap: capped candidates ≡ the pairs-sharing-a-small-bucket reference") {
     // independent reference, mirroring the minhash pin: recompute each
-    // vector's (table, bucket) memberships straight from the lsh_buckets
-    // kernel, group on the driver, and enumerate pairs — a pair survives
+    // vector's (table, bucket) memberships straight from the lsh_probes
+    // kernel's base buckets, group on the driver, and enumerate pairs — a pair survives
     // the cap iff SOME bucket both vectors share holds ≤ cap vectors.
     // Prefilter off so the reference is purely banding + cap semantics;
     // the dense-dup corpus plants a 200-vector hot cluster (every table
@@ -290,7 +290,7 @@ class ExactnessSpec extends SparkSpec {
     val capped = pairsOf(cap)
     val membership = graft.core.Tables.embeddings(spark, dir)
       .select($"vec_id", posexplode(
-        expr(s"lsh_buckets(embedding, $tables, $planes)")).as(Seq("tbl", "bucket")))
+        expr(s"lsh_probes(embedding, $tables, $planes, 0)")).as(Seq("tbl", "bucket")))
       .select($"vec_id", concat_ws(":", $"tbl", $"bucket").as("bk"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
       .groupBy(_._2).view.mapValues(_.map(_._1).sorted.toSeq).toMap
@@ -359,7 +359,7 @@ class ExactnessSpec extends SparkSpec {
     val skewed = bucketFrame((0 until 90).map(b => (b, 1000L)) ++
       (90 until 100).map(b => (b, 1L)))
     val e = intercept[IllegalArgumentException] {
-      DedupOps.capBuckets(skewed, Seq("bucket"), 10, cosdedupCap)._1
+      Banding.capBuckets(skewed, Seq("bucket"), 10, cosdedupCap)._1
     }
     assert(e.getMessage.contains("silently"), e.getMessage)
     // 2 of 100 buckets hold 5000 rows (over cap), 98 hold 1 row: over
@@ -367,7 +367,7 @@ class ExactnessSpec extends SparkSpec {
     // hot-cluster signature MUST run, keeping exactly the 98 small rows
     val hot = bucketFrame((0 until 2).map(b => (b, 5000L)) ++
       (2 until 100).map(b => (b + 1000, 1L)))
-    val kept = DedupOps.capBuckets(hot, Seq("bucket"), 10,
+    val kept = Banding.capBuckets(hot, Seq("bucket"), 10,
       cosdedupCap)._1
     assert(kept.count() == 98L, "hot-cluster corpus must keep its small buckets")
     // MULTI-cluster hot corpus (round-16 review, 2nd pass): 13 of 100
@@ -378,7 +378,7 @@ class ExactnessSpec extends SparkSpec {
     // hatch keeps it running with the 87 background rows intact.
     val multiHot = bucketFrame((0 until 13).map(b => (b, 1000L)) ++
       (13 until 100).map(b => (b + 1000, 1L)))
-    val keptMulti = DedupOps.capBuckets(multiHot, Seq("bucket"), 10,
+    val keptMulti = Banding.capBuckets(multiHot, Seq("bucket"), 10,
       cosdedupCap)._1
     assert(keptMulti.count() == 87L,
       "multi-cluster hot corpus must keep its background buckets")
@@ -395,8 +395,8 @@ class ExactnessSpec extends SparkSpec {
     // the hatch-armed shape must not pass SILENTLY either: the warn tier
     // (≥50% of mass dropped) covers it — asserted, not just claimed
     // (r17 review #2)
-    withDedupWarnCapture { captured =>
-      assert(DedupOps.capBuckets(fortyOver, Seq("bucket"), 10,
+    withBandingWarnCapture { captured =>
+      assert(Banding.capBuckets(fortyOver, Seq("bucket"), 10,
         cosdedupCap)._1.count() == 60L,
         "40%-of-buckets-over with 99%+ mass gone is the documented " +
           "many-cluster tradeoff: it must run, keeping the background")
@@ -407,28 +407,28 @@ class ExactnessSpec extends SparkSpec {
     }
     val halfOver = bucketFrame((0 until 50).map(b => (b, 1000L)) ++
       (50 until 100).map(b => (b + 1000, 1L)))
-    assert(DedupOps.capBuckets(halfOver, Seq("bucket"), 10,
+    assert(Banding.capBuckets(halfOver, Seq("bucket"), 10,
       cosdedupCap)._1.count() == 50L,
       "exactly half the buckets over is not a strict majority: must run")
     val majorityOver = bucketFrame((0 until 51).map(b => (b, 1000L)) ++
       (51 until 100).map(b => (b + 1000, 1L)))
     val eMaj = intercept[IllegalArgumentException] {
-      DedupOps.capBuckets(majorityOver, Seq("bucket"), 10,
+      Banding.capBuckets(majorityOver, Seq("bucket"), 10,
         cosdedupCap)._1
     }
     assert(eMaj.getMessage.contains("silently"), eMaj.getMessage)
   }
 
-  /** Capture DedupOps WARN-level log messages for the duration of `body`
+  /** Capture Banding WARN-level log messages for the duration of `body`
     * via a log4j2 appender (the buffer is live — bodies may snapshot it
     * mid-run to fence a silent control phase from a must-warn phase). */
-  private def withDedupWarnCapture[A](
+  private def withBandingWarnCapture[A](
       body: scala.collection.mutable.ArrayBuffer[String] => A): A = {
     import org.apache.logging.log4j.Level
     import org.apache.logging.log4j.core.LoggerContext
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-    val loggerName = "graft.functions.DedupOps"
+    val loggerName = "graft.functions.Banding"
     val captured = new scala.collection.mutable.ArrayBuffer[String]
     val appender = new AbstractAppender(
         "graft-warn-capture", null, null, true, Property.EMPTY_ARRAY) {
@@ -467,7 +467,7 @@ class ExactnessSpec extends SparkSpec {
     // fire with the shape arithmetic, from the stats row already in hand.
     val dir = tools.Corpora.generateDenseDupVectors(spark, 20000, hotFrac = 0.9)
     withConf(cosdedupCap.key -> "512", Knobs.CosDedup.bands.key -> "8x10")(
-        withDedupWarnCapture { captured =>
+        withBandingWarnCapture { captured =>
       val kept = SimilarityOps.lshCandidateIds(spark, dir, Knobs.CosDedup(spark),
         prefilterTheta = Some(DedupOps.CosDedupThreshold)).count()
       assert(kept > 0, "sub-fatal mass loss must not empty the candidate set")

@@ -78,7 +78,7 @@ class FanoutSpec extends SparkSpec {
     GraftFunctions.install(spark)
     val vecs = Tables.embeddings(spark, sfDir)
       .filter($"embedding".isNotNull)
-      .select($"vec_id", expr("lsh_buckets(embedding, 16, 2)"),
+      .select($"vec_id", expr("lsh_probes(embedding, 16, 2, 0)"),
         expr("int8_enc(embedding)"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1), r.getAs[Array[Byte]](2)))

@@ -5,11 +5,13 @@ import graft.expr.Hyperplanes
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
-/** The `lsh_probes` multi-probe kernel: slot-0 replay of `lsh_buckets`,
-  * Hamming-1 probe slots on the lowest-|dot| planes, interpreted/codegen
-  * parity, and the candidate-superset property the banded routes rely on;
-  * and `lsh_first_shared`, the self-join's one-row-per-pair test, with the
-  * rule it enforces: every embedding LSH route emits each pair once.
+/** The `lsh_probes` multi-probe kernel: slot-0 replay of the composed
+  * sign-of-`dot_product` bucketing, Hamming-1 probe slots on the
+  * lowest-|dot| planes, interpreted/codegen parity, and the
+  * candidate-superset property the banded routes rely on; and
+  * `lsh_first_shared`, the banded self-join's one-row-per-pair test on int
+  * and bigint keys, with the rule it enforces: every embedding LSH route
+  * emits each pair once.
   */
 class LshProbesSpec extends SparkSpec {
   import spark.implicits._
@@ -50,14 +52,27 @@ class LshProbesSpec extends SparkSpec {
       .select(expr("lsh_first_shared(a, b)")).head().isNullAt(0))
   }
 
-  test("lsh_first_shared: canonical discovery of probed and capped pairs") {
+  /** `lsh_first_shared(a, b, lower, bits, over)` through both eval paths:
+    * (interpreted, generated). */
+  private def firstShared[T: scala.reflect.runtime.universe.TypeTag](a: Seq[T], b: Seq[T],
+      lower: Boolean, bits: Int, over: Seq[Seq[Long]]): (Any, Int) = {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import graft.expr.LshFirstShared
     GraftFunctions.install(spark)
-    val key = LshFirstShared.key _
+    val interpreted = graft.expr.LshFirstShared(Literal.create(a), Literal.create(b),
+      Literal(lower), bits, over).eval()
+    // the repartition keeps the projection out of local-relation folding
+    val generated = Seq((a, b, lower)).toDF("a", "b", "lower").repartition(1)
+      .select(call_function("lsh_first_shared", $"a", $"b", $"lower", lit(bits),
+        typedLit(over)))
+      .as[Int].head()
+    (interpreted, generated)
+  }
+
+  test("lsh_first_shared: canonical discovery of probed and capped pairs") {
     // (p1, p2, p1IsLower, probeBits, overCap, want): the discovering slot's
-    // position in p1, or -2 - its position in p2; -1 for none
-    val cases = Seq(
+    // position in p1, or -2 - its position in p2; -1 for none. overCap(t)
+    // holds table t's dropped buckets.
+    val cases = Seq[(Seq[Int], Seq[Int], Boolean, Int, Seq[Seq[Long]], Int)](
       // base–base collision: the lower id's slot
       (Seq(4, 5, 6), Seq(4, 0, 2), true, 2, Nil, 0),
       (Seq(4, 5, 6), Seq(4, 0, 2), false, 2, Nil, -2),
@@ -73,22 +88,54 @@ class LshProbesSpec extends SparkSpec {
       (Seq(1, 2, 3, 7, 6, 5), Seq(4, 5, 6, 0, 7, 9), true, 2, Nil, -6),
       (Seq(1, 2, 3), Seq(4, 5, 6), true, 2, Nil, -1),
       // capped: an over-cap first shared bucket passes to the next table
-      (Seq(4, 2), Seq(4, 2), true, 0, Seq(key(0, 4)), 1),
-      (Seq(4, 2), Seq(4, 2), true, 0, Seq(key(1, 2), key(0, 4)), -1),
+      (Seq(4, 2), Seq(4, 2), true, 0, Seq(Seq(4L)), 1),
+      (Seq(4, 2), Seq(4, 2), true, 0, Seq(Seq(4L), Seq(2L)), -1),
       // capped and probed: p1's flip meets an over-cap base, p2's does not
-      (Seq(1, 3, 9), Seq(3, 1, 8), true, 2, Seq(key(0, 3)), -3))
+      (Seq(1, 3, 9), Seq(3, 1, 8), true, 2, Seq(Seq(3L)), -3))
     cases.foreach { case (a, b, lower, bits, over, want) =>
-      val interpreted = LshFirstShared(Literal.create(a), Literal.create(b),
-        Literal(lower), bits, over).eval()
-      // the repartition keeps the projection out of local-relation folding
-      val generated = Seq((a, b, lower)).toDF("a", "b", "lower").repartition(1)
-        .select(call_function("lsh_first_shared", $"a", $"b", $"lower", lit(bits),
-          typedLit(over)))
-        .as[Int].head()
+      val (interpreted, generated) = firstShared(a, b, lower, bits, over)
       assert(interpreted == want && generated == want,
         s"$a $b lower=$lower bits=$bits over=$over: interpreted $interpreted, " +
           s"generated $generated, want $want")
     }
+  }
+
+  test("lsh_first_shared on bigint keys: all 64 bits count, caps are per table, interpreted ≡ codegen") {
+    val hi = 1L << 32
+    val cases = Seq[(Seq[Long], Seq[Long], Boolean, Int, Seq[Seq[Long]], Int)](
+      // equal in the low 32 bits, not the high 32: no agreement there
+      (Seq(hi | 5L, 7L), Seq(5L, 7L), true, 0, Nil, 1),
+      (Seq(hi | 5L), Seq(5L), true, 0, Nil, -1),
+      (Seq(-1L, 9L), Seq(0xFFFFFFFFL, 9L), true, 0, Nil, 1),
+      // an over-cap bucket is skipped in its own table only
+      (Seq(10L, 10L), Seq(10L, 10L), true, 0, Seq(Seq(10L)), 1),
+      (Seq(10L, 10L), Seq(10L, 10L), true, 0, Seq(Nil, Seq(10L)), 0),
+      (Seq(10L, 10L), Seq(10L, 10L), true, 0, Seq(Seq(10L), Seq(10L)), -1),
+      // a table's over-cap buckets need not arrive sorted; extremes order
+      (Seq(-3L, Long.MaxValue), Seq(-3L, Long.MaxValue), true, 0,
+        Seq(Seq(Long.MaxValue, Long.MinValue, -3L)), 1),
+      // a bucket equal to another table's over-cap value stays open
+      (Seq(hi, 1L), Seq(hi, 1L), true, 0, Seq(Seq(hi + 1), Seq(hi)), 0),
+      // probed: the lower id's flip, then the higher id's
+      (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), true, 2, Nil, 1),
+      (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), false, 2, Nil, -3),
+      (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), true, 2, Seq(Seq(hi | 3L)), -3))
+    cases.foreach { case (a, b, lower, bits, over, want) =>
+      val (interpreted, generated) = firstShared(a, b, lower, bits, over)
+      assert(interpreted == want && generated == want,
+        s"$a $b lower=$lower bits=$bits over=$over: interpreted $interpreted, " +
+          s"generated $generated, want $want")
+    }
+    // the two-argument form reads bigint keys too
+    assert(Seq((Seq(hi | 2L, 4L), Seq(2L, 4L))).toDF("a", "b").repartition(1)
+      .select(expr("lsh_first_shared(a, b)")).as[Int].head() == 1)
+    // keys of two types, or of a type that is no bucket, fail at analysis
+    val mixed = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1L), Seq(1))).toDF("a", "b").select(expr("lsh_first_shared(a, b)")))
+    assert(mixed.getMessage.contains("lsh_first_shared"), mixed)
+    val strings = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq("x"), Seq("x"))).toDF("a", "b").select(expr("lsh_first_shared(a, b)")))
+    assert(strings.getMessage.contains("array<int> or array<bigint>"), strings)
   }
 
   test("probed candidates ≡ base collisions plus flips into the other's base") {
@@ -161,10 +208,21 @@ class LshProbesSpec extends SparkSpec {
       s"$rows rows into the partial argmax for $ordered ordered pairs")
   }
 
-  test("slot 0 of every table replays lsh_buckets bit-for-bit") {
+  test("slot 0 of every table replays the composed sign-of-dot_product bucketing") {
+    // the independent bucketing the oracle replays: bit p of table t is
+    // set iff dot_product(e, plane[t*planes+p]) > 0
+    def composed(tables: Int, planes: Int, v: Seq[Float]): Seq[Int] = {
+      GraftFunctions.install(spark)
+      val buckets = (0 until tables).map(t => (0 until planes).map { p =>
+        when(call_function("dot_product", $"e",
+          typedLit(Hyperplanes.planes(t * planes + p).toSeq)) > 0, lit(1 << p)).otherwise(0)
+      }.reduce(_ + _))
+      Seq(Tuple1(v)).toDF("e").select(array(buckets: _*)).collect().head.getSeq[Int](0)
+    }
     (1 to 5).foreach { _ =>
       val v = vec()
-      val base = kernel("lsh_buckets(e, 8, 10)", v)
+      val base = composed(8, 10, v)
+      assert(kernel("lsh_probes(e, 8, 10, 0)", v) == base)
       val probed = kernel("lsh_probes(e, 8, 10, 3)", v)
       assert(probed.size == 8 * 4)
       assert((0 until 8).map(t => probed(t * 4)) == base)

@@ -204,6 +204,40 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("every banded producer runs one self-join, kept by lsh_first_shared alone") {
+    // sim_ann_lsh; banded sim_pairs_threshold, dedup_embedding_cosine and
+    // sim_nearest_same_label; the MinHash candidate subtree; and
+    // dedup_simhash_pairs all band through the one self-join: exactly one
+    // join whose condition holds lsh_first_shared, no CASE WHEN band chain
+    // in any join condition, and no aggregate keyed on the id pair
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val producers = withConf(Knobs.SimExact.key -> "false") {
+      Seq("sim_ann_lsh", "sim_pairs_threshold", "dedup_embedding_cosine",
+          "sim_nearest_same_label", "dedup_simhash_pairs")
+        .map(n => n -> graft.SparkEntry.queries(n)(spark, sfDir)) :+
+        ("dedup_minhash_lsh candidates" ->
+          graft.functions.DedupOps.minhashCandidatesPlan(spark, sfDir))
+    }
+    for ((name, df) <- producers) {
+      // the planned tree: on a small corpus AQE may prune an empty branch
+      val plan = df.queryExecution.executedPlan
+      val joins = Plans.collect(plan) { case j: BaseJoinExec => j }
+      val banded = joins.filter(_.condition.exists(_.toString.contains("lsh_first_shared")))
+      assert(banded.size == 1, s"$name: ${banded.size} lsh_first_shared joins\n$plan")
+      val chains = joins.flatMap(_.condition).filter(_.exists(_.isInstanceOf[CaseWhen]))
+      assert(chains.isEmpty, s"$name: CASE WHEN in a join condition: $chains")
+      val pairAggs = Plans.collect(plan) {
+        case a: BaseAggregateExec if Set(Seq("v1", "v2"), Seq("d1", "d2"))
+            .contains(a.groupingExpressions.map(_.name)) => a
+      }
+      assert(pairAggs.isEmpty, s"$name: $pairAggs")
+    }
+  }
+
   test("banded dedup_embedding_cosine scores each pair at one cosine_sim, with no union below it") {
     // the pair producer emits each unordered pair once; both orientations
     // come from one explode above the verify, never from a union of the
@@ -268,9 +302,11 @@ class PlanSpec extends SparkSpec {
     val kernels = Seq(
       "cosine_sim" -> expr("cosine_sim(embedding, embedding)"),
       "dot_product" -> expr("dot_product(embedding, embedding)"),
-      "lsh_buckets" -> expr("lsh_buckets(embedding, 4, 4)"),
-      "lsh_first_shared" ->
-        expr("lsh_first_shared(lsh_buckets(embedding, 4, 4), lsh_buckets(embedding, 2, 8))"),
+      "lsh_first_shared" -> expr(
+        "lsh_first_shared(lsh_probes(embedding, 4, 4, 0), lsh_probes(embedding, 2, 8, 0))"),
+      // the bigint-key form, as the MinHash band hashes reach it
+      "lsh_first_shared" -> expr(
+        "lsh_first_shared(array(xxhash64(vec_id), vec_id), array(vec_id, xxhash64(vec_id)))"),
       "lsh_probes" -> expr("lsh_probes(embedding, 4, 4, 2)"),
       "int8_enc" -> expr("int8_enc(embedding)"),
       "int8_est" -> expr("int8_est(int8_enc(embedding), int8_enc(embedding))"),
@@ -408,7 +444,7 @@ class PlanSpec extends SparkSpec {
     // the embedding-side twin of the minhash one-pass pin below: with
     // graft.sim.bucketcap set, every consumer of the bucketed stream
     // (sizes agg, cap semi-join, both self-join legs) must read the ONE
-    // materialized (tbl,bucket,id,blob) stream — no scan+lsh_buckets
+    // materialized (tbl,bucket,id,blob) stream — no scan+lsh_probes
     // subtree may be duplicated into the plan
     val plan = planOf(graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir,
       Knobs.Banding(Knobs.CosDedup, 8, 4, bucketCap = 64), prefilterTheta = Some(0.9)))
