@@ -39,24 +39,24 @@ import org.apache.spark.sql.{Column, DataFrame}
   * results, e.g. approx_percentile).
   *
   * It also applies to an EXCHANGE whose work is not proportional to its
-  * bytes: the banded self-join ([[graft.functions.Banding.selfJoin]]),
-  * keyed on (tbl, bucket), behind every embedding, MinHash and SimHash
+  * bytes: the banded pairing ([[graft.functions.Banding.selfJoin]]),
+  * clustered on (tbl, bucket), behind every embedding, MinHash and SimHash
   * candidate route. Its exchange is small (under 1 MB for 2,000 vectors),
   * so AQE merges it under its 1 MB minimum partition size into ONE task,
-  * yet that task joins Σ bucket² rows (about 9 M at the 16×2 shape on
-  * 1,500 vectors). Each side repartitioned here on the join keys, the
-  * repartition IS the join's exchange (no stage added; the two sides'
-  * repartitions are one reused exchange) and AQE cannot merge a
-  * caller-sized partitioning, so the join runs one task per core
-  * (SCALE.md "The banded self-join runs on every core"). That join
-  * keeps each pair once (`lsh_first_shared`) instead of running a pair
-  * distinct per task: four partial-distinct hash maps, one 64 MB Tungsten
-  * page each, raised the benchmark's peak heap 225 → 609 MB. The policy
-  * is the join's, not a family's: every route that bands rows gets the
-  * same sized exchange, whether its buckets are Σ bucket²-heavy (the
-  * recall-heavy embedding shapes) or light (MinHash and SimHash at the
-  * gate's shapes, where it adds no job or stage and their sf0.1 walls stay
-  * within this box's spread; SCALE.md "One banding layer").
+  * yet that task walks Σ bucket² pairs (about 4.8 M at the 16×2 shape on
+  * 1,500 vectors). Repartitioned here on the bucket keys, the repartition
+  * IS the exchange the pairing ([[graft.plans.BandPairs]]) requires, so
+  * no stage is added, and AQE cannot merge a caller-sized partitioning:
+  * the pairing runs one task per core (SCALE.md "The banded self-join
+  * runs on every core"). The pairing keeps each pair once at its
+  * canonical discovery instead of running a pair distinct per task: four
+  * partial-distinct hash maps, one 64 MB Tungsten page each, raised the
+  * benchmark's peak heap 225 → 609 MB. The policy is the pairing's, not a
+  * family's: every route that bands rows gets the same sized exchange,
+  * whether its buckets are Σ bucket²-heavy (the recall-heavy embedding
+  * shapes) or light (MinHash and SimHash at the gate's shapes, where it
+  * adds no job or stage and their sf0.1 walls stay within this box's
+  * spread; SCALE.md "One banding layer").
   *
   * Conservative failure posture: inputs whose size cannot be read cheaply
   * from a local filesystem (object stores, in-memory test frames) pass

@@ -1,10 +1,9 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** The seeded Rademacher (±1) hyperplane family shared by every LSH
   * consumer — held as primitive `float[][]` so kernels index it directly.
@@ -144,78 +143,40 @@ object LshProbes {
   }
 }
 
-/** lsh_first_shared(p1, p2[, p1IsLower, probeBits, overCap]) → the
-  * canonical discovery of a pair in the banded self-join, or -1 when the
-  * pair has none. The one canonical-pair rule of every banded route.
+/** The canonical discovery of a pair in the banded self-join, or -1 when
+  * the pair has none: the one canonical-pair rule of every banded route,
+  * run per pair by [[graft.plans.BandPairs]].
   *
-  * `p1` and `p2` are two rows' band-key arrays, both `array<int>` or both
-  * `array<bigint>` (the element type is read from the inputs at plan
-  * time): `lsh_probes(emb, t, p, probeBits)` arrays on the embedding
-  * routes, MinHash band hashes, SimHash band values. Stride
-  * `1 + probeBits`, slot 0 of each table the base bucket. The self-join
-  * pairs every slot of one row with the base slot of the other, so it
-  * finds a pair once per table where the base buckets collide and once per
-  * flip slot that lands in the other row's base bucket. The canonical
-  * discovery is the first of those in this order:
+  * `x` and `y` are two rows' band-key arrays, both `array<int>` or both
+  * `array<bigint>` (`wide` reads them as bigints): `lsh_probes(emb, t, p,
+  * probeBits)` arrays on the embedding routes, MinHash band hashes, SimHash
+  * band values. Stride `1 + probeBits`, slot 0 of each table the base
+  * bucket. The pairing meets every slot of one row with the base slot of
+  * the other, so it finds a pair once per table where the base buckets
+  * collide and once per flip slot that lands in the other row's base
+  * bucket. The canonical discovery is the first of those in this order:
   *  - the lowest table;
   *  - within it, the base–base collision, then a flip from the lower id,
-  *    then a flip from the higher id (`p1IsLower` says which one `p1` is);
+  *    then a flip from the higher id (`xIsLower` says which one `x` is);
   *  - skipping any discovery whose base bucket — the bucket the two rows
-  *    meet in — a bucket cap dropped from the join: `overCap(t)` holds
-  *    table `t`'s dropped buckets (widened to bigint), one array per table
-  *    up to the last table with any.
+  *    meet in — a bucket cap dropped: `overCap(t)` holds table `t`'s
+  *    dropped buckets (widened to bigint, sorted), one array per table up
+  *    to the last table with any.
   *
-  * The result names the discovering slot: its position `s` in `p1` when
-  * the slot is `p1`'s, `-2 - s` when it is `p2`'s. A base–base collision
-  * is the lower id's slot. A join row whose `v1` slot position equals the
-  * result is the one row the pair keeps, so every pair leaves the join
-  * once and no pair distinct (a hash map per task) is needed. The two-
-  * argument form is `p1IsLower = true, probeBits = 0`, no cap: the first
-  * table at which two key arrays agree. The case class names the three
-  * column arguments `first`, `second` and `third`.
-  *
-  * Deliberately not null-intolerant: the optimizer would otherwise infer
-  * IsNotNull on the carried arrays and re-run the bucketing kernel in a
-  * Filter below the Project that computes them (the best_cell lesson).
-  * A null input still yields null. `overCap` is a Seq (structural
-  * equality); the kernel searches sorted primitive copies of it.
+  * The result names the discovering slot: its position `s` in `x` when the
+  * slot is `x`'s, `-2 - s` when it is `y`'s. A base–base collision is the
+  * lower id's slot. A pair whose side-one slot position equals the result
+  * is the one the pairing keeps, so every pair leaves once and no pair
+  * distinct (a hash map per task) is needed. With `xIsLower = true,
+  * probeBits = 0` and no cap it is the first table at which the two key
+  * arrays agree.
   */
-case class LshFirstShared(first: Expression, second: Expression,
-    third: Expression = Literal(true), probeBits: Int = 0, overCap: Seq[Seq[Long]] = Nil)
-    extends TernaryExpression with ExpectsInputTypes {
-  require(probeBits >= 0, s"lsh_first_shared: probeBits $probeBits must be >= 0")
-  @transient private lazy val overArr: Array[Array[Long]] = overCap.map(_.toArray.sorted).toArray
-  private def wide: Boolean = first.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def prettyName: String = "lsh_first_shared"
-  override def inputTypes = Seq(first.dataType, first.dataType, BooleanType)
-  override def checkInputDataTypes(): TypeCheckResult = first.dataType match {
-    case ArrayType(IntegerType | LongType, _) => super.checkInputDataTypes()
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lsh_first_shared: keys must be array<int> or array<bigint>, got ${other.simpleString}")
-  }
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any, lower: Any): Any =
-    LshFirstShared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      lower.asInstanceOf[Boolean], probeBits, overArr, wide)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val overRef = ctx.addReferenceObj("lshOverCap", overArr, "long[][]")
-    nullSafeCodeGen(ctx, ev, (x, y, lower) =>
-      s"${ev.value} = graft.expr.LshFirstShared.compute($x, $y, $lower, $probeBits, $overRef, $wide);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object LshFirstShared {
-  /** The body of both eval paths; `wide` reads the keys as bigints. */
+  /** A bucket cap's dropped buckets as [[compute]] reads them: one sorted
+    * primitive array per table. */
+  def overCapArrays(overCap: Seq[Seq[Long]]): Array[Array[Long]] =
+    overCap.map(_.toArray.sorted).toArray
+
   def compute(x: ArrayData, y: ArrayData, xIsLower: Boolean, probeBits: Int,
       overCap: Array[Array[Long]], wide: Boolean): Int = {
     val stride = 1 + probeBits

@@ -226,7 +226,7 @@ object BandTuner {
       val (mass, cap) =
         if (s < 2) (0.0, 0)
         else {
-          val sizes = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, 0), 0)
+          val sizes = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, 0).col, 0)
             .groupBy($"tbl", $"bucket").agg(count(lit(1)).as("bc"))
             .localCheckpoint(true)
           val m =
@@ -242,7 +242,7 @@ object BandTuner {
               // contributes ½ instead of 1, which the per-table union bound's
               // overcount offsets; the advisor's margin-based recommendation
               // absorbs the residual (validated against measurement, SCALE.md).
-              val probe = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, bits), bits)
+              val probe = Banding.slots(sample, Nil, Banding.signLsh(nTables, planes, bits).col, bits)
                 .groupBy($"tbl", $"bucket").agg(count(lit(1)).as("pc"))
               val directed = probe.join(sizes, Seq("tbl", "bucket"))
                 .agg(coalesce(sum($"pc" * $"bc"), lit(0L)))
@@ -429,7 +429,7 @@ object BandTuner {
           // checkpointed signature pass feeds banding AND the cv agg
           val sigs = DedupOps.minhashSigsOf(sample, bands * rows, withCard = true)
             .localCheckpoint(true)
-          val banded = Banding.slots(sigs, Seq($"n_sh"), Banding.minhash(bands, rows), 0)
+          val banded = Banding.slots(sigs, Seq($"n_sh"), Banding.minhash(bands, rows).col, 0)
           // one (band bucket → size) aggregation feeds the mass estimate AND
           // the bucket-cap suggestion's size distribution
           val sizes = banded.groupBy($"tbl", $"bucket").agg(count(lit(1)).as("c"))

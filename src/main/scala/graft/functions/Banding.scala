@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.core.{Fanout, Knobs}
+import graft.plans.BandPairs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * per table); rows meet only where a band's keys agree, and the one
   * [[selfJoin]] here builds that meeting for all three. A route differs
   * from another only in its key expression ([[signLsh]], [[minhash]],
-  * [[simhash]]), what it carries through the join and its own pair test;
-  * the join shape, the canonical-pair rule, the bucket cap, the hint and
+  * [[simhash]]), what it carries through the pairing and its own pair
+  * test; the pairing operator, the canonical-pair rule, the bucket cap and
   * the fan-out are decided once, here. [[BandTuner]] prices a shape by
   * exploding the same key expressions ([[slots]]), so the priced bucketing
   * is the deployed bucketing.
@@ -22,28 +23,32 @@ private[graft] object Banding {
   // ExactnessSpec warn-tier appender can address this logger exactly
   private val log = org.slf4j.LoggerFactory.getLogger("graft.functions.Banding")
 
+  /** A family's band-key expression: an `array<int>` or `array<bigint>`
+    * of `width` keys per row. */
+  final case class Keys(col: Column, width: Int)
+
   /** Sign-LSH keys of `embedding`: `tables` tables of `planes` hyperplane
     * sign bits, each followed by `probeBits` probe buckets
     * ([[graft.expr.LshProbes]]); `array<int>`, stride `1 + probeBits`.
     */
-  def signLsh(tables: Int, planes: Int, probeBits: Int): Column =
-    expr(s"lsh_probes(embedding, $tables, $planes, $probeBits)")
+  def signLsh(tables: Int, planes: Int, probeBits: Int): Keys =
+    Keys(expr(s"lsh_probes(embedding, $tables, $planes, $probeBits)"), tables * (1 + probeBits))
 
   /** MinHash band keys over the `mh_*` signature columns: band `b`'s key is
     * the xxhash64 of its `rows` consecutive min-hashes. `array<bigint>`,
     * never truncated: at 100 TB, 32-bit band keys would collide by the
     * birthday bound and flood the verify with spurious candidates.
     */
-  def minhash(bands: Int, rows: Int): Column =
-    array((0 until bands).map(b =>
-      xxhash64((0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)): _*)
+  def minhash(bands: Int, rows: Int): Keys =
+    Keys(array((0 until bands).map(b =>
+      xxhash64((0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)): _*), bands)
 
   /** SimHash band keys of the 64-bit `sig`: its first `bands` 16-bit
     * slices, low slice first, as `array<int>`.
     */
-  def simhash(bands: Int): Column =
-    array((0 until bands).map(t =>
-      shiftright(col("sig"), 16 * t).bitwiseAND(lit(0xFFFFL)).cast("int")): _*)
+  def simhash(bands: Int): Keys =
+    Keys(array((0 until bands).map(t =>
+      shiftright(col("sig"), 16 * t).bitwiseAND(lit(0xFFFFL)).cast("int")): _*), bands)
 
   /** One row per band key of `rows`: the `keep` columns plus `pos` (the
     * key's position), `bucket` (the key) and `tbl` (its table: the
@@ -52,99 +57,78 @@ private[graft] object Banding {
   def slots(rows: DataFrame, keep: Seq[Column], keys: Column, probeBits: Int): DataFrame =
     rows.select(keep :+ posexplode(keys).as(Seq("pos", "bucket")): _*)
       // unprobed, a slot IS its table; `pos`, unlike `div`, is non-null,
-      // so a join infers no IsNotNull(tbl) filter into the scan stage
+      // so no IsNotNull(tbl) filter is inferred into the scan stage
       .withColumn("tbl",
         if (probeBits == 0) col("pos") else expr(s"pos div ${1 + probeBits}").cast("int"))
 
   /** The banded self-join: one row per candidate pair of `rows`, at the
     * pair's canonical discovery, carrying the ids as `<as>1` and `<as>2`
-    * (from `id = column -> as`), the `within` columns, each row's key
-    * array as `k1`/`k2`, and each `carry` column twice (suffixed `1` and
-    * `2`). Unprobed, every pair leaves as `<as>1 < <as>2`.
+    * (from `id = column -> as`), the `within` columns and each `carry`
+    * column twice (suffixed `1` and `2`). Unprobed, every pair leaves as
+    * `<as>1 < <as>2`.
     *
     * Each row's key array (`keys`, stride `1 + probeBits`; slot 0 of each
-    * table its base bucket) is computed once, below the explode, as the
-    * carried `pr`, and posexploded into one (tbl, bucket) row per slot. The
-    * join is (every slot of one row) ⋈ (the base slot of the other) on
-    * (tbl, bucket, within...), so a pair meets once per table where the
-    * base buckets collide and once per probe slot that lands in the other
-    * row's base bucket. The one de-duplication rule: a row is kept only at
-    * the pair's canonical discovery (`lsh_first_shared` over both rows'
-    * arrays — first table, then base–base, then a probe from the lower
-    * id, then one from the higher), so every pair leaves the join once and
-    * no pair distinct (a 64 MB Tungsten page per task) runs. A base–base
-    * row is canonical only as id1 < id2; unprobed, every row is base–base,
-    * so the cheaper `<` runs first and `lsh_first_shared` is passed its
-    * result as `true` rather than testing it again. The generator
-    * evaluates `keys` again instead of exploding the carried `pr`: an
-    * exploded column makes the optimizer infer size/IsNotNull filters on
-    * it, pushed below the Project as two more key computations per row
-    * where the generator's own is one.
+    * table its base bucket) is computed once, as the carried `pr`, and
+    * posexploded into one (tbl, bucket) slot row per key. The generator
+    * reads `pr` element by element: exploding the bare column would let
+    * the optimizer infer size and IsNotNull filters on it, pushed below
+    * the Project as further key computations per row.
+    *
+    * The slot rows are clustered on (tbl, bucket, within...) and paired by
+    * [[graft.plans.BandPairs]], which groups each partition's slot rows
+    * by bucket and walks each bucket's pairs once: every slot of one row
+    * against the base slot of the other, so a pair meets once per table
+    * where the base buckets collide and once per probe slot that lands in
+    * the other row's base bucket. The one de-duplication rule keeps a pair
+    * only at its canonical discovery ([[graft.expr.LshFirstShared]] over
+    * both rows' arrays — first table, then base–base, then a probe from
+    * the lower id, then one from the higher), so every pair leaves once
+    * and no pair distinct (a 64 MB Tungsten page per task) runs. `test`
+    * (the int8 prefilter, the MinHash size ratio) runs on the canonical
+    * pairs only, inside the same loop.
     *
     * `cap` is a route's bucket-cap knob and its value: [[capBuckets]]
     * counts base slots per (tbl, bucket), drops every slot row in an
-    * over-cap bucket, and the over-cap buckets ride into
-    * `lsh_first_shared` as one sorted array per table, so a pair whose
-    * first shared bucket was dropped is kept at the next one. `test` (the
-    * int8 prefilter, the MinHash size ratio) joins the `<` and the
-    * canonical test in ONE filter, after them: split over several filters,
-    * the later ones are pushed in ahead of the earlier.
+    * over-cap bucket, and the over-cap buckets reach the canonical rule as
+    * one sorted array per table, so a pair whose first shared bucket was
+    * dropped is kept at the next one.
     *
-    * Each side is hinted shuffle_hash: both are the SAME corpus-sized
-    * relation, so broadcast is never the scale-correct strategy, yet a
-    * session with a generous broadcast threshold broadcast the
-    * blob-carrying embedding side, 5× slower than the shuffle join at 20k
-    * vectors. Each side is also fanned out ([[graft.core.Fanout]]): the
-    * join's work is Σ bucket², not bytes, but AQE sizes the exchange by
-    * bytes and merges a small corpus's into ONE task. At scale, and on a
-    * capped stream's checkpoint (no input files), the side passes through
-    * and AQE's merging and skew split decide. Unprobed, both sides read
-    * one exchange, planned once and reused. The renames stay below it, in
-    * the scan's generated stage: above it they add two generated stages to
-    * the self-join.
+    * The slot rows are fanned out ([[graft.core.Fanout]]): the pairing's
+    * work is Σ bucket², not bytes, but AQE sizes an exchange by bytes and
+    * merges a small corpus's into ONE task. At scale, and on a capped
+    * stream's checkpoint (no input files), the fan-out passes through and
+    * the exchange the pairing's required distribution adds decides, with
+    * AQE's merging. The renames stay below the exchange, in the scan's
+    * generated stage.
     */
-  def selfJoin(rows: DataFrame, id: (String, String), keys: Column, probeBits: Int = 0,
+  def selfJoin(rows: DataFrame, id: (String, String), keys: Keys, probeBits: Int = 0,
       carry: Seq[(String, Column)] = Nil, within: Seq[String] = Nil,
       cap: Option[(Knobs.Cap, Int)] = None, test: Option[Column] = None): DataFrame = {
     require(cap.isEmpty || within.isEmpty, "a bucket cap counts (tbl, bucket) alone")
     val (idCol, as) = id
-    val stride = 1 + probeBits
+    val pr = col("pr")
     // carried columns are materialized BEFORE the posexplode select: listed
     // in the same select, the generator would be extracted underneath them
     // and they would be re-evaluated per generated row (t× per row); as
     // pass-through columns they land in the Generate's requiredChildOutput
-    val ids = col(idCol) +: within.map(col)
     val slotRows = slots(
-      rows.select(col("*") +: carry.map { case (n, c) => c.as(n) } :+ keys.as("pr"): _*),
-      (ids ++ carry.map(c => col(c._1))) :+ col("pr"), keys, probeBits)
+      rows.select(col("*") +: carry.map { case (n, c) => c.as(n) } :+ keys.col.as("pr"): _*),
+      (col(idCol) +: within.map(col)) ++ carry.map(c => col(c._1)) :+ pr,
+      when(pr.isNotNull, array((0 until keys.width).map(pr(_)): _*)), probeBits)
     val joinKeys = Seq("tbl", "bucket") ++ within
-    val isBase = if (probeBits == 0) lit(true) else col("pos") % stride === 0
-    val capped = for ((dial, c) <- cap)
-      yield capBuckets(slotRows, joinKeys, c, dial, counted = isBase)
+    val capped = for ((dial, c) <- cap) yield capBuckets(slotRows, joinKeys, c, dial,
+      counted = if (probeBits == 0) lit(true) else col("pos") % (1 + probeBits) === 0)
     val stream = capped.fold(slotRows)(_._1)
     val overCap = capped.fold(Seq.empty[Seq[Long]]) { case (_, over) =>
       val byTable = over.collect().groupMap(_.getInt(0))(_.getAs[Number](1).longValue)
       (0 until byTable.keys.maxOption.fold(0)(_ + 1)).map(t =>
-        byTable.getOrElse(t, Array.empty[Long]).sorted.toSeq)
+        byTable.getOrElse(t, Array.empty[Long]).toSeq)
     }
-    // only the first side's slot position is read (the canonical test);
-    // unprobed it is the table, so both sides carry the same columns and
-    // share one exchange
-    def side(i: Int, rows: DataFrame, slot: Column*): DataFrame =
-      Fanout.maybeFanout(rows.select((joinKeys.map(col) ++ slot :+
-          col(idCol).as(s"$as$i") :+ col("pr").as(s"k$i")) ++
-          carry.map { case (n, _) => col(n).as(s"$n$i") }: _*),
-        joinKeys.map(col): _*)
-      .hint("shuffle_hash")
-    val (id1, id2) = (col(s"${as}1"), col(s"${as}2"))
-    val (left, right, slot) =
-      if (probeBits == 0) (side(1, stream), side(2, stream), col("tbl"))
-      else (side(1, stream, col("pos").as("pos1")), side(2, stream.filter(isBase)), col("pos1"))
-    // unprobed, the `<` pre-test below has already established id1 < id2
-    val canonical = call_function("lsh_first_shared", col("k1"), col("k2"),
-      if (probeBits == 0) lit(true) else id1 < id2, lit(probeBits), typedLit(overCap)) === slot
-    left.join(right, joinKeys)
-      .filter((Option.when(probeBits == 0)(id1 < id2) ++ Seq(canonical) ++ test).reduce(_ && _))
+    val sides = (idCol -> as) +: carry.map { case (n, _) => n -> n }
+    val input = stream.select(joinKeys.map(col) ++ Seq(col("pos"), pr) ++
+      sides.map { case (c, n) => col(c).as(s"${n}1") }: _*)
+    BandPairs(Fanout.maybeFanout(input, joinKeys.map(col): _*), joinKeys, "pos", "pr",
+      probeBits, overCap, sides.map { case (_, n) => s"${n}1" -> s"${n}2" }, test)
   }
 
   /** The oversized-bucket drop behind every bucket-cap knob `dial`

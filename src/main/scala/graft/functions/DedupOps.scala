@@ -233,22 +233,23 @@ object DedupOps extends QueryPack {
     * collect_set-then-explode²: that form holds every bucket's doc list in
     * one aggregation buffer and expands |bucket|² pairs from a single row,
     * and a degenerate band value (near-empty documents share signatures)
-    * is an unbounded array no executor survives. The join streams the same
-    * pairs, spills, and lets AQE split a hot bucket. It keeps each pair
-    * once, at its first agreeing band (`lsh_first_shared`, the rule every
-    * banded route shares), so no pair distinct runs. With
+    * is an unbounded array no executor survives. The pairing holds one row
+    * per (document, band) instead and walks each bucket's pairs in a loop
+    * (a hot bucket is the bucket cap's job). It keeps each pair once, at
+    * its first agreeing band ([[graft.expr.LshFirstShared]], the rule
+    * every banded route shares), so no pair distinct runs. With
     * `graft.sim.prefilter` on, each doc's distinct-shingle count n_sh (ONE
     * long, from the fused `minhash_sig_card` kernel in the scan) rides the
     * shuffle, and pairs failing the lossless bound
-    * min(n1,n2) ≥ JaccardTheta·max(n1,n2) are rejected inside the join,
-    * before the verify (ExactnessSpec: prefiltered ≡ unfiltered).
+    * min(n1,n2) ≥ JaccardTheta·max(n1,n2) are rejected inside the
+    * pairing, before the verify (ExactnessSpec: prefiltered ≡ unfiltered).
     *
     * With [[Knobs.DedupBucketCap]] > 0 the band stream goes through the
-    * join's bucket cap ([[Banding.capBuckets]]): a band whose bucket the
+    * pairing's bucket cap ([[Banding.capBuckets]]): a band whose bucket the
     * cap dropped does not count as agreeing, so a pair whose first shared
     * bucket was dropped is kept at its next shared one. The cap's lazy
-    * `localCheckpoint` lets its consumers (the sizes aggregation and both
-    * self-join legs) read one materialized stream instead of each
+    * `localCheckpoint` lets its consumers (the sizes aggregation and the
+    * cap's semi-join) read one materialized stream instead of each
     * re-running the scan+signature subtree (PlanSpec pins the single
     * pass). On the very first action AQE may submit the two leaf stages
     * that share the stream concurrently, so a partition can be computed
@@ -417,8 +418,8 @@ object DedupOps extends QueryPack {
     * dedup pipelines used over MapReduce sort buckets. The bands are the
     * keys of the shared banded self-join ([[Banding.selfJoin]],
     * [[Banding.simhash]]), which keeps each pair at its first agreeing
-    * band, so no pair distinct runs; each side carries the signature for
-    * the hamming filter.
+    * band, so no pair distinct runs; each side carries the signature, and
+    * the hamming bound is the pairing's own test.
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -427,11 +428,14 @@ object DedupOps extends QueryPack {
     // band self-join above one scan task — fan-out measured 1.0 -> 0.6-0.7 s
     val sigs = simhashSigsOf(graft.core.Fanout.maybeFanout(
       Tables.documents(spark, dir), col("doc_id")))
+    val hamming = expr("bit_count(s1 ^ s2)")
     Banding.selfJoin(sigs, "doc_id" -> "d", Banding.simhash(SimhashBands),
-        carry = Seq("s" -> $"sig"))
-      .withColumn("hamming", expr("bit_count(s1 ^ s2)"))
-      .filter($"hamming" <= SimhashMaxHamming)
-      .select($"d1", $"d2", $"hamming".cast("int").as("hamming"))
+        carry = Seq("s" -> $"sig"), test = Some(hamming <= SimhashMaxHamming))
+      // the pairs leave through an exchange of their own, so the final
+      // sort's range sampling reads it instead of pairing the bands again
+      .select($"d1", $"d2", $"s1", $"s2")
+      .repartition($"d1", $"d2")
+      .select($"d1", $"d2", hamming.cast("int").as("hamming"))
       .orderBy($"d1", $"d2")
   }
 

@@ -1,30 +1,32 @@
 package graft.plans
 
-import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshFirstShared, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, ShingleSet, SimhashSig}
+import graft.expr.{ArgMaxLong, BestCell, CosineSimilarity, DotProduct, Int8Enc, Int8Est, Int8Keep, LshProbes, MinhashSig, MinhashSigCard, ShingleCard, ShingleSet, SimhashSig}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.types.IntegerType
 
-/** Registers graft's native Catalyst functions and its planner strategy.
+/** Registers graft's native Catalyst functions and its planner strategies
+  * ([[SmallSort]], [[BandPairsStrategy]]).
   *
   * Two entry points:
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config)
-  *    injects both;
+  *    injects them;
   *  - on an existing session (what Verify/Bench, the benchmark and the specs
-  *    use), [[GraftFunctions.install]] adds both. [[graft.core.Tables.load]]
+  *    use), [[GraftFunctions.install]] adds them. [[graft.core.Tables.load]]
   *    calls it, so every query that reads a table has them; only code that
   *    resolves a function before its first load calls it directly.
-  * Both paths add the same [[SmallSort]] object, and `install` skips a
-  * session that already has it. After either, `cosine_sim` / `dot_product`
+  * Both paths add the same strategy objects, and `install` skips a
+  * strategy a session already has. After either, `cosine_sim` / `dot_product`
   * are available in SQL text and via `expr(...)`, fully inside whole-stage
   * codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => SmallSort)
+    GraftFunctions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -35,15 +37,6 @@ object GraftFunctions {
       args => CosineSimilarity(args.head, args(1))),
     fn("dot_product", classOf[DotProduct], 2, "2 arguments")(
       args => DotProduct(args.head, args(1))),
-    fn("lsh_first_shared", classOf[LshFirstShared], 2, "(keys1, keys2) or (keys1, keys2, " +
-        "keys1IsLower, probeBits, overCap-per-table-array<array<bigint>>-literal)", orArity = 5) {
-      case Seq(p1, p2) => LshFirstShared(p1, p2)
-      case Seq(p1, p2, lower, bits, Literal(over: ArrayData, ArrayType(ArrayType(LongType, _), _))) =>
-        LshFirstShared(p1, p2, lower, intArg("lsh_first_shared", "probeBits", bits),
-          (0 until over.numElements()).map(t => over.getArray(t).toLongArray().toSeq))
-      case args => throw new IllegalArgumentException(
-        s"lsh_first_shared: overCap must be an array<array<bigint>> literal, got ${args(4)}")
-    },
     fn("lsh_probes", classOf[LshProbes], 4,
         "(embedding, nTables, planesPerTable, probeBits)")(
       args => LshProbes(args.head, intArg("lsh_probes", "nTables", args(1)),
@@ -141,13 +134,12 @@ object GraftFunctions {
     })
 
   /** The descriptor of SQL function `name` (class `cls`): its builder fails
-    * with "`name` takes `usage`" unless it gets `arity` (or `orArity`)
-    * arguments. */
-  private def fn(name: String, cls: Class[_], arity: Int, usage: String,
-      orArity: Int = -1)(build: Seq[Expression] => Expression) =
+    * with "`name` takes `usage`" unless it gets `arity` arguments. */
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (args: Seq[Expression]) => {
-        require(args.length == arity || args.length == orArity, s"$name takes $usage")
+        require(args.length == arity, s"$name takes $usage")
         build(args)
       })
 
@@ -158,18 +150,21 @@ object GraftFunctions {
       s"$fn: $what must be an integer literal, got $other")
   }
 
-  /** Adds the functions and the [[SmallSort]] strategy to a live session,
-    * skipping whatever it already has. */
+  /** The planner strategies both entry points add. */
+  val strategies: Seq[SparkStrategy] = Seq(SmallSort, BandPairsStrategy)
+
+  /** Adds the functions and the [[strategies]] to a live session, skipping
+    * whatever it already has. */
   def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     descriptors.foreach { case (ident, info, builder) =>
       if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
     }
     val exp = spark.experimental
-    def installed = exp.extraStrategies.contains(SmallSort) ||
-      spark.sessionState.planner.extraPlanningStrategies.contains(SmallSort)
-    if (!installed) exp.synchronized {
-      if (!installed) exp.extraStrategies = exp.extraStrategies :+ SmallSort
+    def missing = strategies.filterNot(s => exp.extraStrategies.contains(s) ||
+      spark.sessionState.planner.extraPlanningStrategies.contains(s))
+    if (missing.nonEmpty) exp.synchronized {
+      exp.extraStrategies = exp.extraStrategies ++ missing
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, StageInfo}
+  SparkListenerStageCompleted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 /** Deterministic listener-bus quiesce, and the one stage listener built on
@@ -66,11 +66,12 @@ object BusDrain {
   }
 
   /** The number of jobs `action` started and every stage that completed
-    * while it ran, in completion order. The bus is drained before the
-    * listener attaches (earlier actions' events stay out) and after
-    * `action` returns (all of its events are in); the drain's own sentinel
-    * job and stage are excluded. */
-  def jobsAndStagesOf(spark: SparkSession)(action: => Unit): (Int, Seq[StageInfo]) = {
+    * while it ran, in completion order; `onTask` sees each of its tasks'
+    * end. The bus is drained before the listener attaches (earlier
+    * actions' events stay out) and after `action` returns (all of its
+    * events are in); the drain's own sentinel job and stage are excluded. */
+  def jobsAndStagesOf(spark: SparkSession, onTask: SparkListenerTaskEnd => Unit = _ => ())(
+      action: => Unit): (Int, Seq[StageInfo]) = {
     drain(spark)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val sentinel = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -82,6 +83,8 @@ object BusDrain {
         else jobs.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (!sentinel.contains(e.stageInfo.stageId)) stages.add(e.stageInfo)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (!sentinel.contains(e.stageId)) onTask(e)
     }
     spark.sparkContext.addSparkListener(listener)
     try { action; drain(spark) }

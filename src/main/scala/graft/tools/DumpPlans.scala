@@ -49,7 +49,7 @@ object DumpPlans {
       // inline centroid literal — no hashpartitioning(vec_id) anywhere)
       "sim_ann_ivf",
       // the banded self-join's callers that have no exact route: one
-      // (tbl, bucket) join whose condition holds lsh_first_shared
+      // BandPairs node pairs each (tbl, bucket) group
       "sim_ann_lsh", "dedup_simhash_pairs")
     (graft.Bench.headline ++ extras).foreach(name =>
       section(name, graft.SparkEntry.queries(name)(spark, dir)))
@@ -64,7 +64,7 @@ object DumpPlans {
     // the banded (deployment) routes, iterated from [[graft.Bench.banded]]
     // so this dump can never drift from the set the bench times. Things to
     // see: int8_enc in the scan projection next to lsh_probes; int8_keep in
-    // the self-join condition, so only survivors reach the pair exchange
+    // the BandPairs condition, so only survivors reach the pair exchange
     // (a repartition of id pairs — no route runs a pair distinct) and the
     // float verify re-joins (threshold routes); one verify per pair on
     // dedup_embedding_cosine, with both orientations exploded above it;

@@ -259,6 +259,8 @@ object Corpora {
   */
 object Harness {
 
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -279,7 +281,9 @@ object Harness {
   /** Per-stage decomposition of a registered query (round 21): one warmup
     * pass, then one measured pass read through [[BusDrain.jobsAndStagesOf]],
     * printing every stage's wall, task count, summed executor run time,
-    * shuffle bytes and operator scopes ([[stageLabel]]). The
+    * summed and largest task CPU time, shuffle bytes and operator scopes
+    * ([[stageLabel]]), then each banded pairing's metrics (groups, pairs
+    * tested, canonical pairs, output rows). The
     * round-21 fan-out A/B showed per-STAGE fixed overhead (~0.1 s at
     * local[32]/sf0.1) dominating several bench queries — this instrument
     * attributes each query's wall to stages so shuffle-removal work aims
@@ -300,24 +304,44 @@ object Harness {
       val overrides =
         if (graft.Bench.banded.contains(name)) Seq(Knobs.SimExact.key -> "false") else Nil
       var wall = 0.0
+      val maxCpu = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      // the nodes, not their values: a lazy localCheckpoint's plan is
+      // reported when the frame is built, before its job has run
+      val pairings = new java.util.concurrent.ConcurrentLinkedQueue[graft.plans.BandPairsExec]()
+      val onPlan = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = Plans.collect(qe.executedPlan) {
+          case b: graft.plans.BandPairsExec => pairings.add(b)
+        }
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
       val (jobs, stages) = Knobs.withConf(spark, overrides: _*) {
         noop(fn(spark, dir)) // warm: codegen/JIT, like Bench's untimed pass
-        BusDrain.jobsAndStagesOf(spark) {
+        try BusDrain.jobsAndStagesOf(spark, t => Option(t.taskMetrics).foreach(m =>
+            maxCpu.merge(t.stageId, m.executorCpuTime, (a, b) => math.max(a, b)))) {
+          // registered after the drain: the warm pass's event, delivered
+          // late, would otherwise print its pairing a second time
+          spark.listenerManager.register(onPlan)
           val t0 = System.nanoTime()
           noop(fn(spark, dir))
           wall = (System.nanoTime() - t0) / 1e9
-        }
+        } finally spark.listenerManager.unregister(onPlan)
       }
-      println(f"PROFILE $name wall=$wall%.3fs jobs=$jobs")
+      println(f"PROFILE $name wall=$wall%.3fs jobs=$jobs stages=${stages.size}")
       stages.sortBy(_.stageId).foreach { si =>
         val stageWall = (for (s <- si.submissionTime; c <- si.completionTime)
           yield c - s).getOrElse(-1L)
         val m = si.taskMetrics
         println(f"  stage ${si.stageId}%3d ${si.numTasks}%4d tasks " +
           f"wall=${stageWall / 1e3}%6.3fs run=${m.executorRunTime / 1e3}%7.3fs " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.3fs " +
+          f"maxtask=${maxCpu.getOrDefault(si.stageId, 0L) / 1e9}%6.3fs " +
           f"sread=${m.shuffleReadMetrics.totalBytesRead}%9d " +
           f"swrite=${m.shuffleWriteMetrics.bytesWritten}%9d  ${stageLabel(si)}")
       }
+      pairings.forEach(b => println("  BandPairs " + b.metrics.toSeq.sortBy(_._1)
+        .map { case (k, m) => s"$k=${m.value}" }.mkString(" ")))
     }
     spark.stop()
   }

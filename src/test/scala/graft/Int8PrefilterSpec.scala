@@ -143,7 +143,7 @@ class Int8PrefilterSpec extends SparkSpec {
     // bucketed side is corpus-sized, and a session with a raised
     // autoBroadcastJoinThreshold (the crossover harness uses 256 MB for its
     // exact baseline) must NOT broadcast it into the candidate self-join —
-    // the shuffle_hash hint pins the strategy in the plan itself
+    // the grouped pairing is no join, so no threshold can make it one
     withConf("spark.sql.autoBroadcastJoinThreshold" -> (256L << 20).toString) {
       val plan = planOf(SimilarityOps.lshCandidateIds(spark, sfDir,
         graft.core.Knobs.Banding(graft.core.Knobs.Pairs, 16, 2, probeBits = 1),
@@ -153,7 +153,8 @@ class Int8PrefilterSpec extends SparkSpec {
       val offending = plan.linesIterator
         .filter(l => l.contains("BroadcastHashJoin") && l.contains("int8_keep"))
       assert(offending.isEmpty, offending.mkString("\n"))
-      assert(plan.contains("ShuffledHashJoin"), plan.linesIterator.take(20).mkString("\n"))
+      assert(plan.linesIterator.exists(l => l.contains("BandPairs") && l.contains("int8_keep")),
+        plan.linesIterator.take(20).mkString("\n"))
     }
   }
 

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * sign-of-`dot_product` bucketing, Hamming-1 probe slots on the
   * lowest-|dot| planes, interpreted/codegen parity, and the
   * candidate-superset property the banded routes rely on; and
-  * `lsh_first_shared`, the banded self-join's one-row-per-pair test on int
-  * and bigint keys, with the rule it enforces: every embedding LSH route
-  * emits each pair once.
+  * `lsh_first_shared` (`LshFirstShared.compute`), the banded pairing's
+  * one-row-per-pair rule on int and bigint keys, with what it enforces:
+  * every embedding LSH route emits each pair once.
   */
 class LshProbesSpec extends SparkSpec {
   import spark.implicits._
@@ -32,40 +32,25 @@ class LshProbesSpec extends SparkSpec {
       dot
     }
 
-  test("lsh_first_shared: first equal position, -1 when none, null stays null") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    GraftFunctions.install(spark)
+  /** [[graft.expr.LshFirstShared.compute]] over two key arrays, with the
+    * over-cap buckets prepared as the pairing prepares them. */
+  private def firstShared(a: Seq[Any], b: Seq[Any], lower: Boolean, bits: Int,
+      over: Seq[Seq[Long]]): Int = {
+    import graft.expr.LshFirstShared
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    LshFirstShared.compute(new GenericArrayData(a), new GenericArrayData(b), lower, bits,
+      LshFirstShared.overCapArrays(over), wide = a.headOption.exists(_.isInstanceOf[Long]))
+  }
+
+  test("lsh_first_shared: first equal position, -1 when none") {
     val cases = Seq(
       (Seq(3, 1, 2, 2), Seq(0, 1, 2, 2), 1),
       (Seq(3, 1, 2), Seq(3, 0, 0), 0),
       (Seq(1, 2, 3), Seq(0, 0, 0), -1),
       (Seq(1, 2), Seq(0, 2, 9), 1)) // ragged: compares the common prefix
-    // the repartition keeps the projection out of the optimizer's
-    // local-relation folding, so it runs as generated code
-    val got = cases.toDF("a", "b", "want").repartition(1)
-      .select(expr("lsh_first_shared(a, b)"), $"want").as[(Int, Int)].collect()
-    assert(got.length == cases.size && got.forall { case (g, w) => g == w }, got.toSeq)
     cases.foreach { case (a, b, want) =>
-      assert(graft.expr.LshFirstShared(Literal.create(a), Literal.create(b)).eval() == want)
+      assert(firstShared(a, b, lower = true, 0, Nil) == want, s"$a $b")
     }
-    assert(Seq[(Seq[Int], Option[Seq[Int]])]((Seq(1), None)).toDF("a", "b")
-      .select(expr("lsh_first_shared(a, b)")).head().isNullAt(0))
-  }
-
-  /** `lsh_first_shared(a, b, lower, bits, over)` through both eval paths:
-    * (interpreted, generated). */
-  private def firstShared[T: scala.reflect.runtime.universe.TypeTag](a: Seq[T], b: Seq[T],
-      lower: Boolean, bits: Int, over: Seq[Seq[Long]]): (Any, Int) = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    GraftFunctions.install(spark)
-    val interpreted = graft.expr.LshFirstShared(Literal.create(a), Literal.create(b),
-      Literal(lower), bits, over).eval()
-    // the repartition keeps the projection out of local-relation folding
-    val generated = Seq((a, b, lower)).toDF("a", "b", "lower").repartition(1)
-      .select(call_function("lsh_first_shared", $"a", $"b", $"lower", lit(bits),
-        typedLit(over)))
-      .as[Int].head()
-    (interpreted, generated)
   }
 
   test("lsh_first_shared: canonical discovery of probed and capped pairs") {
@@ -93,14 +78,12 @@ class LshProbesSpec extends SparkSpec {
       // capped and probed: p1's flip meets an over-cap base, p2's does not
       (Seq(1, 3, 9), Seq(3, 1, 8), true, 2, Seq(Seq(3L)), -3))
     cases.foreach { case (a, b, lower, bits, over, want) =>
-      val (interpreted, generated) = firstShared(a, b, lower, bits, over)
-      assert(interpreted == want && generated == want,
-        s"$a $b lower=$lower bits=$bits over=$over: interpreted $interpreted, " +
-          s"generated $generated, want $want")
+      val got = firstShared(a, b, lower, bits, over)
+      assert(got == want, s"$a $b lower=$lower bits=$bits over=$over: got $got, want $want")
     }
   }
 
-  test("lsh_first_shared on bigint keys: all 64 bits count, caps are per table, interpreted ≡ codegen") {
+  test("lsh_first_shared on bigint keys: all 64 bits count, caps are per table") {
     val hi = 1L << 32
     val cases = Seq[(Seq[Long], Seq[Long], Boolean, Int, Seq[Seq[Long]], Int)](
       // equal in the low 32 bits, not the high 32: no agreement there
@@ -119,22 +102,18 @@ class LshProbesSpec extends SparkSpec {
       // probed: the lower id's flip, then the higher id's
       (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), true, 2, Nil, 1),
       (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), false, 2, Nil, -3),
-      (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), true, 2, Seq(Seq(hi | 3L)), -3))
+      (Seq(hi | 1L, hi | 3L, 9L), Seq(hi | 3L, hi | 1L, 8L), true, 2, Seq(Seq(hi | 3L)), -3),
+      // the first agreeing table of two bigint key arrays
+      (Seq(hi | 2L, 4L), Seq(2L, 4L), true, 0, Nil, 1))
     cases.foreach { case (a, b, lower, bits, over, want) =>
-      val (interpreted, generated) = firstShared(a, b, lower, bits, over)
-      assert(interpreted == want && generated == want,
-        s"$a $b lower=$lower bits=$bits over=$over: interpreted $interpreted, " +
-          s"generated $generated, want $want")
+      val got = firstShared(a, b, lower, bits, over)
+      assert(got == want, s"$a $b lower=$lower bits=$bits over=$over: got $got, want $want")
     }
-    // the two-argument form reads bigint keys too
-    assert(Seq((Seq(hi | 2L, 4L), Seq(2L, 4L))).toDF("a", "b").repartition(1)
-      .select(expr("lsh_first_shared(a, b)")).as[Int].head() == 1)
-    // keys of two types, or of a type that is no bucket, fail at analysis
-    val mixed = intercept[org.apache.spark.sql.AnalysisException](
-      Seq((Seq(1L), Seq(1))).toDF("a", "b").select(expr("lsh_first_shared(a, b)")))
-    assert(mixed.getMessage.contains("lsh_first_shared"), mixed)
-    val strings = intercept[org.apache.spark.sql.AnalysisException](
-      Seq((Seq("x"), Seq("x"))).toDF("a", "b").select(expr("lsh_first_shared(a, b)")))
+    // key arrays of a type that is no bucket fail when the pairing is built
+    import graft.plans.BandPairs
+    val strings = intercept[IllegalArgumentException](BandPairs(
+      Seq((1L, "x", 0, Seq("x"))).toDF("tbl", "bucket", "pos", "pr"), Seq("tbl", "bucket"),
+      "pos", "pr", 0, Nil, Seq("tbl" -> "tbl2"), None))
     assert(strings.getMessage.contains("array<int> or array<bigint>"), strings)
   }
 

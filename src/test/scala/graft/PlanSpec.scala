@@ -207,13 +207,15 @@ class PlanSpec extends SparkSpec {
   test("every banded producer runs one self-join, kept by lsh_first_shared alone") {
     // sim_ann_lsh; banded sim_pairs_threshold, dedup_embedding_cosine and
     // sim_nearest_same_label; the MinHash candidate subtree; and
-    // dedup_simhash_pairs all band through the one self-join: exactly one
-    // join whose condition holds lsh_first_shared, no CASE WHEN band chain
-    // in any join condition, and no aggregate keyed on the id pair
+    // dedup_simhash_pairs all band through the one grouped pairing:
+    // exactly one BandPairs node, no join keyed on (tbl, bucket), no CASE
+    // WHEN band chain in any join condition, and no aggregate keyed on the
+    // id pair
     import org.apache.spark.sql.catalyst.expressions.CaseWhen
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.plans.BandPairsExec
     object Plans extends AdaptiveSparkPlanHelper
     val producers = withConf(Knobs.SimExact.key -> "false") {
       Seq("sim_ann_lsh", "sim_pairs_threshold", "dedup_embedding_cosine",
@@ -225,9 +227,13 @@ class PlanSpec extends SparkSpec {
     for ((name, df) <- producers) {
       // the planned tree: on a small corpus AQE may prune an empty branch
       val plan = df.queryExecution.executedPlan
+      val pairings = Plans.collect(plan) { case b: BandPairsExec => b }
+      assert(pairings.size == 1, s"$name: ${pairings.size} BandPairs nodes\n$plan")
+      assert(pairings.head.keys.map(_.name).take(2) == Seq("tbl", "bucket"), s"$name: $plan")
       val joins = Plans.collect(plan) { case j: BaseJoinExec => j }
-      val banded = joins.filter(_.condition.exists(_.toString.contains("lsh_first_shared")))
-      assert(banded.size == 1, s"$name: ${banded.size} lsh_first_shared joins\n$plan")
+      val bucketJoins = joins.filter(j =>
+        Set("tbl", "bucket").subsetOf(j.leftKeys.flatMap(_.references.map(_.name)).toSet))
+      assert(bucketJoins.isEmpty, s"$name: a (tbl, bucket) join\n$plan")
       val chains = joins.flatMap(_.condition).filter(_.exists(_.isInstanceOf[CaseWhen]))
       assert(chains.isEmpty, s"$name: CASE WHEN in a join condition: $chains")
       val pairAggs = Plans.collect(plan) {
@@ -260,22 +266,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("the unprobed banded join tests v1 < v2 once") {
-    // unprobed, the cheap `<` pre-test establishes the order, so
-    // lsh_first_shared is passed `true`; probed, the order is its argument
-    import org.apache.spark.sql.catalyst.expressions.LessThan
+    // unprobed, a bucket of n rows with distinct ids has n(n-1)/2 pairs and
+    // the pairing tests each once, never its mirror; probed, each slot row
+    // meets each other row's base slot in its bucket. The node's metrics
+    // say so, counted against the buckets collected here.
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.plans.{BandPairsExec, GraftFunctions}
     object Plans extends AdaptiveSparkPlanHelper
+    GraftFunctions.install(spark)
     for (bits <- Seq(0, 2)) {
       val df = graft.functions.SimilarityOps.lshCandidateIds(spark, sfDir,
         Knobs.Banding(Knobs.CosDedup, 8, 4, probeBits = bits))
-      df.collect()
-      val conds = Plans.collect(df.queryExecution.executedPlan) {
-        case j: BaseJoinExec if j.condition.exists(_.toString.contains("lsh_first_shared")) =>
-          j.condition.get
-      }
-      assert(conds.size == 1, s"bits=$bits: $conds")
-      assert(conds.head.collect { case l: LessThan => l }.size == 1, s"bits=$bits: ${conds.head}")
+      val rows = df.collect().length.toLong
+      val node = Plans.collect(df.queryExecution.executedPlan) { case b: BandPairsExec => b }
+      assert(node.size == 1, df.queryExecution.executedPlan)
+      val m = node.head.metrics.map { case (k, v) => k -> v.value }
+      val slots = Tables.embeddings(spark, sfDir).filter($"embedding".isNotNull)
+        .select(posexplode(expr(s"lsh_probes(embedding, 8, 4, $bits)")).as(Seq("pos", "b")))
+        .select(expr(s"pos div ${1 + bits}").as("t"), $"b", ($"pos" % (1 + bits) === 0).as("base"))
+        .groupBy($"t", $"b").agg(count(lit(1)).as("n"), count(when($"base", 1)).as("nb"))
+        .collect().map(r => (r.getLong(2), r.getLong(3)))
+      val want = if (bits == 0) slots.map { case (n, _) => n * (n - 1) / 2 }.sum
+        else slots.map { case (n, nb) => n * nb - nb }.sum
+      assert(m("numTested") == want, s"bits=$bits: $m, want $want tested")
+      assert(m("numGroups") == slots.length, s"bits=$bits: $m, ${slots.length} buckets")
+      assert(m("numCanonical") == rows && m("numOutputRows") == rows, s"bits=$bits: $m, $rows")
     }
   }
 
@@ -302,11 +317,6 @@ class PlanSpec extends SparkSpec {
     val kernels = Seq(
       "cosine_sim" -> expr("cosine_sim(embedding, embedding)"),
       "dot_product" -> expr("dot_product(embedding, embedding)"),
-      "lsh_first_shared" -> expr(
-        "lsh_first_shared(lsh_probes(embedding, 4, 4, 0), lsh_probes(embedding, 2, 8, 0))"),
-      // the bigint-key form, as the MinHash band hashes reach it
-      "lsh_first_shared" -> expr(
-        "lsh_first_shared(array(xxhash64(vec_id), vec_id), array(vec_id, xxhash64(vec_id)))"),
       "lsh_probes" -> expr("lsh_probes(embedding, 4, 4, 2)"),
       "int8_enc" -> expr("int8_enc(embedding)"),
       "int8_est" -> expr("int8_est(int8_enc(embedding), int8_enc(embedding))"),
